@@ -2502,14 +2502,31 @@ class SnapshotSqlScan(
     val withFile =
       if (wantFile) physData.add(StructField("_file", StringType, nullable = false))
       else physData
+    // the pushed comparisons, renamed to the files' column names: the
+    // reader skips row groups and pages with the integer ones
+    val phys = prunedSchema.fieldNames.zip(physData.fieldNames).toMap
+    val fileFilters: Seq[Filter] = pushed.toSeq.flatMap {
+      case EqualTo(c, v)            => phys.get(c).map(EqualTo(_, v))
+      case GreaterThan(c, v)        => phys.get(c).map(GreaterThan(_, v))
+      case GreaterThanOrEqual(c, v) => phys.get(c).map(GreaterThanOrEqual(_, v))
+      case LessThan(c, v)           => phys.get(c).map(LessThan(_, v))
+      case LessThanOrEqual(c, v)    => phys.get(c).map(LessThanOrEqual(_, v))
+      case In(c, vs)                => phys.get(c).map(In(_, vs))
+      case _                        => None
+    }
     SnapshotSqlReaderFactory(
       if (wantPos) withFile.add(StructField("_pos", LongType, nullable = false))
       else withFile,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
       appendFileName = wantFile,
-      appendPosition = wantPos
+      appendPosition = wantPos,
+      filters = fileFilters
     )
   }
+
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new RowsDecodedMetric, new RowsSkippedByStatsMetric)
 
   /** EXACT post-pruning size/rows from the manifest riders — Catalyst's
     * broadcast decision sees real numbers, zero file opens. */
@@ -2583,7 +2600,8 @@ case class SnapshotSqlReaderFactory(
     schema: StructType,
     conf: SerializableHadoopConf,
     appendFileName: Boolean = false,
-    appendPosition: Boolean = false
+    appendPosition: Boolean = false,
+    filters: Seq[Filter] = Nil
 ) extends PartitionReaderFactory {
   override def createReader(
       p: InputPartition
@@ -2595,8 +2613,22 @@ case class SnapshotSqlReaderFactory(
       case other =>
         throw new IllegalStateException(s"unexpected partition $other")
     }
-    new SnapshotSqlReader(files, conf.value, schema, appendFileName, appendPosition)
+    new SnapshotSqlReader(files, conf.value, schema, appendFileName, appendPosition, filters)
   }
+}
+
+/** Rows a catalog scan decoded from its data files, deletion-vector
+  * dead rows included. */
+class RowsDecodedMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "rowsDecoded"
+  override def description(): String = "rows decoded"
+}
+
+/** Rows a catalog scan never decoded because row-group stats or page
+  * column indexes ruled them out. */
+class RowsSkippedByStatsMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = "rowsSkippedByStats"
+  override def description(): String = "rows skipped by stats"
 }
 
 /** Sequential reader over a partition's files; each file's deletion
@@ -2606,10 +2638,14 @@ class SnapshotSqlReader(
     conf: org.apache.hadoop.conf.Configuration,
     schema: StructType,
     appendFileName: Boolean = false,
-    appendPosition: Boolean = false
+    appendPosition: Boolean = false,
+    filters: Seq[Filter] = Nil
 ) extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow] {
   private val it = files.iterator
   private var current: GraftSnapshotReader = _
+  // metric totals of the files already closed
+  private var decodedDone = 0L
+  private var skippedDone = 0L
   // when `_file`/`_pos` ride last in the scan schema, the parquet
   // reader decodes only the data prefix and they are appended as tags
   private val dataSchema = {
@@ -2627,13 +2663,13 @@ class SnapshotSqlReader(
         if (appendFileName) Some(f.substring(f.lastIndexOf('/') + 1)) else None
       current = new GraftSnapshotReader(
         f, conf, dataSchema, None, None, skipPositions = skip,
-        fileNameTag = tag, positionTag = appendPosition)
+        fileNameTag = tag, positionTag = appendPosition, filters = filters)
       true
     }
 
   override def next(): Boolean = {
     while (current == null || !current.next()) {
-      if (current != null) { current.close(); current = null }
+      close()
       if (!openNext()) return false
     }
     true
@@ -2641,8 +2677,26 @@ class SnapshotSqlReader(
 
   override def get(): InternalRow = current.get()
 
+  override def currentMetricsValues()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    def metric(n: String, v: Long) =
+      new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+    val open = Option(current)
+    Array(
+      metric("rowsDecoded", decodedDone + open.fold(0L)(_.rowsDecoded)),
+      metric("rowsSkippedByStats", skippedDone + open.fold(0L)(_.rowsSkippedByStats)))
+  }
+
   override def close(): Unit =
-    if (current != null) { current.close(); current = null }
+    if (current != null) {
+      decodedDone += current.rowsDecoded
+      skippedDone += current.rowsSkippedByStats
+      current.close()
+      current = null
+    }
 }
 
 // --- SQL row-level DML (group-based copy-on-write) ---

@@ -52,10 +52,14 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   *     files) IO for appends and CoW replaces, never a diff of full
   *     snapshots — feeding incremental MV maintenance downstream.
   *   - **[[compact]] is OPTIMIZE** (round 11): bin-packs the small
-  *     files incremental ingestion accretes into target-size outputs
-  *     (optionally range-CLUSTERING on sort keys so footer stats prune
-  *     hard afterwards), committed as a `datachange=false` replace the
-  *     change feed skips — rows moved files, no row changed.
+  *     files incremental ingestion accretes into target-size outputs,
+  *     committed as a `datachange=false` replace the change feed skips
+  *     — rows moved files, no row changed. The outputs are key-ordered
+  *     (range-partitioned and sorted, so footer stats prune hard
+  *     afterwards) on the caller's sort or z-order keys, else on the
+  *     declared `sorted_by` column, else on the integer column the
+  *     picked files are already clustered on; only input clustered on
+  *     no column is concatenated as it is.
   *     [[deleteWhere]] is the CoW DELETE twin: stats select the only
   *     files that can hold a doomed row; everything else carries by
   *     reference.
@@ -2899,6 +2903,16 @@ object SnapshotLog {
     * posture). Pass `smallerThanBytes = Long.MaxValue` for a full
     * clustering rewrite.
     *
+    * With neither, the rewrite keeps the layout the table already has
+    * ([[compactionKey]]): it is range-partitioned and sorted on the
+    * declared `sorted_by` column, or else on the INT64/INT32 column the
+    * picked files are clustered on, rows with equal keys keeping their
+    * input order — so footer stats, row-group stats and page indexes
+    * still prune after an OPTIMIZE. A table that declares no
+    * `sorted_by` and whose picked files are clustered on no column (a
+    * single picked file counts as clustered on none) keeps the pure
+    * concat, with no shuffle.
+    *
     * The commit carries `datachange=false`: rows did not change, so
     * [[readChanges]] emits nothing for it and incremental consumers
     * are undisturbed. Untouched files carry by reference; file sizes
@@ -2919,7 +2933,7 @@ object SnapshotLog {
       sortBy.isEmpty || zorderBy.isEmpty,
       "compact: sortBy and zorderBy are mutually exclusive"
     )
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, monotonically_increasing_id}
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"snapshot compact: no commits in $table")
     val v = vs.last
@@ -2962,10 +2976,11 @@ object SnapshotLog {
     val nOut = filesOut.getOrElse(
       math.max(1L, (total + targetBytes - 1) / targetBytes).toInt)
     val schema = tableSchema(spark, table, v)
+    val pickedEntries = entriesFor(entries, picked)
     // DV-aware: compaction reads THROUGH deletion vectors, so the
     // rewrite materializes them — the fresh entries carry no rider and
     // the datachange=false contract still holds (live rows unchanged)
-    val df = readEntries(spark, table, entriesFor(entries, picked), schema)
+    val df = readEntries(spark, table, pickedEntries, schema)
     val packed =
       if (zorderBy.nonEmpty) {
         // contiguous z-ranges per file; the helper column never lands
@@ -2974,14 +2989,54 @@ object SnapshotLog {
           .repartitionByRange(nOut, col("_graft_z"))
           .sortWithinPartitions("_graft_z")
           .drop("_graft_z")
-      } else if (sortBy.isEmpty) df.coalesce(nOut) // pure concat, no shuffle
-      else
+      } else if (sortBy.nonEmpty)
         df.repartitionByRange(nOut, sortBy.map(col): _*)
           .sortWithinPartitions(sortBy.map(col): _*)
+      else compactionKey(spark, table, pickedEntries, schema) match {
+        case Some(k) =>
+          // ranges split on the key alone, so equal keys share a file
+          // and the files' ranges are disjoint; the input ordinal keeps
+          // ties in input order and never lands
+          df.withColumn("_graft_ord", monotonically_increasing_id())
+            .repartitionByRange(nOut, col(k))
+            .sortWithinPartitions(col(k), col("_graft_ord"))
+            .drop("_graft_ord")
+        case None => df.coalesce(nOut) // pure concat, no shuffle
+      }
     val version =
       commitReplace(spark, table, picked, packed, dataChange = false)
     (version, picked, large.map(_._1))
   }
+
+  /** The column an un-keyed [[compact]] orders its rewrite on: the
+    * table's declared `sorted_by` column, else the INT64/INT32 column
+    * whose picked files' manifest `[min,max]` ranges overlap least —
+    * taken only when every picked file has stats for it and the files
+    * really are clustered on it: their spans add up to at most twice
+    * the span of the whole picked set (a modulo layout's add up to
+    * about the file count times it). None keeps the concat. */
+  private def compactionKey(
+      spark: SparkSession,
+      table: String,
+      picked: Seq[String],
+      schema: Option[StructType]
+  ): Option[String] =
+    tableProps(spark, table).get("sorted_by").orElse {
+      val ranked = for {
+        s <- schema.toSeq if picked.size >= 2
+        f <- s.fields.toSeq if f.dataType == LongType || f.dataType == IntegerType
+        ranges = picked.flatMap(e => entryStat(e, physNameOf(f)).collect {
+          case st if st.startsWith("l:") || st.startsWith("i:") =>
+            val Array(_, mn, mx) = st.split(':')
+            (mn.toLong, mx.toLong)
+        })
+        if ranges.size == picked.size
+        span = ranges.map(_._2).max.toDouble - ranges.map(_._1).min.toDouble
+        spans = ranges.map { case (mn, mx) => mx.toDouble - mn.toDouble }.sum
+        if span > 0 && spans <= 2 * span
+      } yield (spans / span, f.name)
+      ranked.minByOption(_._1).map(_._2)
+    }
 
   /** PARTITION-AWARE compaction: small files group by their (pure)
     * partition value — derived from manifest stats alone via `mapv`,

@@ -2,11 +2,11 @@ package graft.sources
 
 import java.util
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -373,12 +373,20 @@ case class GraftSnapshotReaderFactory(
 }
 
 /** Executor-side parquet reader over one manifest file via the Group
-  * API — row-at-a-time assembly, adequate for streaming micro-batches
-  * (the batch path hands Spark the vectorized native reader instead).
-  * Column lookup is BY NAME so schema-evolved tables work: absent
-  * columns null-fill, int32→long and float→double widen per the log's
-  * evolution rules, INT96 timestamps convert via the public Julian-day
-  * layout. Anything else unsupported fails loudly. */
+  * API, row at a time. It serves every catalog SQL and DML scan
+  * ([[SnapshotSqlReader]]) and the streaming source. Column lookup is
+  * BY NAME so schema-evolved tables work: absent columns null-fill,
+  * int32→long and float→double widen per the log's evolution rules,
+  * INT96 timestamps convert via the public Julian-day layout. Anything
+  * else unsupported fails loudly.
+  *
+  * `filters` (pushed integer comparisons, physical column names) skip
+  * data inside the file: row groups whose footer stats and pages whose
+  * column index rule out every row are never decoded. Record-level
+  * filtering stays off — the surviving pages' rows all come back and
+  * Spark re-applies the predicate — so a reader's row count is the rows
+  * it decoded. The footer is read once, and the comparisons are typed
+  * against it (see [[GraftSnapshotReader.filePredicate]]). */
 class GraftSnapshotReader(
     file: String,
     conf: Configuration,
@@ -387,21 +395,63 @@ class GraftSnapshotReader(
     onlyPositions: Option[Array[Long]] = None,
     skipPositions: Option[Array[Long]] = None,
     fileNameTag: Option[String] = None, // appended as a `_file` column
-    positionTag: Boolean = false // appended (last) as a `_pos` column
+    positionTag: Boolean = false, // appended (last) as a `_pos` column
+    filters: Seq[org.apache.spark.sql.sources.Filter] = Nil
 ) extends PartitionReader[InternalRow] {
+  import org.apache.parquet.HadoopReadOptions
+  import org.apache.parquet.filter2.compat.FilterCompat
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+
   private val tagVals: Array[Any] =
     cdfTag
       .map { case (t, v) => Array[Any](UTF8String.fromString(t), v) }
       .getOrElse(Array.empty[Any]) ++
       fileNameTag.map(f => UTF8String.fromString(f): Any).toArray
-  private val reader: ParquetReader[Group] =
-    ParquetReader
-      .builder(new GroupReadSupport(), new Path(file))
-      .withConf(conf)
-      .build()
+  private val fileReader: ParquetFileReader = {
+    val path = new Path(file)
+    val input = HadoopInputFile.fromPath(path, conf)
+    val stream = input.newStream()
+    try {
+      val footer = ParquetFileReader.readFooter(
+        input, HadoopReadOptions.builder(conf, path).build(), stream)
+      val predicate = GraftSnapshotReader
+        .filePredicate(filters, footer.getFileMetaData.getSchema)
+        .map(FilterCompat.get)
+        .getOrElse(FilterCompat.NOOP)
+      val options = HadoopReadOptions.builder(conf, path)
+        .withRecordFilter(predicate)
+        .useStatsFilter(true)
+        .useColumnIndexFilter(true)
+        .useRecordFilter(false)
+        // each would read more than the footer per row group
+        .useDictionaryFilter(false)
+        .useBloomFilter(false)
+        .build()
+      ParquetFileReader.open(input, footer, options, stream)
+    } catch { case e: Throwable => stream.close(); throw e }
+  }
+  private val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
+  private val columnIO = new org.apache.parquet.io.ColumnIOFactory(
+    fileReader.getFooter.getFileMetaData.getCreatedBy).getColumnIO(fileSchema)
+  private val totalRows: Long = fileReader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+  /** Rows the row-group stats and the column indexes ruled out. */
+  val rowsSkippedByStats: Long = totalRows - fileReader.getFilteredRecordCount
+  /** Rows assembled so far (deletion-vector dead rows included). */
+  def rowsDecoded: Long = decoded
+  private var decoded = 0L
+
+  // the current row group: its record reader, rows still to assemble,
+  // its first row's in-file index and the in-group indexes of the rows
+  // its surviving pages hold
+  private var records: org.apache.parquet.io.RecordReader[Group] = _
+  private var rowsLeft = 0L
+  private var groupStart = 0L
+  private var groupRows: java.util.PrimitiveIterator.OfLong = _
   private var current: Group = _
-  // sequential in-file row position — the Group API reads rows in file
-  // order, so a simple counter IS `_metadata.row_index`
+  // in-file row index of `current` — what `ParquetReader.getCurrentRowIndex`
+  // reports: the row group's offset plus the row's index inside it, so
+  // it stays the file position after skipped pages and row groups
   private var rowIdx: Long = -1L
   // existence defaults (ADD COLUMN ... DEFAULT x): a column missing
   // from THIS file serves its ADD-time default, not null — the same
@@ -418,14 +468,33 @@ class GraftSnapshotReader(
     onlyPositions.forall(a => java.util.Arrays.binarySearch(a, i) >= 0) &&
       skipPositions.forall(a => java.util.Arrays.binarySearch(a, i) < 0)
 
-  override def next(): Boolean = {
-    current = reader.read()
-    rowIdx += 1
-    while (current != null && !admit(rowIdx)) {
-      current = reader.read()
-      rowIdx += 1
+  /** Assembles the next surviving row into `current`/`rowIdx`; false at
+    * the end of the file. */
+  private def readRow(): Boolean = {
+    while (rowsLeft == 0) {
+      val pages = fileReader.readNextFilteredRowGroup()
+      if (pages == null) return false
+      rowsLeft = pages.getRowCount
+      groupStart = pages.getRowIndexOffset.orElseThrow(() =>
+        new IllegalStateException(s"graft-snapshot: no row index offset in $file"))
+      groupRows = pages.getRowIndexes.orElseGet(() =>
+        java.util.stream.LongStream.range(0, rowsLeft).iterator())
+      records = columnIO.getRecordReader(
+        pages,
+        new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(fileSchema),
+        FilterCompat.NOOP)
     }
-    current != null
+    rowsLeft -= 1
+    decoded += 1
+    rowIdx = groupStart + groupRows.nextLong()
+    current = records.read()
+    true
+  }
+
+  override def next(): Boolean = {
+    while (readRow()) if (admit(rowIdx)) return true
+    current = null
+    false
   }
 
   override def get(): InternalRow = {
@@ -452,8 +521,9 @@ class GraftSnapshotReader(
       vals(schema.length + j) = tagVals(j)
       j += 1
     }
-    // `_pos`: the raw in-file row index (PRE-DV-skip, so it names the
-    // same position space the deletion-vector sidecars are written in)
+    // `_pos`: the in-file row index (counted before the deletion-vector
+    // skip, so it names the same position space the sidecars are
+    // written in, and taken from the file, so skipped pages keep it)
     if (positionTag) vals(vals.length - 1) = rowIdx
     new GenericInternalRow(vals)
   }
@@ -526,5 +596,52 @@ class GraftSnapshotReader(
     }
   }
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = fileReader.close()
+}
+
+object GraftSnapshotReader {
+  import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+  import org.apache.parquet.filter2.predicate.Operators.{IntColumn, LongColumn}
+  import org.apache.parquet.schema.{MessageType, Type}
+  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+  import org.apache.spark.sql.sources._
+
+  /** The parquet predicate `filters` make over one file: the
+    * comparisons whose column the file holds as a top-level INT64 (for
+    * a Long value) or INT32 (for an Int value), ANDed. A comparison is
+    * dropped for a file that spells its column otherwise — an older
+    * INT32 file under a column since widened to BIGINT, or a file that
+    * predates the column (its rows serve a default parquet would read
+    * as null). Dropping a comparison only skips less. None when nothing
+    * applies. */
+  private[sources] def filePredicate(
+      filters: Seq[Filter],
+      file: MessageType
+  ): Option[FilterPredicate] = {
+    def physical(c: String): Option[PrimitiveTypeName] =
+      if (c.contains('.') || !file.containsField(c)) None
+      else Some(file.getType(file.getFieldIndex(c)))
+        .filter(t => t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED))
+        .map(_.asPrimitiveType.getPrimitiveTypeName)
+    def compare(c: String, v: Any)(
+        onLong: (LongColumn, java.lang.Long) => FilterPredicate,
+        onInt: (IntColumn, java.lang.Integer) => FilterPredicate
+    ): Option[FilterPredicate] = (physical(c), v) match {
+      case (Some(PrimitiveTypeName.INT64), l: Long) => Some(onLong(FilterApi.longColumn(c), l))
+      case (Some(PrimitiveTypeName.INT32), i: Int)  => Some(onInt(FilterApi.intColumn(c), i))
+      case _                                        => None
+    }
+    def eq(c: String, v: Any) = compare(c, v)(FilterApi.eq(_, _), FilterApi.eq(_, _))
+    filters.flatMap {
+      case EqualTo(c, v)            => eq(c, v)
+      case GreaterThan(c, v)        => compare(c, v)(FilterApi.gt(_, _), FilterApi.gt(_, _))
+      case GreaterThanOrEqual(c, v) => compare(c, v)(FilterApi.gtEq(_, _), FilterApi.gtEq(_, _))
+      case LessThan(c, v)           => compare(c, v)(FilterApi.lt(_, _), FilterApi.lt(_, _))
+      case LessThanOrEqual(c, v)    => compare(c, v)(FilterApi.ltEq(_, _), FilterApi.ltEq(_, _))
+      case In(c, vs) if vs.nonEmpty =>
+        val each = vs.toSeq.map(eq(c, _))
+        if (each.forall(_.isDefined)) Some(each.flatten.reduce(FilterApi.or)) else None
+      case _ => None
+    }.reduceOption(FilterApi.and)
+  }
 }
