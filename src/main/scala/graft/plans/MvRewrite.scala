@@ -4,6 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   Alias,
   Attribute,
   AttributeReference,
+  Cast,
   Expression,
   Literal,
   NamedExpression
@@ -28,6 +29,7 @@ import org.apache.spark.sql.execution.datasources.{
   LogicalRelation
 }
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
 
 /** §4/§8 Catalyst extension #2: MATERIALIZED-VIEW ROLLUP REWRITE
   * (aggregate navigation) — the warehouse-side dual of the staged ANN
@@ -311,9 +313,17 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       mvAttr = mvPlan.output.map(a => a.name -> a).toMap
       // all MV columns the mapping can target must exist
       if mv.dims.forall(mvAttr.contains) && mvAttr.contains("cnt")
+      // each source dim the rewrite replaces, as an MV expression of
+      // the source attribute's type
+      dimExpr <- seqOpt(
+        (agg.aggregateExpressions.collect {
+          case a: AttributeReference if dimNames(a.name) => a
+        } ++ groupAttrs ++ condOpt.toSeq.flatMap(_.references)).map(a =>
+          asSourceType(mvAttr(a.name), a.dataType).map(a.exprId -> _)))
+        .map(_.toMap)
       newAggExprs <- seqOpt(agg.aggregateExpressions.map {
         case a: AttributeReference if dimNames(a.name) =>
-          Some(Alias(mvAttr(a.name), a.name)(exprId = a.exprId))
+          Some(Alias(dimExpr(a.exprId), a.name)(exprId = a.exprId))
         case al @ Alias(
               AggregateExpression(fn, Complete, false, None, _),
               name
@@ -348,7 +358,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
                     x.dataType == org.apache.spark.sql.types.FloatType) &&
                   mvAttr.contains(s"sum_${x.name}") &&
                   mvAttr.contains(s"cntnn_${x.name}") =>
-              import org.apache.spark.sql.catalyst.expressions.{Cast, Divide}
+              import org.apache.spark.sql.catalyst.expressions.Divide
               import org.apache.spark.sql.types.DoubleType
               Some(Divide(
                 Cast(
@@ -366,12 +376,33 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       val scan = condOpt match {
         case Some(cond) =>
           Filter(
-            cond.transform { case a: AttributeReference => mvAttr(a.name) },
+            cond.transformUp { case a: AttributeReference => dimExpr(a.exprId) },
             mvPlan
           )
         case None => mvPlan
       }
       Aggregate(groupAttrs.map(a => mvAttr(a.name)), newAggExprs, scan)
+    }
+
+  /** The MV column `col` read as `want`, the type the source plan has
+    * for the dim it replaces. A loader can normalize a column's type
+    * (`Tables.lineitem` reads a session-TIMESTAMP `l_shipdate` as
+    * TIMESTAMP_NTZ, and the MV is built from that frame). The optimizer
+    * then unwraps the loader's cast onto the literal of a filter, so the
+    * source side compares the raw file type while the MV holds the
+    * normalized one; transplanting the bare MV column would leave an
+    * ill-typed, unresolved condition inside the optimizer. Between the
+    * two timestamp types the cast is a bijection under a fixed-offset
+    * session zone, so groups and filters stay exact; any other type
+    * difference bails. */
+  private def asSourceType(col: Attribute, want: DataType): Option[Expression] =
+    (col.dataType, want) match {
+      case (have, _) if have == want => Some(col)
+      case (TimestampType, TimestampNTZType) | (TimestampNTZType, TimestampType) =>
+        val tz = spark.sessionState.conf.sessionLocalTimeZone
+        if (java.time.ZoneId.of(tz).getRules.isFixedOffset) Some(Cast(col, want, Some(tz)))
+        else None
+      case _ => None
     }
 
   private def seqOpt[T](xs: Seq[Option[T]]): Option[Seq[T]] =

@@ -9,9 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -2245,10 +2242,13 @@ class SnapshotSqlScan(
           l.value()
       }.toSeq
       // per-value stats ∩ bloom for a bounded list (mirrors the static
-      // In path); a huge build side degrades to ONE [min,max] envelope
-      // pass — O(files) driver metadata either way, never O(values ×
-      // files). An empty IN (empty build side) admits nothing: no
-      // probe row can survive the join this filter came from.
+      // In path). A larger integer list sorts its distinct keys once and
+      // admits a file iff some key lies in its manifest [min, max] — one
+      // binary search per file, O(files · log keys), so two far-apart
+      // key clusters never admit the files between them. A larger
+      // string list degrades to ONE [min, max] envelope pass. An empty
+      // IN (empty build side) admits nothing: no probe row can survive
+      // the join this filter came from.
       val admitted: Set[String] =
         if (values.isEmpty) Set.empty
         else if (values.length <= 64)
@@ -2258,9 +2258,18 @@ class SnapshotSqlScan(
             case l: java.lang.Long    => l.longValue()
             case i: java.lang.Integer => i.longValue()
           }
-          if (longs.length == values.length)
-            longRange(c, longs.min, longs.max)
-          else {
+          if (longs.length == values.length) {
+            val keys = longs.distinct.sorted.toArray
+            def holdsKey(mn: Long, mx: Long): Boolean = {
+              val i = java.util.Arrays.binarySearch(keys, mn)
+              val at = if (i >= 0) i else -i - 1
+              at < keys.length && keys(at) <= mx
+            }
+            // a file without stats on the column must scan
+            SnapshotLog.fileLongRanges(spark, path, version, c).collect {
+              case (f, r) if r.forall { case (mn, mx) => holdsKey(mn, mx) } => f
+            }.toSet
+          } else {
             val strs = values.map(String.valueOf(_))
             SnapshotLog
               .prunedFilesString(spark, path, c, strs.min, strs.max, Some(version))
@@ -2517,7 +2526,7 @@ class SnapshotSqlScan(
     SnapshotSqlReaderFactory(
       if (wantPos) withFile.add(StructField("_pos", LongType, nullable = false))
       else withFile,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableHadoopConf(DataFiles.hadoopConf(spark)),
       appendFileName = wantFile,
       appendPosition = wantPos,
       filters = fileFilters
@@ -2833,7 +2842,7 @@ class SnapshotRowLevelScan(
       // data columns under their PHYSICAL names + trailing _file
       SnapshotLog.toPhysical(dataSchema)
         .add(StructField("_file", StringType, nullable = false)),
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableHadoopConf(DataFiles.hadoopConf(spark)),
       appendFileName = true)
 }
 
@@ -2855,7 +2864,7 @@ case class SnapshotReplaceBatchWrite(
       path,
       physSchema,
       new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()),
+        DataFiles.hadoopConf(SparkSession.active)),
       check = op.check)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -3034,7 +3043,7 @@ class SnapshotMorBatchWrite(
       .toMap
     SnapshotMorWriterFactory(
       path, physSchema,
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableHadoopConf(DataFiles.hadoopConf(spark)),
       fileIdx, posIdx, oldDv, check)
   }
 
@@ -3277,8 +3286,7 @@ case class SnapshotSqlStreamingWrite(
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo
   ): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val conf = new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf())
+    val conf = new SerializableHadoopConf(DataFiles.hadoopConf(SparkSession.active))
     SnapshotSqlStreamingWriterFactory(
       path, physSchema, conf, bucketSpec, check, partitionBy)
   }
@@ -3388,9 +3396,7 @@ case class SnapshotSqlBatchWrite(
     SnapshotSqlWriterFactory(
       path,
       physSchema,
-      new SerializableHadoopConf(
-        SparkSession.active.sessionState.newHadoopConf()
-      ),
+      new SerializableHadoopConf(DataFiles.hadoopConf(SparkSession.active)),
       bucketSpec,
       check,
       partitionBy
@@ -3558,12 +3564,7 @@ class SnapshotPartitionedParquetWriter(
   private var qFileName: String = _
 
   private def open(dir: String, name: String): ParquetWriter[Group] =
-    ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(s"$dir/$name"), hadoopConf))
-      .withType(messageType)
-      .withConf(hadoopConf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    DataFiles.groupWriter(s"$dir/$name", messageType, hadoopConf)
 
   private def keyOf(row: InternalRow): String =
     fields.indices
@@ -3645,14 +3646,7 @@ class SnapshotBucketedParquetWriter(
     writers.getOrElseUpdate(b, {
       val name =
         s"part-sql-$partitionId-$taskId-b$b-${UUID.randomUUID.toString.take(8)}.parquet"
-      val w = ExampleParquetWriter
-        .builder(
-          HadoopOutputFile.fromPath(new Path(s"$table/$name"), hadoopConf))
-        .withType(messageType)
-        .withConf(hadoopConf)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
-        .build()
-      (w, name)
+      (DataFiles.groupWriter(s"$table/$name", messageType, hadoopConf), name)
     })._1
 
   override def write(row: InternalRow): Unit = {
@@ -3714,12 +3708,7 @@ class SnapshotParquetWriter(
   private var qFileName: String = _
 
   private def open(dir: String, name: String): ParquetWriter[Group] =
-    ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(s"$dir/$name"), hadoopConf))
-      .withType(messageType)
-      .withConf(hadoopConf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
+    DataFiles.groupWriter(s"$dir/$name", messageType, hadoopConf)
 
   private def ensureOpen(): Unit =
     if (writer == null) {

@@ -70,7 +70,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * each manifest is O(batch) delta lines between checkpoints. Data-file
   * IO is untouched parquet at any size, with per-file INT64 / INT32 /
   * DOUBLE / short-STRING footer min/max riding the manifest for
-  * file-level skipping before Spark ever lists a path.
+  * file-level skipping before Spark ever lists a path. Every write path
+  * lands its data files with one setting set, [[DataFiles]]: ZSTD
+  * column chunks at parquet's default level and INT64 microsecond
+  * timestamps, with zstd-jni's buffer pool off on the engine's writes
+  * and reads. Older SNAPPY files stay readable as they are and take the
+  * format's settings when a DML or OPTIMIZE rewrites them.
   *
   * **Object-store posture (round 14):** the commit claim stands on one
   * of two primitives — the local O_CREAT|O_EXCL lock, or a rename that
@@ -813,27 +818,17 @@ object SnapshotLog {
 
   /** Lands `df` as uniquely-named parquet files in the table directory
     * WITHOUT committing them — the visible half of a writer crash.
-    * Returns the landed relative file names. Exposed because the crash
-    * window between data landing and manifest rename is exactly what
-    * the protocol exists to survive; tests and the graded key both
-    * drive it directly. */
+    * Returns the landed relative file names. Every DataFrame commit
+    * stages through here, so the files carry the format's one setting
+    * set ([[DataFiles]]: ZSTD column chunks, INT64 microsecond
+    * timestamps). Exposed because the crash window between data landing
+    * and manifest rename is exactly what the protocol exists to
+    * survive; tests and the graded key both drive it directly. */
   def stageOnly(spark: SparkSession, table: String, df: DataFrame): Seq[String] = {
     val f = fs(spark, table)
     val jobId = UUID.randomUUID.toString.take(8)
     val staging = new Path(s"$table/_staging/$jobId")
-    // timestamps stage as INT64 micros, not Spark's INT96 default: the
-    // footer-stats lifter reads INT64 only, and an INT96 file is
-    // stats-BLIND — every skipping/count_by/partition-purity claim on
-    // a timestamp column would silently die at the first staged write
-    // (the catalog's own Group-API writers already spell INT64)
-    val tsKey = "spark.sql.parquet.outputTimestampType"
-    val prevTs = spark.conf.getOption(tsKey)
-    spark.conf.set(tsKey, "TIMESTAMP_MICROS")
-    try df.write.mode("overwrite").parquet(staging.toString)
-    finally prevTs match {
-      case Some(v) => spark.conf.set(tsKey, v)
-      case None    => spark.conf.unset(tsKey)
-    }
+    DataFiles.write(spark, df.write.mode("overwrite"), staging.toString)
     val parts = f
       .listStatus(staging)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -1404,11 +1399,11 @@ object SnapshotLog {
     case (fsq, Some(s)) if isMapped(s) =>
       // mapped table: the files spell physical names; read under them
       // and surface the logical names (one zero-cost Project)
-      val phys = spark.read.schema(toPhysical(s)).parquet(fsq.map(n => dataPath(table, n)): _*)
+      val phys = DataFiles.read(spark).schema(toPhysical(s)).parquet(fsq.map(n => dataPath(table, n)): _*)
       if (aliasLogical) phys.toDF(s.fieldNames.toIndexedSeq: _*) else phys
     case (fsq, Some(s)) =>
-      spark.read.schema(s).parquet(fsq.map(n => dataPath(table, n)): _*)
-    case (fsq, None) => spark.read.parquet(fsq.map(n => dataPath(table, n)): _*)
+      DataFiles.read(spark).schema(s).parquet(fsq.map(n => dataPath(table, n)): _*)
+    case (fsq, None) => DataFiles.read(spark).parquet(fsq.map(n => dataPath(table, n)): _*)
   }
 
   /** Snapshot read at `version` (default: latest). Hands Spark exactly
@@ -3278,11 +3273,12 @@ object SnapshotLog {
     val staging = new Path(s"$table/_staging/$jobId")
     // partitionBy keeps the bucket OUT of the data files (it lives in
     // the directory name) and the repartition bounds files-per-bucket
-    stagedSrc.withColumn(
+    val bucketed = stagedSrc.withColumn(
         "__graft_bucket", pmod(col(bucketCol), lit(nBuckets)).cast("int"))
       .repartition(nBuckets, col("__graft_bucket"))
-      .write.mode("overwrite").partitionBy("__graft_bucket")
-      .parquet(staging.toString)
+    DataFiles.write(
+      spark, bucketed.write.mode("overwrite").partitionBy("__graft_bucket"),
+      staging.toString)
     val landed: Seq[(String, Int)] = f
       .listStatus(staging)
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("__graft_bucket="))

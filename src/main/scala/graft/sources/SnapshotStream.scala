@@ -326,7 +326,7 @@ class GraftSnapshotMicroBatchStream(
       // looks columns up by name, rows bind to the stream's logical
       // schema positionally (CDF rider columns are identity-mapped)
       SnapshotLog.toPhysical(schema),
-      new SerializableHadoopConf(spark.sessionState.newHadoopConf()),
+      new SerializableHadoopConf(DataFiles.hadoopConf(spark)),
       readChangeFeed
     )
 

@@ -3098,6 +3098,48 @@ class CatalogSpec extends SparkTestBase {
     assert(a2 <= b2)
   }
 
+  test("runtime file pruning past 64 integer keys stays exact: a build " +
+    "side of two far-apart key clusters plans only the files holding them") {
+    import graft.sources.SnapshotSqlScan
+    import spark.implicits._
+    val t = freshName()
+    spark.sql(
+      s"""CREATE TABLE $t (k BIGINT, v BIGINT)
+         |TBLPROPERTIES ('sorted_by' = 'k')""".stripMargin)
+    (0 until 8).foreach { s =>
+      spark.sql(
+        s"""INSERT INTO $t
+           |SELECT id, id * 10 FROM range(${s * 1000}, ${s * 1000 + 1000})""".stripMargin)
+    }
+    // 80 keys: 40 in slice 0 and 40 in slice 7, so the [min, max]
+    // envelope of the list spans every slice
+    val keys = (0L until 400L by 10L) ++ (7000L until 7400L by 10L)
+    val dimDir = Files.createTempDirectory("graft_dpp_wide").toString
+    keys.toDF("dk").write.mode("overwrite").parquet(dimDir)
+    spark.read.parquet(dimDir).createOrReplaceTempView("graft_dpp_wide")
+    val q =
+      s"""SELECT f.k, f.v FROM $t f
+         |JOIN graft_dpp_wide d ON f.k = d.dk WHERE d.dk < 8000""".stripMargin
+    SnapshotSqlScan.lastRuntimePrune.set((0, 0))
+    val rows = spark.sql(q).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val (after, before) = SnapshotSqlScan.lastRuntimePrune.get()
+    val p = pathOf(t)
+    val live = SnapshotLog.manifest(spark, p, SnapshotLog.versions(spark, p).last)
+    val holding = live.count { f =>
+      spark.read.parquet(s"$p/$f").where($"k".isin(keys: _*)).count() > 0
+    }
+    assert(before == live.length && holding < live.length,
+      s"planned $after/$before, $holding of ${live.length} files hold a key")
+    assert(after == holding, s"planned $after files, $holding hold a build key")
+    // the pruned join equals the unpruned one
+    val dppKey = "spark.sql.optimizer.dynamicPartitionPruning.enabled"
+    spark.conf.set(dppKey, "false")
+    val unpruned =
+      try spark.sql(q).collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
+      finally spark.conf.unset(dppKey)
+    assert(rows.size == keys.size && rows == unpruned)
+  }
+
   test("COUNT(DISTINCT) serves from a kind='distinct' MV at identity, " +
     "coarse and global grains (bitmap OR across fine keys — sums of per-key " +
     "distincts would overcount); non-distinct aggregates and other kinds " +

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.SnapshotLog
@@ -2927,5 +2927,54 @@ class MvSpec extends SparkTestBase {
       SnapshotLog.refreshMv(spark, mv))
     assert(e.getMessage.contains("natfk") &&
       e.getMessage.contains("foreign key"), e.getMessage)
+  }
+
+  test("the registry rollup keys serve inside the optimizer when the " +
+    "fixture's l_shipdate is a session TIMESTAMP (the loader reads it as " +
+    "TIMESTAMP_NTZ, the optimizer unwraps that cast onto the literal): " +
+    "agg_rollup_mv and agg_rollup_avg equal the rewrite-off answer") {
+    import spark.implicits._
+    import graft.plans.MvRewrite
+    val dir = Files.createTempDirectory("graft_rollup_ts").toString
+    val rng = new scala.util.Random(7)
+    val day0 = java.sql.Timestamp.valueOf("1995-01-01 00:00:00").getTime
+    val rows = (0 until 3000).map { i =>
+      (i.toLong, (1 + rng.nextInt(50)).toDouble, Seq("A", "N", "R")(rng.nextInt(3)),
+        Seq("O", "F")(rng.nextInt(2)),
+        new java.sql.Timestamp(day0 + (1 + rng.nextInt(2498)) * 86400000L))
+    }
+    val tmp = s"$dir/lineitem.tmp"
+    rows.toDF("l_orderkey", "l_quantity", "l_returnflag", "l_linestatus", "l_shipdate")
+      .coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    assert(part.renameTo(new java.io.File(s"$dir/lineitem.parquet")))
+    assert(spark.read.parquet(s"$dir/lineitem.parquet").schema("l_shipdate")
+      .dataType == org.apache.spark.sql.types.TimestampType)
+    assert(Tables.lineitem(spark, dir).schema("l_shipdate")
+      .dataType == org.apache.spark.sql.types.TimestampNTZType)
+
+    def rewriteOff(aggs: Column*): Seq[org.apache.spark.sql.Row] = {
+      val prev = spark.conf.getOption(MvRewrite.ConfKey)
+      spark.conf.set(MvRewrite.ConfKey, "false")
+      try Tables.lineitem(spark, dir)
+        .filter(col("l_shipdate") <= lit("1998-09-02"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(aggs.head, aggs.tail: _*)
+        .orderBy("l_returnflag", "l_linestatus")
+        .collect().toSeq
+      finally prev match {
+        case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
+        case None    => spark.conf.unset(MvRewrite.ConfKey)
+      }
+    }
+    val mvRows = SparkEntry.queries("agg_rollup_mv")(spark, dir).collect().toSeq
+    assert(mvRows.size == 6)
+    assert(mvRows == rewriteOff(count(lit(1)), sum("l_quantity"),
+      min("l_quantity"), max("l_quantity")))
+    val avgRows = SparkEntry.queries("agg_rollup_avg")(spark, dir).collect().toSeq
+    assert(avgRows.size == 6)
+    assert(avgRows == rewriteOff(avg("l_quantity"), count(lit(1)),
+      sum("l_quantity")))
   }
 }
