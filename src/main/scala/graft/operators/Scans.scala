@@ -1569,7 +1569,9 @@ object Scans {
               .select(dataCols.map(col): _*)
             val txn = s"cdf-$batchId-$v"
             if (SnapshotLog.versions(spark, dst).isEmpty)
-              SnapshotLog.commitIdempotent(spark, dst, ins, txn)
+              SnapshotLog.commit(
+                spark, dst,
+                SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(ins), txnId = Some(txn)))
             else {
               val keys = dels.select("o_orderkey").union(ins.select("o_orderkey"))
               SnapshotLog.mergeCoW(
@@ -1644,7 +1646,10 @@ object Scans {
       .writeStream
       .option("checkpointLocation", s"$src/_ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        SnapshotLog.commitIdempotent(spark, src, batch, s"mvmaint-$batchId")
+        SnapshotLog.commit(
+          spark, src,
+          SnapshotLog.CommitRequest(
+            SnapshotLog.CommitData.Frame(batch), txnId = Some(s"mvmaint-$batchId")))
         SnapshotLog.refreshMv(spark, mv)
         ()
       }
@@ -1677,12 +1682,11 @@ object Scans {
       .orders(spark, dir)
       .select("o_orderkey", "o_custkey", "o_totalprice")
     SnapshotLog.commit(spark, table, o.filter(col("o_orderkey") % 3 === 0))
-    SnapshotLog.commitIdempotent(
-      spark,
-      table,
-      o.filter(col("o_orderkey") % 3 === 1),
-      "load-2"
-    )
+    SnapshotLog.commit(
+      spark, table,
+      SnapshotLog.CommitRequest(
+        SnapshotLog.CommitData.Frame(o.filter(col("o_orderkey") % 3 === 1)),
+        txnId = Some("load-2")))
     SnapshotLog.compact(
       spark,
       table,
@@ -6937,7 +6941,7 @@ object Scans {
 
   /** STORAGE-PARTITIONED JOIN (round 11 late): orders and customer are
     * committed BUCKET-CLUSTERED on the customer key (8 buckets,
-    * `SnapshotLog.commitBucketed` — the shuffle is paid once at write
+    * a bucketed `SnapshotLog.commit` — the shuffle is paid once at write
     * time), the catalog's scans report `bucket(8, key)`
     * KeyGroupedPartitioning bound through the catalog's
     * FunctionCatalog, and the join then needs NO exchange: the inline
@@ -6955,14 +6959,17 @@ object Scans {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("orders_bkt", "customer_bkt").foreach(t =>
       fsys.delete(new org.apache.hadoop.fs.Path(tmp(s"sql_warehouse/main/$t")), true))
-    SnapshotLog.commitBucketed(
-      spark, tmp("sql_warehouse/main/orders_bkt"),
+    def bucketed(table: String, df: org.apache.spark.sql.DataFrame, key: String): Int =
+      SnapshotLog.commit(
+        spark, tmp(s"sql_warehouse/main/$table"),
+        SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(df), buckets = Some((key, 8))))
+    bucketed(
+      "orders_bkt",
       Tables.orders(spark, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
-      "o_custkey", 8)
-    SnapshotLog.commitBucketed(
-      spark, tmp("sql_warehouse/main/customer_bkt"),
-      Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"),
-      "c_custkey", 8)
+      "o_custkey")
+    bucketed(
+      "customer_bkt", Tables.customer(spark, dir).select("c_custkey", "c_mktsegment"),
+      "c_custkey")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -910,9 +910,9 @@ object Similarity {
     * — on a 100 TB vector store, ingesting a batch of new embeddings
     * costs encoding that batch (8 code bytes/vector appended), never
     * a corpus re-encode. The folded-through version rides the code
-    * commit's header ([[graft.sources.SnapshotLog.commitWatermarked]]
-    * — the same crash-safe watermark the MV and text-index refreshes
-    * use). A DELETE-bearing delta no longer refuses (round 14): dead
+    * commit's header (an `idxv=` token, read back by
+    * [[graft.sources.SnapshotLog.committedWatermark]] — the same
+    * crash-safe watermark the MV and text-index refreshes use). A DELETE-bearing delta no longer refuses (round 14): dead
     * code rows are keyed by the deleted vec_ids, so the refresh
     * rewrites ONLY the code files whose vec_id stats admit a dead id
     * — the sql_mv_minmax group-scoped pattern through
@@ -956,7 +956,7 @@ object Similarity {
       val deadIds = changes.filter(col("change_type") === "delete")
         .select("vec_id").distinct().localCheckpoint()
       if (deadIds.isEmpty) {
-        SnapshotLog.commitWatermarked(spark, idx, pqEncode(ins, cb), "idxv", to)
+        SnapshotLog.commit(spark, idx, SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(pqEncode(ins, cb)), header = Seq(s"idxv=$to")))
       } else {
         // a CoW-rewritten survivor appears on both sides of the feed:
         // its old codes remove (vec_id-keyed), its re-encode re-adds —
@@ -977,9 +977,9 @@ object Similarity {
     }
     SnapshotLog.commit(spark, src, emb.filter(col("vec_id") <= half))
     val v1 = SnapshotLog.versions(spark, src).last
-    SnapshotLog.commitWatermarked(
+    SnapshotLog.commit(
       spark, idx,
-      pqEncode(SnapshotLog.read(spark, src), cb), "idxv", v1)
+      SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(pqEncode(SnapshotLog.read(spark, src), cb)), header = Seq(s"idxv=$v1")))
     // the corpus grows behind the index's back → pure insert fold
     SnapshotLog.commit(spark, src, emb.filter(col("vec_id") > half))
     refresh()

@@ -25,6 +25,8 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.sources.SnapshotLog.{CommitData, CommitRequest}
+
 /** SQL catalog over [[SnapshotLog]] tables — the surface that turns the
   * storage layer into a queryable lakehouse:
   *
@@ -400,13 +402,9 @@ class SnapshotCatalog
     // v1 is a schema-only commit: the empty table is immediately
     // readable under its recorded schema (and DECLARES the bucket
     // layout when one was asked for)
-    bucketSpec match {
-      case Some((c, n)) =>
-        SnapshotLog.commitLandedBucketed(
-          spark, tablePath(ident), Nil, schema, c, n)
-      case None =>
-        SnapshotLog.commitLanded(spark, tablePath(ident), Nil, schema)
-    }
+    SnapshotLog.commit(
+      spark, tablePath(ident),
+      CommitRequest(CommitData.landed(Nil, schema), buckets = bucketSpec))
     if (declaredProps.nonEmpty)
       SnapshotLog.setTableProps(spark, tablePath(ident), declaredProps)
     loadTable(ident)
@@ -636,7 +634,9 @@ class SnapshotCatalog
                   "graftPhys",
                   s"${f.name}__p${UUID.randomUUID.toString.take(8)}")
                 .build()))
-      SnapshotLog.commitLanded(spark, path, Nil, StructType(tipNow.fields ++ stamped))
+      SnapshotLog.commit(
+        spark, path,
+        CommitRequest(CommitData.landed(Nil, StructType(tipNow.fields ++ stamped))))
     }
     loadTable(ident)
   }
@@ -1370,7 +1370,7 @@ object PartSpec {
 }
 
 /** `bucket(n, key)` = `pmod(key, n)` in long space — the SAME function
-  * [[SnapshotLog.commitBucketed]] clusters with at write time, so the
+  * a bucketed [[SnapshotLog.commit]] clusters with at write time, so the
   * scan-reported partitioning is the data's true layout. */
 object GraftBucketFunction
     extends org.apache.spark.sql.connector.catalog.functions.UnboundFunction {
@@ -1684,7 +1684,8 @@ case class SnapshotSqlTable(
         case (_, None) => None // blind file: undecidable
       }
       if (decided.exists(_.isEmpty)) None
-      else Some(decided.flatten.flatten)
+      // the doomed files' entry lines, as the replace reads them
+      else Some(SnapshotLog.entriesNamed(spark, path, vs.last, decided.flatten.flatten))
     }
 
   override def canDeleteWhere(
@@ -1699,13 +1700,16 @@ case class SnapshotSqlTable(
         s"snapshot catalog: $ident is no longer eligible for a metadata-only " +
           "delete (a concurrent commit changed the file layout)"))
     if (doomed.nonEmpty)
-      SnapshotLog.commitLandedReplace(spark, path, Nil, dataSchema, doomed)
+      SnapshotLog.commit(
+        spark, path,
+        CommitRequest(CommitData.landed(Nil, dataSchema), removals = Some(doomed)))
   }
 
   /** `TRUNCATE TABLE` — an empty overwrite commit; history stays
     * time-travel readable. */
   override def truncateTable(): Boolean = {
-    SnapshotLog.commitLanded(spark, path, Nil, dataSchema, overwrite = true)
+    SnapshotLog.commit(
+      spark, path, CommitRequest(CommitData.landed(Nil, dataSchema), overwrite = true))
     true
   }
 
@@ -2725,7 +2729,9 @@ class SnapshotRowLevelOperation(
     private[sources] val uniqueKey: Option[String] = None
 ) extends org.apache.spark.sql.connector.write.RowLevelOperation {
 
-  // the groups the scan planned — what the write's commit replaces
+  // the groups the scan planned, as entry lines at the scan's version —
+  // what the write's commit replaces (verified verbatim, so a deletion
+  // vector landing on a group mid-rewrite is a loud conflict)
   private[sources] val scannedFiles =
     new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
 
@@ -2831,7 +2837,7 @@ class SnapshotRowLevelScan(
         all.filter(r => keep(r._1.substring(r._1.lastIndexOf('/') + 1)))
       case None => all
     }
-    op.scannedFiles.set(riders.map(_._1))
+    op.scannedFiles.set(SnapshotLog.entriesNamed(spark, path, version, riders.map(_._1)))
     riders.map { case (f, _, dv) =>
       SnapshotFilePartition(SnapshotLog.dataPath(path, f), dv.map(d => SnapshotLog.dvFilePath(path, d)))
     }.toArray
@@ -2872,7 +2878,7 @@ case class SnapshotReplaceBatchWrite(
     require(
       removed != null,
       "snapshot DML: write committed before its scan planned any group")
-    val names = messages.toSeq.collect { case SnapshotSqlCommit(Some(n), _) => n }
+    val names = SnapshotSql.landedFiles(messages.toSeq).map(_._1)
     // runtime group filtering proved no file holds a matching row: a
     // true no-op — don't burn a version on an empty replace
     if (removed.isEmpty && names.isEmpty) return
@@ -2889,19 +2895,19 @@ case class SnapshotReplaceBatchWrite(
         op.uniqueKey.isDefined
     def audit(): Unit = op.uniqueKey.foreach(k =>
       SnapshotLog.validateUniqueKeys(
-        sp, path, k, names, commitSchema, excludeFiles = removed.toSet))
+        sp, path, k, names, commitSchema,
+        excludeFiles = removed.map(_.takeWhile(_ != '\t')).toSet))
     if (needAudit) audit()
-    SnapshotLog.commitLandedReplace(
-      sp, path, names, commitSchema, removed,
-      preCommit = prev => if (needAudit && prev != auditedTip) audit())
+    SnapshotLog.commit(
+      sp, path,
+      CommitRequest(
+        CommitData.landed(names, commitSchema), removals = Some(removed),
+        preCommit = prev => if (needAudit && prev != auditedTip) audit()))
     // quarantine-mode tables: rewritten rows the CHECK diverted land in
     // the dead-letter table, same as the insert path (a crash between
     // the two commits leaves the quarantine files as vacuumable
     // orphans, never a lost or duplicated main-table row)
-    val qnames = messages.toSeq.collect { case SnapshotSqlCommit(_, Some(q)) => q }
-    if (qnames.nonEmpty)
-      SnapshotLog.commitLanded(
-        SparkSession.active, s"${path}_quarantine", qnames, commitSchema)
+    SnapshotSql.commitQuarantine(sp, path, messages.toSeq, commitSchema, None)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -2991,7 +2997,7 @@ class SnapshotMorRowLevelOperation(
 
 /** The delta write requires CLUSTERING BY `_file`: all of one file's
   * delete positions land in one task, so each touched file gets exactly
-  * one (complete) new sidecar — the invariant [[SnapshotLog.commitMorDelta]]
+  * one (complete) new sidecar — the invariant [[SnapshotLog.dvAmendments]]
   * asserts. Insert rows carry a null `_file` and cluster together; MoR
   * is the small-fraction-DML path, so the single-task insert side is
   * the accepted trade (bulk rewrites belong to copy-on-write). */
@@ -3034,8 +3040,10 @@ class SnapshotMorBatchWrite(
     // existing sidecars of live files, so a second DML UNIONS into a
     // new DV instead of dropping the first one's positions — O(DV'd
     // files) name strings, no sidecar bytes on the driver
+    val base = SnapshotLog.versions(spark, path).last
+    baseVersion = Some(base)
     val oldDv: Map[String, String] = SnapshotLog
-      .fileRiders(spark, path, SnapshotLog.versions(spark, path).last)
+      .fileRiders(spark, path, base)
       .flatMap { case (f, _, dv) =>
         dv.map(d =>
           f.substring(f.lastIndexOf('/') + 1) -> SnapshotLog.dvFilePath(path, d))
@@ -3047,18 +3055,34 @@ class SnapshotMorBatchWrite(
       fileIdx, posIdx, oldDv, check)
   }
 
+  /** The version the writers' DV unions read their old sidecars at —
+    * the amendments' read side. */
+  @volatile private var baseVersion: Option[Int] = None
+
+  /** Each touched file's entry re-added with its new deletion-vector
+    * rider AND the landed insert files appended, in ONE replace-delta
+    * commit: an UPDATE's delete half and insert half can never be
+    * observed separately. Sidecars were already written executor-side
+    * by the delta writers; this moves only O(touched + new files)
+    * metadata strings through the driver. The change feed composes
+    * both halves exactly: DV deltas surface as row deletes, new files
+    * as inserts. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val sp = SparkSession.active
     val ms = messages.toSeq.collect { case m: SnapshotMorCommit => m }
     val specs = ms.flatMap(_.dvSpecs)
     val files = ms.flatMap(_.file)
     // nothing matched: a true no-op — don't burn a version
-    if (specs.nonEmpty || files.nonEmpty)
-      SnapshotLog.commitMorDelta(
-        SparkSession.active, path, specs, files, commitSchema)
-    val qnames = ms.flatMap(_.q)
-    if (qnames.nonEmpty)
-      SnapshotLog.commitLanded(
-        SparkSession.active, s"${path}_quarantine", qnames, commitSchema)
+    if (specs.nonEmpty || files.nonEmpty) {
+      val base = baseVersion.getOrElse(SnapshotLog.versions(sp, path).last)
+      SnapshotLog.commit(
+        sp, path,
+        CommitRequest(
+          CommitData.landed(files, commitSchema), removals = Some(Nil),
+          amendments = SnapshotLog.dvAmendments(
+            SnapshotLog.manifestEntries(sp, path, base), specs)))
+    }
+    SnapshotSql.commitQuarantine(sp, path, ms, commitSchema, None)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -3268,7 +3292,7 @@ class SnapshotSqlWriteBuilder(
 /** `writeStream.toTable(...)` sink: each epoch commits EXACTLY ONCE —
   * the txn id scopes by (streaming queryId, epochId), so a crash
   * between sink commit and offset commit re-delivers the epoch and
-  * [[SnapshotLog.commitLanded]]'s replay check drops it harmlessly
+  * [[SnapshotLog.commit]]'s txn replay check drops it harmlessly
   * (the table-grain exactly-once contract StreamOps.snapshotSink
   * pioneered, now reachable as a first-class catalog sink). Complete
   * mode (truncate) overwrites per epoch under the same replay key. */
@@ -3294,33 +3318,16 @@ case class SnapshotSqlStreamingWrite(
   override def commit(
       epochId: Long,
       messages: Array[WriterCommitMessage]
-  ): Unit = bucketSpec match {
-    case Some((c, n)) =>
-      val files = messages.toSeq.collect {
-        case SnapshotSqlBucketedCommit(fs) => fs
-      }.flatten
-      SnapshotLog.commitLandedBucketed(
-        SparkSession.active, path, files, commitSchema, c, n,
-        overwrite = overwrite,
-        txnId = Some(s"sql-$queryId-$epochId"))
-    case None =>
-      val names = messages.toSeq.flatMap {
-        case SnapshotSqlCommit(Some(n), _) => Seq(n)
-        case SnapshotSqlFilesCommit(fs, _) => fs
-        case _                             => Nil
-      }
-      SnapshotLog.commitLanded(
-        SparkSession.active, path, names, commitSchema,
-        overwrite = overwrite,
-        txnId = Some(s"sql-$queryId-$epochId"))
-      val qnames = messages.toSeq.collect {
-        case SnapshotSqlCommit(_, Some(q))      => q
-        case SnapshotSqlFilesCommit(_, Some(q)) => q
-      }
-      if (qnames.nonEmpty)
-        SnapshotLog.commitLanded(
-          SparkSession.active, s"${path}_quarantine", qnames, commitSchema,
-          txnId = Some(s"sqlq-$queryId-$epochId"))
+  ): Unit = {
+    val sp = SparkSession.active
+    SnapshotLog.commit(
+      sp, path,
+      CommitRequest(
+        CommitData.Landed(SnapshotSql.landedFiles(messages.toSeq), commitSchema),
+        overwrite = overwrite, txnId = Some(s"sql-$queryId-$epochId"),
+        buckets = bucketSpec))
+    SnapshotSql.commitQuarantine(
+      sp, path, messages.toSeq, commitSchema, Some(s"sqlq-$queryId-$epochId"))
   }
 
   override def abort(
@@ -3417,49 +3424,25 @@ case class SnapshotSqlBatchWrite(
     val auditedTip = SnapshotLog.versions(sp, path).lastOption
     def reauditOn(run: () => Unit): Option[Int] => Unit = prev =>
       if (!overwrite && uniqueKey.isDefined && prev != auditedTip) run()
-    bucketSpec match {
-      case Some((c, n)) =>
-        val files = messages.toSeq.collect {
-          case SnapshotSqlBucketedCommit(fs) => fs
-        }.flatten
-        // unique audit BEFORE the commit: a violation throws here, the
-        // manifest never references the batch, Spark aborts the write
-        def audit(): Unit = uniqueKey.foreach(k =>
-          SnapshotLog.validateUniqueKeys(
-            sp, path, k, files.map(_._1), commitSchema,
-            checkExisting = !overwrite))
-        audit()
-        SnapshotLog.commitLandedBucketed(
-          sp, path, files, commitSchema, c, n,
-          overwrite = overwrite, preCommit = reauditOn(() => audit()))
-      case None =>
-        val names = messages.toSeq.flatMap {
-          case SnapshotSqlCommit(Some(n), _)  => Seq(n)
-          case SnapshotSqlFilesCommit(fs, _)  => fs
-          case _                              => Nil
-        }
-        def audit(): Unit = uniqueKey.foreach(k =>
-          SnapshotLog.validateUniqueKeys(
-            sp, path, k, names, commitSchema,
-            checkExisting = !overwrite))
-        audit()
-        SnapshotLog.commitLanded(
-          sp, path, names, commitSchema, overwrite = overwrite,
-          preCommit = reauditOn(() => audit()))
-        // quarantined rows (check_mode=quarantine) commit to the
-        // sibling dead-letter table — its own log, fully queryable.
-        // Not atomic with the main commit (two logs): on a driver
-        // crash between the two, the quarantine files are orphans its
-        // vacuum sweeps — bad rows can vanish, never duplicate into
-        // the MAIN table.
-        val qnames = messages.toSeq.collect {
-          case SnapshotSqlCommit(_, Some(q))       => q
-          case SnapshotSqlFilesCommit(_, Some(q))  => q
-        }
-        if (qnames.nonEmpty)
-          SnapshotLog.commitLanded(
-            SparkSession.active, s"${path}_quarantine", qnames, commitSchema)
-    }
+    val files = SnapshotSql.landedFiles(messages.toSeq)
+    // unique audit BEFORE the commit: a violation throws here, the
+    // manifest never references the batch, Spark aborts the write
+    def audit(): Unit = uniqueKey.foreach(k =>
+      SnapshotLog.validateUniqueKeys(
+        sp, path, k, files.map(_._1), commitSchema,
+        checkExisting = !overwrite))
+    audit()
+    SnapshotLog.commit(
+      sp, path,
+      CommitRequest(
+        CommitData.Landed(files, commitSchema), overwrite = overwrite,
+        buckets = bucketSpec, preCommit = reauditOn(() => audit())))
+    // quarantined rows (check_mode=quarantine) commit to the sibling
+    // dead-letter table — its own log, fully queryable. Not atomic
+    // with the main commit (two logs): on a driver crash between the
+    // two, the quarantine files are orphans its vacuum sweeps — bad
+    // rows can vanish, never duplicate into the MAIN table.
+    SnapshotSql.commitQuarantine(sp, path, messages.toSeq, commitSchema, None)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -3769,6 +3752,36 @@ class SnapshotParquetWriter(
   * `SnapshotLog`'s stats lifter understands; anything else refuses at
   * planning, before a task runs. */
 private[sources] object SnapshotSql {
+
+  /** The files a write's tasks landed, each with its bucket id when the
+    * table is bucketed. */
+  def landedFiles(messages: Seq[WriterCommitMessage]): Seq[(String, Option[Int])] =
+    messages.flatMap {
+      case SnapshotSqlCommit(Some(n), _)  => Seq(n -> None)
+      case SnapshotSqlFilesCommit(fs, _)  => fs.map(_ -> None)
+      case SnapshotSqlBucketedCommit(fs)  => fs.map { case (n, b) => n -> Some(b) }
+      case _                              => Nil
+    }
+
+  /** Commits the rows a write's CHECK diverted (check_mode=quarantine)
+    * to the sibling `<table>_quarantine` table; no-op when none were. */
+  def commitQuarantine(
+      spark: SparkSession,
+      path: String,
+      messages: Seq[WriterCommitMessage],
+      schema: StructType,
+      txnId: Option[String]
+  ): Unit = {
+    val qnames = messages.collect {
+      case SnapshotSqlCommit(_, Some(q))      => q
+      case SnapshotSqlFilesCommit(_, Some(q)) => q
+      case SnapshotMorCommit(_, _, Some(q))   => q
+    }
+    if (qnames.nonEmpty)
+      SnapshotLog.commit(
+        spark, s"${path}_quarantine",
+        CommitRequest(CommitData.landed(qnames, schema), txnId = txnId)): Unit
+  }
 
   /** A CHECK constraint compiled for executor-side row evaluation: the
     * declared SQL text plus the analyzed expression BOUND to the write

@@ -64,6 +64,21 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   *     files that can hold a doomed row; everything else carries by
   *     reference.
   *
+  * **One commit path.** Every write — append, overwrite, copy-on-write
+  * replace, deletion-vector amendment, bucketed or watermarked write,
+  * MV fold, ALTER, restore, clone, publish, bloom, OPTIMIZE and the SQL
+  * catalog's DSv2 commits — builds one [[CommitRequest]] value: what
+  * lands (a DataFrame to stage, files a writer already landed, or whole
+  * entry lines), the entries it removes or amends as it read them, a
+  * txn id, header tokens, a bucket spec and a `preCommit` hook. The
+  * one [[commit]] then runs a fixed order: refuse a filesystem no
+  * [[CommitBackend]] covers; validate the txn id and header tokens and
+  * answer a replayed txn, before staging; pre-check schema evolution
+  * against the tip; stage; annotate footer stats; then, under the claim
+  * lock, re-check the replay, verify every entry the request read
+  * VERBATIM against the parent, run `preCommit`, write the manifest,
+  * publish it with one `putIfAbsent` and move `_tip`.
+  *
   * Scale posture: the log is O(commits) tiny text files; the
   * `_log/_tip` pointer makes tip discovery O(1) round trips instead of
   * a directory listing per operation (the `_last_checkpoint` idiom);
@@ -553,7 +568,6 @@ object SnapshotLog {
     resolved
   }
 
-  /** Live data files (relative names) at `version`. */
   /** (name, bytes, rows) per live file at `version`, from the
     * manifest's `_sz`/`_rc` riders — O(manifest) driver metadata, zero
     * file opens. Files committed before the riders existed report
@@ -610,6 +624,7 @@ object SnapshotLog {
   def commitTimestamp(spark: SparkSession, table: String, version: Int): Long =
     fs(spark, table).getFileStatus(commitPath(table, version)).getModificationTime
 
+  /** Live data files (relative names) at `version`. */
   def manifest(spark: SparkSession, table: String, version: Int): Seq[String] =
     manifestEntries(spark, table, version).map(_.split('\t')(0))
 
@@ -819,36 +834,166 @@ object SnapshotLog {
   /** Lands `df` as uniquely-named parquet files in the table directory
     * WITHOUT committing them — the visible half of a writer crash.
     * Returns the landed relative file names. Every DataFrame commit
-    * stages through here, so the files carry the format's one setting
-    * set ([[DataFiles]]: ZSTD column chunks, INT64 microsecond
-    * timestamps). Exposed because the crash window between data landing
-    * and manifest rename is exactly what the protocol exists to
-    * survive; tests and the graded key both drive it directly. */
-  def stageOnly(spark: SparkSession, table: String, df: DataFrame): Seq[String] = {
+    * stages through the same routine ([[stageFiles]]), so the files
+    * carry the format's one setting set ([[DataFiles]]: ZSTD column
+    * chunks, INT64 microsecond timestamps). Exposed because the crash
+    * window between data landing and manifest rename is exactly what
+    * the protocol exists to survive; tests and the graded key both
+    * drive it directly. */
+  def stageOnly(spark: SparkSession, table: String, df: DataFrame): Seq[String] =
+    stageFiles(spark, table, df, None).map(_._1)
+
+  /** The one staging routine: writes `df` under `_staging/<job>` and
+    * renames each parquet file into the table root as
+    * `part-<job>-<i>.parquet`. With a bucket spec the rows shuffle once
+    * by `pmod(key, n)` and land as per-bucket files
+    * `part-<job>-b<bucket>-<i>.parquet`, each returned with its bucket
+    * id (`partitionBy` keeps the bucket out of the data files; the
+    * repartition bounds files per bucket). */
+  private def stageFiles(
+      spark: SparkSession,
+      table: String,
+      df: DataFrame,
+      buckets: Option[(String, Int)]
+  ): Seq[(String, Option[Int])] = {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
     val f = fs(spark, table)
     val jobId = UUID.randomUUID.toString.take(8)
     val staging = new Path(s"$table/_staging/$jobId")
-    DataFiles.write(spark, df.write.mode("overwrite"), staging.toString)
-    val parts = f
-      .listStatus(staging)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath)
-      .sortBy(_.getName)
-    val landed = parts.zipWithIndex.map { case (p, i) =>
-      val name = s"part-$jobId-$i.parquet"
-      require(
-        f.rename(p, new Path(s"$table/$name")),
-        s"snapshot stage: rename $p failed"
-      )
-      name
+    val bucketDir = "__graft_bucket"
+    val writer = buckets match {
+      case Some((c, n)) =>
+        df.withColumn(bucketDir, pmod(col(c), lit(n)).cast("int"))
+          .repartition(n, col(bucketDir))
+          .write.mode("overwrite").partitionBy(bucketDir)
+      case None => df.write.mode("overwrite")
     }
-    f.delete(new Path(s"$table/_staging/$jobId"), true)
-    landed.toSeq
+    DataFiles.write(spark, writer, staging.toString)
+    val dirs: Seq[(Path, Option[Int])] =
+      if (buckets.isEmpty) Seq(staging -> None)
+      else
+        f.listStatus(staging).toSeq
+          .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$bucketDir="))
+          .sortBy(_.getPath.getName)
+          .map(st => st.getPath -> Some(st.getPath.getName.stripPrefix(s"$bucketDir=").toInt))
+    val landed = dirs.flatMap { case (dir, b) =>
+      f.listStatus(dir).toSeq
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .map(_.getPath)
+        .sortBy(_.getName)
+        .zipWithIndex
+        .map { case (p, i) =>
+          val name = s"part-$jobId-${b.fold("")(k => s"b$k-")}$i.parquet"
+          require(f.rename(p, new Path(s"$table/$name")), s"snapshot stage: rename $p failed")
+          name -> b
+        }
+    }
+    f.delete(staging, true)
+    landed
   }
 
-  /** Transactionally appends (or overwrites with) `df`; returns the
-    * committed version. Optimistic: on a version-claim race the append
-    * path re-reads the winner's manifest and retries. */
+  // ------------------------------------------------------------------
+  // The commit pipeline
+  // ------------------------------------------------------------------
+
+  /** What a commit lands, in one of three shapes. */
+  sealed trait CommitData
+
+  object CommitData {
+
+    /** Rows to stage as new data files. `schema` replaces the frame's
+      * own as the commit schema: a rewrite of the table's own rows
+      * (OPTIMIZE, a MoR update) passes the table schema, so the
+      * all-nullable spelling of a parquet read cannot dissolve a
+      * declared NOT NULL. */
+    final case class Frame(df: DataFrame, schema: Option[StructType] = None)
+        extends CommitData
+
+    /** Files a writer already landed in the table root under unique
+      * names (the SQL catalog's DSv2 write path: task writers land
+      * attempt-unique parquet, invisible until a manifest names them),
+      * each with its bucket id when the request declares a bucket
+      * spec. `schema` is the writer's schema. An empty list is a valid
+      * schema-only commit (CREATE TABLE, an empty INSERT). */
+    final case class Landed(files: Seq[(String, Option[Int])], schema: StructType)
+        extends CommitData
+
+    /** Whole manifest entry lines (name plus riders), committed as
+      * spelled — restore, clone, publish and ALTER carry entries
+      * verbatim. */
+    final case class Entries(lines: Seq[String], schema: StructType)
+        extends CommitData
+
+    /** Un-bucketed landed files. */
+    def landed(names: Seq[String], schema: StructType): Landed =
+      Landed(names.map(_ -> None), schema)
+  }
+
+  /** One commit, as a value: every write path builds one and hands it
+    * to [[commit]].
+    *
+    *   - `overwrite`: the manifest lists exactly this commit's lines
+    *     and its schema replaces the table's.
+    *   - `removals`: Some = a REPLACE, listing the manifest entry
+    *     lines (name plus riders) of the files it takes out, as the
+    *     writer read them; untouched files carry by reference. Some(Nil)
+    *     is a replace that removes nothing (a MoR delta of inserts
+    *     only).
+    *   - `amendments`: (entry read, entry written) pairs that re-spell a
+    *     live file's riders (a deletion vector, a bloom, backfilled
+    *     stats). Implies a replace.
+    *
+    * Every entry a request reads — removal or amendment — is verified
+    * VERBATIM against the parent manifest inside the claim lock: a file
+    * removed concurrently, or one whose riders changed (a deletion
+    * vector landing while a rewrite or another delete computed), is a
+    * loud `ConcurrentModificationException`, never a silent lost
+    * update that brings deleted rows back.
+    *   - `txnId`: at-least-once producers' replay key — a replay
+    *     returns the recorded version without staging or committing.
+    *   - `dataChange = false`: the rows did not change, only their
+    *     layout or riders; the change feed skips the commit.
+    *   - `header`: extra `key=value` (or bare word) header tokens;
+    *     `headerAfterStaging` yields more once staging has run (the
+    *     fold fingerprint is an observation of the staging write).
+    *   - `buckets`: (column, n) — stage a Frame bucket-clustered, or tag
+    *     Landed files with their ids, and declare `buckets=` in the
+    *     header.
+    *   - `preCommit`: runs inside the claim lock with the parent
+    *     version this commit will land on (the unique-key re-audit, the
+    *     MV single-writer check). */
+  final case class CommitRequest(
+      data: CommitData,
+      overwrite: Boolean = false,
+      removals: Option[Seq[String]] = None,
+      amendments: Seq[(String, String)] = Nil,
+      txnId: Option[String] = None,
+      dataChange: Boolean = true,
+      header: Seq[String] = Nil,
+      headerAfterStaging: Option[() => Seq[String]] = None,
+      buckets: Option[(String, Int)] = None,
+      preCommit: Option[Int] => Unit = _ => ()
+  )
+
+  /** Header keys the pipeline writes itself. */
+  private val ReservedHeaderKeys = Set("parent", "txn", "datachange", "schema", "buckets")
+
+  private val TxnIdPattern = "[A-Za-z0-9_-]+".r
+
+  private val HeaderTokenPattern = "([A-Za-z0-9_]+)(=\\S+)?".r
+
+  /** The header is one space-separated line of tokens: a token holding
+    * a space would split (and a replayed txn id would never match
+    * again), a newline would corrupt the manifest. */
+  private def requireHeaderToken(token: String): Unit = token match {
+    case HeaderTokenPattern(key, _) =>
+      require(!ReservedHeaderKeys(key), s"snapshot commit: header key '$key' is reserved")
+    case _ =>
+      throw new IllegalArgumentException(
+        s"snapshot commit: header token must be key[=value] with key " +
+          s"[A-Za-z0-9_]+ and no whitespace: '$token'")
+  }
+
   /** Per-table intra-JVM claim locks. HDFS rename REFUSES an existing
     * destination atomically, which alone makes the version claim safe
     * across JVMs there — but POSIX rename() silently OVERWRITES, so on
@@ -861,12 +1006,192 @@ object SnapshotLog {
   private val claimLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** Transactionally appends (or overwrites with) `df`; returns the
+    * committed version. */
   def commit(
       spark: SparkSession,
       table: String,
       df: DataFrame,
       overwrite: Boolean = false
-  ): Int = commitInternal(spark, table, df, overwrite, None, None)
+  ): Int = commit(spark, table, CommitRequest(CommitData.Frame(df), overwrite = overwrite))
+
+  /** THE commit path; returns the committed (or, for a replayed txn,
+    * the recorded) version. One fixed order:
+    *   1. refuse a filesystem no commit backend covers, before any
+    *      byte lands;
+    *   2. validate the txn id and header tokens, and answer a replayed
+    *      txn with its recorded version, before staging;
+    *   3. fail an incompatible schema evolution against the tip,
+    *      before staging;
+    *   4. stage a Frame (plain or bucketed, one routine);
+    *   5. annotate staged and landed files with their footer stats;
+    *   6. claim version N+1 under the lock: replay check, removal and
+    *      amendment validation against the parent, `preCommit`, schema
+    *      merge, manifest (a delta, or every [[FoldEvery]]th version
+    *      and every overwrite a full list), then one
+    *      [[CommitBackend.putIfAbsent]] and the `_tip` pointer. A lost
+    *      race recomputes against the new tip (appends never conflict
+    *      logically, so retry always succeeds). */
+  def commit(spark: SparkSession, table: String, req: CommitRequest): Int = {
+    val f = fs(spark, table)
+    requireCommitSafeFs(f, table)
+    req.txnId.foreach(t =>
+      require(TxnIdPattern.matches(t), s"txn id must be [A-Za-z0-9_-]+: $t"))
+    req.header.foreach(requireHeaderToken)
+    req.buckets.foreach { case (_, n) =>
+      require(n > 0, s"snapshot commit: bucket count must be > 0, got $n")
+    }
+    require(
+      !req.overwrite || (req.removals.isEmpty && req.amendments.isEmpty),
+      "snapshot commit: an overwrite neither removes nor amends")
+    // a replay stages nothing: its files would be orphans
+    req.txnId.flatMap(committedTxn(spark, table, _)).foreach(v => return v)
+    val (added, batchSchema) = req.data match {
+      case CommitData.Frame(df, schema) =>
+        // the authoritative merge recomputes under the claim lock; this
+        // keeps a doomed commit from landing orphan files
+        val tipSchema =
+          if (req.overwrite) None
+          else versions(spark, table).lastOption.flatMap(tableSchema(spark, table, _))
+        tipSchema.foreach(mergeSchemas(_, df.schema))
+        val (staged, bs) = mapForStage(tipSchema, df)
+        val files = stageFiles(spark, table, staged, req.buckets)
+        (annotateEntries(spark, table, files), schema.getOrElse(bs))
+      case CommitData.Landed(files, schema) =>
+        require(
+          req.buckets.isDefined || files.forall(_._2.isEmpty),
+          "snapshot commit: bucket ids need the request's bucket spec")
+        (annotateEntries(spark, table, files), schema)
+      case CommitData.Entries(lines, schema) => (lines, schema)
+    }
+    val late = req.headerAfterStaging.fold(Seq.empty[String])(_())
+    late.foreach(requireHeaderToken)
+    val tokens = req.header ++ late ++
+      req.buckets.map { case (c, n) => s"buckets=${b64(s"$c:$n")}" }
+    claimVersion(spark, table, req, added, batchSchema, tokens)
+  }
+
+  /** Step 6 of [[commit]]: the claim loop. */
+  private def claimVersion(
+      spark: SparkSession,
+      table: String,
+      req: CommitRequest,
+      added: Seq[String],
+      batchSchema: StructType,
+      tokens: Seq[String]
+  ): Int = {
+    val f = fs(spark, table)
+    f.mkdirs(new Path(s"$table/$LogDir"))
+    val replace = req.removals.isDefined || req.amendments.nonEmpty
+    val read = req.removals.getOrElse(Nil) ++ req.amendments.map(_._1)
+    val removals = read.map(entryName)
+    val landed = req.amendments.map(_._2) ++ added
+    val lock = claimLocks.computeIfAbsent(table, _ => new Object)
+    var attempts = 0
+    while (attempts < 20) {
+      attempts += 1
+      val won = lock.synchronized {
+        // a racing delivery of the same txn may have won while this one
+        // staged: its version answers, this delivery's files are orphans
+        val replayed = req.txnId.flatMap(committedTxn(spark, table, _))
+        if (replayed.isDefined) replayed
+        else {
+          val vs = versions(spark, table)
+          val next = vs.lastOption.getOrElse(0) + 1
+          val prev = vs.lastOption
+          if (replace) {
+            require(prev.isDefined, s"snapshot replace: no commits in $table")
+            val live = manifest(spark, table, prev.get).toSet
+            val gone = removals.filterNot(live)
+            if (gone.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"snapshot replace: files already removed by a concurrent " +
+                  s"commit: ${gone.mkString(", ")}"
+              )
+            val cur = manifestEntries(spark, table, prev.get).toSet
+            val drifted = read.filterNot(cur)
+            if (drifted.nonEmpty)
+              throw new java.util.ConcurrentModificationException(
+                s"snapshot replace: entry riders changed under a concurrent " +
+                  s"commit (re-run the rewrite): " +
+                  drifted.map(entryName).mkString(", ")
+              )
+          }
+          req.preCommit(prev)
+          // schema evolution: appends/replaces merge into the union
+          // schema (loud error on incompatible change); overwrite resets
+          // the table schema to the batch's
+          val schema =
+            if (req.overwrite || prev.isEmpty) batchSchema
+            else
+              tableSchema(spark, table, prev.get)
+                .map(mergeSchemas(_, batchSchema))
+                .getOrElse(batchSchema)
+          // Append commits are DELTAS (own files + parent pointer) so a
+          // long-lived table's commit cost stays O(batch), not O(live
+          // files); every FoldEvery-th version is a full-list CHECKPOINT
+          // bounding manifest resolution to <FoldEvery parent hops.
+          // Overwrites are naturally full lists.
+          val delta = !req.overwrite && prev.isDefined && next % FoldEvery != 0
+          val lines =
+            if (req.overwrite) landed
+            else if (delta) removals.map("-" + _) ++ landed
+            else {
+              val removed = removals.toSet
+              prev
+                .map(manifestEntries(spark, table, _))
+                .getOrElse(Nil)
+                .filterNot(e => removed(entryName(e))) ++ landed
+            }
+          val action =
+            (if (req.overwrite) "overwrite" else if (replace) "replace" else "append") +
+              (if (delta) s" parent=${prev.get}" else "") +
+              req.txnId.map(t => s" txn=$t").getOrElse("") +
+              // data-preserving rewrites (compaction, clustering) mark
+              // themselves so the change feed can skip them — the rows
+              // did not change, only their file layout (the posture
+              // Delta's OPTIMIZE takes with dataChange=false)
+              (if (req.dataChange) "" else " datachange=false") +
+              tokens.map(" " + _).mkString +
+              s" schema=${b64(schema.json)}"
+          val tmp =
+            new Path(s"$table/$LogDir/.tmp-${UUID.randomUUID.toString.take(8)}")
+          val out = f.create(tmp, true)
+          try out.write(
+            (action +: lines)
+              .mkString("", "\n", "\n")
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          )
+          finally out.close()
+          val target = commitPath(table, next)
+          // the publish is ONE backend primitive ([[CommitBackend]]):
+          // local FS claims the version with the O_EXCL lock first
+          // (POSIX rename overwrites), HDFS-class renames directly
+          // (rename refuses an existing destination atomically), a
+          // registered object-store backend conditional-puts. An
+          // exception from the backend is a lost race, never a
+          // half-publish.
+          val published = commitBackendFor(f).exists(b =>
+            try b.putIfAbsent(f, table, next, tmp, target)
+            catch { case _: Exception => false })
+          if (published) {
+            writeTip(f, table, next)
+            Some(next)
+          } else {
+            f.delete(tmp, false)
+            None
+          }
+        }
+      }
+      won.foreach(return _)
+      // a lost claim usually means a contender (possibly in another
+      // process) is mid-commit — give it a beat before recomputing
+      Thread.sleep(25)
+    }
+    throw new IllegalStateException(
+      s"snapshot commit: lost the version race 20 times on $table"
+    )
+  }
 
   /** Header line (`append` / `overwrite` / `replace`, plus its
     * key=value tokens) of `version`'s manifest. */
@@ -881,8 +1206,8 @@ object SnapshotLog {
     * Invalidation: if the log's tip has moved BACKWARD past the scan
     * watermark, the table directory was deleted and recreated at the
     * same path — the cache belongs to a dead incarnation and is rebuilt
-    * from scratch (returning a dead incarnation's version would make
-    * commitIdempotent silently skip real commits). */
+    * from scratch (returning a dead incarnation's version would make a
+    * txn commit silently skip real commits). */
   private val txnCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Int, Map[String, Int])]()
 
@@ -918,32 +1243,6 @@ object SnapshotLog {
         vs.contains(v) &&
           headerToken(header(spark, table, v), "txn").contains(txnId)
       )
-  }
-
-  /** Idempotent commit for at-least-once producers (foreachBatch with
-    * its stable batchId, a retried ingestion job): the txn id rides the
-    * winning manifest's header, and a REPLAY of the same id returns the
-    * existing version without committing — the table-grain form of the
-    * sink_exactly_once contract, so a streaming query can crash between
-    * sink write and offset commit and re-deliver its batch harmlessly.
-    * The replay check runs again inside the claim lock, so two racing
-    * deliveries of one batch cannot both land; the loser's already-
-    * staged files become vacuum-able orphans, never visible rows. */
-  def commitIdempotent(
-      spark: SparkSession,
-      table: String,
-      df: DataFrame,
-      txnId: String,
-      overwrite: Boolean = false
-  ): Int = {
-    require(
-      txnId.nonEmpty && txnId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
-      s"txn id must be [A-Za-z0-9_-]+: $txnId"
-    )
-    committedTxn(spark, table, txnId) match {
-      case Some(v) => v // replay: nothing staged, nothing committed
-      case None    => commitInternal(spark, table, df, overwrite, Some(txnId), None)
-    }
   }
 
   /** Source-file ledger of every [[ingest]] commit: the union of all
@@ -1020,172 +1319,25 @@ object SnapshotLog {
       .take(12)
       .map("%02x".format(_))
       .mkString
-    val v = commitInternal(
-      spark, table, df, overwrite = false, txnId = Some(s"ingest-$digest"),
-      replaceRemoved = None, dataChange = true,
-      extraHeader = s"ingest=${b64(names.mkString("\n"))}")
+    val v = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Frame(df), txnId = Some(s"ingest-$digest"),
+        header = Seq(s"ingest=${b64(names.mkString("\n"))}")))
     (v, names.size, files.size - names.size)
   }
 
-  /** Copy-on-write REPLACE: commits `df`'s files while atomically
-    * dropping `removed` (which must all be live in the parent manifest
-    * — a concurrent writer having already removed one is a real
-    * write-write conflict and fails loudly rather than silently
-    * double-applying a merge). Untouched files carry into the new
-    * version BY REFERENCE: the delta manifest lists only `-file`
-    * removals plus the additions, so a merge touching one shard costs
-    * O(that shard), not O(table). */
-  def commitReplace(
-      spark: SparkSession,
-      table: String,
-      removed: Seq[String],
-      df: DataFrame,
-      txnId: Option[String] = None,
-      dataChange: Boolean = true,
-      extraHeader: String = ""
-  ): Int =
-    commitInternal(
-      spark, table, df, overwrite = false, txnId, Some(removed), dataChange,
-      extraHeader)
-
-  private def commitInternal(
-      spark: SparkSession,
-      table: String,
-      df: DataFrame,
-      overwrite: Boolean,
-      txnId: Option[String],
-      replaceRemoved: Option[Seq[String]],
-      dataChange: Boolean = true,
-      extraHeader: String = "",
-      // computed AFTER the staging write has executed — lets a header
-      // token depend on an Observation collected by that same write
-      // (the one-pass fold fingerprint), instead of paying a separate
-      // aggregate action before the commit
-      extraHeaderFn: Option[() => String] = None,
-      // forwarded into the commit critical section (see
-      // commitEntriesInternal): runs under the claim lock with the
-      // actual parent version this commit will land on
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int = {
-    val f = fs(spark, table)
-    requireCommitSafeFs(f, table) // before staging — no orphans on refusal
-    f.mkdirs(new Path(s"$table/$LogDir"))
-    // fail an incompatible evolution BEFORE staging any data (the
-    // authoritative merge recomputes under the claim lock; this check
-    // just keeps a doomed commit from landing orphan files)
-    val tipSchema =
-      if (overwrite) None
-      else versions(spark, table).lastOption.flatMap(tableSchema(spark, table, _))
-    tipSchema.foreach(mergeSchemas(_, df.schema))
-    val (stagedDf, batchSchema0) = mapForStage(tipSchema, df)
-    // dataChange=false is the "no row changed" claim: every row being
-    // written already lives in the table under the declared contract,
-    // but the parquet read that fed the rewrite spells every column
-    // nullable — a compaction/z-order commit must not dissolve a
-    // declared NOT NULL (count_by and top-N pruning stand on it)
-    val batchSchema =
-      if (dataChange) batchSchema0
-      else alignDeclaredNullability(tipSchema, batchSchema0)
-    val landed = stageOnly(spark, table, stagedDf)
-    commitLandedInternal(
-      spark, table, landed, batchSchema, overwrite, txnId, replaceRemoved,
-      dataChange, extraHeaderFn.map(_()).getOrElse(extraHeader),
-      preCommit = preCommit)
-  }
-
-  /** `batch` with the declared (tip-schema) nullability restored on
-    * every column the declaration marks NOT NULL — only valid for
-    * writes whose rows provably come FROM the table (dataChange=false
-    * layout rewrites). */
-  private def alignDeclaredNullability(
-      declared: Option[StructType],
-      batch: StructType
-  ): StructType = declared match {
-    case None => batch
-    case Some(d) =>
-      val nn = d.fields.collect { case f if !f.nullable => f.name }.toSet
-      StructType(batch.fields.map(f =>
-        if (nn(f.name)) f.copy(nullable = false) else f))
-  }
-
-  /** Commits files a writer has ALREADY landed in the table root under
-    * unique names (the SQL catalog's DSv2 write path: task writers land
-    * attempt-unique parquet directly — invisible until the manifest
-    * names them — and the driver commits exactly the winners' names, so
-    * speculative/retried attempts become vacuum-able orphans, never
-    * visible rows; no rename pass, which on an object store is a copy).
-    * `batchSchema` is the writer's schema — merged into the table
-    * schema under the usual evolution rules, or replacing it when
-    * `overwrite`. An empty `landedNames` is a valid schema-only commit
-    * (CREATE TABLE, an empty INSERT). */
-  def commitLanded(
-      spark: SparkSession,
-      table: String,
-      landedNames: Seq[String],
-      batchSchema: StructType,
-      overwrite: Boolean = false,
-      txnId: Option[String] = None,
-      dataChange: Boolean = true,
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int =
-    txnId.flatMap(committedTxn(spark, table, _)) match {
-      case Some(v) => v // replay: the files are orphans, vacuum's problem
-      case None =>
-        commitLandedInternal(
-          spark, table, landedNames, batchSchema, overwrite, txnId, None,
-          dataChange, preCommit = preCommit)
-    }
-
-  /** [[commitLanded]] that atomically REPLACES `removed` (which must
-    * all be live — a concurrent removal is a loud conflict): the SQL
-    * row-level DML commit path. */
-  def commitLandedReplace(
-      spark: SparkSession,
-      table: String,
-      landedNames: Seq[String],
-      batchSchema: StructType,
-      removed: Seq[String],
-      txnId: Option[String] = None,
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int =
-    txnId.flatMap(committedTxn(spark, table, _)) match {
-      case Some(v) => v
-      case None =>
-        commitLandedInternal(
-          spark, table, landedNames, batchSchema, overwrite = false, txnId,
-          Some(removed), dataChange = true, preCommit = preCommit)
-    }
-
-  private def commitLandedInternal(
-      spark: SparkSession,
-      table: String,
-      landedNames: Seq[String],
-      batchSchema: StructType,
-      overwrite: Boolean,
-      txnId: Option[String],
-      replaceRemoved: Option[Seq[String]],
-      dataChange: Boolean,
-      extraHeader: String = "",
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int = {
-    val f = fs(spark, table)
-    f.mkdirs(new Path(s"$table/$LogDir"))
-    commitEntriesInternal(
-      spark, table, annotateEntries(spark, table, landedNames), batchSchema,
-      overwrite, txnId, replaceRemoved, dataChange, extraHeader,
-      preCommit = preCommit)
-  }
-
-  /** Entry lines (name + stats suffix) for landed files. Footer stats
-    * ride the manifest so reads can skip files without opening them;
-    * the byte size (`_sz=z:`) and row count (`_rc=r:`) ride the same
+  /** Entry lines (name + stats suffix) for landed files, each tagged
+    * with its bucket id (`_bk=k:`) when it has one. Footer stats ride
+    * the manifest so reads can skip files without opening them; the
+    * byte size (`_sz=z:`) and row count (`_rc=r:`) ride the same
     * suffix, so compaction planning and DESCRIBE HISTORY never
     * stat/open files one by one — at 1e6 files on an object store that
     * is 1e6 metadata round trips. */
   private def annotateEntries(
       spark: SparkSession,
       table: String,
-      landedNames: Seq[String]
+      landed: Seq[(String, Option[Int])]
   ): Seq[String] = {
     val f = fs(spark, table)
     // ONE session-derived Hadoop conf for the whole batch: the footer
@@ -1194,12 +1346,13 @@ object SnapshotLog {
     // FILE was the old serial path's hidden cost — once per commit is
     // the right granularity.
     val hconf = spark.sessionState.newHadoopConf()
-    def annotate(name: String): String = {
+    def annotate(file: (String, Option[Int])): String = {
+      val (name, bucket) = file
       val (rows, stats) = statsSuffix(hconf, new Path(s"$table/$name"))
       val size =
         s"_sz=z:${f.getFileStatus(new Path(s"$table/$name")).getLen};_rc=r:$rows"
       val suffix = if (stats.isEmpty) size else s"$size;$stats"
-      s"$name\t$suffix"
+      s"$name\t$suffix${bucket.fold("")(b => s";_bk=k:$b")}"
     }
     // footer reads are independent metadata round-trips — run them in
     // parallel (optimization round 19, guide §6): a commit of N files
@@ -1207,14 +1360,14 @@ object SnapshotLog {
     // store that is hours of sequential latency for work that
     // parallelizes perfectly. Bounded pool; order preserved; a
     // single-file commit (the common case) skips the pool entirely.
-    if (landedNames.size <= 1) landedNames.map(annotate)
+    if (landed.size <= 1) landed.map(annotate)
     else {
-      val par = math.min(landedNames.size, 16)
+      val par = math.min(landed.size, 16)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
       try {
-        val tasks = landedNames.map { name =>
+        val tasks = landed.map { file =>
           pool.submit(new java.util.concurrent.Callable[String] {
-            override def call(): String = annotate(name)
+            override def call(): String = annotate(file)
           })
         }
         tasks.map(t =>
@@ -1230,152 +1383,10 @@ object SnapshotLog {
     }
   }
 
-  /** Claim-loop commit of fully-formed manifest entry LINES (name +
-    * stats suffix). The deletion-vector path uses this to re-add an
-    * existing file's entry with an amended `_dv` rider — no data is
-    * staged or rewritten. */
-  private def commitEntriesInternal(
-      spark: SparkSession,
-      table: String,
-      landed: Seq[String],
-      batchSchema: StructType,
-      overwrite: Boolean,
-      txnId: Option[String],
-      replaceRemoved: Option[Seq[String]],
-      dataChange: Boolean,
-      extraHeader: String = "",
-      // entry LINES (name + riders) this replace re-spells, verified
-      // VERBATIM against the parent manifest inside the commit lock: a
-      // rider that drifted concurrently (a DV amendment landing during
-      // a long index build) would otherwise be silently resurrected to
-      // its pre-drift spelling by the re-add
-      replaceExpected: Option[Seq[String]] = None,
-      // invoked INSIDE the commit critical section with the actual
-      // parent version this commit will land on — the unique-key audit
-      // re-verifies here when the tip moved between audit and commit
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int = {
-    val f = fs(spark, table)
-    // the authoritative gate — every commit path funnels here
-    // (staging callers also check before any byte lands)
-    requireCommitSafeFs(f, table)
-    f.mkdirs(new Path(s"$table/$LogDir"))
-    val lock = claimLocks.computeIfAbsent(table, _ => new Object)
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      val won = lock.synchronized {
-        // a racing delivery of the same txn may have won while this one
-        // staged: its version answers, this delivery's files are orphans
-        val replayed = txnId.flatMap(committedTxn(spark, table, _))
-        if (replayed.isDefined) replayed
-        else {
-          val vs = versions(spark, table)
-          val next = vs.lastOption.getOrElse(0) + 1
-          val prev = vs.lastOption
-          replaceRemoved.foreach { rm =>
-            require(prev.isDefined, s"snapshot replace: no commits in $table")
-            val live = manifest(spark, table, prev.get).toSet
-            val gone = rm.filterNot(live)
-            if (gone.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"snapshot replace: files already removed by a concurrent " +
-                  s"commit: ${gone.mkString(", ")}"
-              )
-          }
-          replaceExpected.foreach { exp =>
-            val cur = manifestEntries(spark, table, prev.get).toSet
-            val drifted = exp.filterNot(cur)
-            if (drifted.nonEmpty)
-              throw new java.util.ConcurrentModificationException(
-                s"snapshot replace: entry riders changed under a concurrent " +
-                  s"commit (re-run the rewrite): " +
-                  drifted.map(_.split('\t')(0)).mkString(", ")
-              )
-          }
-          preCommit(prev)
-          // schema evolution: appends/replaces merge into the union
-          // schema (loud error on incompatible change); overwrite resets
-          // the table schema to the batch's
-          val schema =
-            if (overwrite || prev.isEmpty) batchSchema
-            else
-              tableSchema(spark, table, prev.get)
-                .map(mergeSchemas(_, batchSchema))
-                .getOrElse(batchSchema)
-          // Append commits are DELTAS (own files + parent pointer) so a
-          // long-lived table's commit cost stays O(batch), not O(live
-          // files); every FoldEvery-th version is a full-list CHECKPOINT
-          // bounding manifest resolution to <FoldEvery parent hops.
-          // Overwrites are naturally full lists.
-          val delta = !overwrite && prev.isDefined && next % FoldEvery != 0
-          val removals = replaceRemoved.getOrElse(Nil)
-          val lines =
-            if (overwrite) landed
-            else if (delta) removals.map("-" + _) ++ landed
-            else {
-              val removed = removals.toSet
-              prev
-                .map(manifestEntries(spark, table, _))
-                .getOrElse(Nil)
-                .filterNot(e => removed(e.split('\t')(0))) ++ landed
-            }
-          val action =
-            (if (overwrite) "overwrite"
-             else if (replaceRemoved.isDefined) "replace"
-             else "append") +
-              (if (delta) s" parent=${prev.get}" else "") +
-              txnId.map(t => s" txn=$t").getOrElse("") +
-              // data-preserving rewrites (compaction, clustering) mark
-              // themselves so the change feed can skip them — the rows
-              // did not change, only their file layout (the posture
-              // Delta's OPTIMIZE takes with dataChange=false)
-              (if (dataChange) "" else " datachange=false") +
-              (if (extraHeader.isEmpty) "" else s" $extraHeader") +
-              s" schema=${b64(schema.json)}"
-          val tmp =
-            new Path(s"$table/$LogDir/.tmp-${UUID.randomUUID.toString.take(8)}")
-          val out = f.create(tmp, true)
-          try out.write(
-            (action +: lines)
-              .mkString("", "\n", "\n")
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          )
-          finally out.close()
-          val target = commitPath(table, next)
-          // the publish is ONE backend primitive ([[CommitBackend]]):
-          // local FS claims the version with the O_EXCL lock first
-          // (POSIX rename overwrites), HDFS-class renames directly
-          // (rename refuses an existing destination atomically), a
-          // registered object-store backend conditional-puts. An
-          // exception from the backend is a lost race, never a
-          // half-publish.
-          val published = commitBackendFor(f).exists(b =>
-            try b.putIfAbsent(f, table, next, tmp, target)
-            catch { case _: Exception => false })
-          if (published) {
-            writeTip(f, table, next)
-            Some(next)
-          } else {
-            f.delete(tmp, false)
-            None
-          }
-        }
-      }
-      won.foreach(return _)
-      // a lost claim usually means a contender (possibly in another
-      // process) is mid-commit — give it a beat before recomputing
-      Thread.sleep(25)
-    }
-    throw new IllegalStateException(
-      s"snapshot commit: lost the version race 20 times on $table"
-    )
-  }
-
   /** Read of an explicit file subset under the version's recorded
     * schema — empty subsets are a valid empty table when the schema is
-    * known (an all-files-removed overwrite, a fully-skipped probe). */
-  /** `aliasLogical = false` hands back the frame under PHYSICAL column
+    * known (an all-files-removed overwrite, a fully-skipped probe).
+    * `aliasLogical = false` hands back the frame under PHYSICAL column
     * names with no projection on top — required by the deletion-vector
     * paths, which must still resolve `_metadata` (a projection would
     * hide it); they re-alias to logical names themselves after their
@@ -1620,7 +1631,7 @@ object SnapshotLog {
     // from: a concurrent append survives untouched, a concurrent
     // removal of an amended file refuses loudly, and a concurrent
     // rider amendment (a DV landing mid-build) is caught by the
-    // verbatim replaceExpected check instead of being silently
+    // verbatim amendment check instead of being silently
     // resurrected to its pre-drift spelling. Same posture as
     // compact()'s replace — the blind tip overwrite this used to do
     // dropped any commit that landed during the build.
@@ -1633,7 +1644,7 @@ object SnapshotLog {
     // selected file produced bits, committed an EMPTY replace delta,
     // burning a version per call (advisor, round 14)
     val touched = entries
-    val amendedTouched = touched.map { e =>
+    val amendments = touched.map { e =>
       val bits =
         merged.getOrElse(baseName(entryName(e)), new Array[Long](words))
       val bb = java.nio.ByteBuffer.allocate(words * 8)
@@ -1646,15 +1657,15 @@ object SnapshotLog {
           parts(1).split(';')
             .filterNot(_.startsWith(s"_bm$key=")).mkString(";")
       val suffix = (if (suffix0.isEmpty) "" else suffix0 + ";") + tok
-      s"${entryName(e)}\t$suffix"
+      e -> s"${entryName(e)}\t$suffix"
     }
     val commitSchema = schema.getOrElse(
       readFiles(spark, table, entries.map(entryName), None).schema)
-    commitEntriesInternal(
-      spark, table, amendedTouched, commitSchema, overwrite = false, None,
-      Some(touched.map(entryName)), dataChange = false,
-      extraHeader = s"bloom=${b64(column)}",
-      replaceExpected = Some(touched))
+    commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(Nil, commitSchema), amendments = amendments,
+        dataChange = false, header = Seq(s"bloom=${b64(column)}")))
   }
 
   /** Backfill `_sz`/`_rc` manifest riders onto live entries that
@@ -1678,7 +1689,7 @@ object SnapshotLog {
     if (missing.isEmpty) return 0
     val f = fs(spark, table)
     val conf = spark.sessionState.newHadoopConf()
-    val amended = missing.map { e =>
+    val amendments = missing.map { e =>
       val name = entryName(e)
       // dataPath, not s"$table/$name": a CLONED table's entries are
       // absolute external references, exactly the pre-rider
@@ -1695,14 +1706,15 @@ object SnapshotLog {
           .filterNot(t => t.startsWith("_sz=") || t.startsWith("_rc="))
           .mkString(";")
       val tok = s"_sz=z:$len;_rc=r:$rows"
-      s"$name\t${if (kept.isEmpty) tok else s"$kept;$tok"}"
+      e -> s"$name\t${if (kept.isEmpty) tok else s"$kept;$tok"}"
     }
     val commitSchema = tableSchema(spark, table, v).getOrElse(
       readFiles(spark, table, missing.map(entryName), None).schema)
-    commitEntriesInternal(
-      spark, table, amended, commitSchema, overwrite = false, None,
-      Some(missing.map(entryName)), dataChange = false,
-      extraHeader = "statsfill", replaceExpected = Some(missing))
+    commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(Nil, commitSchema), amendments = amendments,
+        dataChange = false, header = Seq("statsfill")))
     missing.size
   }
 
@@ -1909,7 +1921,7 @@ object SnapshotLog {
   /** File-granular copy-on-write MERGE: selects via [[touchedFiles]]
     * the only files whose stats admit a changed key, applies `merge` to
     * THAT subset of the table, and commits the rewritten subset with
-    * [[commitReplace]] — every untouched file survives into the new
+    * a replace commit — every untouched file survives into the new
     * manifest by reference. Correctness leans on the skipping
     * invariant: a file the stats exclude provably contains no change
     * key, so the merge dataflow restricted to the touched subset plus
@@ -1927,7 +1939,7 @@ object SnapshotLog {
       txnId: Option[String] = None,
       // rides the replace commit itself — an incremental consumer's
       // high-water mark (idxv=/mvv=) lands ATOMICALLY with a scoped
-      // rebuild, the commitWatermarked contract through the CoW path
+      // rebuild, the watermark-header contract through the CoW path
       extraHeader: String = ""
   ): (Int, Seq[String], Seq[String]) = {
     val vs = versions(spark, table)
@@ -1937,8 +1949,8 @@ object SnapshotLog {
     val (touched, untouched) = touchedFiles(spark, table, column, changeKeys, Some(v))
     // DV-aware: a touched file's already-deleted rows must not re-enter
     // the merge (they would resurrect as 'keep' rows in the rewrite)
-    val base = readEntries(
-      spark, table, entriesFor(manifestEntries(spark, table, v), touched), schema)
+    val touchedEntries = entriesFor(manifestEntries(spark, table, v), touched)
+    val base = readEntries(spark, table, touchedEntries, schema)
     val merged = merge(base)
     schema.foreach { s =>
       require(
@@ -1947,8 +1959,11 @@ object SnapshotLog {
           s"got ${merged.schema.fieldNames.mkString(",")}"
       )
     }
-    val version = commitReplace(
-      spark, table, touched, merged, txnId, extraHeader = extraHeader)
+    val version = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Frame(merged), removals = Some(touchedEntries), txnId = txnId,
+        header = Seq(extraHeader).filter(_.nonEmpty)))
     (version, touched, untouched)
   }
 
@@ -2400,9 +2415,11 @@ object SnapshotLog {
     }
     val curNames = cur.map(entryName).toSet
     val tgtNames = tgt.map(entryName).toSet
-    val v = commitEntriesInternal(
-      spark, table, tgt, schema, overwrite = true, None, None,
-      dataChange = true, extraHeader = s"restore=$toVersion")
+    val v = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(tgt, schema), overwrite = true,
+        header = Seq(s"restore=$toVersion")))
     (
       v,
       tgt.map(entryName).filterNot(curNames),
@@ -2464,9 +2481,11 @@ object SnapshotLog {
         s"snapshot clone: version $v of $src is empty with no recorded schema")
       readFiles(spark, src, manifest(spark, src, v), None).schema
     }
-    commitEntriesInternal(
-      spark, dst, entries, schema, overwrite = true, None, None,
-      dataChange = true, extraHeader = s"clone=${b64(s"$src@$v")}")
+    commit(
+      spark, dst,
+      CommitRequest(
+        CommitData.Entries(entries, schema), overwrite = true,
+        header = Seq(s"clone=${b64(s"$src@$v")}")))
   }
 
   /** Metadata-only COUNT(*): summed from the manifest's `_rc` riders
@@ -2708,10 +2727,6 @@ object SnapshotLog {
 
   private val DvMagic = 0x47445631 // "GDV1"
 
-  /** Sidecar format: magic, int count, sorted longs. A production
-    * encoding would be a roaring bitmap; positions-as-longs keeps the
-    * format inspectable and is byte-bounded by deleted rows either
-    * way. */
   /** A manifest entry re-spelled with a NEW deletion-vector rider
     * (`_dv`/`_dvc` replace any previous pair; everything else — stats,
     * size, bucket id — carries unchanged). */
@@ -2730,46 +2745,36 @@ object SnapshotLog {
     s"${entryName(base)}\t$suffix"
   }
 
-  /** Atomic commit of a POSITION-DELTA DML (the SQL merge-on-read
-    * write path, [[graft.sources.SnapshotMorRowLevelOperation]]): each
-    * touched file's entry is re-added with its new deletion-vector
-    * rider AND the landed insert files append, in ONE replace-delta
-    * commit — an UPDATE's delete half and insert half can never be
-    * observed separately, and a concurrent removal of a touched file
-    * is a loud conflict. Sidecars were already written executor-side
-    * by the delta writers; this moves only O(touched + new files)
-    * metadata strings through the driver. The change feed composes
-    * both halves of such a commit exactly: DV deltas surface as row
-    * deletes, new files as inserts. */
-  def commitMorDelta(
-      spark: SparkSession,
-      table: String,
-      dvSpecs: Seq[(String, String, Long)], // (base file, sidecar, total dead)
-      landedNames: Seq[String],
-      batchSchema: StructType
-  ): Int = {
-    val v = versions(spark, table).last
-    val entries = manifestEntries(spark, table, v)
-    val entryByBase = entries.map(e => baseName(entryName(e)) -> e).toMap
+  /** (entry read, entry written) amendments for deletion-vector specs
+    * (base file name, new sidecar, total dead rows) against `entries`,
+    * the manifest the sidecars' unions were computed from — so a DV
+    * that lands on the same file before the commit claims its version
+    * fails the commit's verbatim check instead of being overwritten
+    * (its deleted rows would come back). A file no longer live is a
+    * loud conflict; two specs for one file mean the writers' required
+    * clustering by file was not honored. */
+  private[sources] def dvAmendments(
+      entries: Seq[String],
+      dvSpecs: Seq[(String, String, Long)]
+  ): Seq[(String, String)] = {
     require(
       dvSpecs.map(_._1).distinct.size == dvSpecs.size,
       "snapshot mor-delta: two writers amended the same file — the " +
         "required clustered-by-_file distribution was not honored")
-    val amended = dvSpecs.map { case (file, dvName, cnt) =>
-      dvAmendEntry(
-        entryByBase.getOrElse(
-          file,
-          throw new java.util.ConcurrentModificationException(
-            s"snapshot mor-delta: touched file $file no longer live")),
-        dvName, cnt)
+    val entryByBase = entries.map(e => baseName(entryName(e)) -> e).toMap
+    dvSpecs.map { case (file, dvName, cnt) =>
+      val read = entryByBase.getOrElse(
+        file,
+        throw new java.util.ConcurrentModificationException(
+          s"snapshot mor-delta: touched file $file no longer live"))
+      read -> dvAmendEntry(read, dvName, cnt)
     }
-    val amendedNames = dvSpecs.map(s => entryName(entryByBase(s._1)))
-    commitEntriesInternal(
-      spark, table, amended ++ annotateEntries(spark, table, landedNames),
-      batchSchema, overwrite = false, None, Some(amendedNames),
-      dataChange = true)
   }
 
+  /** Sidecar format: magic, int count, sorted longs. A production
+    * encoding would be a roaring bitmap; positions-as-longs keeps the
+    * format inspectable and is byte-bounded by deleted rows either
+    * way. */
   private[sources] def writeDvFile(
       conf: org.apache.hadoop.conf.Configuration,
       path: Path,
@@ -2804,6 +2809,18 @@ object SnapshotLog {
       val n = in.readInt()
       Array.fill(n)(in.readLong())
     } finally in.close()
+  }
+
+  /** `names`' manifest entry lines at `version`, in `names` order — the
+    * read side of a replace's removals. */
+  private[sources] def entriesNamed(
+      spark: SparkSession,
+      table: String,
+      version: Int,
+      names: Seq[String]
+  ): Seq[String] = {
+    val byName = manifestEntries(spark, table, version).map(e => entryName(e) -> e).toMap
+    names.map(byName)
   }
 
   /** Entries (full lines) for `names`, preserving manifest order. */
@@ -2998,8 +3015,13 @@ object SnapshotLog {
             .drop("_graft_ord")
         case None => df.coalesce(nOut) // pure concat, no shuffle
       }
-    val version =
-      commitReplace(spark, table, picked, packed, dataChange = false)
+    // the rewrite reads the table's own rows, so it commits under the
+    // table schema: a declared NOT NULL survives
+    val version = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Frame(packed, schema), removals = Some(pickedEntries),
+        dataChange = false))
     (version, picked, large.map(_._1))
   }
 
@@ -3105,16 +3127,17 @@ object SnapshotLog {
         // normal commit path
         val (stagedLeg, bs) = mapForStage(schema, leg.coalesce(1))
         batchSchema = bs
-        stageOnly(spark, table, stagedLeg)
+        stageFiles(spark, table, stagedLeg, None)
     }
     val picked = groups.values.flatten.map(_._1).toSeq
-    val version = commitLandedInternal(
-      spark, table, landed,
-      // same dataChange=false posture as commitInternal: the rewrite
-      // reads the table's own rows, so declared NOT NULL survives
-      alignDeclaredNullability(schema, batchSchema),
-      overwrite = false, txnId = None,
-      replaceRemoved = Some(picked), dataChange = false)
+    // same posture as compact: the rewrite reads the table's own rows,
+    // so it commits under the table schema and declared NOT NULL
+    // survives
+    val version = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Landed(landed, schema.getOrElse(batchSchema)),
+        removals = Some(entriesNamed(spark, table, v, picked)), dataChange = false))
     (version, picked, entries.map(entryName).filterNot(picked.toSet))
   }
 
@@ -3145,10 +3168,12 @@ object SnapshotLog {
     val schema = tableSchema(spark, table, v)
     // DV-aware: rewriting a DV'd file materializes its deletion vector
     // (and must not resurrect already-dead rows)
-    val kept = readEntries(
-      spark, table, entriesFor(manifestEntries(spark, table, v), touched), schema)
+    val touchedEntries = entriesFor(manifestEntries(spark, table, v), touched)
+    val kept = readEntries(spark, table, touchedEntries, schema)
       .filter(!(col(column) >= lo && col(column) <= hi))
-    val version = commitReplace(spark, table, touched, kept, txnId)
+    val version = commit(
+      spark, table,
+      CommitRequest(CommitData.Frame(kept), removals = Some(touchedEntries), txnId = txnId))
     (version, touched, untouched)
   }
 
@@ -3222,122 +3247,35 @@ object SnapshotLog {
       }
       .collect()
     if (specs.isEmpty) return (v, Nil, allNames) // stats admitted, no row matched
-    val amended = specs.toSeq.map { case (file, dvName, cnt) =>
-      dvAmendEntry(entryByBase(file), dvName, cnt)
-    }
-    val amendedNames = specs.toSeq.map(s => entryName(entryByBase(s._1)))
+    val amendments = dvAmendments(entries, specs.toSeq)
+    val amendedNames = amendments.map(a => entryName(a._1))
     val commitSchema = schema.getOrElse(
       readFiles(spark, table, admitNames, None).schema)
-    val version = commitEntriesInternal(
-      spark, table, amended, commitSchema, overwrite = false, txnId,
-      Some(amendedNames), dataChange = true)
+    val version = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(Nil, commitSchema), amendments = amendments,
+        txnId = txnId))
     (version, amendedNames, allNames.filterNot(amendedNames.toSet))
   }
 
   // --- BUCKETED layout (storage-partitioned joins) ------------------
 
-  /** Commits `df` BUCKET-CLUSTERED on `bucketCol`: rows shuffle once by
-    * `pmod(key, nBuckets)`, land as per-bucket files (the bucket id
-    * rides each entry as `_bk=k:<b>`, and the commit header declares
-    * `buckets=<col>:<n>`), and the SQL catalog's scan then reports
-    * KeyGroupedPartitioning over `bucket(n, col)` — two tables
-    * committed with the same spec JOIN WITHOUT A SHUFFLE
-    * (storage-partitioned join). At 100 TB this is the difference
-    * between re-shuffling both fact tables on every join and reading
-    * co-located buckets: the shuffle is paid ONCE at write time.
-    * The bucket function is `pmod` in long space, served to Spark by
-    * the catalog's FunctionCatalog so both sides bind to the same
-    * canonical function. A later un-bucketed commit simply drops the
-    * declaration — the scan then reports nothing rather than a stale
-    * claim. */
-  def commitBucketed(
-      spark: SparkSession,
-      table: String,
-      df: DataFrame,
-      bucketCol: String,
-      nBuckets: Int,
-      overwrite: Boolean = false
-  ): Int = {
-    require(nBuckets > 0, s"commitBucketed: nBuckets must be > 0, got $nBuckets")
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val f = fs(spark, table)
-    f.mkdirs(new Path(s"$table/$LogDir"))
-    val tipSchema =
-      if (overwrite) None
-      else versions(spark, table).lastOption.flatMap(tableSchema(spark, table, _))
-    tipSchema.foreach(mergeSchemas(_, df.schema))
-    // mapped tables stage under physical names (the bucket column's
-    // physical name equals its logical one — renaming it is refused)
-    val (stagedSrc, batchSchema) = mapForStage(tipSchema, df)
-    val jobId = UUID.randomUUID.toString.take(8)
-    val staging = new Path(s"$table/_staging/$jobId")
-    // partitionBy keeps the bucket OUT of the data files (it lives in
-    // the directory name) and the repartition bounds files-per-bucket
-    val bucketed = stagedSrc.withColumn(
-        "__graft_bucket", pmod(col(bucketCol), lit(nBuckets)).cast("int"))
-      .repartition(nBuckets, col("__graft_bucket"))
-    DataFiles.write(
-      spark, bucketed.write.mode("overwrite").partitionBy("__graft_bucket"),
-      staging.toString)
-    val landed: Seq[(String, Int)] = f
-      .listStatus(staging)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__graft_bucket="))
-      .sortBy(_.getPath.getName)
-      .toSeq
-      .flatMap { dir =>
-        val b = dir.getPath.getName.stripPrefix("__graft_bucket=").toInt
-        f.listStatus(dir.getPath)
-          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-          .zipWithIndex
-          .map { case (st, i) =>
-            val name = s"part-$jobId-b$b-$i.parquet"
-            require(
-              f.rename(st.getPath, new Path(s"$table/$name")),
-              s"snapshot bucketed stage: rename ${st.getPath} failed")
-            (name, b)
-          }
-      }
-    f.delete(staging, true)
-    val lines = annotateEntries(spark, table, landed.map(_._1))
-      .zip(landed)
-      .map { case (line, (_, b)) => s"$line;_bk=k:$b" }
-    commitEntriesInternal(
-      spark, table, lines, batchSchema, overwrite, None, None,
-      dataChange = true,
-      extraHeader = s"buckets=${b64(s"$bucketCol:$nBuckets")}")
-  }
-
-  /** [[commitLanded]] for BUCKET-TAGGED files: each landed name carries
-    * its bucket id into an `_bk` entry rider and the commit header
-    * declares `buckets=<col>:<n>` — the SQL catalog's write path for
-    * bucketed tables (CREATE TABLE ... PARTITIONED BY (bucket(n, col))
-    * + INSERT INTO), which keeps storage-partitioned joins alive
-    * across SQL ingestion. An empty `landed` is the schema-only CREATE
-    * commit that DECLARES the layout. */
-  def commitLandedBucketed(
-      spark: SparkSession,
-      table: String,
-      landed: Seq[(String, Int)],
-      batchSchema: StructType,
-      bucketCol: String,
-      nBuckets: Int,
-      overwrite: Boolean = false,
-      txnId: Option[String] = None,
-      preCommit: Option[Int] => Unit = _ => ()
-  ): Int =
-    txnId.flatMap(committedTxn(spark, table, _)) match {
-      case Some(v) => v
-      case None =>
-        val lines = annotateEntries(spark, table, landed.map(_._1))
-          .zip(landed)
-          .map { case (line, (_, b)) => s"$line;_bk=k:$b" }
-        commitEntriesInternal(
-          spark, table, lines, batchSchema, overwrite, txnId, None,
-          dataChange = true,
-          extraHeader = s"buckets=${b64(s"$bucketCol:$nBuckets")}",
-          preCommit = preCommit)
-    }
+  // A request with `buckets = Some((col, n))` commits BUCKET-CLUSTERED:
+  // a Frame's rows shuffle once by `pmod(key, n)` and land as per-bucket
+  // files (the bucket id rides each entry as `_bk=k:<b>`, and the commit
+  // header declares `buckets=<col>:<n>`); Landed files come tagged by
+  // the SQL catalog's bucketed writers (CREATE TABLE ... PARTITIONED BY
+  // (bucket(n, col)) + INSERT INTO). The catalog's scan then reports
+  // KeyGroupedPartitioning over `bucket(n, col)` — two tables committed
+  // with the same spec JOIN WITHOUT A SHUFFLE (storage-partitioned
+  // join). At 100 TB this is the difference between re-shuffling both
+  // fact tables on every join and reading co-located buckets: the
+  // shuffle is paid ONCE at write time. The bucket function is `pmod`
+  // in long space, served to Spark by the catalog's FunctionCatalog so
+  // both sides bind to the same canonical function. A later
+  // un-bucketed commit simply drops the declaration — the scan then
+  // reports nothing rather than a stale claim.
 
   /** (bucketCol, nBuckets) declared by `version`'s commit header, if
     * the commit was bucket-clustered. */
@@ -3617,7 +3555,7 @@ object SnapshotLog {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** One-pass fold commit (optimization round 19, guide §1.2/§2.4):
+  /** One-pass fold request (optimization round 19, guide §1.2/§2.4):
     * the fold fingerprint rides the STAGING WRITE itself as a
     * CollectMetrics observation — the same (count, xor of per-row
     * xxhash64 over the sorted columns) as [[contentFingerprint]],
@@ -3627,16 +3565,15 @@ object SnapshotLog {
     * three passes over the rollup become ONE, and the checkpointed
     * copy no longer competes with execution memory (guide §5). The
     * header is assembled from the observation AFTER staging (the
-    * `extraHeaderFn` hook), so data, watermark and fingerprint still
-    * land in one atomic manifest write. */
-  private def commitFoldWithFp(
-      spark: SparkSession,
-      mv: String,
+    * request's `headerAfterStaging`), so data, watermark and
+    * fingerprint still land in one atomic manifest write. `headerOf`
+    * maps the fingerprint (count, xor) to the header tokens. */
+  private def foldRequest(
       rollup: DataFrame,
       overwrite: Boolean,
-      headerOf: (Long, Long) => String,
+      headerOf: (Long, Long) => Seq[String],
       preCommit: Option[Int] => Unit = _ => ()
-  ): Int = {
+  ): CommitRequest = {
     import org.apache.spark.sql.functions.{call_function, col, count, lit, xxhash64}
     val obs = org.apache.spark.sql.Observation(
       "graft_mvfp_" + UUID.randomUUID().toString.take(8))
@@ -3646,10 +3583,9 @@ object SnapshotLog {
       call_function(
         "bit_xor",
         xxhash64(rollup.columns.sorted.map(col).toIndexedSeq: _*)).as("x"))
-    commitInternal(
-      spark, mv, observed, overwrite = overwrite, txnId = None,
-      replaceRemoved = None, dataChange = true,
-      extraHeaderFn = Some { () =>
+    CommitRequest(
+      CommitData.Frame(observed), overwrite = overwrite,
+      headerAfterStaging = Some { () =>
         val m = obs.get
         val n = m("n").asInstanceOf[Long]
         val x = m("x") match { case null => 0L; case l => l.asInstanceOf[Long] }
@@ -3961,9 +3897,11 @@ object SnapshotLog {
         case None    => base
       }
       val m = distinctRollup(based, keyCols, measures.head, hashDistinct)
-      commitFoldWithFp(
-        spark, mv, m, overwrite = false,
-        (fpN, fpX) => s"mvv=$tip mvfp=$fpN:$fpX")
+      commit(
+        spark, mv,
+        foldRequest(
+          m, overwrite = false,
+          (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
       setTableProps(
         spark, mv,
         Map(
@@ -4001,9 +3939,11 @@ object SnapshotLog {
         case None    => base
       }
       val m = hllRollup(based, keyCols, measures.head, hllLgK)
-      commitFoldWithFp(
-        spark, mv, m, overwrite = false,
-        (fpN, fpX) => s"mvv=$tip mvfp=$fpN:$fpX")
+      commit(
+        spark, mv,
+        foldRequest(
+          m, overwrite = false,
+          (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
       setTableProps(
         spark, mv,
         Map(
@@ -4025,10 +3965,12 @@ object SnapshotLog {
     // (`mvv=`): data and high-water mark land in ONE atomic write, the
     // same ledger-rides-the-commit design as ingest. The props copy is
     // discoverability metadata only — refreshMv reads the header. The
-    // `mvfp=` rider is the fold fingerprint (see commitFoldWithFp).
-    commitFoldWithFp(
-      spark, mv, m, overwrite = false,
-      (fpN, fpX) => s"mvv=$tip mvfp=$fpN:$fpX")
+    // `mvfp=` rider is the fold fingerprint (see foldRequest).
+    commit(
+      spark, mv,
+      foldRequest(
+        m, overwrite = false,
+        (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
     setTableProps(
       spark, mv,
       Map(
@@ -4490,9 +4432,11 @@ object SnapshotLog {
          val aggs = mvAggExprs(measures, kind, avgExact)
          joined.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
        })
-    commitFoldWithFp(
-      spark, mv, m, overwrite = false,
-      (fpN, fpX) => s"mvv=$factTip mvfp=$fpN:$fpX")
+    commit(
+      spark, mv,
+      foldRequest(
+        m, overwrite = false,
+        (fpN, fpX) => Seq(s"mvv=$factTip", s"mvfp=$fpN:$fpX")))
     setTableProps(
       spark, mv,
       Map(
@@ -4612,32 +4556,14 @@ object SnapshotLog {
       base.toSeq
     }
 
-  /** Commit `df` with an incremental consumer's high-water mark riding
-    * the commit HEADER (`<token>=<value>`): derived-table maintenance
-    * (MVs, incremental indexes) folds a source's change feed and must
-    * record "folded through source version V" ATOMICALLY with the fold
-    * itself — a separate props write leaves a crash window where the
-    * delta re-applies (the two-commit flaw the ingest ledger and mvv
-    * header close). */
-  def commitWatermarked(
-      spark: SparkSession,
-      table: String,
-      df: DataFrame,
-      token: String,
-      value: Int,
-      overwrite: Boolean = false
-  ): Int = {
-    require(
-      token.nonEmpty && token.forall(c => c.isLetterOrDigit || c == '_'),
-      s"watermark token must be [A-Za-z0-9_]+: $token")
-    commitInternal(
-      spark, table, df, overwrite, txnId = None, replaceRemoved = None,
-      dataChange = true, extraHeader = s"$token=$value")
-  }
-
   /** The most recent `<token>=` header value in `table`'s log, if any
-    * commit carries one — the authoritative read side of
-    * [[commitWatermarked]]. `upTo` caps the search at a pinned table
+    * commit carries one — the authoritative read side of a watermark
+    * header token. Derived-table maintenance (MVs, incremental indexes)
+    * folds a source's change feed and records "folded through source
+    * version V" as a `<token>=V` header token of the fold's own commit
+    * — ATOMICALLY with the fold: a separate props write leaves a crash
+    * window where the delta re-applies (the two-commit flaw the ingest
+    * ledger and mvv header close). `upTo` caps the search at a pinned table
     * version: the watermark AS OF that version, so a reader can check
     * freshness and read the SAME version without racing a refresh
     * that lands in between. */
@@ -5257,14 +5183,16 @@ object SnapshotLog {
     // lock, against the actual parent version this commit lands on —
     // which closes the whole stage-to-commit window the old
     // post-checkpoint check left open, not just the pre-staging slice.
-    commitFoldWithFp(
-      spark, mv, next, overwrite = true,
-      (fpN, fpX) => s"mvv=$to mvfp=$fpN:$fpX",
-      preCommit = actualParent => require(
-        actualParent == mvTipAtStart,
-        s"refreshMv: $mv moved while this refresh computed its fold " +
-          "(a concurrent refresh or dim refresh committed) — re-run " +
-          "refreshMv; maintenance is single-writer per MV"))
+    commit(
+      spark, mv,
+      foldRequest(
+        next, overwrite = true,
+        (fpN, fpX) => Seq(s"mvv=$to", s"mvfp=$fpN:$fpX"),
+        preCommit = actualParent => require(
+          actualParent == mvTipAtStart,
+          s"refreshMv: $mv moved while this refresh computed its fold " +
+            "(a concurrent refresh or dim refresh committed) — re-run " +
+            "refreshMv; maintenance is single-writer per MV")))
     setTableProps(spark, mv, props + ("mv_version" -> to.toString))
     (from, to)
   }
@@ -5799,14 +5727,16 @@ object SnapshotLog {
     // a fact fold landing mid-recompute would be clobbered by this
     // commit while its mvv header survives in the ledger — data and
     // ledger would diverge silently. Refuse and name the re-run.
-    commitFoldWithFp(
-      spark, mv, next, overwrite = true,
-      (fpN, fpX) => s"mvv=$watermark mvfp=$fpN:$fpX mvdv=$idx:$newPin",
-      preCommit = actualParent => require(
-        actualParent == mvTipAtStart,
-        s"refreshMvDim: $mv moved while this dim refresh recomputed " +
-          "(a concurrent refresh committed) — re-run refreshMvDim; " +
-          "maintenance is single-writer per MV"))
+    commit(
+      spark, mv,
+      foldRequest(
+        next, overwrite = true,
+        (fpN, fpX) => Seq(s"mvv=$watermark", s"mvfp=$fpN:$fpX", s"mvdv=$idx:$newPin"),
+        preCommit = actualParent => require(
+          actualParent == mvTipAtStart,
+          s"refreshMvDim: $mv moved while this dim refresh recomputed " +
+            "(a concurrent refresh committed) — re-run refreshMvDim; " +
+            "maintenance is single-writer per MV")))
     (oldPin, newPin)
   }
 
@@ -5911,25 +5841,22 @@ object SnapshotLog {
       }
       .collect()
     if (specs.isEmpty) return (v, Nil, Nil) // stats admitted, no row matched
-    val amended = specs.toSeq.map { case (file, dvName, cnt) =>
-      dvAmendEntry(entryByBase(file), dvName, cnt)
-    }
-    val amendedNames = specs.toSeq.map(s => entryName(entryByBase(s._1)))
-    val landed = stageOnly(spark, table, updated)
+    val amendments = dvAmendments(entries, specs.toSeq)
+    val amendedNames = amendments.map(a => entryName(a._1))
     val commitSchema =
       schema.getOrElse(readFiles(spark, table, admitNames, None).schema)
-    val version = commitEntriesInternal(
-      spark, table, annotateEntries(spark, table, landed) ++ amended,
-      commitSchema, overwrite = false, txnId, Some(amendedNames),
-      dataChange = true)
-    (version, amendedNames, landed)
+    val version = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Frame(updated, Some(commitSchema)), amendments = amendments,
+        txnId = txnId))
+    // the appended files: new at `version` (the amended names are live
+    // in its parent too)
+    val appended = manifest(spark, table, version)
+      .filterNot(manifest(spark, table, version - 1).toSet)
+    (version, amendedNames, appended)
   }
 
-  /** Deletes data files referenced by NO version (crashed writers'
-    * orphans), and sweeps `_staging/` job directories a writer that
-    * died inside [[stageOnly]] left behind. Returns the deleted names.
-    * Production note: a real retention policy also expires OLD versions
-    * first; this keeps every committed version readable. */
   // ------------------------------------------------------------------
   // Table properties (static layout declarations)
   // ------------------------------------------------------------------
@@ -5990,7 +5917,7 @@ object SnapshotLog {
     * under a new schema — `datachange=false` (no row changed, the
     * change feed and insert-only streams skip it), zero data IO. The
     * ALTER TABLE primitive. */
-  private def commitSchemaOnly(
+  private def alterSchema(
       spark: SparkSession,
       table: String,
       schema: StructType,
@@ -5998,10 +5925,11 @@ object SnapshotLog {
   ): Int = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"snapshot alter: no commits in $table")
-    commitEntriesInternal(
-      spark, table, manifestEntries(spark, table, vs.last), schema,
-      overwrite = true, None, None, dataChange = false,
-      extraHeader = s"alter=$what")
+    commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(manifestEntries(spark, table, vs.last), schema),
+        overwrite = true, dataChange = false, header = Seq(s"alter=$what")))
   }
 
   /** Mapped-table staging: rename the batch's columns to the frozen
@@ -6097,7 +6025,7 @@ object SnapshotLog {
       if (f.name == from) StructField(to, f.dataType, f.nullable, f.metadata)
       else f
     })
-    commitSchemaOnly(spark, table, next, s"rename-${b64(s"$from>$to")}")
+    alterSchema(spark, table, next, s"rename-${b64(s"$from>$to")}")
   }
 
   /** METADATA-ONLY column drop: the field leaves the schema; the bytes
@@ -6138,7 +6066,7 @@ object SnapshotLog {
         s"snapshot drop-column: '$name' is referenced by the CHECK " +
           s"constraint ($c)"))
     val next = StructType(stampPhys(cur).fields.filterNot(_.name == name))
-    commitSchemaOnly(spark, table, next, s"drop-${b64(name)}")
+    alterSchema(spark, table, next, s"drop-${b64(name)}")
   }
 
   /** METADATA-ONLY type widening: accepts EXACTLY the widenings the
@@ -6172,7 +6100,7 @@ object SnapshotLog {
         "float->double only); rewrite the table to change types")
     val next = StructType(cur.fields.map(x =>
       if (x.name == name) StructField(name, to, x.nullable, x.metadata) else x))
-    commitSchemaOnly(spark, table, next, s"widen-${b64(s"$name>${to.simpleString}")}")
+    alterSchema(spark, table, next, s"widen-${b64(s"$name>${to.simpleString}")}")
   }
 
   /** The widenings [[widenColumn]] (and the append path's merge)
@@ -6429,14 +6357,21 @@ object SnapshotLog {
     }
     // THE publish point — main untouched before, serving the branch
     // content from owned files after
-    val v = commitEntriesInternal(
-      spark, table, entries, schema, overwrite = true, None, None,
-      dataChange = true, extraHeader = s"publish=${b64(s"$name@${bvs.last}")}")
+    val v = commit(
+      spark, table,
+      CommitRequest(
+        CommitData.Entries(entries, schema), overwrite = true,
+        header = Seq(s"publish=${b64(s"$name@${bvs.last}")}")))
     f.delete(new Path(branch), true)
     (v, copied.toSeq)
   }
 
-  /** `dryRun = true` reports what vacuum WOULD reclaim — the listing,
+  /** Deletes data files referenced by NO version (crashed writers'
+    * orphans), and sweeps `_staging/` job directories a writer that
+    * died inside [[stageOnly]] left behind. Returns the deleted names.
+    * Production note: a real retention policy also expires OLD versions
+    * first; this keeps every committed version readable.
+    * `dryRun = true` reports what vacuum WOULD reclaim — the listing,
     * reference resolution, and grace accounting all run for real, only
     * the deletes are withheld. An operator previews a reclamation on a
     * 100 TB table before spending it. */

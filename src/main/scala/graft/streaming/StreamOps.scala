@@ -139,8 +139,8 @@ object StreamOps {
 
   /** Streaming ingestion into the TRANSACTIONAL snapshot table (round
     * 10): each micro-batch commits through
-    * [[graft.sources.SnapshotLog.commitIdempotent]] with the stable
-    * foreachBatch batchId as its txn token, so the crash window between
+    * [[graft.sources.SnapshotLog.commit]] with the stable
+    * foreachBatch batchId as its request's txn id, so the crash window between
     * snapshot commit and offset commit — where an at-least-once runner
     * re-delivers the batch — replays into the SAME version instead of a
     * duplicate commit. This is [[exactlyOnceSink]]'s idempotence
@@ -170,8 +170,10 @@ object StreamOps {
     events.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.sources.SnapshotLog
-          .commitIdempotent(batch.sparkSession, table, batch, s"$scope-batch-$batchId")
+        import graft.sources.SnapshotLog.{CommitData, CommitRequest}
+        graft.sources.SnapshotLog.commit(
+          batch.sparkSession, table,
+          CommitRequest(CommitData.Frame(batch), txnId = Some(s"$scope-batch-$batchId")))
         if (failAfterCommitAt.contains(batchId) && !tripped.getAndSet(true))
           throw new RuntimeException(
             s"injected crash after snapshot commit, before offset commit (batch $batchId)"

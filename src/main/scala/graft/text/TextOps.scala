@@ -709,7 +709,8 @@ object TextOps {
     * append-mostly training corpus, indexing a 10 GB drop costs 10 GB
     * of tokenization plus an append, never a rebuild. The
     * folded-through version rides the index commit's own HEADER
-    * ([[graft.sources.SnapshotLog.commitWatermarked]]), so a crash
+    * (an `idxv=` token, read back by
+    * [[graft.sources.SnapshotLog.committedWatermark]]), so a crash
     * between commit and any bookkeeping cannot re-append the same
     * delta's postings (duplicate (term,doc) pairs would break
     * conjunctive counting). A DELETE-bearing delta no longer refuses:
@@ -759,7 +760,7 @@ object TextOps {
       val dels = changes.filter(col("change_type") === "delete")
         .select("doc_id", "text")
       if (dels.isEmpty) {
-        SnapshotLog.commitWatermarked(spark, idx, postings(ins), "idxv", to)
+        SnapshotLog.commit(spark, idx, SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(postings(ins)), header = Seq(s"idxv=$to")))
       } else {
         // dead pairs from the delta's OLD rows: every posting of a
         // delete-side doc lives in a shard whose term range admits one
@@ -794,8 +795,9 @@ object TextOps {
     }
     SnapshotLog.commit(spark, src, docs.filter(col("doc_id") <= half))
     val v1 = SnapshotLog.versions(spark, src).last
-    SnapshotLog.commitWatermarked(
-      spark, idx, postings(SnapshotLog.read(spark, src)), "idxv", v1)
+    SnapshotLog.commit(
+      spark, idx,
+      SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(postings(SnapshotLog.read(spark, src))), header = Seq(s"idxv=$v1")))
     // the corpus grows behind the index's back → pure insert fold
     SnapshotLog.commit(spark, src, docs.filter(col("doc_id") > half))
     refresh()

@@ -280,15 +280,19 @@ class CatalogSpec extends SparkTestBase {
     assert(pruned == Set(0L, 1L, 2L))
   }
 
+  /** `df` committed bucket-clustered on `id` into 4 buckets. */
+  private def bucketedRequest(df: org.apache.spark.sql.DataFrame) =
+    SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(df), buckets = Some(("id", 4)))
+
   test("storage-partitioned join: co-bucketed tables join with no shuffle on the keys") {
     import spark.implicits._
     val _ = warehouse
-    SnapshotLog.commitBucketed(
+    SnapshotLog.commit(
       spark, s"$warehouse/main/spj_a",
-      (0L to 99L).map(i => (i, i * 2)).toDF("id", "a"), "id", 4)
-    SnapshotLog.commitBucketed(
+      bucketedRequest((0L to 99L).map(i => (i, i * 2)).toDF("id", "a")))
+    SnapshotLog.commit(
       spark, s"$warehouse/main/spj_b",
-      (0L to 99L).map(i => (i, i * 3)).toDF("id", "b"), "id", 4)
+      bucketedRequest((0L to 99L).map(i => (i, i * 3)).toDF("id", "b")))
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
@@ -311,8 +315,7 @@ class CatalogSpec extends SparkTestBase {
     import spark.implicits._
     val _ = warehouse
     val p = s"$warehouse/main/spj_stale"
-    SnapshotLog.commitBucketed(
-      spark, p, (0L to 49L).toDF("id"), "id", 4)
+    SnapshotLog.commit(spark, p, bucketedRequest((0L to 49L).toDF("id")))
     SnapshotLog.commit(spark, p, (50L to 59L).toDF("id")) // plain append
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

@@ -207,7 +207,10 @@ class DataFileFormatSpec extends SparkTestBase {
     val plain = Files.createTempDirectory("graft_fmt_commit").toString + "/t"
     assert(landed(plain)(SnapshotLog.commit(spark, plain, rows(0, 200))) > 0)
     val bkt = Files.createTempDirectory("graft_fmt_bkt").toString + "/t"
-    assert(landed(bkt)(SnapshotLog.commitBucketed(spark, bkt, rows(0, 200), "id", 4)) == 4)
+    assert(landed(bkt)(SnapshotLog.commit(
+      spark, bkt,
+      SnapshotLog.CommitRequest(
+        SnapshotLog.CommitData.Frame(rows(0, 200)), buckets = Some(("id", 4))))) == 4)
     assert(SnapshotLog.read(spark, bkt).count() == 200L)
   }
 
@@ -227,7 +230,9 @@ class DataFileFormatSpec extends SparkTestBase {
       val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
       val landedName = s"part-snappy-${java.util.UUID.randomUUID.toString.take(8)}.parquet"
       assert(part.renameTo(new java.io.File(s"${pathOf(name)}/$landedName")))
-      val _ = SnapshotLog.commitLanded(spark, pathOf(name), Seq(landedName), df.schema)
+      val _ = SnapshotLog.commit(
+        spark, pathOf(name),
+        SnapshotLog.CommitRequest(SnapshotLog.CommitData.landed(Seq(landedName), df.schema)))
     }
     Seq("mixed", "twin").foreach { n =>
       snappyCommit(n, rows(0, 150))

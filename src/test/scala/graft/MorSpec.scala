@@ -288,4 +288,97 @@ class MorSpec extends SparkTestBase {
     assert(expired.exists(_.startsWith("_dv/")))
     assert(ids(t) == ((0L to 29L).toSet -- Set(12L, 13L)))
   }
+
+  /** A deletion-vector sidecar in the documented format: magic
+    * "GDV1", the position count, the sorted positions. */
+  private def writeDv(path: String, positions: Seq[Long]): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    Files.createDirectories(p.getParent)
+    val out = new java.io.DataOutputStream(Files.newOutputStream(p))
+    try {
+      out.writeInt(0x47445631)
+      out.writeInt(positions.size)
+      positions.foreach(out.writeLong)
+    } finally out.close()
+  }
+
+  test("a DV amendment read at version v is refused once another MoR " +
+    "delete amended the same file: the newer delete's rows stay deleted") {
+    import spark.implicits._
+    val t = freshTable()
+    SnapshotLog.commit(spark, t, (0L to 9L).toDF("id").coalesce(1))
+    val v = SnapshotLog.versions(spark, t).last
+    val Seq(read) = SnapshotLog.manifestEntries(spark, t, v)
+    // the stale request: the DV it read at v (none) united with its own
+    // position 0 (id 0)
+    writeDv(s"$t/_dv/dv-stale.bin", Seq(0L))
+    val stale = SnapshotLog.CommitRequest(
+      SnapshotLog.CommitData.Entries(Nil, SnapshotLog.tableSchema(spark, t, v).get),
+      amendments = Seq(read -> s"$read;_dv=v:dv-stale.bin;_dvc=c:1"))
+    val (v1, amended, _) = SnapshotLog.deleteWhereMoR(spark, t, "id", 5, 6)
+    assert(v1 == v + 1 && amended.size == 1)
+    intercept[java.util.ConcurrentModificationException] {
+      SnapshotLog.commit(spark, t, stale)
+    }
+    assert(SnapshotLog.versions(spark, t).last == v1)
+    assert(ids(t) == (0L to 9L).toSet -- Set(5L, 6L))
+  }
+
+  test("concurrent MoR deletes on one file: every delete that returned a " +
+    "version stays applied, every other one is refused") {
+    import spark.implicits._
+    val t = freshTable()
+    SnapshotLog.commit(spark, t, (0L to 79L).toDF("id").coalesce(1))
+    val results = new java.util.concurrent.ConcurrentHashMap[Int, Either[Throwable, Int]]()
+    val threads = (0 until 8).map { i =>
+      new Thread(() => {
+        val r =
+          try Right(SnapshotLog.deleteWhereMoR(spark, t, "id", i * 10L, i * 10L + 4)._1)
+          catch { case e: Throwable => Left(e) }
+        results.put(i, r)
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val won = (0 until 8).filter(i => results.get(i).isRight)
+    (0 until 8).filterNot(won.contains).foreach { i =>
+      results.get(i) match {
+        case Left(_: java.util.ConcurrentModificationException) => ()
+        case other => fail(s"thread $i neither committed nor conflicted: $other")
+      }
+    }
+    assert(won.nonEmpty)
+    val dead = won.flatMap(i => (i * 10L) to (i * 10L + 4)).toSet
+    assert(ids(t) == (0L to 79L).toSet -- dead)
+  }
+
+  test("a copy-on-write rewrite that read a file before a MoR delete " +
+    "amended it is refused: the delete's rows stay deleted") {
+    import spark.implicits._
+    val t = freshTable()
+    SnapshotLog.commit(spark, t, (0L to 9L).toDF("id").coalesce(1))
+    intercept[java.util.ConcurrentModificationException] {
+      SnapshotLog.mergeCoW(spark, t, "id", Seq(3L).toDF("k"), base => {
+        // lands between the rewrite's read and its commit
+        SnapshotLog.deleteWhereMoR(spark, t, "id", 7, 8)
+        base.filter(col("id") =!= 3)
+      })
+    }
+    assert(ids(t) == (0L to 9L).toSet -- Set(7L, 8L))
+  }
+
+  test("MoR update on a table with a renamed column writes its new rows " +
+    "under the physical names: the renamed column keeps its values") {
+    import spark.implicits._
+    val t = freshTable()
+    SnapshotLog.commit(
+      spark, t, (0L to 9L).map(i => (i, i * 10)).toDF("id", "w").coalesce(1))
+    SnapshotLog.renameColumn(spark, t, "w", "w2")
+    SnapshotLog.updateWhereMoR(spark, t, "id", 3, 4, _.withColumn("id", col("id") + 100))
+    val got = SnapshotLog.read(spark, t).collect()
+      .map(r => (r.getLong(0), Option(r.get(1)))).toSet
+    val want = (0L to 9L).filterNot(Set(3L, 4L)).map(i => (i, Some(i * 10))) ++
+      Seq((103L, Some(30L)), (104L, Some(40L)))
+    assert(got == want.toSet)
+  }
 }

@@ -835,7 +835,10 @@ class MvSpec extends SparkTestBase {
       .writeStream
       .option("checkpointLocation", s"$fact/_ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        SnapshotLog.commitIdempotent(spark, fact, batch, s"sj-$batchId")
+        SnapshotLog.commit(
+          spark, fact,
+          SnapshotLog.CommitRequest(
+            SnapshotLog.CommitData.Frame(batch), txnId = Some(s"sj-$batchId")))
         SnapshotLog.refreshMv(spark, mv)
         ()
       }
