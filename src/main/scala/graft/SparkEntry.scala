@@ -10,22 +10,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private val modules: Seq[(Map[String, Q], Map[String, String])] = Seq(
-    (operators.Scans.queries, operators.Scans.oracles),
-    (operators.Project.queries, operators.Project.oracles),
-    (operators.Aggregates.queries, operators.Aggregates.oracles),
-    (operators.Joins.queries, operators.Joins.oracles),
-    (operators.Windows.queries, operators.Windows.oracles),
-    (operators.SetOps.queries, operators.SetOps.oracles),
-    (operators.StreamingBatch.queries, operators.StreamingBatch.oracles),
-    (operators.Etl.queries, operators.Etl.oracles),
-    (operators.EventAnalytics.queries, operators.EventAnalytics.oracles),
-    (functions.ScalarFns.queries, functions.ScalarFns.oracles),
-    (functions.Udfs.queries, functions.Udfs.oracles),
-    (text.TextOps.queries, text.TextOps.oracles),
-    (text.Dedup.queries, text.Dedup.oracles),
-    (sim.Similarity.queries, sim.Similarity.oracles),
-    (multimodal.Multimodal.queries, multimodal.Multimodal.oracles)
+  /** The inventory's modules, by name: (queries, oracle SQL) each. */
+  private[graft] val modules: Seq[(String, Map[String, Q], Map[String, String])] = Seq(
+    ("Scans", operators.Scans.queries, operators.Scans.oracles),
+    ("MvKeys", operators.MvKeys.queries, operators.MvKeys.oracles),
+    ("Project", operators.Project.queries, operators.Project.oracles),
+    ("Aggregates", operators.Aggregates.queries, operators.Aggregates.oracles),
+    ("Joins", operators.Joins.queries, operators.Joins.oracles),
+    ("Windows", operators.Windows.queries, operators.Windows.oracles),
+    ("SetOps", operators.SetOps.queries, operators.SetOps.oracles),
+    ("StreamingBatch", operators.StreamingBatch.queries, operators.StreamingBatch.oracles),
+    ("Etl", operators.Etl.queries, operators.Etl.oracles),
+    ("EventAnalytics", operators.EventAnalytics.queries, operators.EventAnalytics.oracles),
+    ("ScalarFns", functions.ScalarFns.queries, functions.ScalarFns.oracles),
+    ("Udfs", functions.Udfs.queries, functions.Udfs.oracles),
+    ("TextOps", text.TextOps.queries, text.TextOps.oracles),
+    ("Dedup", text.Dedup.queries, text.Dedup.oracles),
+    ("Similarity", sim.Similarity.queries, sim.Similarity.oracles),
+    ("Multimodal", multimodal.Multimodal.queries, multimodal.Multimodal.oracles)
   )
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -34,10 +36,10 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.iterator.flatMap(_._1).toMap
+    modules.iterator.flatMap(_._2).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a rows-only check. */
   def oracleSql: Map[String, String] =
-    modules.iterator.flatMap(_._2).toMap
+    modules.iterator.flatMap(_._3).toMap
 }

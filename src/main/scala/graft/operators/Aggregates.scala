@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Q, Tables, withConf}
+import graft.plans.{MvRewrite, MvRollupRewriteRule}
 import org.apache.spark.sql.functions._
 
 /** §2.4 Aggregation operators (SURVEY.md).
@@ -842,7 +843,6 @@ object Aggregates {
     * PlanShapeSpec additionally pins fire-through-the-optimizer,
     * bail-when-disabled, and bail-on-non-decomposable-aggregates. */
   val aggRollupMv: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
     val li = Tables.lineitem(spark, dir)
     val mvName = "mv_lineitem_daily"
     graft.Stage.table(spark, dir, mvName, Seq("lineitem")) {
@@ -872,16 +872,10 @@ object Aggregates {
         max("l_quantity").as("max_qty")
       )
       .orderBy("l_returnflag", "l_linestatus")
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
+    withConf(spark, MvRewrite.ConfKey -> "true") {
+      val rewritten = MvRollupRewriteRule(spark)(brute.queryExecution.optimizedPlan)
       require(MvRewrite.readsMv(rewritten), "MV rollup rewrite did not fire")
       org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
     }
   }
 
@@ -907,7 +901,6 @@ object Aggregates {
     * oracle computes avg from SOURCE rows; the hash match proves the
     * two-sum derivation lands on Spark's own avg bit-for-bit. */
   val aggRollupAvg: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
     val li = Tables.lineitem(spark, dir)
     val mvName = "mv_lineitem_daily_avg"
     graft.Stage.table(spark, dir, mvName, Seq("lineitem")) {
@@ -938,16 +931,10 @@ object Aggregates {
         sum("l_quantity").as("sum_qty")
       )
       .orderBy("l_returnflag", "l_linestatus")
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
+    withConf(spark, MvRewrite.ConfKey -> "true") {
+      val rewritten = MvRollupRewriteRule(spark)(brute.queryExecution.optimizedPlan)
       require(MvRewrite.readsMv(rewritten), "MV avg rewrite did not fire")
       org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
     }
   }
 

@@ -4,18 +4,50 @@ import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** §2.1 Scans, sources, sinks (SURVEY.md).
+/** §2.1 Scans, sources, sinks (SURVEY.md), and the lakehouse SQL
+  * surface of the snapshot catalog.
   *
   * Format-conversion entry/exit points. The CSV/JSON sources
   * round-trip a graded table through the format under test with an
   * explicit schema (schema-on-read), so the DuckDB oracle can check
-  * them against the original parquet. All writes go to the JVM temp
-  * dir, never into the graded data.
+  * them against the original parquet. The snapshot keys drive the
+  * table format and its `graft_cat` SQL catalog: commits, time
+  * travel, DML, layout and skipping, schema evolution, pushdowns.
+  * All writes go to the JVM temp dir or the catalog's warehouse,
+  * never into the graded data. The materialized-view lifecycle keys
+  * live in [[MvKeys]], which shares the fixtures below.
   */
 object Scans {
 
-  private def tmp(name: String) =
+  private[operators] def tmp(name: String) =
     s"${sys.props("java.io.tmpdir")}/graft_io/$name"
+
+  /** orders as `(o_orderkey, o_custkey, cents)` — the price in whole
+    * cents, so sums stay exact long math — plus any `extra` columns
+    * after them. */
+  private[operators] def ordersCents(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String,
+      extra: org.apache.spark.sql.Column*
+  ): org.apache.spark.sql.DataFrame =
+    Tables
+      .orders(spark, dir)
+      .select(Seq(
+        col("o_orderkey"),
+        col("o_custkey"),
+        round(col("o_totalprice") * 100).cast("long").as("cents")) ++ extra: _*)
+
+  /** events as `(event_id, ts, v)`, v the value in whole hundredths. */
+  private[operators] def eventsV(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String
+  ): org.apache.spark.sql.DataFrame =
+    Tables
+      .events(spark, dir)
+      .select(
+        col("event_id"),
+        col("ts"),
+        round(col("value") * 100).cast("long").as("v"))
 
   /** Run independent bail-matrix PROBES concurrently (optimization
     * round 20, guide §2.6 "overlap independent jobs", applied to
@@ -30,7 +62,7 @@ object Scans {
     * reads conf through its captured session, and the serve-miss
     * diag sink is a ThreadLocal. The first failure rethrows
     * verbatim. */
-  private def parProbes(probes: (() => Unit)*): Unit =
+  private[operators] def parProbes(probes: (() => Unit)*): Unit =
     if (probes.size <= 1) probes.foreach(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(probes.size)
@@ -907,8 +939,10 @@ object Scans {
 
   /** Registers the snapshot SQL catalog once per session (the catalog
     * instance is cached by Spark's CatalogManager at first use, so the
-    * warehouse is a deterministic per-JVM path all keys share). */
-  private def sqlCatalog(spark: org.apache.spark.sql.SparkSession): String = {
+    * warehouse is a deterministic per-JVM path all keys share). A
+    * session that registered `graft_cat` itself keeps its own
+    * warehouse — resolve table paths with [[warehousePath]]. */
+  private[operators] def sqlCatalog(spark: org.apache.spark.sql.SparkSession): String = {
     val cat = "graft_cat"
     if (spark.conf.getOption(s"spark.sql.catalog.$cat").isEmpty) {
       spark.conf
@@ -917,6 +951,15 @@ object Scans {
     }
     cat
   }
+
+  /** Directory of catalog table `main.<name>`, under the warehouse
+    * the session's `graft_cat` is configured with — the resolution
+    * [[graft.sources.SnapshotCatalog]] makes. */
+  private[operators] def warehousePath(
+      spark: org.apache.spark.sql.SparkSession,
+      name: String
+  ): String =
+    s"${spark.conf.get(s"spark.sql.catalog.${sqlCatalog(spark)}.warehouse")}/main/$name"
 
   /** SQL SELECT over the snapshot catalog (round 11 late): the table
     * lands as three range-sharded appends through the commit protocol,
@@ -932,7 +975,7 @@ object Scans {
   val sqlSnapshotSelect: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val cat = sqlCatalog(spark)
-    val table = tmp("sql_warehouse/main/orders_sqlsel")
+    val table = warehousePath(spark, "orders_sqlsel")
     new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(table), true)
@@ -1592,77 +1635,6 @@ object Scans {
     SnapshotLog.read(spark, dst).orderBy("o_orderkey")
   }
 
-  /** STREAMING MV MAINTENANCE (round 14): the lakehouse loop that
-    * keeps a dashboard rollup CONTINUOUSLY fresh — a micro-batch
-    * stream lands each trigger's rows in the source snapshot table
-    * (idempotent txn per batch), and the SAME foreachBatch then runs
-    * [[graft.sources.SnapshotLog.refreshMv]], which folds ONLY the
-    * change feed since the MV's committed watermark. Per trigger the
-    * whole loop is O(new files): the append costs its batch, the
-    * refresh reads exactly that batch back through the CDF, and the
-    * mvv header makes a crash-replayed trigger re-fold nothing. At
-    * 100 TB this is the difference between "the rollup is a nightly
-    * job over the fact table" and "the rollup is seconds behind the
-    * stream at batch-sized cost". Inline pins: >1 refresh cycle
-    * actually ran (maxFilesPerTrigger forces several triggers) and an
-    * idle final refresh no-ops. The oracle recomputes the rollup from
-    * ALL source rows, so a missed batch, a double-fold, or a stale
-    * watermark breaks the hash. */
-  val streamMvMaintain: Q = (spark, dir) => {
-    import graft.sources.SnapshotLog
-    val up = tmp("orders_mvmaint_up")
-    val src = tmp("orders_mvmaint_src")
-    val mv = tmp("orders_mvmaint_mv")
-    val fsys = new org.apache.hadoop.fs.Path(up)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(up, src, mv).foreach(p =>
-      fsys.delete(new org.apache.hadoop.fs.Path(p), true))
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey").as("k"),
-        round(col("o_totalprice") * 100).cast("long").as("v"))
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    // the base load + materialization happen before the stream starts
-    SnapshotLog.commit(spark, src, o.filter(col("o_orderkey") <= half))
-    SnapshotLog.createMv(spark, src, mv, "k", "v")
-    // the upstream carries the rest as THREE separate commits: stream
-    // offsets are version-granular, so three versions force three
-    // micro-batches — three full maintenance cycles
-    val step = (maxK - half) / 3 + 1
-    (0 until 3).foreach { i =>
-      SnapshotLog.commit(
-        spark, up,
-        o.filter(
-          col("o_orderkey") > half + i * step &&
-            col("o_orderkey") <= (half + (i + 1) * step)))
-    }
-    val q = spark.readStream
-      .format("graft.sources.GraftSnapshotSource")
-      .option("maxFilesPerTrigger", "1")
-      .load(up)
-      .writeStream
-      .option("checkpointLocation", s"$src/_ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        SnapshotLog.commit(
-          spark, src,
-          SnapshotLog.CommitRequest(
-            SnapshotLog.CommitData.Frame(batch), txnId = Some(s"mvmaint-$batchId")))
-        SnapshotLog.refreshMv(spark, mv)
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val cycles = SnapshotLog.versions(spark, mv).size
-    require(cycles > 2, s"expected several maintenance cycles, got $cycles")
-    val (f, t) = SnapshotLog.refreshMv(spark, mv)
-    require(f == t, "an idle refresh after the stream drains must no-op")
-    SnapshotLog.read(spark, mv).orderBy("k")
-  }
-
   /** DESCRIBE HISTORY (round 11): the commit ledger as data — action,
     * data-change flag, txn id, and the live ROW total per version,
     * summed from the manifest's `_rc` row-count riders (written from
@@ -1853,7 +1825,7 @@ object Scans {
       .createOrReplaceTempView("graft_aggpd_src")
     spark.sql(
       s"CREATE TABLE $cat.main.orders_aggpd AS SELECT * FROM graft_aggpd_src")
-    val tablePath = tmp("sql_warehouse") + "/main/orders_aggpd"
+    val tablePath = warehousePath(spark, "orders_aggpd")
     val fsys = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hidden = new org.apache.hadoop.fs.Path(s"$tablePath/_hidden")
@@ -1905,7 +1877,7 @@ object Scans {
     spark.sql(
       s"""CREATE TABLE $cat.main.orders_ren AS
          |SELECT * FROM graft_ren_src WHERE o_orderkey <= $c2""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/orders_ren"
+    val tablePath = warehousePath(spark, "orders_ren")
     val fsys = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def disk(): Set[String] = fsys
@@ -1980,7 +1952,7 @@ object Scans {
       s"""CREATE TABLE $cat.main.orders_widen AS
          |SELECT o_orderkey, CAST(o_custkey AS INT) AS cust, o_totalprice
          |FROM graft_widen_src WHERE o_orderkey <= $c2""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/orders_widen"
+    val tablePath = warehousePath(spark, "orders_widen")
     val fsys = new org.apache.hadoop.fs.Path(tablePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def disk(): Set[String] = fsys
@@ -2140,7 +2112,7 @@ object Scans {
     spark.sql(
       s"""INSERT INTO $cat.main.orders_clsrc
          |SELECT * FROM graft_clone_src WHERE o_orderkey > $c2""".stripMargin) // v3
-    val cloneDir = tmp("sql_warehouse") + "/main/orders_clone"
+    val cloneDir = warehousePath(spark, "orders_clone")
     val fsys = new org.apache.hadoop.fs.Path(cloneDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(
@@ -2187,7 +2159,7 @@ object Scans {
       s"""INSERT INTO $cat.main.orders_part
          |SELECT o_orderkey, o_custkey % 8 AS part, o_totalprice
          |FROM graft_part_src""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/orders_part"
+    val tablePath = warehousePath(spark, "orders_part")
     val (kept, total) = graft.sources.SnapshotLog
       .prunedFiles(spark, tablePath, "part", 3, 3)
     require(
@@ -2227,7 +2199,7 @@ object Scans {
          |SELECT o_orderkey, o_custkey % 4 AS pa, o_orderkey % 3 AS pb,
          |       o_totalprice
          |FROM graft_part2_src""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/orders_part2"
+    val tablePath = warehousePath(spark, "orders_part2")
     import graft.sources.SnapshotLog
     val (keptA, total) = SnapshotLog.prunedFiles(spark, tablePath, "pa", 2, 2)
     val (keptB, _) = SnapshotLog.prunedFiles(spark, tablePath, "pb", 1, 1)
@@ -2278,7 +2250,7 @@ object Scans {
       """SELECT CAST(ts AS DATE) AS d, count(*) AS n
         |FROM graft_partdays_src GROUP BY 1 ORDER BY n DESC, d LIMIT 1""".stripMargin)
       .head.getDate(0).toString
-    val tablePath = tmp("sql_warehouse") + "/main/events_bydate"
+    val tablePath = warehousePath(spark, "events_bydate")
     // day-pure files: the one-day micros range prunes via RAW ts stats
     val dayStart = java.time.LocalDate.parse(probe)
     val loUs = dayStart.toEpochDay * 86400000000L
@@ -2408,7 +2380,7 @@ object Scans {
     spark.sql(
       s"""INSERT INTO $cat.main.orders_evolve
          |SELECT * FROM graft_evolve_src WHERE o_orderkey > $half""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/orders_evolve"
+    val tablePath = warehousePath(spark, "orders_evolve")
     val gen1 = SnapshotLog.manifest(spark, tablePath, 2).size
     val (kept, total) = SnapshotLog
       .prunedFilesString(spark, tablePath, "o_orderstatus", "F", "F")
@@ -2420,130 +2392,6 @@ object Scans {
       s"""SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
          |FROM $cat.main.orders_evolve WHERE o_orderstatus = 'F'
          |ORDER BY o_orderkey""".stripMargin)
-  }
-
-  /** MATERIALIZED VIEW lifecycle through SQL (round 12):
-    * `CALL system.create_mv(source, mv, key, agg)` materializes a
-    * per-key sum/count rollup as a CATALOG TABLE recording its source
-    * and as-of version; `CALL system.refresh_mv(mv)` folds ONLY the
-    * source's change feed since that version into the rollup —
-    * inserts add, CoW deletes subtract — and advances the high-water
-    * mark. The refresh reads O(changed files) of the source (the
-    * point of a CDF on a 100 TB table: the third insert and the
-    * UPDATE here cost their own files, never a recompute), while the
-    * MV rewrite is O(distinct keys) — small by construction. The
-    * graded flow: two inserts, materialize, a third insert AND a SQL
-    * UPDATE (file-granular CoW) behind the MV's back, one refresh;
-    * the oracle recomputes the rollup from the FINAL source state, so
-    * the incremental path must land bit-exactly on the full
-    * recompute. etl_mv_incremental proves the algebra programmatically;
-    * this key proves the managed lifecycle — props-tracked versions,
-    * CDF exactness through catalog DML — end to end in SQL. */
-  val sqlMvRefresh: Q = (spark, dir) => {
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mvsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_sqlmv_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val c1 = maxK / 3
-    val c2 = 2 * c1
-    val h = c1 / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mvsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mvsrc
-         |SELECT * FROM graft_sqlmv_src WHERE o_orderkey <= $c1""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mvsrc
-         |SELECT * FROM graft_sqlmv_src
-         |WHERE o_orderkey > $c1 AND o_orderkey <= $c2""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(
-         |  source => 'main.orders_mvsrc', mv => 'main.orders_mv',
-         |  key => 'o_custkey', agg => 'cents')""".stripMargin)
-    // the source moves on behind the MV's back: an append AND a
-    // file-granular CoW update
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mvsrc
-         |SELECT * FROM graft_sqlmv_src WHERE o_orderkey > $c2""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_mvsrc SET cents = cents * 2
-         |WHERE o_orderkey <= $h""".stripMargin)
-    val r = spark.sql(s"CALL $cat.system.refresh_mv(mv => 'main.orders_mv')").head
-    require(
-      r.getInt(1) > r.getInt(0),
-      s"refresh must advance the as-of version, got $r")
-    // a second refresh with no source movement is a no-op
-    val r2 = spark.sql(s"CALL $cat.system.refresh_mv(mv => 'main.orders_mv')").head
-    require(r2.getInt(0) == r2.getInt(1), s"idle refresh must no-op, got $r2")
-    spark.sql(
-      s"""SELECT o_custkey, mv_sum, mv_n
-         |FROM $cat.main.orders_mv ORDER BY o_custkey""".stripMargin)
-  }
-
-  /** MIN/MAX managed MV (round 13, closing the sum/count-only
-    * restriction): `CALL system.create_mv(..., kind => 'minmax')`
-    * materializes a per-key min/max/count rollup. min/max cannot
-    * invert a delete (the removed row may BE the extremum), so the
-    * refresh splits the delta: pure-insert groups keep the exact
-    * least/greatest/count FOLD (O(changed files) of the source), and
-    * ONLY the groups the delta deletes touch recompute from the
-    * source's current state — a left-semi join on the affected keys,
-    * group-scoped, never the full table. The graded flow: two
-    * inserts, materialize, a third insert (fold path) AND a SQL
-    * DELETE scattering removals across groups — including extrema —
-    * then one refresh; the oracle recomputes the rollup from the
-    * final source state, so a fold that kept a deleted extremum or a
-    * recompute that missed a group breaks the hash. */
-  val sqlMvMinmax: Q = (spark, dir) => {
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mmsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mm")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_sqlmm_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val c1 = maxK / 3
-    val c2 = 2 * c1
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mmsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mmsrc
-         |SELECT * FROM graft_sqlmm_src WHERE o_orderkey <= $c1""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mmsrc
-         |SELECT * FROM graft_sqlmm_src
-         |WHERE o_orderkey > $c1 AND o_orderkey <= $c2""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(
-         |  source => 'main.orders_mmsrc', mv => 'main.orders_mm',
-         |  key => 'o_custkey', agg => 'cents', kind => 'minmax')""".stripMargin)
-    // fold path: a pure append behind the MV's back
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mmsrc
-         |SELECT * FROM graft_sqlmm_src WHERE o_orderkey > $c2""".stripMargin)
-    // recompute path: a CoW DELETE scattering across groups (removes
-    // many per-group extrema — %10 of all rows)
-    spark.sql(s"DELETE FROM $cat.main.orders_mmsrc WHERE o_orderkey % 10 = 0")
-    val r = spark.sql(s"CALL $cat.system.refresh_mv(mv => 'main.orders_mm')").head
-    require(
-      r.getInt(1) > r.getInt(0),
-      s"refresh must advance the as-of version, got $r")
-    spark.sql(
-      s"""SELECT o_custkey, mv_min, mv_max, mv_n
-         |FROM $cat.main.orders_mm ORDER BY o_custkey""".stripMargin)
   }
 
   /** GROUP-BY AGGREGATE PUSHDOWN (round 13): `SELECT part, count(*)
@@ -2640,3248 +2488,6 @@ object Scans {
     q
   }
 
-  /** MATERIALIZED VIEW DDL (round 13): `CREATE MATERIALIZED VIEW mv
-    * AS <rollup>` / `REFRESH MATERIALIZED VIEW mv` / `DROP
-    * MATERIALIZED VIEW mv` — the standard-SQL spelling of the managed
-    * MV (OSS Spark 4.1 parses the CREATE as a Declarative-Pipelines
-    * dataset and refuses to execute it; the injected parser reclaims
-    * it for the snapshot catalog). The CREATE accepts EXACTLY the
-    * rollup shapes refresh can maintain incrementally — sum/count,
-    * min/max/count, sum/sumsq/count over one grouping column of one
-    * source table, maintained aliases required — and refuses anything
-    * else loudly naming the shapes: better no MV than one whose
-    * refresh silently recomputes the world. The graded flow mirrors
-    * sql_mv_refresh driven entirely by DDL: two inserts, CREATE, an
-    * append + CoW UPDATE behind the MV's back, one REFRESH, read —
-    * bit-exact against the full-recompute oracle. */
-  val sqlMvDdl: Q = (spark, dir) => {
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_ddlsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_ddlmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_sqlddl_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val c1 = maxK / 3
-    val c2 = 2 * c1
-    val h = c1 / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_ddlsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_ddlsrc
-         |SELECT * FROM graft_sqlddl_src WHERE o_orderkey <= $c1""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_ddlsrc
-         |SELECT * FROM graft_sqlddl_src
-         |WHERE o_orderkey > $c1 AND o_orderkey <= $c2""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_ddlmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_ddlsrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_ddlsrc
-         |SELECT * FROM graft_sqlddl_src WHERE o_orderkey > $c2""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_ddlsrc SET cents = cents * 2
-         |WHERE o_orderkey <= $h""".stripMargin)
-    val r = spark
-      .sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_ddlmv").head
-    require(
-      r.getInt(1) > r.getInt(0),
-      s"refresh must advance the as-of version, got $r")
-    spark.sql(
-      s"""SELECT o_custkey, mv_sum, mv_n
-         |FROM $cat.main.orders_ddlmv ORDER BY o_custkey""".stripMargin)
-  }
-
-  /** DAILY-GRAIN managed MV (round 14): `CREATE MATERIALIZED VIEW mv
-    * AS SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-    * FROM src GROUP BY to_date(ts)` — the time-grain rollup every
-    * dashboard actually maintains, as a DERIVED-KEY managed MV: the
-    * `to_date(ts)` expression is recorded in the MV's props and the
-    * refresh re-derives it over every change-feed delta, so the daily
-    * sums stay exact through appends AND CoW updates at O(changed
-    * files) per refresh forever. The graded flow: two inserts, the
-    * DDL create, an append + a CoW UPDATE behind the MV's back (both
-    * x and its day must re-derive in the delta), one REFRESH, read —
-    * bit-exact against the oracle's per-day recompute of the final
-    * state. A derived key whose name collides with a source column
-    * refuses at create (CatalogSpec). */
-  val sqlMvDaily: Q = (spark, dir) => {
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_dlysrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_dlymv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_dly_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_dlysrc
-         |(event_id BIGINT, ts TIMESTAMP, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dlysrc
-         |SELECT * FROM graft_dly_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_dlymv AS
-         |SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_dlysrc GROUP BY to_date(ts)""".stripMargin)
-    // the source moves on: an append AND a CoW UPDATE (the fold must
-    // subtract the old v and add the new one under the re-derived day)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dlysrc
-         |SELECT * FROM graft_dly_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_dlysrc SET v = v + 11
-         |WHERE event_id % 9 = 0""".stripMargin)
-    val r = spark
-      .sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_dlymv").head
-    require(
-      r.getInt(1) > r.getInt(0),
-      s"refresh must advance the as-of version, got $r")
-    spark.sql(
-      s"""SELECT day, mv_sum, mv_n
-         |FROM $cat.main.events_dlymv ORDER BY day""".stripMargin)
-  }
-
-  /** MANAGED MVs SERVE SOURCE AGGREGATES (round 14, the composition
-    * the two halves of the warehouse story were built for): the user
-    * queries the SOURCE — `SELECT o_custkey, sum(cents), count(*)
-    * FROM src WHERE o_custkey % 2 = 0 GROUP BY o_custkey` — and the
-    * optimizer serves it from the refresh-maintained MV instead: a
-    * pure O(distinct keys) MV scan with NO aggregate node at all (the
-    * rollup is already at key grain), the key-only predicate
-    * transplanted onto the MV read. On a 100 TB fact this replaces a
-    * full scan + shuffle with a scan of a table |keys| rows long that
-    * REFRESH already paid for incrementally. Freshness is the gate:
-    * the MV's committed `mvv` watermark must equal the exact snapshot
-    * version the query pinned — the inline pins assert the rewritten
-    * plan reads the MV's files, aggregates nothing, and never touches
-    * the source scan; PlanShapeSpec pins the stale-MV bail (watermark
-    * behind tip ⇒ source plan, correctness before speed). The oracle
-    * recomputes the whole answer from SOURCE rows, so the hash match
-    * proves the served rollup exact through the append + CoW UPDATE
-    * behind the MV's back. */
-  val aggMvServe: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_srvsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_srvmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_srv_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_srvsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_srvsrc
-         |SELECT * FROM graft_srv_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_srvmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_srvsrc GROUP BY o_custkey""".stripMargin)
-    // the source moves on (append + CoW update), then one REFRESH
-    // brings the watermark back to the tip — serving requires EXACT
-    // freshness, and the refresh is what buys it
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_srvsrc
-         |SELECT * FROM graft_srv_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_srvsrc SET cents = cents + 3
-         |WHERE o_orderkey % 11 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_srvmv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents) AS sum_cents, count(*) AS n_orders
-         |FROM $cat.main.orders_srvsrc
-         |WHERE o_custkey % 2 = 0
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_srvmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "managed-MV serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — the MV is already at key grain")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** GLOBAL grain served from a managed MV (round 14, the second
-    * grain of agg_mv_serve): `SELECT sum(m), count(*) FROM src`
-    * re-aggregates the per-key rollup — sum over per-key sums,
-    * count(*) as the sum of per-key counts (reassociation-safe, so
-    * the answer is exact by construction) — turning a full-table scan
-    * into an O(distinct keys) MV scan. sum is deliberately in the
-    * query: the metadata-only aggregate pushdown answers global
-    * count/min/max from manifest riders already, and a sum is exactly
-    * the global aggregate only the MV can shortcut. Same freshness
-    * gate as the key grain: the committed `mvv` watermark must equal
-    * the query's pinned snapshot version. The oracle recomputes both
-    * aggregates from source rows through the same append + CoW DELETE
-    * the MV folded incrementally (the stats kind's invertible fold). */
-  val aggMvServeGlobal: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_gsvsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_gsvmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_gsv_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_gsvsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_gsvsrc
-         |SELECT * FROM graft_gsv_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_gsvmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum,
-         |sum(cents*cents) AS mv_sumsq, count(*) AS mv_n
-         |FROM $cat.main.orders_gsvsrc GROUP BY o_custkey""".stripMargin)
-    // append + a CoW DELETE (the stats refresh folds the delete
-    // exactly — x and x² both subtract), then one REFRESH to the tip
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_gsvsrc
-         |SELECT * FROM graft_gsv_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(s"DELETE FROM $cat.main.orders_gsvsrc WHERE o_orderkey % 13 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_gsvmv")
-    val brute = spark.sql(
-      s"""SELECT sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_gsvsrc""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_gsvmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "global managed-MV serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** DAILY grain SERVED from the derived-key MV (round 14, closing
-    * the loop sql_mv_daily opened): the user writes `SELECT
-    * to_date(ts) AS day, sum(v), count(*) FROM src GROUP BY
-    * to_date(ts)` — the canonical daily-dashboard query — and the
-    * optimizer serves it from the refresh-maintained daily rollup: a
-    * pure O(days) MV scan with NO aggregate node (the optimizer
-    * spells the grouping Cast(ts AS DATE); the MV's recorded
-    * mv_key_expr names the same column, so the match is structural).
-    * On a 100 TB events table this replaces the scan + shuffle every
-    * dashboard refresh would cost with a table |days| rows long.
-    * Same freshness gate; any residual filter bails (a derived key
-    * never appears as a source column). Inline pins mirror
-    * agg_mv_serve; the oracle recomputes per-day sums from source
-    * rows through the append + CoW UPDATE the refresh folded. */
-  val aggMvServeDaily: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_dsvsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_dsvmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_dsv_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_dsvsrc
-         |(event_id BIGINT, ts TIMESTAMP, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dsvsrc
-         |SELECT * FROM graft_dsv_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_dsvmv AS
-         |SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_dsvsrc GROUP BY to_date(ts)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dsvsrc
-         |SELECT * FROM graft_dsv_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_dsvsrc SET v = v + 5
-         |WHERE event_id % 7 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_dsvmv")
-    val brute = spark.sql(
-      s"""SELECT to_date(ts) AS day, sum(v) AS sum_v, count(*) AS n
-         |FROM $cat.main.events_dsvsrc
-         |GROUP BY to_date(ts) ORDER BY day""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_dsvmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "daily serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — the rollup is at day grain")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MONTHLY grain served from the DAILY MV by re-aggregation (round
-    * 15, the coarse-grain rung of the serve ladder): the user writes
-    * `SELECT trunc(to_date(ts), 'month'), sum(v), count(*) ... GROUP
-    * BY trunc(to_date(ts), 'month')` — the monthly dashboard — and
-    * the optimizer rewrites it to an aggregate OVER THE DAILY MV
-    * (sum of per-day sums, count as sum of per-day counts): the
-    * query's months are unions of whole MV days, so the re-aggregation
-    * is exact by reassociation. On a 100 TB events table the monthly
-    * rollup costs an O(days)-row scan instead of the source scan +
-    * shuffle — and no monthly MV needs to exist or be maintained.
-    * Inline pins: the plan reads the MV and never the source scan
-    * (an Aggregate node IS expected here, unlike the identity grain).
-    * The oracle recomputes the months from source rows through the
-    * same append + CoW UPDATE the daily refresh folded. */
-  val aggMvServeMonth: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_msvsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_msvmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_msv_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_msvsrc
-         |(event_id BIGINT, ts TIMESTAMP, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_msvsrc
-         |SELECT * FROM graft_msv_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_msvmv AS
-         |SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_msvsrc GROUP BY to_date(ts)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_msvsrc
-         |SELECT * FROM graft_msv_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_msvsrc SET v = v + 9
-         |WHERE event_id % 5 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_msvmv")
-    val brute = spark.sql(
-      s"""SELECT trunc(to_date(ts), 'month') AS mon,
-         |sum(v) AS sum_v, count(*) AS n
-         |FROM $cat.main.events_msvsrc
-         |GROUP BY trunc(to_date(ts), 'month') ORDER BY mon""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_msvmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "monthly coarse-grain serve did not fire: the plan does not read " +
-          "the daily MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** CHEAPEST-MV candidate selection (round 17): ONE fact carries
-    * BOTH a daily and a monthly rollup, and the monthly dashboard
-    * query is admissible from EITHER — identity grain on the monthly
-    * MV, coarse re-aggregation on the daily. The serve rule used to
-    * take mv_refs registration order (the daily registered first
-    * here, deliberately); it now ranks admissible candidates by
-    * STORED LIVE ROWS from the manifest's `_rc` riders and answers
-    * from the monthly MV — at 100 TB the difference between scanning
-    * ~months rows and ~days rows, with zero extra data reads to
-    * decide (the ranking is O(manifest) driver metadata). Inline
-    * pins: the served plan reads the MONTHLY MV and neither the
-    * daily MV nor the source; explain_mv_serve names the chosen MV
-    * and the loser with both row counts. The oracle recomputes the
-    * months from source rows through the same append + CoW UPDATE
-    * both refreshes folded. */
-  val aggMvServeChoice: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_chsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_chmvd")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_chmvm")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_chc_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_chsrc
-         |(event_id BIGINT, ts TIMESTAMP, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_chsrc
-         |SELECT * FROM graft_chc_src WHERE event_id <= $half""".stripMargin)
-    // the DAILY MV registers FIRST — the old first-match rule would
-    // pick it for the monthly query below
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_chmvd AS
-         |SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_chsrc GROUP BY to_date(ts)""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_chmvm AS
-         |SELECT trunc(to_date(ts), 'month') AS mon,
-         |sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_chsrc
-         |GROUP BY trunc(to_date(ts), 'month')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_chsrc
-         |SELECT * FROM graft_chc_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_chsrc SET v = v + 3
-         |WHERE event_id % 9 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_chmvd")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_chmvm")
-    val qText =
-      s"""SELECT trunc(to_date(ts), 'month') AS mon,
-         |sum(v) AS sum_v, count(*) AS n
-         |FROM $cat.main.events_chsrc
-         |GROUP BY trunc(to_date(ts), 'month') ORDER BY mon""".stripMargin
-    val brute = spark.sql(qText)
-    val dailyPath = tmp("sql_warehouse") + "/main/events_chmvd"
-    val monthPath = tmp("sql_warehouse") + "/main/events_chmvm"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, monthPath),
-        "the monthly query must serve from the MONTHLY MV — the " +
-          "cheapest admissible candidate")
-      require(
-        !MvRewrite.readsPath(rewritten, dailyPath),
-        "the daily MV (registered first) must lose the ranking")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      // a FRESH DataFrame: brute's cached queryExecution was already
-      // rewritten under the conf, so the explain would see no source
-      // aggregate to narrate
-      val lines = MvRewrite.explainServe(spark, spark.sql(qText))
-      require(
-        lines.exists(l => l.contains("chose") &&
-          l.contains("events_chmvm") && l.contains("events_chmvd")),
-        s"explain must name the chosen MV and the loser: $lines")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** NULL GROUPING KEYS through the full MV lifecycle (round 17,
-    * driver-checking the round-16 addendum-#3 bug class forever): a
-    * NULL key is ONE group, but every fold join used to match keys
-    * with plain equality (NULL ≠ NULL) — the fold split the NULL
-    * group into two MV rows and the delete-recompute's anti-join let
-    * a stale NULL row survive its own recompute, silently wrong since
-    * round 12 and INVISIBLE to the oracle because no graded corpus
-    * carried NULL keys. This key's corpus does: every tenth order's
-    * group key is NULL, the kind is minmax (the delete-RECOMPUTE
-    * branch — the stale-row face of the bug), and a CoW DELETE
-    * touches the NULL group before the refresh folds. The inline pin
-    * requires exactly ONE NULL-group row in the served result; the
-    * DuckDB oracle groups NULLs natively, so the hash-match is the
-    * regression guard. */
-  val aggMvServeNullkey: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_nksrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_nkmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        when(col("o_orderkey") % 10 === 0, lit(null))
-          .otherwise(col("o_custkey") % 50).cast("long").as("grp"),
-        round(col("o_totalprice") * 100).cast("long").as("v"))
-    o.createOrReplaceTempView("graft_nk_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_nksrc
-         |(o_orderkey BIGINT, grp BIGINT, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_nksrc
-         |SELECT * FROM graft_nk_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_nkmv AS
-         |SELECT grp, min(v) AS mv_min, max(v) AS mv_max, count(*) AS mv_n
-         |FROM $cat.main.orders_nksrc GROUP BY grp""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_nksrc
-         |SELECT * FROM graft_nk_src WHERE o_orderkey > $half""".stripMargin)
-    // the CoW DELETE touches NULL-group rows too: their group must
-    // recompute (not survive stale, not split) through the null-safe
-    // delete-recompute joins
-    spark.sql(s"DELETE FROM $cat.main.orders_nksrc WHERE v % 13 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_nkmv")
-    val brute = spark.sql(
-      s"""SELECT grp, min(v) AS mn, max(v) AS mx, count(*) AS n
-         |FROM $cat.main.orders_nksrc GROUP BY grp ORDER BY grp""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_nkmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "NULL-key serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      val out = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      require(
-        out.filter(col("grp").isNull).count() == 1L,
-        "the NULL group must be exactly ONE row in the served result " +
-          "(the fold-split bug produced two; the stale-survivor bug " +
-          "produced wrong partials)")
-      out
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** NULL DIM ATTRIBUTES through a join-MV lifecycle (round 17, the
-    * join face of the NULL-group class): the dim's attribute column —
-    * the MV's grouping key — is NULL for every seventh customer, so
-    * matched fact rows land in a NULL-attr group that every refresh
-    * fold must treat as ONE group through the null-safe key joins
-    * (distinct from a LEFT MV's unmatched bucket: these rows DID
-    * match). Append + CoW UPDATE fold through the enrichment; inline
-    * pin requires exactly one NULL-attr row served; DuckDB recomputes
-    * the join natively. */
-  val aggMvServeJoinNull: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_njsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_njdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_njmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_nj_src")
-    Tables
-      .customer(spark, dir)
-      .select(
-        col("c_custkey"),
-        when(col("c_custkey") % 7 === 0, lit(null))
-          .otherwise(col("c_mktsegment")).cast("string").as("seg"))
-      .createOrReplaceTempView("graft_nj_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_njdim (c_custkey BIGINT, seg STRING)")
-    spark.sql(s"INSERT INTO $cat.main.cust_njdim SELECT * FROM graft_nj_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_njsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_njsrc
-         |SELECT * FROM graft_nj_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_njsrc',
-         |dim => 'main.cust_njdim', fk => 'o_custkey', pk => 'c_custkey',
-         |mv => 'main.orders_njmv', key => 'seg', agg => 'cents')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_njsrc
-         |SELECT * FROM graft_nj_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_njsrc SET cents = cents + 6
-         |WHERE o_orderkey % 19 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_njmv")
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_njsrc JOIN $cat.main.cust_njdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_njmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "NULL-attr join serve did not fire")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      val out = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      require(
-        out.filter(col("seg").isNull).count() == 1L,
-        "the NULL-attr group must be exactly ONE row in the served result")
-      out
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** EXPRESSION-MEASURE DISTINCT MV (round 17): `count(DISTINCT
-    * cents % 97 - 48)` — a distinct count over a DERIVED value —
-    * serves from a bitmap rollup whose measure is the declared
-    * expression, materialized at create and re-derived over every
-    * refresh delta (the round-16 expression machinery composed with
-    * the distinct kind). Integral expression ⇒ the exact bitmap
-    * route, so the DuckDB recompute hash-matches. Lifecycle: create
-    * at half, append, CoW DELETE (touched groups recompute the
-    * expression at the watermark), refresh, serve. */
-  val aggMvServeDistinctExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_dxsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_dxmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        (col("o_custkey") % 50).cast("long").as("grp"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_dx_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_dxsrc
-         |(o_orderkey BIGINT, grp BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_dxsrc
-         |SELECT * FROM graft_dx_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(source => 'main.orders_dxsrc',
-         |mv => 'main.orders_dxmv', key => 'grp', agg => 'dx',
-         |kind => 'distinct',
-         |agg_expr => 'cents % 97 - 48')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_dxsrc
-         |SELECT * FROM graft_dx_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(s"DELETE FROM $cat.main.orders_dxsrc WHERE cents % 11 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_dxmv")
-    val brute = spark.sql(
-      s"""SELECT grp, count(DISTINCT cents % 97 - 48) AS du,
-         |count(*) AS n
-         |FROM $cat.main.orders_dxsrc GROUP BY grp ORDER BY grp""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_dxmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "distinct-expression serve did not fire: the plan does not " +
-          "read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MULTI-EXPRESSION MV (round 17): ONE rollup maintains TWO derived
-    * measures (`cents * (100 - disc)` and `cents % 50`) plus a plain
-    * column — per-measure `mv_agg_expr_<name>` props, each re-derived
-    * over every refresh delta, each matched at serve time to its own
-    * stored column by semantic equality. The dashboard that needs
-    * revenue AND a second derived sum no longer maintains two MVs
-    * (two folds, two scans). Integer math end to end, so the DuckDB
-    * recompute hash-matches through create-at-half + append + CoW
-    * UPDATE + refresh. */
-  val aggMvServeMultiExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mxsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_mxmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 7).cast("long").as("disc"))
-    o.createOrReplaceTempView("graft_mx_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mxsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |disc BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mxsrc
-         |SELECT * FROM graft_mx_src WHERE o_orderkey <= $half""".stripMargin)
-    val srcPath = tmp("sql_warehouse") + "/main/orders_mxsrc"
-    val mvPath = tmp("sql_warehouse") + "/main/orders_mxmv"
-    graft.sources.SnapshotLog.createMv(
-      spark, srcPath, mvPath, "o_custkey", "rev,half_c,cents",
-      aggExprs = Map(
-        "rev" -> "cents * (100 - disc)",
-        "half_c" -> "cents % 50"))
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mxsrc
-         |SELECT * FROM graft_mx_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_mxsrc SET cents = cents + 2
-         |WHERE o_orderkey % 13 = 0""".stripMargin)
-    graft.sources.SnapshotLog.refreshMv(spark, mvPath)
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents * (100 - disc)) AS rev,
-         |sum(cents % 50) AS hc, sum(cents) AS sc, count(*) AS n
-         |FROM $cat.main.orders_mxsrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "multi-expression serve did not fire: the plan does not read " +
-          "the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MULTI-EXPRESSION MV via pure SQL DDL (round 18, closing r17
-    * VERDICT "What's missing" #2): the CREATE MATERIALIZED VIEW
-    * SELECT list IS the natural multi-expression spelling — each
-    * derived measure is `sum(<expr>) AS mv_sum_<name>` (the alias
-    * suffix becomes the stored measure name), plain columns keep
-    * `sum(x) AS mv_sum_x`, and they mix freely in one rollup. Until
-    * now the round-17 headline feature (several derived measures
-    * maintained by ONE fold) was library-API-only; a SQL-only user
-    * could not reach it. Same integer-math lifecycle as
-    * [[aggMvServeMultiExpr]] (create-at-half via DDL + append + CoW
-    * UPDATE + REFRESH DDL + serve), different moduli so the two keys
-    * cannot mask each other. The serve pins prove all three measures
-    * answer from the MV scan with the source untouched. */
-  val aggMvServeMultiExprDdl: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mdsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_mdmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 9).cast("long").as("disc"))
-    o.createOrReplaceTempView("graft_md_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mdsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |disc BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mdsrc
-         |SELECT * FROM graft_md_src WHERE o_orderkey <= $half""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_mdmv"
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_mdmv AS
-         |SELECT o_custkey,
-         |sum(cents * (100 - disc)) AS mv_sum_rev,
-         |sum(cents % 40) AS mv_sum_hc,
-         |sum(cents) AS mv_sum_cents,
-         |count(*) AS mv_n
-         |FROM $cat.main.orders_mdsrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mdsrc
-         |SELECT * FROM graft_md_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_mdsrc SET cents = cents + 3
-         |WHERE o_orderkey % 17 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_mdmv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents * (100 - disc)) AS rev,
-         |sum(cents % 40) AS hc, sum(cents) AS sc, count(*) AS n
-         |FROM $cat.main.orders_mdsrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "DDL multi-expression serve did not fire: the plan does not " +
-          "read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** JOIN-MV EXPRESSION measures via pure SQL DDL (round 19): the
-    * CREATE MATERIALIZED VIEW spelling of [[aggMvServeJoinExpr]] —
-    * `SELECT d.seg, sum(f.cents * (100 - f.disc)) AS mv_sum,
-    * count(*) AS mv_n FROM fact f JOIN dim d ON … GROUP BY d.seg`.
-    * The round-19 join-MV expression surface was CALL/library-only;
-    * the DDL parser now classifies expression measures in the join
-    * and star forms too, stripping the fact qualifier from every
-    * attribute inside the expression (the recorded text re-derives
-    * against the bare fact frame) and refusing any dim-qualified or
-    * unqualified reference at parse — the same fact-columns-only
-    * contract createJoinMv enforces at create, caught one layer
-    * earlier with the shape message. Different moduli from the CALL
-    * twin so the two keys cannot mask each other. Inline pins: serve
-    * reads the MV with both scans and the join gone; a dim-qualified
-    * expression refuses at create; a different expression bails at
-    * serve. Oracle: DuckDB recomputes the join over the final state
-    * (hash-matched). */
-  val aggMvServeJoinExprDdl: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_xdsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_xddim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_xdmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 11).cast("long").as("disc"))
-    o.createOrReplaceTempView("graft_xd_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 4 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_xd_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_xddim (c_custkey BIGINT, seg STRING)")
-    spark.sql(
-      s"INSERT INTO $cat.main.cust_xddim SELECT * FROM graft_xd_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_xdsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |disc BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xdsrc
-         |SELECT * FROM graft_xd_src WHERE o_orderkey <= $half""".stripMargin)
-    // a dim-qualified column inside the expression refuses at parse —
-    // its values would change with dim churn the fact fold never sees
-    val bad = scala.util.Try(spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_xdbad AS
-         |SELECT d.seg, sum(f.cents * length(d.seg)) AS mv_sum,
-         |count(*) AS mv_n
-         |FROM $cat.main.orders_xdsrc f JOIN $cat.main.cust_xddim d
-         |ON f.o_custkey = d.c_custkey
-         |GROUP BY d.seg""".stripMargin))
-    require(bad.isFailure,
-      "a dim-qualified expression measure must refuse at create")
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_xdmv AS
-         |SELECT d.seg, sum(f.cents * (100 - f.disc)) AS mv_sum,
-         |count(*) AS mv_n
-         |FROM $cat.main.orders_xdsrc f JOIN $cat.main.cust_xddim d
-         |ON f.o_custkey = d.c_custkey
-         |GROUP BY d.seg""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xdsrc
-         |SELECT * FROM graft_xd_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_xdsrc SET cents = cents + 5
-         |WHERE o_orderkey % 23 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_xdmv")
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents * (100 - disc)) AS rev, count(*) AS n
-         |FROM $cat.main.orders_xdsrc JOIN $cat.main.cust_xddim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val other = spark.sql(
-      s"""SELECT seg, sum(cents * (98 - disc)) AS rev
-         |FROM $cat.main.orders_xdsrc JOIN $cat.main.cust_xddim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_xdmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // serve planning and the bail probe are independent plannings —
-      // overlap them ([[parProbes]]; both verbatim)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => require(
-          !MvRewrite.readsPath(
-            rule(other.queryExecution.optimizedPlan), mvPath),
-          "a DIFFERENT expression (98 - disc) must bail to the source")
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "DDL-declared expression-measure join serve did not fire")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** LEFT 2-dim STAR MV (round 17, lifting the r16 inner-only
-    * multi-dim guard): `fact LEFT JOIN d1 LEFT JOIN d2 GROUP BY
-    * d1.a, d2.b` — "revenue by segment × nation INCLUDING unmatched"
-    * — serves from a left star rollup whose NULL buckets are
-    * per-dim-combination first-class groups: (seg, NULL), (NULL,
-    * nname) and (NULL, NULL) all live in the hash. Customers divisible
-    * by 3 are absent from d1 and order keys ≡ 25..29 (mod 30) match no
-    * nation, so both partial buckets and the double bucket are
-    * populated at any SF. Append + CoW UPDATE fold through the left
-    * chain enrichment; inline pins: the served plan reads the MV with
-    * no join, and the INNER spelling of the same star never serves
-    * from it (cross-type bail). On 100 TB this replaces a two-join
-    * scan with an O(groups) read. */
-  val aggMvServeLeftStar: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_l2src")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_l2dim")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.nat_l2dim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_l2mv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        (col("o_orderkey") % 30).as("nk"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_l2_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_l2_d1")
-    Tables
-      .nation(spark, dir)
-      .select(col("n_nationkey"), col("n_name").as("nname"))
-      .createOrReplaceTempView("graft_l2_d2")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_l2dim (c_custkey BIGINT, seg STRING)")
-    spark.sql(s"INSERT INTO $cat.main.cust_l2dim SELECT * FROM graft_l2_d1")
-    spark.sql(
-      s"CREATE TABLE $cat.main.nat_l2dim (n_nationkey BIGINT, nname STRING)")
-    spark.sql(s"INSERT INTO $cat.main.nat_l2dim SELECT * FROM graft_l2_d2")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_l2src
-         |(o_orderkey BIGINT, o_custkey BIGINT, nk BIGINT,
-         |cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_l2src
-         |SELECT * FROM graft_l2_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_l2src',
-         |dim => 'main.cust_l2dim,main.nat_l2dim',
-         |fk => 'o_custkey,nk', pk => 'c_custkey,n_nationkey',
-         |mv => 'main.orders_l2mv', key => 'seg,nname', agg => 'cents',
-         |join_type => 'left')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_l2src
-         |SELECT * FROM graft_l2_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_l2src SET cents = cents + 8
-         |WHERE o_orderkey % 21 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_l2mv")
-    val brute = spark.sql(
-      s"""SELECT seg, nname, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_l2src
-         |LEFT JOIN $cat.main.cust_l2dim ON o_custkey = c_custkey
-         |LEFT JOIN $cat.main.nat_l2dim ON nk = n_nationkey
-         |GROUP BY seg, nname ORDER BY seg, nname""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_l2mv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // serve planning and the cross-type bail probe are independent
-      // plannings — overlap them ([[parProbes]]; both verbatim)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => {
-          // cross-type bail: the INNER spelling must never serve from
-          // the left rollup (its buckets hold rows the inner join drops)
-          val inner = spark.sql(
-            s"""SELECT seg, nname, sum(cents) AS s
-               |FROM $cat.main.orders_l2src
-               |JOIN $cat.main.cust_l2dim ON o_custkey = c_custkey
-               |JOIN $cat.main.nat_l2dim ON nk = n_nationkey
-               |GROUP BY seg, nname""".stripMargin)
-          require(
-            !MvRewrite.readsPath(
-              rule(inner.queryExecution.optimizedPlan), mvPath),
-            "the inner star must not serve from the left star MV")
-        }
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "left star serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      val out = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      require(
-        out.filter(col("seg").isNull && col("nname").isNotNull)
-          .limit(1).count() == 1L &&
-          out.filter(col("seg").isNotNull && col("nname").isNull)
-            .limit(1).count() == 1L &&
-          out.filter(col("seg").isNull && col("nname").isNull)
-            .count() == 1L,
-        "all three NULL-bucket shapes must be live in the served result")
-      out
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MIXED inner/LEFT star MV (round 18, closing r17 VERDICT
-    * "What's missing" #1): `fact INNER required-dim LEFT optional-dim
-    * GROUP BY d1.seg, d2.nname` — "revenue by segment × optional
-    * nation, keeping nation-less rows" — the everyday dashboard shape
-    * that had no MV form: a star MV recorded ONE join type for the
-    * whole chain. The MV now records a type PER EDGE
-    * (mv_join_types='inner,left'), folds each enrichment with its own
-    * type (NULL buckets only on the left edge), and the serve matcher
-    * claims each query edge against its recorded type. Customers
-    * divisible by 3 are absent from d1 (the inner edge drops their
-    * orders) and order keys ≡ 25..29 (mod 30) match no nation (live
-    * NULL buckets), at any SF. Inline pins: the served plan reads the
-    * MV with no join, (seg, NULL) buckets are live, and BOTH uniform
-    * spellings (all-inner, all-left) refuse to serve from the mixed
-    * rollup — the per-edge bail matrix. */
-  val aggMvServeMixedStar: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mssrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_msdim")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.nat_msdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_msmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        (col("o_orderkey") % 30).as("nk"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_ms_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_ms_d1")
-    Tables
-      .nation(spark, dir)
-      .select(col("n_nationkey"), col("n_name").as("nname"))
-      .createOrReplaceTempView("graft_ms_d2")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_msdim (c_custkey BIGINT, seg STRING)")
-    spark.sql(s"INSERT INTO $cat.main.cust_msdim SELECT * FROM graft_ms_d1")
-    spark.sql(
-      s"CREATE TABLE $cat.main.nat_msdim (n_nationkey BIGINT, nname STRING)")
-    spark.sql(s"INSERT INTO $cat.main.nat_msdim SELECT * FROM graft_ms_d2")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mssrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, nk BIGINT,
-         |cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mssrc
-         |SELECT * FROM graft_ms_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_mssrc',
-         |dim => 'main.cust_msdim,main.nat_msdim',
-         |fk => 'o_custkey,nk', pk => 'c_custkey,n_nationkey',
-         |mv => 'main.orders_msmv', key => 'seg,nname', agg => 'cents',
-         |join_type => 'inner,left')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mssrc
-         |SELECT * FROM graft_ms_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_mssrc SET cents = cents + 6
-         |WHERE o_orderkey % 23 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_msmv")
-    val brute = spark.sql(
-      s"""SELECT seg, nname, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_mssrc
-         |JOIN $cat.main.cust_msdim ON o_custkey = c_custkey
-         |LEFT JOIN $cat.main.nat_msdim ON nk = n_nationkey
-         |GROUP BY seg, nname ORDER BY seg, nname""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_msmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // per-edge bail matrix: neither uniform spelling may serve —
-      // two independent planning probes, run concurrently with the
-      // serve planning itself ([[parProbes]]; probes and requires
-      // verbatim)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => {
-          val allInner = spark.sql(
-            s"""SELECT seg, nname, sum(cents) AS s
-               |FROM $cat.main.orders_mssrc
-               |JOIN $cat.main.cust_msdim ON o_custkey = c_custkey
-               |JOIN $cat.main.nat_msdim ON nk = n_nationkey
-               |GROUP BY seg, nname""".stripMargin)
-          require(
-            !MvRewrite.readsPath(
-              rule(allInner.queryExecution.optimizedPlan), mvPath),
-            "the all-inner star must not serve from the mixed rollup")
-        },
-        () => {
-          val allLeft = spark.sql(
-            s"""SELECT seg, nname, sum(cents) AS s
-               |FROM $cat.main.orders_mssrc
-               |LEFT JOIN $cat.main.cust_msdim ON o_custkey = c_custkey
-               |LEFT JOIN $cat.main.nat_msdim ON nk = n_nationkey
-               |GROUP BY seg, nname""".stripMargin)
-          require(
-            !MvRewrite.readsPath(
-              rule(allLeft.queryExecution.optimizedPlan), mvPath),
-            "the all-left star must not serve from the mixed rollup")
-        }
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "mixed star serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      val out = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      require(
-        out.filter(col("seg").isNotNull && col("nname").isNull)
-          .limit(1).count() == 1L,
-        "the left edge's (seg, NULL) buckets must be live")
-      require(
-        out.filter(col("seg").isNull).limit(1).count() == 0L,
-        "the inner edge admits no NULL segment bucket")
-      out
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** DATE-RANGE dashboard probe served from the daily MV (round 15,
-    * closing the round-14 unconditional derived-key filter bail): the
-    * single most common dashboard query — `... WHERE to_date(ts) >= X
-    * GROUP BY to_date(ts)` — TRANSPLANTS its predicate onto the MV's
-    * key column (the filter's only source reference sits inside the
-    * key expression, so probing the stored key is exact) instead of
-    * falling back to a full source scan. The served plan is a Filter
-    * + Project over the O(days) MV — still NO aggregate node — and
-    * the transplanted range prunes MV files through the ordinary
-    * stats pushdown. The cutoff is computed from the data (min day +
-    * 2) and spelled as a literal in both the query and the oracle's
-    * subquery form. */
-  val aggMvServeFiltered: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_fsvsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_fsvmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_fsv_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    val cut = e
-      .selectExpr("date_add(cast(min(ts) as date), 2)")
-      .collect()(0).getDate(0).toString
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_fsvsrc
-         |(event_id BIGINT, ts TIMESTAMP, v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_fsvsrc
-         |SELECT * FROM graft_fsv_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_fsvmv AS
-         |SELECT to_date(ts) AS day, sum(v) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.events_fsvsrc GROUP BY to_date(ts)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_fsvsrc
-         |SELECT * FROM graft_fsv_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_fsvsrc SET v = v + 4
-         |WHERE event_id % 6 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_fsvmv")
-    val brute = spark.sql(
-      s"""SELECT to_date(ts) AS day, sum(v) AS sum_v, count(*) AS n
-         |FROM $cat.main.events_fsvsrc
-         |WHERE to_date(ts) >= DATE'$cut'
-         |GROUP BY to_date(ts) ORDER BY day""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_fsvmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "filtered daily serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — the rollup is at day grain")
-      require(
-        rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Filter]),
-        "the date-range predicate must TRANSPLANT onto the MV scan, " +
-          "not disappear")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** avg SERVED from a declared stats MV (round 15): the DDL's
-    * trailing `count(cents) AS mv_nn` IS the registrant's declaration
-    * that the measure is integral-valued — its partial sums
-    * reassociate exactly below 2^53, so `avg(cents)` rewrites to
-    * mv_sum / mv_nn (the NON-NULL count; count(*) is the wrong
-    * denominator under NULLs) with no aggregate node at the key
-    * grain. An undeclared stats MV keeps the round-14 bail: avg over
-    * genuinely fractional doubles is order-sensitive and the rewrite
-    * fires only where the answer is provably exact (CatalogSpec pins
-    * the bail). The oracle recomputes avg + sum from source rows
-    * through the append + CoW DELETE the stats fold inverted. */
-  val aggMvServeAvg: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_avsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_avmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_av_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_avsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_avsrc
-         |SELECT * FROM graft_av_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_avmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum,
-         |sum(cents*cents) AS mv_sumsq, count(*) AS mv_n,
-         |count(cents) AS mv_nn
-         |FROM $cat.main.orders_avsrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_avsrc
-         |SELECT * FROM graft_av_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(s"DELETE FROM $cat.main.orders_avsrc WHERE o_orderkey % 17 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_avmv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, avg(cents) AS avg_cents, sum(cents) AS sum_cents
-         |FROM $cat.main.orders_avsrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_avmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "declared-avg serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — avg is mv_sum / mv_nn at " +
-          "key grain")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** KEY-SUBSET grain served from a COMPOSITE-key MV (round 15): the
-    * MV stores `GROUP BY o_custkey, status` partials; the query asks
-    * `GROUP BY o_custkey` only — a projection of the stored grain, so
-    * its groups are unions of whole MV groups and the re-aggregation
-    * (sum of sums, count as sum of counts) is exact. One
-    * (customer × status)-grain rollup thus answers every dashboard
-    * grain at or above it — per-customer, per-status, and global —
-    * without maintaining an MV per grain; at 100 TB that is one
-    * refresh fold instead of four. Inline pins: the plan reads the MV
-    * and never the source scan. Oracle: the per-customer recompute of
-    * the final source state (append + CoW UPDATE folded). */
-  val aggMvServeSubset: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_cssrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_csmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        col("o_orderstatus").as("status"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_cs_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_cssrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, status STRING,
-         |cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_cssrc
-         |SELECT * FROM graft_cs_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_csmv AS
-         |SELECT o_custkey, status, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_cssrc
-         |GROUP BY o_custkey, status""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_cssrc
-         |SELECT * FROM graft_cs_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_cssrc SET cents = cents + 7
-         |WHERE o_orderkey % 19 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_csmv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents) AS sum_cents, count(*) AS n
-         |FROM $cat.main.orders_cssrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_csmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "key-subset serve did not fire: the plan does not read the " +
-          "composite MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MULTI-MEASURE MV serve (round 15): ONE rollup (one refresh fold)
-    * maintains several measures — `sum(cents)` and `sum(clen)` here —
-    * and a query asking for both (plus count(*)) serves 1:1 from it
-    * with no aggregate node. Without multi-measure support a two-sum
-    * dashboard needs two MVs and two refresh folds over the same
-    * change feed; at 100 TB the fold IS the cost, so halving the MV
-    * count halves maintenance IO. Columns suffix per measure
-    * (mv_sum_cents, mv_sum_clen); mv_n is shared. Inline pins mirror
-    * the serve family; the oracle recomputes both sums per customer
-    * from the final source state (append + CoW UPDATE folded). */
-  val aggMvServeMulti: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_mmsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_mmmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 100).cast("long").as("clen"))
-    o.createOrReplaceTempView("graft_mm_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_mmsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |clen BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mmsrc
-         |SELECT * FROM graft_mm_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_mmmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum_cents,
-         |sum(clen) AS mv_sum_clen, count(*) AS mv_n
-         |FROM $cat.main.orders_mmsrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_mmsrc
-         |SELECT * FROM graft_mm_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_mmsrc SET cents = cents + 2
-         |WHERE o_orderkey % 23 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_mmmv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents) AS sum_cents, sum(clen) AS sum_clen,
-         |count(*) AS n
-         |FROM $cat.main.orders_mmsrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_mmmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "multi-measure serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — both sums are stored columns")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** EXPRESSION measures (round 16): the single most common real
-    * aggregate is not `sum(column)` but `sum(expression)` — the
-    * revenue shape `sum(price * (1 - discount))` of every TPC-H-style
-    * dashboard. A measure EXPRESSION declared at CREATE MATERIALIZED
-    * VIEW (`sum(cents * (100 - disc)) AS mv_sum`) is materialized as
-    * the fold column at create, re-derived verbatim over every
-    * refresh delta (the derived-KEY machinery applied to the measure
-    * side), and matched at serve by CANONICAL equality of catalyst
-    * trees — the recorded text is re-resolved against the query's own
-    * scan, so `sum((100 - disc) * cents)` (commuted) still serves and
-    * `sum(cents * (99 - disc))` provably bails. Integer math end to
-    * end, so the fold is exact under any re-association — the oracle
-    * recomputes the expression from SOURCE rows through the append +
-    * CoW UPDATE behind the MV's back. On a 100 TB fact this upgrades
-    * the whole serve ladder (identity/coarse/global/filtered) from
-    * stored columns to declared expressions at zero query-time cost:
-    * the served plan is the same O(keys) MV scan with no aggregate. */
-  val aggMvServeExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_xesrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_xemv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 7).cast("long").as("disc"))
-    o.createOrReplaceTempView("graft_xe_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_xesrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |disc BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xesrc
-         |SELECT * FROM graft_xe_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_xemv AS
-         |SELECT o_custkey, sum(cents * (100 - disc)) AS mv_sum,
-         |count(*) AS mv_n
-         |FROM $cat.main.orders_xesrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xesrc
-         |SELECT * FROM graft_xe_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_xesrc SET cents = cents + 3
-         |WHERE o_orderkey % 11 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_xemv")
-    val brute = spark.sql(
-      s"""SELECT o_custkey, sum(cents * (100 - disc)) AS rev,
-         |count(*) AS n
-         |FROM $cat.main.orders_xesrc
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_xemv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "expression-measure serve did not fire: the plan does not read " +
-          "the MV")
-      require(
-        !rewritten.exists(_.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.Aggregate]),
-        "served plan must carry NO aggregate — the rollup is at key grain")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      // a DIFFERENT expression must bail to the source plan — the
-      // match is canonical equality, never a near-miss
-      val other = rule(spark.sql(
-        s"""SELECT o_custkey, sum(cents * (99 - disc)) AS rev
-           |FROM $cat.main.orders_xesrc
-           |GROUP BY o_custkey""".stripMargin).queryExecution.optimizedPlan)
-      require(
-        !MvRewrite.readsPath(other, mvPath),
-        "a different measure expression must never serve")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** COUNT(DISTINCT) served from a kind='distinct' managed MV (round
-    * 15): the MV stores one Spark-native BITMAP per (key,
-    * 32768-value bucket) — an exact, mergeable set partial — so the
-    * most expensive dashboard aggregate at 100 TB (distinct counting
-    * forces an expand + re-shuffle of every (group, value) pair when
-    * computed from the source) becomes a scan of the rollup's stored
-    * per-bucket cardinalities. The lifecycle exercises every
-    * maintenance branch: create at half the data (DDL `count(DISTINCT
-    * item) AS mv_dc`), append the rest (the bitmap-OR insert fold),
-    * DELETE a value band (distinct partials are NOT invertible — the
-    * delete-touched groups recompute, scoped by manifest stats), one
-    * REFRESH, then the serve: `SELECT grp, count(DISTINCT item),
-    * count(*) GROUP BY grp` rewrites to ONE aggregate over the MV
-    * (per-key buckets are disjoint, so stored cardinalities SUM) with
-    * the source scan gone from the plan. `item` straddles zero so
-    * negative bit positions are exercised at the graded scale. The
-    * oracle recomputes from source rows through the same
-    * append + DELETE. */
-  val aggMvServeDistinct: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_dcsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_dcmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        (col("o_custkey") % 50).cast("long").as("grp"),
-        (col("o_orderkey") % 97 - 48).cast("long").as("item"))
-    o.createOrReplaceTempView("graft_dc_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_dcsrc
-         |(o_orderkey BIGINT, grp BIGINT, item BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_dcsrc
-         |SELECT * FROM graft_dc_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_dcmv AS
-         |SELECT grp, count(DISTINCT item) AS mv_dc, count(*) AS mv_n
-         |FROM $cat.main.orders_dcsrc GROUP BY grp""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_dcsrc
-         |SELECT * FROM graft_dc_src WHERE o_orderkey > $half""".stripMargin)
-    // a DELETE that removes a whole item band: some groups lose
-    // values outright, others keep them through surviving duplicates
-    // — exactly the case the non-invertible recompute branch exists for
-    spark.sql(
-      s"DELETE FROM $cat.main.orders_dcsrc WHERE item BETWEEN -5 AND -1")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_dcmv")
-    val brute = spark.sql(
-      s"""SELECT grp, count(DISTINCT item) AS d_items, count(*) AS n
-         |FROM $cat.main.orders_dcsrc
-         |GROUP BY grp ORDER BY grp""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_dcmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "distinct serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MONTHLY COUNT(DISTINCT) served from a DAILY distinct MV (round
-    * 15) — the query no count rollup can answer: a user active on
-    * many June days is ONE June user, so per-day distinct counts do
-    * not sum; the MV's bitmap partials OR across the days of each
-    * month (an inner aggregate at (month, bucket) grain unions the
-    * bitmaps, an outer sums the per-bucket cardinalities), which is
-    * exact because a bitmap IS the set. This is the MAU-from-DAU
-    * dashboard at 100 TB: the monthly distinct serves from an
-    * O(days × buckets) rollup with the source scan gone. The daily
-    * key is DERIVED (`to_date(ts)`) and refreshed mid-lifecycle, so
-    * the derived-key fold and the freshness gate both sit in the
-    * graded path. */
-  val aggMvServeDistinctMonth: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_dcmsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_dcmmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        (col("event_id") % 211).cast("long").as("uid"))
-    e.createOrReplaceTempView("graft_dcm_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_dcmsrc
-         |(event_id BIGINT, ts TIMESTAMP, uid BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dcmsrc
-         |SELECT * FROM graft_dcm_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_dcmmv AS
-         |SELECT to_date(ts) AS day, count(DISTINCT uid) AS mv_dc,
-         |count(*) AS mv_n
-         |FROM $cat.main.events_dcmsrc GROUP BY to_date(ts)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dcmsrc
-         |SELECT * FROM graft_dcm_src WHERE event_id > $half""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_dcmmv")
-    val brute = spark.sql(
-      s"""SELECT trunc(to_date(ts), 'month') AS mon,
-         |count(DISTINCT uid) AS mau, count(*) AS n
-         |FROM $cat.main.events_dcmsrc
-         |GROUP BY trunc(to_date(ts), 'month') ORDER BY mon""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_dcmmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "monthly distinct serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** STAR-SCHEMA aggregate served from a JOIN MV (round 15): `SELECT
-    * seg, sum(cents), count(*) FROM orders ⋈ customer GROUP BY seg` —
-    * the canonical fact-⋈-dim dashboard — serves from a
-    * `create_join_mv` rollup with BOTH scans gone from the plan. The
-    * MV pins the dim at materialize time and every refresh folds the
-    * FACT change feed enriched against that pinned dim, so the rollup
-    * is always exactly `aggregate(fact@watermark ⋈ dim@pinned)`; the
-    * serve rule verifies dim path, fk=pk pair, pinned dim version AND
-    * the fact watermark before firing, and a fact-only query can
-    * never serve from it (the inner join dropped unmatched fact
-    * rows). The dim here is a FILTERED customer subset, so exclusion
-    * semantics are live in the hash: orders of the dropped customers
-    * must be absent from every group. At 100 TB this turns the
-    * per-query fact-dim shuffle join + aggregate into an O(segments)
-    * MV scan. The oracle recomputes the join from source rows through
-    * the same append + CoW UPDATE the refresh folded. */
-  val aggMvServeJoin: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_jsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_jdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_jmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_j_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_j_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.cust_jdim (c_custkey BIGINT, seg STRING)""")
-    spark.sql(
-      s"INSERT INTO $cat.main.cust_jdim SELECT * FROM graft_j_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_jsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_jsrc
-         |SELECT * FROM graft_j_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_jsrc',
-         |dim => 'main.cust_jdim', fk => 'o_custkey', pk => 'c_custkey',
-         |mv => 'main.orders_jmv', key => 'seg', agg => 'cents')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_jsrc
-         |SELECT * FROM graft_j_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_jsrc SET cents = cents + 4
-         |WHERE o_orderkey % 31 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_jmv")
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_jsrc JOIN $cat.main.cust_jdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_jmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "join serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** Join MV with an EXPRESSION measure (round 19, closing the r18
-    * verdict #5 gap): `sum(cents * (100 - disc)) by market segment` —
-    * the single most common star-dashboard measure — served from a
-    * join rollup that stores the DERIVED measure's partials. The
-    * expression is declared fact-columns-only at create (a dim-attr
-    * reference refuses: its values change with dim churn the fact
-    * fold cannot see) and re-derives over every refresh delta BEFORE
-    * the dim enrichment; the serve rule matches the query's aggregate
-    * child against the recorded text by semantic equality of the
-    * resolved catalyst trees, with every reference verified
-    * fact-side. Inline pins assert the serve fires with both scans
-    * and the join gone AND that a DIFFERENT expression (99 instead of
-    * 100) bails to the source — the §5.6 matrix's closest adjacent
-    * spelling. The oracle recomputes the expression join-side through
-    * the same append + CoW UPDATE the refresh folded. */
-  val aggMvServeJoinExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_xjsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_xjdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_xjmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"),
-        (col("o_orderkey") % 7).cast("long").as("disc"))
-    o.createOrReplaceTempView("graft_xj_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_xj_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.cust_xjdim (c_custkey BIGINT, seg STRING)""")
-    spark.sql(
-      s"INSERT INTO $cat.main.cust_xjdim SELECT * FROM graft_xj_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_xjsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT,
-         |disc BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xjsrc
-         |SELECT * FROM graft_xj_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_xjsrc',
-         |dim => 'main.cust_xjdim', fk => 'o_custkey', pk => 'c_custkey',
-         |mv => 'main.orders_xjmv', key => 'seg', agg => 'rev',
-         |agg_expr => 'cents * (100 - disc)')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xjsrc
-         |SELECT * FROM graft_xj_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_xjsrc SET cents = cents + 4
-         |WHERE o_orderkey % 31 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_xjmv")
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents * (100 - disc)) AS rev, count(*) AS n
-         |FROM $cat.main.orders_xjsrc JOIN $cat.main.cust_xjdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val other = spark.sql(
-      s"""SELECT seg, sum(cents * (99 - disc)) AS rev
-         |FROM $cat.main.orders_xjsrc JOIN $cat.main.cust_xjdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_xjmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // serve planning and the bail probe are independent plannings —
-      // overlap them ([[parProbes]]; both verbatim)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => require(
-          !MvRewrite.readsPath(
-            rule(other.queryExecution.optimizedPlan), mvPath),
-          "a DIFFERENT expression (99 - disc) must bail to the source")
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "expression-measure join serve did not fire: the plan does not " +
-          "read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** LEFT-OUTER join MV (round 16): the rollup of `fact LEFT JOIN dim`
-    * keeps EVERY fact row — unmatched orders (customers absent from
-    * the dim) live in the NULL dim-attr bucket as a first-class,
-    * servable group, exactly as the LEFT JOIN query itself groups
-    * them. Because each fact row lands in exactly ONE group (pk
-    * unique at the pinned dim), the same MV also serves FACT-ONLY
-    * aggregates by re-aggregating over all groups — the shape the
-    * inner-join MV must refuse (it dropped unmatched rows from every
-    * partial; round 15 pinned that refusal, this key closes the gap
-    * the refusal pointed at). Declared through the DDL's LEFT JOIN
-    * form; the serve match is direction-sensitive (the preserved side
-    * is the fact, so only fact-LEFT-JOIN-dim matches) and join-TYPE
-    * exact (an inner query never serves from a left MV or vice
-    * versa — the NULL-bucket semantics differ). Inline pins assert
-    * the grouped serve reads the MV with both scans and the join
-    * gone, AND that the fact-only global serves from the same MV with
-    * the value equal to the direct fact aggregate. The oracle
-    * recomputes the LEFT join from source rows through the append +
-    * CoW UPDATE the refresh folded — the NULL bucket is in the
-    * hash. */
-  val aggMvServeLeft: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_ljsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_ljdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_ljmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_lj_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_lj_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.cust_ljdim (c_custkey BIGINT, seg STRING)""")
-    spark.sql(
-      s"INSERT INTO $cat.main.cust_ljdim SELECT * FROM graft_lj_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_ljsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_ljsrc
-         |SELECT * FROM graft_lj_src WHERE o_orderkey <= $half""".stripMargin)
-    // the DDL's LEFT JOIN form (fact on the LEFT, dim keys grouped)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_ljmv AS
-         |SELECT d.seg, sum(f.cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_ljsrc f LEFT JOIN $cat.main.cust_ljdim d
-         |ON f.o_custkey = d.c_custkey GROUP BY d.seg""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_ljsrc
-         |SELECT * FROM graft_lj_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_ljsrc SET cents = cents + 6
-         |WHERE o_orderkey % 17 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_ljmv")
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_ljsrc LEFT JOIN $cat.main.cust_ljdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg NULLS FIRST""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_ljmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "left-join serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      // the SAME MV answers the fact-only global — every fact row is
-      // in exactly one group, NULL bucket included
-      val foBrute = spark.sql(
-        s"SELECT sum(cents) AS s, count(*) AS n FROM $cat.main.orders_ljsrc")
-      val foServed = rule(foBrute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(foServed, mvPath),
-        "fact-only global must serve from the left-join MV")
-      val got = org.apache.spark.sql.GraftPlanBridge
-        .ofRows(spark, foServed).collect()(0)
-      val want = foBrute.collect()(0)
-      require(
-        got.getLong(0) == want.getLong(0) && got.getLong(1) == want.getLong(1),
-        s"fact-only serve must equal the direct fact aggregate " +
-          s"($got vs $want)")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MULTI-DIM STAR MV (round 16): one MV materializes the rollup of
-    * `fact ⋈ part ⋈ supplier` grouped by attributes of BOTH dims —
-    * "revenue by brand and supplier nation", the two-dimension
-    * dashboard cross that round 15's single-dim join MV had to
-    * refuse. dim/fk/pk are aligned lists on the CALL; every dim is
-    * version-pinned at create; the refresh enriches the fact change
-    * feed through the whole chain (each delta row gains all its dim
-    * attributes, then it is just a keyed row). The serve matcher is
-    * join-TREE-agnostic: it aligns the query's leaf set and equi-edge
-    * set against the recorded lists, so optimizer join reordering
-    * cannot break the match. At 100 TB the served dashboard reads an
-    * O(|brands|×|nations|) MV scan instead of joining the fact twice.
-    * Inline pins: the 2-join query serves with both dims' scans and
-    * both joins GONE; a 1-join query does NOT serve from the 2-dim MV
-    * (partial-star semantics differ — part exclusions are folded in).
-    * Oracle: DuckDB recomputes the star from source rows through the
-    * append + CoW UPDATE the refresh folded. */
-  val aggMvServeStar: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.li_ssrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.part_sdim")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.supp_sdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.li_smv")
-    val li = Tables
-      .lineitem(spark, dir)
-      .select(
-        col("l_orderkey"),
-        col("l_partkey"),
-        col("l_suppkey"),
-        round(col("l_extendedprice") * 100).cast("long").as("cents"))
-    li.createOrReplaceTempView("graft_star_src")
-    Tables
-      .part(spark, dir)
-      .filter(col("p_partkey") % 5 =!= 0)
-      .select(col("p_partkey"), col("p_brand"))
-      .createOrReplaceTempView("graft_star_pdim")
-    Tables
-      .supplier(spark, dir)
-      .select(col("s_suppkey"), col("s_nationkey"))
-      .createOrReplaceTempView("graft_star_sdim")
-    val maxK = Tables.maxLong(spark, dir, "lineitem", "l_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.part_sdim (p_partkey BIGINT, p_brand STRING)")
-    spark.sql(s"INSERT INTO $cat.main.part_sdim SELECT * FROM graft_star_pdim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.supp_sdim
-         |(s_suppkey BIGINT, s_nationkey BIGINT)""".stripMargin)
-    spark.sql(s"INSERT INTO $cat.main.supp_sdim SELECT * FROM graft_star_sdim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.li_ssrc (l_orderkey BIGINT,
-         |l_partkey BIGINT, l_suppkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.li_ssrc
-         |SELECT * FROM graft_star_src WHERE l_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.li_ssrc',
-         |dim => 'main.part_sdim,main.supp_sdim',
-         |fk => 'l_partkey,l_suppkey', pk => 'p_partkey,s_suppkey',
-         |mv => 'main.li_smv', key => 'p_brand,s_nationkey',
-         |agg => 'cents')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.li_ssrc
-         |SELECT * FROM graft_star_src WHERE l_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.li_ssrc SET cents = cents + 3
-         |WHERE l_orderkey % 23 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.li_smv")
-    val brute = spark.sql(
-      s"""SELECT p_brand, s_nationkey, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.li_ssrc
-         |JOIN $cat.main.part_sdim ON l_partkey = p_partkey
-         |JOIN $cat.main.supp_sdim ON l_suppkey = s_suppkey
-         |GROUP BY p_brand, s_nationkey
-         |ORDER BY p_brand, s_nationkey""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/li_smv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // serve planning and the partial-star bail probe are independent
-      // plannings — overlap them ([[parProbes]]; both verbatim)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => {
-          // a PARTIAL star (fact ⋈ part only) must NOT serve from the
-          // 2-dim MV: its groups fold supplier exclusions and its rows
-          // joined the second dim — the leaf-count gate refuses
-          val partial = spark.sql(
-            s"""SELECT p_brand, sum(cents) AS s FROM $cat.main.li_ssrc
-               |JOIN $cat.main.part_sdim ON l_partkey = p_partkey
-               |GROUP BY p_brand""".stripMargin)
-          require(
-            !MvRewrite.readsPath(
-              rule(partial.queryExecution.optimizedPlan), mvPath),
-            "a 1-join query must not serve from the 2-dim star MV")
-        }
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "star serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NONE of the fact and dim scans")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** SNOWFLAKE MV (round 16): the chain `orders ⋈ customer ⋈ nation`
-    * — the second join's fk (c_nationkey) lives on the FIRST DIM, not
-    * the fact — rolls up to "revenue by nation" in one MV. Same
-    * aligned-list declaration as the star: fk ownership is resolved
-    * by name at create (fact first, then earlier dims), so a chain
-    * and a star are the same mechanism; the refresh enrichment joins
-    * left-to-right and each dim carries the later fks it owns
-    * (customer contributes c_nationkey to the chain even though no
-    * key member lives on it). Serve-side the edge (c_nationkey =
-    * n_nationkey) has its fk attribute on the customer LEAF — the
-    * tree-agnostic matcher accepts it where a fact-only fk rule
-    * would refuse. Oracle: DuckDB recomputes the chain from source
-    * rows through the append + CoW UPDATE the refresh folded. */
-  val aggMvServeSnowflake: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_sfsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_sfdim")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.nat_sfdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_sfmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_sf_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 4 =!= 0)
-      .select(col("c_custkey"), col("c_nationkey"))
-      .createOrReplaceTempView("graft_sf_cdim")
-    Tables
-      .nation(spark, dir)
-      .select(col("n_nationkey"), col("n_name"))
-      .createOrReplaceTempView("graft_sf_ndim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.cust_sfdim
-         |(c_custkey BIGINT, c_nationkey BIGINT)""".stripMargin)
-    spark.sql(s"INSERT INTO $cat.main.cust_sfdim SELECT * FROM graft_sf_cdim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.nat_sfdim
-         |(n_nationkey BIGINT, n_name STRING)""".stripMargin)
-    spark.sql(s"INSERT INTO $cat.main.nat_sfdim SELECT * FROM graft_sf_ndim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_sfsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_sfsrc
-         |SELECT * FROM graft_sf_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_sfsrc',
-         |dim => 'main.cust_sfdim,main.nat_sfdim',
-         |fk => 'o_custkey,c_nationkey', pk => 'c_custkey,n_nationkey',
-         |mv => 'main.orders_sfmv', key => 'n_name',
-         |agg => 'cents')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_sfsrc
-         |SELECT * FROM graft_sf_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_sfsrc SET cents = cents + 5
-         |WHERE o_orderkey % 29 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_sfmv")
-    val brute = spark.sql(
-      s"""SELECT n_name, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_sfsrc
-         |JOIN $cat.main.cust_sfdim ON o_custkey = c_custkey
-         |JOIN $cat.main.nat_sfdim ON c_nationkey = n_nationkey
-         |GROUP BY n_name ORDER BY n_name""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_sfmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "snowflake serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NONE of the fact and dim scans")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** APPROXIMATE-DISTINCT MV (round 16, kind='hll'): per-day
-    * DataSketches HLL sketches maintained incrementally, served for
-    * `approx_count_distinct` at the day grain and ABOVE — the
-    * approximate MAU-from-DAU. Where the exact bitmap kind carries
-    * O(distinct values) state per group, the sketch is ~KB at ANY
-    * cardinality — the right trade for user-id-scale measures at
-    * 100 TB. Sketches union losslessly (fold, coarse grains, global)
-    * and never subtract: the CoW DELETE here recomputes its touched
-    * day groups at the watermark. The estimator is declared at
-    * CREATE (DataSketches HLL, lgConfigK 12, ~1.6 % RSE — the query's
-    * own HLL++ would estimate differently; both approximate the same
-    * cardinality), so the key is graded rows-only BY DESIGN, with the
-    * exactness evidence inline: every served estimate must sit within
-    * 5 % of the true count(DISTINCT) recomputed from the source, and
-    * count(*) must be EXACT (mv_n re-aggregates precisely). */
-  val aggMvServeHll: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_hllsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_hllmv")
-    val ev = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        (col("event_id") * 2654435761L % 1000003L).as("uid"))
-    ev.createOrReplaceTempView("graft_hll_src")
-    val maxK = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_hllsrc
-         |(event_id BIGINT, ts TIMESTAMP, uid BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_hllsrc
-         |SELECT * FROM graft_hll_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(source => 'main.events_hllsrc',
-         |mv => 'main.events_hllmv', key => 'day', agg => 'uid',
-         |kind => 'hll', key_expr => 'to_date(ts)')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_hllsrc
-         |SELECT * FROM graft_hll_src WHERE event_id > $half""".stripMargin)
-    // a CoW DELETE forces the sketch recompute path (HLL can't subtract)
-    spark.sql(
-      s"DELETE FROM $cat.main.events_hllsrc WHERE event_id % 97 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_hllmv")
-    val brute = spark.sql(
-      s"""SELECT trunc(to_date(ts), 'month') AS mon,
-         |approx_count_distinct(uid) AS au, count(*) AS n
-         |FROM $cat.main.events_hllsrc
-         |GROUP BY 1 ORDER BY 1""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_hllmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "hll serve did not fire: the monthly estimate must union the " +
-          "daily sketches")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      val served = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      // inline exactness evidence: the served estimate within 5 % of
-      // the TRUE monthly distinct; the row count EXACT
-      val exact = spark.sql(
-        s"""SELECT trunc(to_date(ts), 'month') AS mon,
-           |count(DISTINCT uid) AS du, count(*) AS n
-           |FROM $cat.main.events_hllsrc GROUP BY 1""".stripMargin)
-        .collect().map(r => r.getDate(0).toString ->
-          (r.getLong(1), r.getLong(2))).toMap
-      served.collect().foreach { r =>
-        val (du, n) = exact(r.getDate(0).toString)
-        require(
-          r.getLong(2) == n,
-          s"count(*) must re-aggregate exactly (${r.getLong(2)} vs $n)")
-        require(
-          math.abs(r.getLong(1) - du).toDouble / math.max(du, 1L) < 0.05,
-          s"estimate ${r.getLong(1)} not within 5% of exact $du")
-      }
-      served
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** HLL MV over an EXPRESSION measure (round 18, lifting the r16/r17
-    * refusal — r17 VERDICT "What's missing" #4): `approx_count_
-    * distinct(<expr>)` — the "distinct normalized user ids" shape —
-    * now serves from a sketch built over the MATERIALIZED expression
-    * column at the declared lgConfigK. The expression re-derives over
-    * every refresh delta (insert fold) and over the watermark scope
-    * (delete recompute), exactly like the sum kinds' expression
-    * measures; the serve rule matches the aggregate child against the
-    * recorded text by semantic equality and applies the same RSE gate
-    * as the plain-column hll case. Declared lgK 14 here (~0.8 % RSE)
-    * also exercises the precision declaration through the expression
-    * path. Rows-only BY DESIGN (the estimator swap is the CREATE
-    * declaration); inline exactness evidence: every served estimate
-    * within 5 % of the true count(DISTINCT expr) recomputed from the
-    * source, count(*) exact. */
-  val aggMvServeHllExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_hxsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_hxmv")
-    val ev = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("ts"),
-        (col("event_id") * 2654435761L % 1000003L).as("uid"))
-    ev.createOrReplaceTempView("graft_hx_src")
-    val maxK = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_hxsrc
-         |(event_id BIGINT, ts TIMESTAMP, uid BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_hxsrc
-         |SELECT * FROM graft_hx_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(source => 'main.events_hxsrc',
-         |mv => 'main.events_hxmv', key => 'day', agg => 'nuid',
-         |kind => 'hll', key_expr => 'to_date(ts)',
-         |agg_expr => 'uid % 500009', hll_lgk => 14)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_hxsrc
-         |SELECT * FROM graft_hx_src WHERE event_id > $half""".stripMargin)
-    // a CoW DELETE forces the sketch recompute path, which must
-    // re-derive the expression over the watermark scope
-    spark.sql(
-      s"DELETE FROM $cat.main.events_hxsrc WHERE event_id % 89 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_hxmv")
-    val brute = spark.sql(
-      s"""SELECT trunc(to_date(ts), 'month') AS mon,
-         |approx_count_distinct(uid % 500009) AS au, count(*) AS n
-         |FROM $cat.main.events_hxsrc
-         |GROUP BY 1 ORDER BY 1""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_hxmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "hll expression serve did not fire: the monthly estimate must " +
-          "union the daily expression sketches")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      val served = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      val exact = spark.sql(
-        s"""SELECT trunc(to_date(ts), 'month') AS mon,
-           |count(DISTINCT uid % 500009) AS du, count(*) AS n
-           |FROM $cat.main.events_hxsrc GROUP BY 1""".stripMargin)
-        .collect().map(r => r.getDate(0).toString ->
-          (r.getLong(1), r.getLong(2))).toMap
-      served.collect().foreach { r =>
-        val (du, n) = exact(r.getDate(0).toString)
-        require(
-          r.getLong(2) == n,
-          s"count(*) must re-aggregate exactly (${r.getLong(2)} vs $n)")
-        require(
-          math.abs(r.getLong(1) - du).toDouble / math.max(du, 1L) < 0.05,
-          s"estimate ${r.getLong(1)} not within 5% of exact $du")
-      }
-      served
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** HLL EXPRESSION measures on JOIN MVs (round 19): "distinct
-    * normalized user ids BY MARKET SEGMENT" — the r18 hll-expr key
-    * proved the sketch-of-an-expression shape on single-table MVs,
-    * and r18 addendum #4 probe 3 documented that join MVs could not
-    * reach it (they had no expression surface at all). With the
-    * round-19 join-MV expression measures the two compose: the fold
-    * materializes `uid % 500009` against the FACT frame before the
-    * dim enrichment, sketches it per dim-attr group at the declared
-    * lgConfigK, and the serve matcher answers
-    * `approx_count_distinct(<expr>) BY seg` from the stored sketches
-    * by semantic equality of the resolved fact-side trees — both
-    * scans and the join gone. Lifecycle drives create-at-half,
-    * append, and a CoW DELETE (the recompute path must re-derive the
-    * expression over the watermark scope). §5.6 bail matrix inline,
-    * expected collected before arming: a DIFFERENT expression bails,
-    * a TIGHTER relativeSD than the stored sketch's RSE bails (we
-    * cannot deliver it), exact count(DISTINCT expr) never serves
-    * from a sketch, and the LEFT-join spelling of the query bails on
-    * the inner MV (NULL-bucket semantics differ). Approximate →
-    * no_oracle by design; exactness pinned inline (count(*) exact,
-    * estimate within 5% of the exact distinct per group). */
-  val aggMvServeJoinHllExpr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_jhxsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_jhxdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_jhxmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        (col("o_orderkey") * 2654435761L % 1000003L).as("uid"))
-    o.createOrReplaceTempView("graft_jhx_src")
-    Tables
-      .customer(spark, dir)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_jhx_dim")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_jhxdim (c_custkey BIGINT, seg STRING)")
-    spark.sql(
-      s"INSERT INTO $cat.main.cust_jhxdim SELECT * FROM graft_jhx_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_jhxsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, uid BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_jhxsrc
-         |SELECT * FROM graft_jhx_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_jhxsrc',
-         |dim => 'main.cust_jhxdim', fk => 'o_custkey', pk => 'c_custkey',
-         |mv => 'main.orders_jhxmv', key => 'seg', agg => 'nuid',
-         |kind => 'hll', agg_expr => 'uid % 500009',
-         |hll_lgk => 14)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_jhxsrc
-         |SELECT * FROM graft_jhx_src WHERE o_orderkey > $half""".stripMargin)
-    spark.sql(
-      s"DELETE FROM $cat.main.orders_jhxsrc WHERE o_orderkey % 89 = 0")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_jhxmv")
-    def q(agg: String, how: String = "JOIN") = spark.sql(
-      s"""SELECT seg, $agg, count(*) AS n
-         |FROM $cat.main.orders_jhxsrc $how $cat.main.cust_jhxdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val brute = q("approx_count_distinct(uid % 500009) AS au")
-    // ground truth BEFORE arming the conf (SURVEY §5.6)
-    val exact = spark.sql(
-      s"""SELECT seg, count(DISTINCT uid % 500009) AS du, count(*) AS n
-         |FROM $cat.main.orders_jhxsrc JOIN $cat.main.cust_jhxdim
-         |ON o_custkey = c_custkey GROUP BY seg""".stripMargin)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val mvPath = tmp("sql_warehouse") + "/main/orders_jhxmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      // §5.6 bail matrix — four independent planning probes, run
-      // concurrently with the serve planning itself (see [[parProbes]];
-      // each probe and its require are verbatim, only their
-      // serialization is removed)
-      var rewritten: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = null
-      parProbes(
-        () => { rewritten = rule(brute.queryExecution.optimizedPlan) },
-        () => require(
-          !MvRewrite.readsPath(
-            rule(q("approx_count_distinct(uid % 500011) AS au")
-              .queryExecution.optimizedPlan), mvPath),
-          "a DIFFERENT expression must bail to the source"),
-        () => require(
-          !MvRewrite.readsPath(
-            rule(q("approx_count_distinct(uid % 500009, 0.001) AS au")
-              .queryExecution.optimizedPlan), mvPath),
-          "a tighter relativeSD than the stored sketch's RSE must bail"),
-        () => require(
-          !MvRewrite.readsPath(
-            rule(q("count(DISTINCT uid % 500009) AS au")
-              .queryExecution.optimizedPlan), mvPath),
-          "exact count(DISTINCT expr) must never serve from a sketch"),
-        () => require(
-          !MvRewrite.readsPath(
-            rule(q("approx_count_distinct(uid % 500009) AS au", "LEFT JOIN")
-              .queryExecution.optimizedPlan), mvPath),
-          "the LEFT-join spelling must bail on the inner MV")
-      )
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "hll expression join serve did not fire: the per-segment " +
-          "estimate must read the stored expression sketches")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      val served = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-      served.collect().foreach { r =>
-        val (du, n) = exact(r.getString(0))
-        require(
-          r.getLong(2) == n,
-          s"count(*) must re-aggregate exactly (${r.getLong(2)} vs $n)")
-        require(
-          math.abs(r.getLong(1) - du).toDouble / math.max(du, 1L) < 0.05,
-          s"estimate ${r.getLong(1)} not within 5% of exact $du")
-      }
-      served
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** INCREMENTAL DIM REFRESH (round 16): dims are the tables that DO
-    * change (SCD updates, corrections, late rows), and until now any
-    * dim commit permanently stopped a join MV from serving current
-    * queries — "re-materialize" was the only remedy. `CALL system.
-    * refresh_mv_dim(mv, dim)` folds the dim's change feed in: only
-    * groups whose key members the changed pks can reach (old chain ∪
-    * new chain) are recomputed, from the fact AT THE MV'S OWN
-    * WATERMARK through the new chain, with the fact read FILE-SCOPED
-    * by back-propagating the touched keys to fact-side fk values —
-    * at 100 TB a segment rename reads the files holding that
-    * segment's customers' orders, not the table. The new pin rides
-    * the commit header (`mvdv=`) atomically with the recompute;
-    * props keep the CREATE pins so the serve rule overlays
-    * per-version ([[graft.sources.SnapshotLog.effectiveDimVersions]]).
-    * The lifecycle here drives dim churn a real warehouse sees —
-    * segment UPDATE (rows move between groups), pk DELETE (rows
-    * leave), pk INSERT (previously-unmatched facts join in) — then
-    * the CALL, then the served query; inline pins prove the drifted
-    * query did NOT serve before the CALL and DOES after, with both
-    * scans and the join gone. Oracle: DuckDB recomputes the join
-    * against the FINAL dim state. */
-  val sqlMvDimRefresh: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_drsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.cust_drdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_drmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_dr_src")
-    Tables
-      .customer(spark, dir)
-      .filter(col("c_custkey") % 3 =!= 0)
-      .select(col("c_custkey"), col("c_mktsegment").as("seg"))
-      .createOrReplaceTempView("graft_dr_dim")
-    Tables
-      .customer(spark, dir)
-      .select(col("c_custkey"))
-      .createOrReplaceTempView("graft_dr_dim_all")
-    spark.sql(
-      s"CREATE TABLE $cat.main.cust_drdim (c_custkey BIGINT, seg STRING)")
-    spark.sql(s"INSERT INTO $cat.main.cust_drdim SELECT * FROM graft_dr_dim")
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_drsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"INSERT INTO $cat.main.orders_drsrc SELECT * FROM graft_dr_src")
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.orders_drsrc',
-         |dim => 'main.cust_drdim', fk => 'o_custkey', pk => 'c_custkey',
-         |mv => 'main.orders_drmv', key => 'seg', agg => 'cents')""".stripMargin)
-    // fact churn first (the ordinary fold), then DIM churn: a segment
-    // rename, hard deletes, and late customers joining in
-    spark.sql(
-      s"""UPDATE $cat.main.orders_drsrc SET cents = cents + 9
-         |WHERE o_orderkey % 13 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_drmv")
-    spark.sql(
-      s"""UPDATE $cat.main.cust_drdim SET seg = 'PIVOT'
-         |WHERE c_custkey % 5 = 0""".stripMargin)
-    spark.sql(
-      s"DELETE FROM $cat.main.cust_drdim WHERE c_custkey % 7 = 0")
-    spark.sql(
-      s"""INSERT INTO $cat.main.cust_drdim
-         |SELECT c_custkey, 'FRESH' FROM graft_dr_dim_all
-         |WHERE c_custkey % 3 = 0 AND c_custkey % 2 = 0""".stripMargin)
-    val brute = spark.sql(
-      s"""SELECT seg, sum(cents) AS s, count(*) AS n
-         |FROM $cat.main.orders_drsrc JOIN $cat.main.cust_drdim
-         |ON o_custkey = c_custkey
-         |GROUP BY seg ORDER BY seg""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/orders_drmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      require(
-        !MvRewrite.readsPath(
-          rule(brute.queryExecution.optimizedPlan), mvPath),
-        "the drifted dim must stop the serve before refresh_mv_dim")
-      val pins = spark.sql(
-        s"""CALL $cat.system.refresh_mv_dim(mv => 'main.orders_drmv',
-           |dim => 'main.cust_drdim')""".stripMargin).collect()(0)
-      require(
-        pins.getInt(1) > pins.getInt(0),
-        "refresh_mv_dim must advance the dim pin")
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "after refresh_mv_dim the dashboard query must serve from the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** FOLD FINGERPRINT (round 16): every fold commit rides an
-    * order-independent content fingerprint (`mvfp=` — row count + XOR
-    * of per-row xxhash64); REFRESH verifies the current MV state
-    * against the last fold's rider BEFORE folding. Round 15 closed
-    * the serve half of the foreign-write hole (span truncation); this
-    * closes the refresh half — a REFRESH after a foreign INSERT INTO
-    * the managed MV previously folded the delta onto polluted state
-    * and RE-HEADERED it as clean, the one documented residual. The
-    * graded contract is the lifecycle truth table: a legitimate
-    * refresh folds; after a foreign INSERT the refresh REFUSES and
-    * names re-materialize; a re-materialized MV refreshes clean
-    * again. Data-preserving compaction keeps the fingerprint valid
-    * (datachange=false commits preserve rows — pinned in MvSpec). */
-  val sqlMvFingerprint: Q = (spark, dir) => {
-    import spark.implicits._
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_fpsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_fpmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_fp_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_fpsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_fpsrc
-         |SELECT * FROM graft_fp_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_fpmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_fpsrc GROUP BY o_custkey""".stripMargin)
-    def step(name: String): (String, Boolean, Boolean) =
-      try {
-        spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_fpmv")
-        (name, true, false)
-      } catch {
-        case e: Exception =>
-          (name, false,
-            e.getMessage.contains("fingerprint") &&
-              e.getMessage.contains("re-materialize"))
-      }
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_fpsrc
-         |SELECT * FROM graft_fp_src WHERE o_orderkey > $half""".stripMargin)
-    val ok = step("a_legit_fold")
-    // the foreign write: a direct INSERT INTO the managed MV
-    spark.sql(
-      s"INSERT INTO $cat.main.orders_fpmv VALUES (-1, 999999, 1)")
-    spark.sql(
-      s"""UPDATE $cat.main.orders_fpsrc SET cents = cents + 1
-         |WHERE o_orderkey % 13 = 0""".stripMargin)
-    val refused = step("b_foreign_insert")
-    // re-materialize: the only remedy, and it works
-    spark.sql(s"DROP MATERIALIZED VIEW $cat.main.orders_fpmv")
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_fpmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_fpsrc GROUP BY o_custkey""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_fpsrc SET cents = cents + 1
-         |WHERE o_orderkey % 19 = 0""".stripMargin)
-    val clean = step("c_rematerialized")
-    Seq(ok, refused, clean)
-      .toDF("step", "refreshed", "named_rematerialize")
-      .orderBy("step")
-  }
-
-  /** NON-INTEGRAL COUNT(DISTINCT) MV (round 16): the bitmap kind's
-    * bit positions are defined over integers, so strings could never
-    * have an exact distinct rollup — until the registrant DECLARES
-    * hashing (`hash_distinct => true`): bit positions derive from
-    * xxhash64(measure), NULL-preserved (xxhash64(NULL) is the seed,
-    * not NULL — unguarded it would count NULL as a value), and
-    * count(DISTINCT s) serves as the number of distinct 64-bit
-    * hashes. Exact up to hash collisions — probability ~n²/2⁶⁴ per
-    * group, negligible below billions of distinct values — and the
-    * declaration carries that caveat exactly like avg_exact carries
-    * reassociation. Registered WITHOUT a DuckDB oracle by design
-    * (the hash space is not expressible in DuckDB SQL); the driver
-    * rows-only-checks it, and CatalogSpec pins the served counts
-    * EQUAL the source-computed count(DISTINCT) on the corpus through
-    * the full append + delete + refresh lifecycle. */
-  val aggMvServeDistinctStr: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_dssrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_dsmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        (col("user_id") % 20).cast("long").as("grp"),
-        col("event_type").as("etype"))
-    e.createOrReplaceTempView("graft_ds_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_dssrc
-         |(event_id BIGINT, grp BIGINT, etype STRING)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dssrc
-         |SELECT * FROM graft_ds_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(source => 'main.events_dssrc',
-         |mv => 'main.events_dsmv', key => 'grp', agg => 'etype',
-         |kind => 'distinct', hash_distinct => true)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_dssrc
-         |SELECT * FROM graft_ds_src WHERE event_id > $half""".stripMargin)
-    // a delete that removes ONE type entirely from some groups — the
-    // non-invertible path: delete-touched groups recompute hashed
-    spark.sql(
-      s"DELETE FROM $cat.main.events_dssrc WHERE etype = 'error'")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_dsmv")
-    val brute = spark.sql(
-      s"""SELECT grp, count(DISTINCT etype) AS d_types, count(*) AS n
-         |FROM $cat.main.events_dssrc
-         |GROUP BY grp ORDER BY grp""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_dsmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "hashed-distinct serve did not fire: the plan does not read the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must not touch the source scan")
-      // the served counts must EQUAL the source recompute here — the
-      // declared hash is collision-free at any tested scale, and this
-      // inline pin is the key's exactness evidence (no DuckDB oracle
-      // can hash with xxhash64)
-      val got = org.apache.spark.sql.GraftPlanBridge
-        .ofRows(spark, rewritten).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val want = brute.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      require(
-        got == want,
-        s"hashed-distinct serve must equal the source recompute")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** EXPLAIN surfaces the MV-serve diagnosis (round 16, closing the
-    * r15 verdict's "CALL-only diagnostics" gap): with
-    * `spark.graft.mv.explain=true`, plain `EXPLAIN <query>` appends a
-    * `== Materialized View Serving ==` section — the SERVED line with
-    * grain and matched versions, or every candidate's bail reason
-    * with its remedy — produced by the same diagnostic sink as CALL
-    * system.explain_mv_serve, now living where users actually look.
-    * The graded contract is the lifecycle truth table: fresh MV →
-    * the section carries SERVED; source moves → the section carries
-    * STALE naming REFRESH MATERIALIZED VIEW; conf off → EXPLAIN is
-    * byte-identical to stock Spark (no section at all — the surface
-    * is strictly opt-in and costs nothing when off). */
-  val sqlMvExplainPlan: Q = (spark, dir) => {
-    import spark.implicits._
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_xpsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_xpmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_xp_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_xpsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xpsrc
-         |SELECT * FROM graft_xp_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_xpmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_xpsrc GROUP BY o_custkey""".stripMargin)
-    val q = s"EXPLAIN SELECT o_custkey, sum(cents) AS s " +
-      s"FROM $cat.main.orders_xpsrc GROUP BY o_custkey"
-    def step(name: String): (String, Boolean, Boolean, Boolean) = {
-      val text = spark.sql(q).collect()(0).getString(0)
-      (name,
-        text.contains("== Materialized View Serving =="),
-        text.contains("SERVED from"),
-        text.contains("REFRESH MATERIALIZED VIEW"))
-    }
-    val prev = spark.conf.getOption(graft.plans.MvRewrite.ExplainConfKey)
-    try {
-      spark.conf.set(graft.plans.MvRewrite.ExplainConfKey, "true")
-      val fresh = step("a_fresh")
-      spark.sql(
-        s"""INSERT INTO $cat.main.orders_xpsrc
-           |SELECT * FROM graft_xp_src WHERE o_orderkey > $half""".stripMargin)
-      val stale = step("b_stale")
-      spark.conf.set(graft.plans.MvRewrite.ExplainConfKey, "false")
-      val off = step("c_conf_off")
-      Seq(fresh, stale, off)
-        .toDF("step", "has_section", "served", "mentions_refresh")
-        .orderBy("step")
-    } finally prev match {
-      case Some(v) =>
-        spark.conf.set(graft.plans.MvRewrite.ExplainConfKey, v)
-      case None =>
-        spark.conf.unset(graft.plans.MvRewrite.ExplainConfKey)
-    }
-  }
-
-  /** MIXED-GRAIN star rollup (round 16): "revenue by segment AND
-    * month" — a DIM attribute × a derived FACT-time grain, the
-    * canonical dashboard cross that round 15's join MVs (dim attrs
-    * only) and derived-key MVs (no dim) each covered half of. The MV
-    * is a (seg, day) rollup of `fact ⋈ dim`: createJoinMv's key list
-    * mixes dim attributes with ONE derived fact key (`key_expr =>
-    * to_date(ts)`, re-derived over every refresh delta BEFORE the dim
-    * enrichment), and the serve rule's key grammar matches plain
-    * members by name and the derived member by its recorded grain —
-    * so the monthly query re-aggregates the daily join rollup
-    * (`trunc(to_date(ts), 'month')` transplants onto the stored day
-    * column) with fact scan, dim scan, AND join all gone from the
-    * plan. At 100 TB the daily seg×day MV is |segs × days| rows; the
-    * monthly dashboard reads THAT instead of re-joining the fact.
-    * The oracle recomputes the join + month rollup from source rows
-    * through the append + CoW UPDATE the refresh folded. */
-  val aggMvServeJoinMonth: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_jmsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.users_jmdim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_jmmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_jm_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.users_jmdim (uid BIGINT, seg STRING)""")
-    // a FILTERED dim (every 7th user absent): inner-join exclusion
-    // must stay live in the mixed-grain hash too
-    spark.sql(
-      s"""INSERT INTO $cat.main.users_jmdim
-         |SELECT DISTINCT user_id,
-         |CASE CAST(user_id % 3 AS INT) WHEN 0 THEN 'base'
-         |WHEN 1 THEN 'plus' ELSE 'pro' END
-         |FROM graft_jm_src WHERE user_id % 7 <> 0""".stripMargin)
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_jmsrc
-         |(event_id BIGINT, user_id BIGINT, ts TIMESTAMP,
-         |v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_jmsrc
-         |SELECT * FROM graft_jm_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_join_mv(fact => 'main.events_jmsrc',
-         |dim => 'main.users_jmdim', fk => 'user_id', pk => 'uid',
-         |mv => 'main.events_jmmv', key => 'seg,day', agg => 'v',
-         |key_expr => 'to_date(ts)')""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_jmsrc
-         |SELECT * FROM graft_jm_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_jmsrc SET v = v + 7
-         |WHERE event_id % 5 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_jmmv")
-    val brute = spark.sql(
-      s"""SELECT seg, trunc(to_date(ts), 'month') AS mon,
-         |sum(v) AS s, count(*) AS n
-         |FROM $cat.main.events_jmsrc JOIN $cat.main.users_jmdim
-         |ON user_id = uid
-         |GROUP BY seg, trunc(to_date(ts), 'month')
-         |ORDER BY seg, mon""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_jmmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "mixed-grain join serve did not fire: the plan does not read " +
-          "the MV")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** MIXED-GRAIN join MV via pure SQL DDL (round 19): `GROUP BY
-    * d.seg, to_date(f.ts)` in CREATE MATERIALIZED VIEW declares the
-    * derived-fact-grain member — the DDL spelling of createJoinMv's
-    * keyExpr, until now CALL/library-only. The parser accepts ONE
-    * grain function as the LAST grouping member (fact-qualified
-    * column, recorded bare so the refresh re-derives it against the
-    * fact frame) over both the single-join and star forms; grain
-    * not-last, unqualified and dim-qualified spellings refuse at
-    * parse (CatalogSpec). Same dashboard shape as
-    * [[aggMvServeJoinMonth]] — "revenue by segment AND month" served
-    * coarse from the daily rollup — with different moduli so the two
-    * keys cannot mask each other. Oracle: DuckDB recomputes the
-    * month × segment join over the final state (hash-matched). */
-  val aggMvServeJoinMonthDdl: Q = (spark, dir) => {
-    import graft.plans.{MvRewrite, MvRollupRewriteRule}
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.events_jdsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.users_jddim")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.events_jdmv")
-    val e = Tables
-      .events(spark, dir)
-      .select(
-        col("event_id"),
-        col("user_id"),
-        col("ts"),
-        round(col("value") * 100).cast("long").as("v"))
-    e.createOrReplaceTempView("graft_jd_src")
-    val maxId = Tables.maxLong(spark, dir, "events", "event_id")
-    val half = maxId / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.users_jddim (uid BIGINT, seg STRING)""")
-    // a FILTERED dim (every 5th user absent): the inner-join
-    // exclusion must stay live through the DDL-declared grain too
-    spark.sql(
-      s"""INSERT INTO $cat.main.users_jddim
-         |SELECT DISTINCT user_id,
-         |CASE CAST(user_id % 3 AS INT) WHEN 0 THEN 'base'
-         |WHEN 1 THEN 'plus' ELSE 'pro' END
-         |FROM graft_jd_src WHERE user_id % 5 <> 0""".stripMargin)
-    spark.sql(
-      s"""CREATE TABLE $cat.main.events_jdsrc
-         |(event_id BIGINT, user_id BIGINT, ts TIMESTAMP,
-         |v BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_jdsrc
-         |SELECT * FROM graft_jd_src WHERE event_id <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.events_jdmv AS
-         |SELECT d.seg, to_date(f.ts) AS day, sum(f.v) AS mv_sum,
-         |count(*) AS mv_n
-         |FROM $cat.main.events_jdsrc f JOIN $cat.main.users_jddim d
-         |ON f.user_id = d.uid
-         |GROUP BY d.seg, to_date(f.ts)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.events_jdsrc
-         |SELECT * FROM graft_jd_src WHERE event_id > $half""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.events_jdsrc SET v = v + 9
-         |WHERE event_id % 11 = 0""".stripMargin)
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.events_jdmv")
-    val brute = spark.sql(
-      s"""SELECT seg, trunc(to_date(ts), 'month') AS mon,
-         |sum(v) AS s, count(*) AS n
-         |FROM $cat.main.events_jdsrc JOIN $cat.main.users_jddim
-         |ON user_id = uid
-         |GROUP BY seg, trunc(to_date(ts), 'month')
-         |ORDER BY seg, mon""".stripMargin)
-    val mvPath = tmp("sql_warehouse") + "/main/events_jdmv"
-    val rule = MvRollupRewriteRule(spark)
-    val prev = spark.conf.getOption(MvRewrite.ConfKey)
-    spark.conf.set(MvRewrite.ConfKey, "true")
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
-      require(
-        MvRewrite.readsPath(rewritten, mvPath),
-        "DDL-declared mixed-grain join serve did not fire")
-      require(
-        !rewritten.exists(p =>
-          p.isInstanceOf[org.apache.spark.sql.execution.datasources
-            .v2.DataSourceV2ScanRelation] ||
-            p.isInstanceOf[org.apache.spark.sql.execution.datasources
-              .v2.DataSourceV2Relation]),
-        "served plan must touch NEITHER the fact nor the dim scan")
-      require(
-        !rewritten.exists(
-          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]),
-        "served plan must carry no join at all")
-      org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally prev match {
-      case Some(v) => spark.conf.set(MvRewrite.ConfKey, v)
-      case None    => spark.conf.unset(MvRewrite.ConfKey)
-    }
-  }
-
-  /** SERVE-MISS DIAGNOSTICS (round 15): `CALL system.explain_mv_serve
-    * (query)` answers the first question every MV user asks — "why
-    * didn't my MV serve?" — by running the rewrite with a diagnostic
-    * sink armed and returning one line per candidate-MV decision:
-    * SERVED with grain and matched versions, or the bail reason with
-    * its remedy (REFRESH for staleness, re-materialize for dim drift,
-    * the named unservable output for shape misses). The graded
-    * contract is the diagnosis LIFECYCLE, projected to a
-    * deterministic shape: fresh MV → served; source moves → not
-    * served AND the advice names REFRESH MATERIALIZED VIEW; after the
-    * refresh → served again. The oracle is the literal truth table —
-    * the diagnostics' behavior, hash-matched. */
-  val sqlMvExplain: Q = (spark, dir) => {
-    import spark.implicits._
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_xplsrc")
-    spark.sql(s"DROP MATERIALIZED VIEW IF EXISTS $cat.main.orders_xplmv")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_xpl_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val half = maxK / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_xplsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xplsrc
-         |SELECT * FROM graft_xpl_src WHERE o_orderkey <= $half""".stripMargin)
-    spark.sql(
-      s"""CREATE MATERIALIZED VIEW $cat.main.orders_xplmv AS
-         |SELECT o_custkey, sum(cents) AS mv_sum, count(*) AS mv_n
-         |FROM $cat.main.orders_xplsrc GROUP BY o_custkey""".stripMargin)
-    val q = s"SELECT o_custkey, sum(cents) AS s " +
-      s"FROM $cat.main.orders_xplsrc GROUP BY o_custkey"
-    def diag(step: String): (String, Boolean, Boolean) = {
-      val lines = spark
-        .sql(s"CALL $cat.system.explain_mv_serve(query => '$q')")
-        .collect().map(_.getString(0))
-      (step,
-        lines.exists(_.startsWith("SERVED from")),
-        lines.exists(_.contains("REFRESH MATERIALIZED VIEW")))
-    }
-    val fresh = diag("a_fresh")
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_xplsrc
-         |SELECT * FROM graft_xpl_src WHERE o_orderkey > $half""".stripMargin)
-    val stale = diag("b_stale")
-    spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_xplmv")
-    val refreshed = diag("c_refreshed")
-    Seq(fresh, stale, refreshed)
-      .toDF("step", "served", "mentions_refresh")
-      .orderBy("step")
-  }
-
   /** RUNTIME FILE PRUNING (round 13): the snapshot scan implements
     * `SupportsRuntimeV2Filtering` over its declared layout columns
     * (sorted_by / identity partitions / bucket key / bloom-indexed),
@@ -5909,12 +2515,7 @@ object Scans {
     val cat = sqlCatalog(spark)
     val t = s"$cat.main.orders_dppfact"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val o = ordersCents(spark, dir)
     o.createOrReplaceTempView("graft_dppf_src")
     spark.sql(
       s"""CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)
@@ -5960,66 +2561,6 @@ object Scans {
     joined
   }
 
-  /** STATS managed MV (round 13): `CALL system.create_mv(...,
-    * kind => 'stats')` materializes per-key sum / sum-of-squares /
-    * count — the three moments avg, variance, and stddev all derive
-    * from WITHOUT re-reading the source. Unlike minmax, x² inverts a
-    * delete exactly as x does, so the refresh is a pure invertible
-    * fold over `readChanges(asOf, tip)` — O(changed files) of the
-    * source at every delete pattern, never a group recompute. The
-    * graded flow stresses exactly that: after materialization the
-    * source takes an append (insert fold), a CoW UPDATE (delete+insert
-    * pairs through the same fold — the x² of the OLD value must
-    * subtract while the NEW one adds), and a scattering DELETE; one
-    * refresh must land bit-exactly on the oracle's full recompute of
-    * the final state. */
-  val sqlMvStats: Q = (spark, dir) => {
-    val cat = sqlCatalog(spark)
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_stsrc")
-    spark.sql(s"DROP TABLE IF EXISTS $cat.main.orders_st")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
-    o.createOrReplaceTempView("graft_sqlst_src")
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val c1 = maxK / 3
-    val c2 = 2 * c1
-    val h = c1 / 2
-    spark.sql(
-      s"""CREATE TABLE $cat.main.orders_stsrc
-         |(o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_stsrc
-         |SELECT * FROM graft_sqlst_src WHERE o_orderkey <= $c1""".stripMargin)
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_stsrc
-         |SELECT * FROM graft_sqlst_src
-         |WHERE o_orderkey > $c1 AND o_orderkey <= $c2""".stripMargin)
-    spark.sql(
-      s"""CALL $cat.system.create_mv(
-         |  source => 'main.orders_stsrc', mv => 'main.orders_st',
-         |  key => 'o_custkey', agg => 'cents', kind => 'stats')""".stripMargin)
-    // behind the MV's back: an append, a CoW UPDATE (the x² fold must
-    // subtract c² and add (2c)²), and a scattering CoW DELETE
-    spark.sql(
-      s"""INSERT INTO $cat.main.orders_stsrc
-         |SELECT * FROM graft_sqlst_src WHERE o_orderkey > $c2""".stripMargin)
-    spark.sql(
-      s"""UPDATE $cat.main.orders_stsrc SET cents = cents * 2
-         |WHERE o_orderkey <= $h""".stripMargin)
-    spark.sql(s"DELETE FROM $cat.main.orders_stsrc WHERE o_orderkey % 10 = 0")
-    val r = spark.sql(s"CALL $cat.system.refresh_mv(mv => 'main.orders_st')").head
-    require(
-      r.getInt(1) > r.getInt(0),
-      s"refresh must advance the as-of version, got $r")
-    spark.sql(
-      s"""SELECT o_custkey, mv_sum, mv_sumsq, mv_n
-         |FROM $cat.main.orders_st ORDER BY o_custkey""".stripMargin)
-  }
-
   /** COLUMN DEFAULT VALUES (round 13): `CREATE TABLE (c STRING
     * DEFAULT 'x')` and `ALTER TABLE ADD COLUMN ... DEFAULT y` — the
     * default rides the committed schema's field metadata
@@ -6049,7 +2590,7 @@ object Scans {
     spark.sql(
       s"""INSERT INTO $t (o_orderkey, o_totalprice)
          |SELECT * FROM graft_defaults_src WHERE o_orderkey <= $half""".stripMargin)
-    val p = tmp("sql_warehouse/main/orders_defaults")
+    val p = warehousePath(spark, "orders_defaults")
     val before = SnapshotLog
       .manifest(spark, p, SnapshotLog.versions(spark, p).last).toSet
     spark.sql(s"ALTER TABLE $t ADD COLUMN tier STRING DEFAULT 'bronze'")
@@ -6136,12 +2677,7 @@ object Scans {
     val cat = sqlCatalog(spark)
     val t = s"$cat.main.orders_mordml"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val o = ordersCents(spark, dir)
     o.createOrReplaceTempView("graft_mordml_src")
     val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
     val c1 = maxK / 3
@@ -6155,7 +2691,7 @@ object Scans {
         s"WHERE o_orderkey > $c1 AND o_orderkey <= ${2 * c1}")
     spark.sql(
       s"INSERT INTO $t SELECT * FROM graft_mordml_src WHERE o_orderkey > ${2 * c1}")
-    val p = tmp("sql_warehouse/main/orders_mordml")
+    val p = warehousePath(spark, "orders_mordml")
     val before = SnapshotLog
       .manifest(spark, p, SnapshotLog.versions(spark, p).last).toSet
     spark.sql(s"DELETE FROM $t WHERE o_orderkey % 97 = 0")
@@ -6206,12 +2742,7 @@ object Scans {
     val lp = new org.apache.hadoop.fs.Path(landing)
     val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(lp, true)
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val o = ordersCents(spark, dir)
     val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
     spark.sql(
       s"CREATE TABLE $t (o_orderkey BIGINT, o_custkey BIGINT, cents BIGINT)")
@@ -6235,7 +2766,7 @@ object Scans {
     require(
       r3.getInt(1) == 0 && r3.getInt(0) == r2.getInt(0),
       s"an idle ingest must be a true no-op: $r3 vs $r2")
-    val p = tmp("sql_warehouse/main/orders_ingested")
+    val p = warehousePath(spark, "orders_ingested")
     require(
       SnapshotLog.ingestedFiles(spark, p).size == r1.getInt(1) + r2.getInt(1),
       "the ledger must be exactly the landing listing")
@@ -6263,12 +2794,7 @@ object Scans {
     val cat = sqlCatalog(spark)
     val t = s"$cat.main.orders_topn"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val o = ordersCents(spark, dir)
     // shuffle the source order so the sorted layout does real work
     o.orderBy("o_custkey", "o_orderkey").createOrReplaceTempView("graft_topn_src")
     spark.sql(
@@ -6426,8 +2952,8 @@ object Scans {
          |(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)""".stripMargin)
     spark.sql(s"INSERT INTO $cat.main.orders_sorted SELECT * FROM graft_sorted_src")
     spark.sql(s"INSERT INTO $cat.main.orders_unsorted SELECT * FROM graft_sorted_src")
-    val sortedPath = tmp("sql_warehouse") + "/main/orders_sorted"
-    val unsortedPath = tmp("sql_warehouse") + "/main/orders_unsorted"
+    val sortedPath = warehousePath(spark, "orders_sorted")
+    val unsortedPath = warehousePath(spark, "orders_unsorted")
     val probe = (maxK / 2, maxK / 2 + maxK / 20)
     val (keptS, totalS) =
       SnapshotLog.prunedFiles(spark, sortedPath, "o_orderkey", probe._1, probe._2)
@@ -6471,7 +2997,7 @@ object Scans {
          |(o_orderkey BIGINT, o_custkey BIGINT, o_totalprice DOUBLE)
          |TBLPROPERTIES ('check' = 'o_totalprice >= 0 AND o_orderkey >= 0')""".stripMargin)
     spark.sql(s"INSERT INTO $cat.main.orders_check SELECT * FROM graft_check_src")
-    val tablePath = tmp("sql_warehouse") + "/main/orders_check"
+    val tablePath = warehousePath(spark, "orders_check")
     val vBefore = SnapshotLog.versions(spark, tablePath).last
     val nBefore = spark.sql(s"SELECT count(*) FROM $cat.main.orders_check")
       .head.getLong(0)
@@ -6528,7 +3054,7 @@ object Scans {
     spark.sql(
       s"""INSERT INTO $cat.main.cust_unique
          |SELECT * FROM graft_uniq_src WHERE c_custkey <= $half""".stripMargin)
-    val tablePath = tmp("sql_warehouse") + "/main/cust_unique"
+    val tablePath = warehousePath(spark, "cust_unique")
     val vBefore = SnapshotLog.versions(spark, tablePath).last
     val overlap = scala.util.Try(
       spark.sql(
@@ -6766,7 +3292,7 @@ object Scans {
   val sqlDelete: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val (t, c1, mid) = sqlDmlTable(spark, dir, "orders_sqldel")
-    val p = tmp("sql_warehouse/main/orders_sqldel")
+    val p = warehousePath(spark, "orders_sqldel")
     val before = SnapshotLog.manifest(spark, p, SnapshotLog.versions(spark, p).last)
     spark.sql(s"DELETE FROM $t WHERE o_orderkey >= ${c1 + 1} AND o_orderkey <= $mid")
     val v = SnapshotLog.versions(spark, p).last
@@ -6797,7 +3323,7 @@ object Scans {
   val sqlDeleteMetadata: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val (t, c1, _) = sqlDmlTable(spark, dir, "orders_sqldelmeta")
-    val p = tmp("sql_warehouse/main/orders_sqldelmeta")
+    val p = warehousePath(spark, "orders_sqldelmeta")
     val plan = spark
       .sql(s"EXPLAIN DELETE FROM $t WHERE o_orderkey > ${2 * c1}")
       .collect()(0).getString(0)
@@ -6821,7 +3347,7 @@ object Scans {
   val sqlUpdate: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val (t, c1, mid) = sqlDmlTable(spark, dir, "orders_sqlupd")
-    val p = tmp("sql_warehouse/main/orders_sqlupd")
+    val p = warehousePath(spark, "orders_sqlupd")
     val before = SnapshotLog.manifest(spark, p, SnapshotLog.versions(spark, p).last)
     spark.sql(
       s"""UPDATE $t SET o_totalprice = round(o_totalprice * 2, 2)
@@ -6915,7 +3441,7 @@ object Scans {
     val cat = sqlCatalog(spark)
     val fsys = new org.apache.hadoop.fs.Path(tmp("sql_warehouse"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = tmp("sql_warehouse/main/orders_tstream_src")
+    val src = warehousePath(spark, "orders_tstream_src")
     fsys.delete(new org.apache.hadoop.fs.Path(src), true)
     val ckpt = tmp("orders_tstream_ckpt")
     fsys.delete(new org.apache.hadoop.fs.Path(ckpt), true)
@@ -6958,10 +3484,10 @@ object Scans {
     val fsys = new org.apache.hadoop.fs.Path(tmp("sql_warehouse"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq("orders_bkt", "customer_bkt").foreach(t =>
-      fsys.delete(new org.apache.hadoop.fs.Path(tmp(s"sql_warehouse/main/$t")), true))
+      fsys.delete(new org.apache.hadoop.fs.Path(warehousePath(spark, t)), true))
     def bucketed(table: String, df: org.apache.spark.sql.DataFrame, key: String): Int =
       SnapshotLog.commit(
-        spark, tmp(s"sql_warehouse/main/$table"),
+        spark, warehousePath(spark, table),
         SnapshotLog.CommitRequest(SnapshotLog.CommitData.Frame(df), buckets = Some((key, 8))))
     bucketed(
       "orders_bkt",
@@ -7009,7 +3535,7 @@ object Scans {
     import graft.sources.SnapshotLog
     val cat = sqlCatalog(spark)
     val t = s"$cat.main.orders_sqlopt"
-    val p = tmp("sql_warehouse/main/orders_sqlopt")
+    val p = warehousePath(spark, "orders_sqlopt")
     spark.sql(s"DROP TABLE IF EXISTS $t")
     Tables
       .orders(spark, dir)
@@ -7365,75 +3891,6 @@ object Scans {
     SnapshotLog.read(spark, table).orderBy("o_orderkey")
   }
 
-  /** Incremental MV maintenance fed by the change feed (round 11): the
-    * per-customer rollup is materialized ONCE as of v2, then an append
-    * (v3) and a file-granular CoW update (v4, doubling cents for the
-    * low-key half-shard) land — and maintenance reads ONLY
-    * `readChanges(2, 4)`: inserts add into the aggregate, deletes
-    * subtract, in exact long-space cents. The CoW replace's carried
-    * files never re-enter the feed, so the maintenance cost is
-    * O(changed files), the whole point of a CDF on a 100 TB table —
-    * recomputing the MV would scan everything. The oracle recomputes
-    * the final rollup from the source, so the incremental path must
-    * land exactly on the full-recompute answer. */
-  val etlMvIncremental: Q = (spark, dir) => {
-    import graft.sources.SnapshotLog
-    val table = tmp("orders_snapshot_mv")
-    new org.apache.hadoop.fs.Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(table), true)
-    val o = Tables
-      .orders(spark, dir)
-      .select(
-        col("o_orderkey"),
-        col("o_custkey"),
-        round(col("o_totalprice") * 100).cast("long").as("cents")
-      )
-    val maxK = Tables.maxLong(spark, dir, "orders", "o_orderkey")
-    val c1 = maxK / 3
-    val c2 = 2 * c1
-    val h = c1 / 2
-    SnapshotLog.commit(spark, table, o.filter(col("o_orderkey") <= c1))
-    SnapshotLog.commit(
-      spark,
-      table,
-      o.filter(col("o_orderkey") > c1 && col("o_orderkey") <= c2)
-    )
-    val mv0 = SnapshotLog
-      .read(spark, table, Some(2))
-      .groupBy("o_custkey")
-      .agg(sum("cents").as("sum_cents"), count(lit(1)).as("n_orders"))
-    SnapshotLog.commit(spark, table, o.filter(col("o_orderkey") > c2))
-    SnapshotLog.mergeCoW(
-      spark,
-      table,
-      "o_orderkey",
-      o.filter(col("o_orderkey") <= h).select("o_orderkey"),
-      base =>
-        base.withColumn(
-          "cents",
-          when(col("o_orderkey") <= h, col("cents") * 2).otherwise(col("cents"))
-        )
-    )
-    val sign =
-      when(col("change_type") === "insert", lit(1L)).otherwise(lit(-1L))
-    val delta = SnapshotLog
-      .readChanges(spark, table, 2, 4)
-      .groupBy("o_custkey")
-      .agg(sum(col("cents") * sign).as("d_cents"), sum(sign).as("d_n"))
-    mv0
-      .join(delta, Seq("o_custkey"), "full_outer")
-      .select(
-        col("o_custkey"),
-        (coalesce(col("sum_cents"), lit(0L)) +
-          coalesce(col("d_cents"), lit(0L))).as("sum_cents"),
-        (coalesce(col("n_orders"), lit(0L)) +
-          coalesce(col("d_n"), lit(0L))).as("n_orders")
-      )
-      .filter(col("n_orders") > 0)
-      .orderBy("o_custkey")
-  }
-
   val queries: Map[String, Q] = Map(
     "sink_snapshot_compact" -> sinkSnapshotCompact,
     "scan_cluster_pruned" -> scanClusterPruned,
@@ -7444,7 +3901,6 @@ object Scans {
     "stream_snapshot_source" -> streamSnapshotSource,
     "stream_changes_feed" -> streamChangesFeed,
     "stream_cdf_apply" -> streamCdfApply,
-    "stream_mv_maintain" -> streamMvMaintain,
     "etl_snapshot_replicate" -> etlSnapshotReplicate,
     "etl_snapshot_history" -> etlSnapshotHistory,
     "source_avro" -> sourceAvro,
@@ -7465,7 +3921,6 @@ object Scans {
     "sql_update" -> sqlUpdate,
     "sql_merge" -> sqlMerge,
     "sql_merge_source" -> sqlMergeSource,
-    "etl_mv_incremental" -> etlMvIncremental,
     "agg_metadata_only" -> aggMetadataOnly,
     "sql_agg_pushdown" -> sqlAggPushdown,
     "sql_rename_col" -> sqlRenameCol,
@@ -7485,46 +3940,6 @@ object Scans {
     "sql_check_constraint" -> sqlCheckConstraint,
     "sql_unique_key" -> sqlUniqueKey,
     "sql_partition_evolve" -> sqlPartitionEvolve,
-    "sql_mv_refresh" -> sqlMvRefresh,
-    "sql_mv_minmax" -> sqlMvMinmax,
-    "sql_mv_stats" -> sqlMvStats,
-    "sql_mv_ddl" -> sqlMvDdl,
-    "sql_mv_daily" -> sqlMvDaily,
-    "agg_mv_serve" -> aggMvServe,
-    "agg_mv_serve_global" -> aggMvServeGlobal,
-    "agg_mv_serve_daily" -> aggMvServeDaily,
-    "agg_mv_serve_month" -> aggMvServeMonth,
-    "agg_mv_serve_choice" -> aggMvServeChoice,
-    "agg_mv_serve_nullkey" -> aggMvServeNullkey,
-    "agg_mv_serve_join_null" -> aggMvServeJoinNull,
-    "agg_mv_serve_left_star" -> aggMvServeLeftStar,
-    "agg_mv_serve_mixed_star" -> aggMvServeMixedStar,
-    "agg_mv_serve_distinct_expr" -> aggMvServeDistinctExpr,
-    "agg_mv_serve_multi_expr" -> aggMvServeMultiExpr,
-    "agg_mv_serve_multi_expr_ddl" -> aggMvServeMultiExprDdl,
-    "agg_mv_serve_filtered" -> aggMvServeFiltered,
-    "agg_mv_serve_avg" -> aggMvServeAvg,
-    "agg_mv_serve_subset" -> aggMvServeSubset,
-    "agg_mv_serve_multi" -> aggMvServeMulti,
-    "agg_mv_serve_expr" -> aggMvServeExpr,
-    "agg_mv_serve_distinct" -> aggMvServeDistinct,
-    "agg_mv_serve_distinct_month" -> aggMvServeDistinctMonth,
-    "agg_mv_serve_join" -> aggMvServeJoin,
-    "agg_mv_serve_join_expr" -> aggMvServeJoinExpr,
-    "agg_mv_serve_join_expr_ddl" -> aggMvServeJoinExprDdl,
-    "agg_mv_serve_join_month" -> aggMvServeJoinMonth,
-    "agg_mv_serve_join_month_ddl" -> aggMvServeJoinMonthDdl,
-    "agg_mv_serve_star" -> aggMvServeStar,
-    "agg_mv_serve_snowflake" -> aggMvServeSnowflake,
-    "sql_mv_dim_refresh" -> sqlMvDimRefresh,
-    "agg_mv_serve_hll" -> aggMvServeHll,
-    "agg_mv_serve_hll_expr" -> aggMvServeHllExpr,
-    "agg_mv_serve_join_hll_expr" -> aggMvServeJoinHllExpr,
-    "agg_mv_serve_left" -> aggMvServeLeft,
-    "agg_mv_serve_distinct_str" -> aggMvServeDistinctStr,
-    "sql_mv_fingerprint" -> sqlMvFingerprint,
-    "sql_mv_explain_plan" -> sqlMvExplainPlan,
-    "sql_mv_explain" -> sqlMvExplain,
     "join_dpp" -> joinDpp,
     "agg_groupby_pushdown" -> aggGroupbyPushdown,
     "agg_rangeby_pushdown" -> aggRangebyPushdown,
@@ -7710,11 +4125,6 @@ object Scans {
     "sink_optimize_where" ->
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders ORDER BY o_orderkey""".stripMargin,
-    // the incremental path must land bit-exactly on the oracle's full
-    // recompute of the FINAL source state (same algebra as
-    // etl_mv_incremental, here driven through the managed lifecycle)
-    // merge-on-read DML: deleted rows subtract, surviving matched rows
-    // carry the update — recomputed from the source parquet
     // incremental ingestion: two waves through the ledger must land
     // exactly the source, no row lost to skipping or doubled by replay
     "sql_ingest" ->
@@ -7726,32 +4136,14 @@ object Scans {
     "sql_topn_pushdown" ->
       """SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
         |FROM orders ORDER BY o_orderkey LIMIT 500""".stripMargin,
+    // merge-on-read DML: deleted rows subtract, surviving matched rows
+    // carry the update — recomputed from the source parquet
     "sql_dml_mor" ->
       """WITH src AS (SELECT o_orderkey, o_custkey,
         |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders)
         |SELECT o_orderkey, o_custkey,
         |  CASE WHEN o_custkey % 50 = 1 THEN cents + 7 ELSE cents END AS cents
         |FROM src WHERE o_orderkey % 97 <> 0 ORDER BY o_orderkey""".stripMargin,
-    "sql_mv_refresh" ->
-      """WITH b AS (SELECT (max(o_orderkey) // 3) // 2 AS h FROM orders)
-        |SELECT o_custkey,
-        | CAST(sum(CASE WHEN o_orderkey <= b.h THEN 2 ELSE 1 END *
-        |          CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |   AS mv_sum,
-        | CAST(count(*) AS BIGINT) AS mv_n
-        |FROM orders, b GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the incremental minmax refresh (insert fold + delete-group
-    // recompute) must land bit-exactly on the full recompute of the
-    // final source state
-    "sql_mv_minmax" ->
-      """SELECT o_custkey,
-        | CAST(min(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |   AS mv_min,
-        | CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |   AS mv_max,
-        | CAST(count(*) AS BIGINT) AS mv_n
-        |FROM orders WHERE o_orderkey % 10 <> 0
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
     // the manifest-folded per-partition counts (DVs subtracted) must
     // equal the oracle's recount from source rows
     "agg_groupby_pushdown" ->
@@ -7768,453 +4160,6 @@ object Scans {
         |    AS mx,
         |  CAST(count(*) AS BIGINT) AS n
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the DDL-driven MV (CREATE/REFRESH MATERIALIZED VIEW) must land
-    // bit-exactly on the full recompute — same algebra as
-    // sql_mv_refresh, here through the standard-SQL spelling
-    "sql_mv_ddl" ->
-      """WITH b AS (SELECT (max(o_orderkey) // 3) // 2 AS h FROM orders)
-        |SELECT o_custkey,
-        | CAST(sum(CASE WHEN o_orderkey <= b.h THEN 2 ELSE 1 END *
-        |          CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |   AS mv_sum,
-        | CAST(count(*) AS BIGINT) AS mv_n
-        |FROM orders, b GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the aggregate served from the refresh-maintained MV must equal
-    // the full recompute from source rows (append + CoW update folded)
-    "agg_mv_serve" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents0 FROM orders),
-        |fin AS (SELECT o_custkey,
-        |  CASE WHEN o_orderkey % 11 = 0 THEN cents0 + 3 ELSE cents0 END
-        |    AS cents FROM src)
-        |SELECT o_custkey, CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(count(*) AS BIGINT) AS n_orders
-        |FROM fin WHERE o_custkey % 2 = 0
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the daily aggregate SERVED from the derived-key MV must equal
-    // the per-day recompute of the final source state
-    "agg_mv_serve_daily" ->
-      """WITH src AS (SELECT event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 7 = 0 THEN 5 ELSE 0 END AS v
-        |  FROM events)
-        |SELECT CAST(ts AS DATE) AS day,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the monthly re-aggregation of the daily MV must equal the
-    // per-month recompute of the final source state
-    "agg_mv_serve_month" ->
-      """WITH src AS (SELECT event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 5 = 0 THEN 9 ELSE 0 END AS v
-        |  FROM events)
-        |SELECT CAST(date_trunc('month', CAST(ts AS DATE)) AS DATE) AS mon,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the monthly query served from the MONTHLY MV (the cheapest of
-    // two admissible candidates) must equal the per-month recompute
-    // of the final source state
-    "agg_mv_serve_choice" ->
-      """WITH src AS (SELECT event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 9 = 0 THEN 3 ELSE 0 END AS v
-        |  FROM events)
-        |SELECT CAST(date_trunc('month', CAST(ts AS DATE)) AS DATE) AS mon,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the NULL-keyed minmax MV lifecycle (create at half, append,
-    // CoW DELETE touching the NULL group, refresh, serve) must equal
-    // the recompute of the final state — DuckDB groups NULLs natively,
-    // so a fold-split or stale NULL row breaks the hash
-    "agg_mv_serve_nullkey" ->
-      """WITH src AS (SELECT
-        |  CASE WHEN o_orderkey % 10 = 0 THEN NULL
-        |    ELSE CAST(o_custkey % 50 AS BIGINT) END AS grp,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS v
-        |  FROM orders)
-        |SELECT grp, CAST(min(v) AS BIGINT) AS mn,
-        |  CAST(max(v) AS BIGINT) AS mx,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src WHERE v % 13 <> 0 GROUP BY grp ORDER BY grp""".stripMargin,
-    // the NULL-dim-attr join MV (matched rows whose grouping attr is
-    // NULL) must fold and serve as ONE group, equal to the join
-    // recompute of the final state
-    "agg_mv_serve_join_null" ->
-      """WITH f AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 19 = 0 THEN 6 ELSE 0 END AS cents
-        |  FROM orders),
-        |d AS (SELECT c_custkey,
-        |  CASE WHEN c_custkey % 7 = 0 THEN NULL
-        |    ELSE c_mktsegment END AS seg FROM customer)
-        |SELECT seg, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM f JOIN d ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg""".stripMargin,
-    // two derived measures + a plain column served from ONE rollup
-    // must equal the three-sum recompute of the final source state
-    "agg_mv_serve_multi_expr" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 13 = 0 THEN 2 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 7 AS BIGINT) AS disc
-        |  FROM orders)
-        |SELECT o_custkey,
-        |  CAST(sum(cents * (100 - disc)) AS BIGINT) AS rev,
-        |  CAST(sum(cents % 50) AS BIGINT) AS hc,
-        |  CAST(sum(cents) AS BIGINT) AS sc,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the DDL-created two-derived-measures-plus-plain-column rollup
-    // served for all three sums must equal the recompute of the final
-    // source state (moduli differ from the library-API twin)
-    "agg_mv_serve_multi_expr_ddl" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 17 = 0 THEN 3 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 9 AS BIGINT) AS disc
-        |  FROM orders)
-        |SELECT o_custkey,
-        |  CAST(sum(cents * (100 - disc)) AS BIGINT) AS rev,
-        |  CAST(sum(cents % 40) AS BIGINT) AS hc,
-        |  CAST(sum(cents) AS BIGINT) AS sc,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the distinct count over a DERIVED value served from the
-    // expression-measure bitmap MV must equal the recompute of the
-    // final state (integral expression → exact bitmaps, no hashing)
-    "agg_mv_serve_distinct_expr" ->
-      """WITH src AS (SELECT CAST(o_custkey % 50 AS BIGINT) AS grp,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders)
-        |SELECT grp,
-        |  CAST(count(DISTINCT cents % 97 - 48) AS BIGINT) AS du,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src WHERE cents % 11 <> 0
-        |GROUP BY grp ORDER BY grp""".stripMargin,
-    // the MIXED inner/left star served from the per-edge rollup must
-    // equal the JOIN + LEFT JOIN recompute of the final state — the
-    // (seg, NULL) buckets are in the hash, no NULL-seg rows exist
-    "agg_mv_serve_mixed_star" ->
-      """WITH f AS (SELECT o_orderkey, o_custkey,
-        |  o_orderkey % 30 AS nk,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 23 = 0 THEN 6 ELSE 0 END AS cents
-        |  FROM orders),
-        |d1 AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 3 <> 0),
-        |d2 AS (SELECT n_nationkey, n_name AS nname FROM nation)
-        |SELECT seg, nname, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM f JOIN d1 ON o_custkey = c_custkey
-        |LEFT JOIN d2 ON nk = n_nationkey
-        |GROUP BY seg, nname ORDER BY seg, nname""".stripMargin,
-    // the LEFT 2-dim star served from the left rollup must equal the
-    // two-left-join recompute of the final state — the per-dim NULL
-    // buckets ((seg, NULL), (NULL, nname), (NULL, NULL)) are all in
-    // the hash
-    "agg_mv_serve_left_star" ->
-      """WITH f AS (SELECT o_orderkey, o_custkey,
-        |  o_orderkey % 30 AS nk,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 21 = 0 THEN 8 ELSE 0 END AS cents
-        |  FROM orders),
-        |d1 AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 3 <> 0),
-        |d2 AS (SELECT n_nationkey, n_name AS nname FROM nation)
-        |SELECT seg, nname, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM f LEFT JOIN d1 ON o_custkey = c_custkey
-        |LEFT JOIN d2 ON nk = n_nationkey
-        |GROUP BY seg, nname ORDER BY seg, nname""".stripMargin,
-    // the date-range probe transplanted onto the daily MV must equal
-    // the filtered per-day recompute of the final source state
-    "agg_mv_serve_filtered" ->
-      """WITH src AS (SELECT event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 6 = 0 THEN 4 ELSE 0 END AS v
-        |  FROM events)
-        |SELECT CAST(ts AS DATE) AS day,
-        |  CAST(sum(v) AS BIGINT) AS sum_v,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src
-        |WHERE CAST(ts AS DATE) >=
-        |  (SELECT CAST(min(ts) AS DATE) + 2 FROM events)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // avg served as mv_sum / mv_nn from the declared stats MV must
-    // equal the recompute (append + CoW DELETE folded); cents are
-    // integral so the sums reassociate exactly
-    "agg_mv_serve_avg" ->
-      """WITH src AS (SELECT o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders WHERE o_orderkey % 17 <> 0)
-        |SELECT o_custkey, avg(cents) AS avg_cents,
-        |  CAST(sum(cents) AS BIGINT) AS sum_cents
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // both sums served from ONE multi-measure MV must equal the
-    // two-sum recompute of the final source state
-    "agg_mv_serve_multi" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 23 = 0 THEN 2 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 100 AS BIGINT) AS clen
-        |  FROM orders)
-        |SELECT o_custkey, CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(sum(clen) AS BIGINT) AS sum_clen,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the revenue-shape expression measure served from the rollup
-    // must equal the expression recomputed from source rows through
-    // the same append + CoW UPDATE (integer math end to end, so the
-    // fold is exact under any re-association)
-    "agg_mv_serve_expr" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 11 = 0 THEN 3 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 7 AS BIGINT) AS disc
-        |  FROM orders)
-        |SELECT o_custkey,
-        |  CAST(sum(cents * (100 - disc)) AS BIGINT) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the distinct count served from the bitmap MV must equal the
-    // recompute from source rows through the same append + DELETE
-    "agg_mv_serve_distinct" ->
-      """WITH src AS (SELECT o_orderkey,
-        |  CAST(o_custkey % 50 AS BIGINT) AS grp,
-        |  CAST(o_orderkey % 97 - 48 AS BIGINT) AS item FROM orders),
-        |fin AS (SELECT * FROM src WHERE item NOT BETWEEN -5 AND -1)
-        |SELECT grp, CAST(count(DISTINCT item) AS BIGINT) AS d_items,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM fin GROUP BY grp ORDER BY grp""".stripMargin,
-    // the diagnosis lifecycle is its own truth table: fresh serves,
-    // a moved source stops serving AND the advice names the refresh,
-    // the refresh restores the serve
-    "sql_mv_explain" ->
-      """SELECT * FROM (VALUES
-        |  ('a_fresh', true, false),
-        |  ('b_stale', false, true),
-        |  ('c_refreshed', true, false))
-        |AS t(step, served, mentions_refresh) ORDER BY step""".stripMargin,
-    // the star rollup served from the join MV must equal the join
-    // recomputed from source rows (filtered dim: dropped customers'
-    // orders are absent from every group — inner-join exclusion is
-    // live in the hash)
-    "agg_mv_serve_join" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 3 <> 0),
-        |src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 31 = 0 THEN 4 ELSE 0 END AS cents
-        |  FROM orders)
-        |SELECT seg, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dim ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg""".stripMargin,
-    // the join rollup's EXPRESSION measure served from the MV must
-    // equal sum(cents * (100 - disc)) recomputed join-side from source
-    // rows through the same append + CoW UPDATE (integer math end to
-    // end, exact under any re-association)
-    "agg_mv_serve_join_expr" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 3 <> 0),
-        |src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 31 = 0 THEN 4 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 7 AS BIGINT) AS disc
-        |  FROM orders)
-        |SELECT seg, CAST(sum(cents * (100 - disc)) AS BIGINT) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dim ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg""".stripMargin,
-    // the DDL-declared expression-measure join MV (different moduli
-    // from the CALL twin) served result must equal the join recompute
-    // of the final source state
-    "agg_mv_serve_join_expr_ddl" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 4 <> 0),
-        |src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 23 = 0 THEN 5 ELSE 0 END AS cents,
-        |  CAST(o_orderkey % 11 AS BIGINT) AS disc
-        |  FROM orders)
-        |SELECT seg, CAST(sum(cents * (100 - disc)) AS BIGINT) AS rev,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dim ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg""".stripMargin,
-    // the 2-dim star rollup served from the MV must equal the star
-    // recomputed from source rows (part exclusion live, both dims'
-    // attributes in the grain)
-    "agg_mv_serve_star" ->
-      """WITH pd AS (SELECT p_partkey, p_brand FROM part
-        |  WHERE p_partkey % 5 <> 0),
-        |sd AS (SELECT s_suppkey, s_nationkey FROM supplier),
-        |src AS (SELECT l_orderkey, l_partkey, l_suppkey,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT)
-        |    + CASE WHEN l_orderkey % 23 = 0 THEN 3 ELSE 0 END AS cents
-        |  FROM lineitem)
-        |SELECT p_brand, CAST(s_nationkey AS BIGINT) AS s_nationkey,
-        |  CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN pd ON l_partkey = p_partkey
-        |JOIN sd ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // the snowflake rollup (orders→customer→nation) served from the
-    // MV must equal the chain recomputed from source rows (customer
-    // exclusion live; the second fk lives on the first dim)
-    "agg_mv_serve_snowflake" ->
-      """WITH cd AS (SELECT c_custkey, c_nationkey FROM customer
-        |  WHERE c_custkey % 4 <> 0),
-        |nd AS (SELECT n_nationkey, n_name FROM nation),
-        |src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 29 = 0 THEN 5 ELSE 0 END AS cents
-        |  FROM orders)
-        |SELECT n_name, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN cd ON o_custkey = c_custkey
-        |JOIN nd ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    // the dim-refreshed rollup served from the MV must equal the join
-    // recomputed against the FINAL dim state: the segment rename
-    // (c%5→PIVOT on the surviving dim rows), the deletes (c%7, before
-    // the insert), and the late FRESH customers (c%3=0 ∧ c%2=0,
-    // inserted after the delete so no %7 filter applies to them)
-    "sql_mv_dim_refresh" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 13 = 0 THEN 9 ELSE 0 END AS cents
-        |  FROM orders),
-        |dimf AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 5 = 0 THEN 'PIVOT' ELSE c_mktsegment
-        |    END AS seg
-        |  FROM customer WHERE c_custkey % 3 <> 0 AND c_custkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT c_custkey, 'FRESH' AS seg FROM customer
-        |  WHERE c_custkey % 3 = 0 AND c_custkey % 2 = 0)
-        |SELECT seg, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dimf ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg""".stripMargin,
-    // the left-join rollup served from the MV must equal the LEFT
-    // join recomputed from source rows — the NULL bucket (customers
-    // dropped from the dim + any NULL custkey) is in the hash
-    "agg_mv_serve_left" ->
-      """WITH dim AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
-        |  WHERE c_custkey % 3 <> 0),
-        |src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 17 = 0 THEN 6 ELSE 0 END AS cents
-        |  FROM orders)
-        |SELECT seg, CAST(sum(cents) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src LEFT JOIN dim ON o_custkey = c_custkey
-        |GROUP BY seg ORDER BY seg NULLS FIRST""".stripMargin,
-    // EXPLAIN surfacing truth table: conf on → section present (fresh
-    // serves, stale names the refresh); conf off → stock EXPLAIN
-    "sql_mv_explain_plan" ->
-      """SELECT * FROM (VALUES
-        |  ('a_fresh', true, true, false),
-        |  ('b_stale', true, false, true),
-        |  ('c_conf_off', false, false, false))
-        |AS t(step, has_section, served, mentions_refresh)
-        |ORDER BY step""".stripMargin,
-    // the fold-fingerprint lifecycle is its own truth table: a legit
-    // refresh folds, a foreign INSERT makes the next refresh refuse
-    // (naming re-materialize), a re-materialized MV folds clean again
-    "sql_mv_fingerprint" ->
-      """SELECT * FROM (VALUES
-        |  ('a_legit_fold', true, false),
-        |  ('b_foreign_insert', false, true),
-        |  ('c_rematerialized', true, false))
-        |AS t(step, refreshed, named_rematerialize) ORDER BY step""".stripMargin,
-    // the mixed-grain star rollup (segment x month) served from the
-    // daily seg x day join MV must equal the join + month recompute
-    // from source rows (filtered dim exclusion live, derived fact
-    // grain re-aggregated by reassociation)
-    "agg_mv_serve_join_month" ->
-      """WITH src AS (SELECT event_id, user_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 5 = 0 THEN 7 ELSE 0 END AS v
-        |  FROM events),
-        |dim AS (SELECT DISTINCT user_id AS uid,
-        |  CASE CAST(user_id % 3 AS INT) WHEN 0 THEN 'base'
-        |  WHEN 1 THEN 'plus' ELSE 'pro' END AS seg
-        |  FROM events WHERE user_id % 7 <> 0)
-        |SELECT seg,
-        |  CAST(date_trunc('month', CAST(ts AS DATE)) AS DATE) AS mon,
-        |  CAST(sum(v) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dim ON user_id = uid
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // the DDL-declared mixed grain (different moduli from the CALL
-    // twin) served coarse must equal the month x segment recompute
-    "agg_mv_serve_join_month_ddl" ->
-      """WITH src AS (SELECT event_id, user_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 11 = 0 THEN 9 ELSE 0 END AS v
-        |  FROM events),
-        |dim AS (SELECT DISTINCT user_id AS uid,
-        |  CASE CAST(user_id % 3 AS INT) WHEN 0 THEN 'base'
-        |  WHEN 1 THEN 'plus' ELSE 'pro' END AS seg
-        |  FROM events WHERE user_id % 5 <> 0)
-        |SELECT seg,
-        |  CAST(date_trunc('month', CAST(ts AS DATE)) AS DATE) AS mon,
-        |  CAST(sum(v) AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src JOIN dim ON user_id = uid
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // the monthly distinct served from the DAILY bitmap MV must equal
-    // the per-month recompute — a user active on many days of a month
-    // counts once (per-day distincts do not sum; the bitmaps OR)
-    "agg_mv_serve_distinct_month" ->
-      """WITH src AS (SELECT CAST(event_id % 211 AS BIGINT) AS uid,
-        |  CAST(ts AS DATE) AS day FROM events)
-        |SELECT date_trunc('month', day) AS mon,
-        |  CAST(count(DISTINCT uid) AS BIGINT) AS mau,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY date_trunc('month', day) ORDER BY mon""".stripMargin,
-    // the per-customer re-aggregation of the (customer, status)
-    // composite MV must equal the per-customer recompute
-    "agg_mv_serve_subset" ->
-      """WITH src AS (SELECT o_orderkey, o_custkey,
-        |  CAST(round(o_totalprice * 100) AS BIGINT)
-        |    + CASE WHEN o_orderkey % 19 = 0 THEN 7 ELSE 0 END AS cents
-        |  FROM orders)
-        |SELECT o_custkey, CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    // the derived-key (daily) rollup must equal the per-day recompute
-    // of the final source state (append + CoW update folded)
-    "sql_mv_daily" ->
-      """WITH b AS (SELECT max(event_id) // 2 AS h FROM events),
-        |src AS (SELECT event_id, ts,
-        |  CAST(round(value * 100) AS BIGINT)
-        |    + CASE WHEN event_id % 9 = 0 THEN 11 ELSE 0 END AS v
-        |  FROM events)
-        |SELECT CAST(ts AS DATE) AS day,
-        |  CAST(sum(v) AS BIGINT) AS mv_sum,
-        |  CAST(count(*) AS BIGINT) AS mv_n
-        |FROM src GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the continuously-maintained rollup must equal the full recompute
-    // over every row the stream delivered
-    "stream_mv_maintain" ->
-      """SELECT o_custkey AS k,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS mv_sum,
-        |  CAST(count(*) AS BIGINT) AS mv_n
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the GLOBAL aggregate served by re-aggregating the managed MV
-    // must equal the recompute from source rows (append + CoW DELETE)
-    "agg_mv_serve_global" ->
-      """SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-        |  AS BIGINT) AS s,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM orders WHERE o_orderkey % 13 <> 0""".stripMargin,
     // runtime file pruning can only EXCLUDE provably keyless files —
     // the join's rows must be exactly the plain recompute's
     "join_dpp" ->
@@ -8223,21 +4168,6 @@ object Scans {
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
         |WHERE c.c_custkey % 293 = 1
         |ORDER BY o.o_orderkey""".stripMargin,
-    // the stats fold (append + CoW update + CoW delete, all through
-    // the invertible x/x²/n delta) must land bit-exactly on the full
-    // recompute of the final source state
-    "sql_mv_stats" ->
-      """WITH src AS (
-        |  SELECT o_custkey,
-        |    CASE WHEN o_orderkey <= (SELECT (max(o_orderkey) // 3) // 2
-        |                             FROM orders) THEN 2 ELSE 1 END
-        |      * CAST(round(o_totalprice * 100) AS BIGINT) AS c
-        |  FROM orders WHERE o_orderkey % 10 <> 0)
-        |SELECT o_custkey,
-        | CAST(sum(c) AS BIGINT) AS mv_sum,
-        | CAST(sum(c * c) AS BIGINT) AS mv_sumsq,
-        | CAST(count(*) AS BIGINT) AS mv_n
-        |FROM src GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
     // cross-generation fidelity through the layout change: the status
     // slice spans pre-evolution and value-routed files alike
     "sql_partition_evolve" ->
@@ -8491,18 +4421,6 @@ object Scans {
         |SELECT o_orderkey, o_custkey, o_totalprice FROM orders, b
         |WHERE NOT (o_orderkey BETWEEN b.c1 + 1 AND (3 * b.c1) // 2)
         |ORDER BY o_orderkey""".stripMargin,
-    // the incremental path (MV@v2 + change feed) must land exactly on
-    // the full recompute of the final table state: appended rows
-    // counted once, CoW-updated rows at their doubled value, exact
-    // long-space cents
-    "etl_mv_incremental" ->
-      """WITH b AS (SELECT (max(o_orderkey) // 3) // 2 AS h FROM orders)
-        |SELECT o_custkey,
-        | CAST(sum(CASE WHEN o_orderkey <= b.h THEN 2 ELSE 1 END *
-        |          CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |   AS sum_cents,
-        | CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders, b GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
     // both snapshot oracles recompute the committed batches from the
     // SOURCE table: the gate is what the manifest makes visible
     "sink_snapshot_commit" ->

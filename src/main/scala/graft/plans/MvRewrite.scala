@@ -163,14 +163,8 @@ object MvRewrite {
     // run inside this optimization too — emitting every bail twice
     // (advisor, round 15) and, worse, leaving an already-SERVED plan
     // in which applyAlways finds no source aggregate to explain.
-    val prevConf = spark.conf.getOption(ConfKey)
-    spark.conf.set(ConfKey, "false")
     val optimized =
-      try df.queryExecution.optimizedPlan
-      finally prevConf match {
-        case Some(v) => spark.conf.set(ConfKey, v)
-        case None    => spark.conf.unset(ConfKey)
-      }
+      graft.withConf(spark, ConfKey -> "false")(df.queryExecution.optimizedPlan)
     val sb = new StringBuilder
     diagSink.set(sb)
     try {

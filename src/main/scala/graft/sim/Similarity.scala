@@ -338,31 +338,18 @@ object Similarity {
       what: String,
       minJoins: Int = 2
   ): DataFrame = {
-    val rule = graft.plans.AnnIvfRewriteRule(spark)
-    val prev = spark.conf.getOption(graft.plans.AnnIvfRewrite.ConfKey)
-    val prevNp = spark.conf.getOption(graft.plans.AnnIvfRewrite.NprobeKey)
-    spark.conf.set(graft.plans.AnnIvfRewrite.ConfKey, "true")
-    spark.conf.set(
-      graft.plans.AnnIvfRewrite.NprobeKey,
-      graft.plans.AnnIvfRewrite.DefaultNprobe.toString
-    )
-    try {
-      val rewritten = rule(brute.queryExecution.optimizedPlan)
+    graft.withConf(
+      spark,
+      graft.plans.AnnIvfRewrite.ConfKey -> "true",
+      graft.plans.AnnIvfRewrite.NprobeKey -> graft.plans.AnnIvfRewrite.DefaultNprobe.toString
+    ) {
+      val rewritten = graft.plans.AnnIvfRewriteRule(spark)(brute.queryExecution.optimizedPlan)
       require(
         rewritten.collectFirst { case a if a.output.exists(_.name == "__cell") => a }.isDefined ||
           rewritten.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.length >= minJoins,
         s"$what ANN rewrite did not fire"
       )
       org.apache.spark.sql.GraftPlanBridge.ofRows(spark, rewritten)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(graft.plans.AnnIvfRewrite.ConfKey, v)
-        case None    => spark.conf.unset(graft.plans.AnnIvfRewrite.ConfKey)
-      }
-      prevNp match {
-        case Some(v) => spark.conf.set(graft.plans.AnnIvfRewrite.NprobeKey, v)
-        case None    => spark.conf.unset(graft.plans.AnnIvfRewrite.NprobeKey)
-      }
     }
   }
 

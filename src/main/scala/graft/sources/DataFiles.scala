@@ -77,16 +77,11 @@ object DataFiles {
     * type is a session-level setting in Spark's parquet writer, so it
     * is set for the duration of this write and restored after. */
   def write(spark: SparkSession, writer: DataFrameWriter[Row], dir: String): Unit = {
-    val prevTs = spark.conf.getOption(TimestampTypeKey)
-    spark.conf.set(TimestampTypeKey, "TIMESTAMP_MICROS")
-    try
+    graft.withConf(spark, TimestampTypeKey -> "TIMESTAMP_MICROS") {
       writer
         .option("compression", Codec.name.toLowerCase(java.util.Locale.ROOT))
         .option(BufferPoolKey, "false")
         .parquet(dir)
-    finally prevTs match {
-      case Some(v) => spark.conf.set(TimestampTypeKey, v)
-      case None    => spark.conf.unset(TimestampTypeKey)
     }
   }
 }

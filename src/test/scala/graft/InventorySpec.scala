@@ -3,35 +3,21 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Inventory consistency: module maps must not collide (Map ++ would
-  * silently drop queries) and every oracle must have a query. */
+  * silently drop queries) and every oracle must have a query. Iterates
+  * [[SparkEntry.modules]] itself, so a module is registered in one
+  * place. */
 class InventorySpec extends AnyFunSuite {
 
-  private val moduleMaps: Seq[(String, Map[String, Q])] = Seq(
-    "Scans" -> operators.Scans.queries,
-    "Project" -> operators.Project.queries,
-    "Aggregates" -> operators.Aggregates.queries,
-    "Joins" -> operators.Joins.queries,
-    "Windows" -> operators.Windows.queries,
-    "SetOps" -> operators.SetOps.queries,
-    "StreamingBatch" -> operators.StreamingBatch.queries,
-    "Etl" -> operators.Etl.queries,
-    "EventAnalytics" -> operators.EventAnalytics.queries,
-    "ScalarFns" -> functions.ScalarFns.queries,
-    "Udfs" -> functions.Udfs.queries,
-    "TextOps" -> text.TextOps.queries,
-    "Dedup" -> text.Dedup.queries,
-    "Similarity" -> sim.Similarity.queries,
-    "Multimodal" -> multimodal.Multimodal.queries
-  )
-
   test("no duplicate query keys across modules") {
-    val all = moduleMaps.flatMap { case (m, qs) => qs.keys.map(_ -> m) }
+    val all = SparkEntry.modules.flatMap { case (m, qs, _) => qs.keys.map(_ -> m) }
     val dups = all.groupBy(_._1).filter(_._2.size > 1)
     assert(dups.isEmpty, s"duplicate keys: $dups")
     assert(SparkEntry.queries.size == all.size)
   }
 
   test("every oracle key has a matching query; oracle SQL is non-empty") {
+    val oracleKeys = SparkEntry.modules.flatMap(_._3.keys)
+    assert(oracleKeys.size == oracleKeys.distinct.size, "an oracle key is declared twice")
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracles without queries: $orphans")
     SparkEntry.oracleSql.foreach { case (k, sql) =>

@@ -2980,4 +2980,18 @@ class MvSpec extends SparkTestBase {
     assert(avgRows == rewriteOff(avg("l_quantity"), count(lit(1)),
       sum("l_quantity")))
   }
+
+  test("MV serve keys resolve the MV from the session catalog's own warehouse") {
+    // a session that registered graft_cat itself, with its own
+    // warehouse: the keys must stage and serve under THAT warehouse
+    val wh = Files.createTempDirectory("graft_mv_wh").toString
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.graft_cat", classOf[graft.sources.SnapshotCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft_cat.warehouse", wh)
+    Seq("agg_mv_serve" -> "orders_srvmv", "agg_mv_serve_join" -> "orders_jmv").foreach {
+      case (key, mv) =>
+        assert(SparkEntry.queries(key)(s, sf0001).count() > 0, key)
+        assert(new java.io.File(s"$wh/main/$mv").isDirectory, s"$key: no $mv under $wh")
+    }
+  }
 }

@@ -101,4 +101,53 @@ class TablesSpec extends SparkTestBase {
       .collect()(0).getLong(0)
     assert(d == raw)
   }
+
+  // graft.withConf: the one save/set/restore of session confs
+  private val confA = "spark.graft.test.with_conf_a"
+  private val confB = "spark.graft.test.with_conf_b"
+
+  private def cleanConf(body: => Unit): Unit =
+    try body
+    finally Seq(confA, confB).foreach(spark.conf.unset)
+
+  test("withConf sets the value for the body and restores a previously set value") {
+    cleanConf {
+      spark.conf.set(confA, "old")
+      assert(withConf(spark, confA -> "new")(spark.conf.get(confA)) == "new")
+      assert(spark.conf.getOption(confA).contains("old"))
+    }
+  }
+
+  test("withConf unsets a previously absent key again") {
+    cleanConf {
+      assert(withConf(spark, confA -> "new")(spark.conf.get(confA)) == "new")
+      assert(spark.conf.getOption(confA).isEmpty)
+    }
+  }
+
+  test("withConf restores set and absent keys when the body throws; the exception propagates") {
+    cleanConf {
+      spark.conf.set(confA, "old")
+      val boom = new IllegalStateException("boom")
+      val thrown = intercept[IllegalStateException] {
+        withConf(spark, confA -> "new", confB -> "new")(throw boom)
+      }
+      assert(thrown eq boom)
+      assert(spark.conf.getOption(confA).contains("old"))
+      assert(spark.conf.getOption(confB).isEmpty)
+    }
+  }
+
+  test("withConf with two keys sets both and restores both") {
+    cleanConf {
+      spark.conf.set(confA, "a0")
+      spark.conf.set(confB, "b0")
+      val seen = withConf(spark, confA -> "a1", confB -> "b1") {
+        (spark.conf.get(confA), spark.conf.get(confB))
+      }
+      assert(seen == (("a1", "b1")))
+      assert(spark.conf.getOption(confA).contains("a0"))
+      assert(spark.conf.getOption(confB).contains("b0"))
+    }
+  }
 }
