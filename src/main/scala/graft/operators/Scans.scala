@@ -1315,17 +1315,6 @@ object Scans {
       .orderBy("o_orderkey")
   }
 
-  /** Z-ORDER clustering rewrite (round 11): lexicographic sortBy
-    * privileges the leading key — every file still spans the trailing
-    * key's whole domain, so probes on it prune nothing. `compact
-    * (zorderBy = orderkey, custkey)` rewrites on the
-    * [[graft.functions.ZCurve]] Morton value of equi-depth ranks
-    * instead, bounding every file's extent in BOTH dimensions — and
-    * the inline checks demand what only a space-filling curve can
-    * deliver: a single-column range probe on EACH key independently
-    * skips files. The served result is the custkey range read; stats
-    * can only exclude provably-disjoint files, so it is
-    * layout-independent and the oracle is the plain range SELECT. */
   /** STRING-KEY Z-ORDER (round 12): the r11 verdict's #2 — equi-depth
     * z-order cuts came from approxQuantile, which rejects STRING
     * columns, yet string keys (doc source, lang, URL host) are the
@@ -1375,6 +1364,17 @@ object Scans {
       .orderBy("o_orderkey")
   }
 
+  /** Z-ORDER clustering rewrite (round 11): lexicographic sortBy
+    * privileges the leading key — every file still spans the trailing
+    * key's whole domain, so probes on it prune nothing. `compact
+    * (zorderBy = orderkey, custkey)` rewrites on the
+    * [[graft.functions.ZCurve]] Morton value of equi-depth ranks
+    * instead, bounding every file's extent in BOTH dimensions — and
+    * the inline checks demand what only a space-filling curve can
+    * deliver: a single-column range probe on EACH key independently
+    * skips files. The served result is the custkey range read; stats
+    * can only exclude provably-disjoint files, so it is
+    * layout-independent and the oracle is the plain range SELECT. */
   val scanZorderPruned: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val table = tmp("orders_snapshot_zorder")
@@ -2061,7 +2061,7 @@ object Scans {
       gen1.subsetOf(entriesAfter.toSet),
       "refresh must carry the already-bloomed entries byte-identical")
     require(
-      entriesAfter.forall(_.contains("_bm")),
+      entriesAfter.forall(_.blooms.nonEmpty),
       "every live file must carry a bloom rider after the refresh")
     // idle refresh: nothing rider-less left → no version burned
     require(
@@ -3728,12 +3728,10 @@ object Scans {
     // PUBLISH: copy-first, one fast-forward commit (v3)
     val (v, moved) = SnapshotLog.publish(spark, table, "audit")
     require(v == 3 && moved.nonEmpty, s"publish must fast-forward main, got v$v")
-    val published = SnapshotLog.manifest(spark, table, v)
+    val published = SnapshotLog.manifestEntries(spark, table, v)
     require(
-      published.forall { e =>
-        !graft.sources.SnapshotLog.isExternal(e.split('\t')(0)) &&
-          !e.contains("_dv=v:/")
-      },
+      published.forall(e =>
+        !SnapshotLog.isExternal(e.name) && e.dv.forall(!SnapshotLog.isExternal(_))),
       s"published entries must all be owned relative names: $published")
     require(
       diskParquet() == mainOwned + moved.count(_.endsWith(".parquet")),

@@ -1671,21 +1671,22 @@ case class SnapshotSqlTable(
 
   private def metadataDeletePlan(
       predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]
-  ): Option[Seq[String]] =
+  ): Option[Seq[ManifestEntry]] =
     deleteRange(predicates).flatMap { case (c, lo, hi) =>
       val vs = SnapshotLog.versions(spark, path)
       if (vs.isEmpty) return Some(Nil)
-      val ranges = SnapshotLog.fileLongRanges(spark, path, vs.last, c)
-      val decided = ranges.map {
-        case (f, Some((mn, mx))) =>
-          if (mn >= lo && mx <= hi) Some(Some(f)) // fully inside: drop
-          else if (mx < lo || mn > hi) Some(None) // fully disjoint: keep
-          else None // straddles: undecidable
-        case (_, None) => None // blind file: undecidable
+      val pc = SnapshotLog.physColumn(spark, path, vs.last, c)
+      val decided = SnapshotLog.manifestEntries(spark, path, vs.last).map { e =>
+        e.longRange(pc) match {
+          case Some((mn, mx)) =>
+            if (mn >= lo && mx <= hi) Some(Some(e)) // fully inside: drop
+            else if (mx < lo || mn > hi) Some(None) // fully disjoint: keep
+            else None // straddles: undecidable
+          case None => None // blind file: undecidable
+        }
       }
-      if (decided.exists(_.isEmpty)) None
-      // the doomed files' entry lines, as the replace reads them
-      else Some(SnapshotLog.entriesNamed(spark, path, vs.last, decided.flatten.flatten))
+      // the doomed files' entries, as the replace reads them
+      if (decided.exists(_.isEmpty)) None else Some(decided.flatten.flatten)
     }
 
   override def canDeleteWhere(
@@ -2219,16 +2220,33 @@ class SnapshotSqlScan(
   /** Manifest names admitted by runtime predicates; None = unfiltered. */
   private var runtimeKept: Option[Set[String]] = None
 
-  /** One value's admission: the same stats ∩ bloom intersection the
-    * static EqualTo path takes. */
-  private def admitOne(c: String, v: Any): Set[String] = v match {
-    case l: java.lang.Long    => longRange(c, l, l).intersect(bloomSet(c, l))
-    case i: java.lang.Integer =>
-      longRange(c, i.toLong, i.toLong).intersect(bloomSet(c, i))
-    case s =>
-      val str = String.valueOf(s) // UTF8String → String
-      SnapshotLog.prunedFilesString(spark, path, c, str, str, Some(version))
-        ._1.toSet.intersect(bloomSet(c, str))
+  /** The manifest at the pinned version, read once for every pruning
+    * decision of this scan. */
+  private lazy val entries: Seq[ManifestEntry] =
+    SnapshotLog.manifestEntries(spark, path, version)
+
+  /** Names of the files that admit one of `alternatives` on logical
+    * column `c` — an alternative admits a file when all its probes do.
+    * One typed pass over the manifest. */
+  private def admitted(c: String, alternatives: Seq[Seq[ManifestEntry.Probe]]): Set[String] = {
+    val pc = SnapshotLog.physColumn(spark, path, version, c)
+    entries.collect {
+      case e if alternatives.exists(_.forall(ManifestEntry.admits(e, pc, _))) => e.name
+    }.toSet
+  }
+
+  private def between(c: String, lo: Long, hi: Long): Option[Set[String]] =
+    Some(admitted(c, Seq(Seq(ManifestEntry.LongBetween(lo, hi)))))
+
+  /** An equality's probes: the min/max stats AND the per-file bloom
+    * (when built) — stats win on clustered layouts, blooms on
+    * hash-distributed ones; both only exclude, so requiring both is
+    * safe. None for a value type neither can test. */
+  private def equalTo(v: Any): Option[Seq[ManifestEntry.Probe]] = v match {
+    case l: Long   => Some(Seq(ManifestEntry.LongBetween(l, l), ManifestEntry.BloomHolds(l)))
+    case i: Int    => Some(Seq(ManifestEntry.LongBetween(i, i), ManifestEntry.BloomHolds(i)))
+    case s: String => Some(Seq(ManifestEntry.StringBetween(s, s), ManifestEntry.BloomHolds(s)))
+    case _         => None
   }
 
   override def filter(
@@ -2253,34 +2271,24 @@ class SnapshotSqlScan(
       // string list degrades to ONE [min, max] envelope pass. An empty
       // IN (empty build side) admits nothing: no probe row can survive
       // the join this filter came from.
-      val admitted: Set[String] =
+      val longs = values.collect {
+        case l: java.lang.Long    => l.longValue()
+        case i: java.lang.Integer => i.longValue()
+      }
+      val admits: Set[String] =
         if (values.isEmpty) Set.empty
         else if (values.length <= 64)
-          values.map(v => admitOne(c, v)).reduce(_ union _)
+          admitted(c, values.flatMap {
+            case v @ (_: java.lang.Long | _: java.lang.Integer) => equalTo(v)
+            case s => equalTo(String.valueOf(s)) // UTF8String → String
+          })
+        else if (longs.length == values.length)
+          admitted(c, Seq(Seq(ManifestEntry.AnyLong(longs.distinct.sorted.toArray))))
         else {
-          val longs = values.collect {
-            case l: java.lang.Long    => l.longValue()
-            case i: java.lang.Integer => i.longValue()
-          }
-          if (longs.length == values.length) {
-            val keys = longs.distinct.sorted.toArray
-            def holdsKey(mn: Long, mx: Long): Boolean = {
-              val i = java.util.Arrays.binarySearch(keys, mn)
-              val at = if (i >= 0) i else -i - 1
-              at < keys.length && keys(at) <= mx
-            }
-            // a file without stats on the column must scan
-            SnapshotLog.fileLongRanges(spark, path, version, c).collect {
-              case (f, r) if r.forall { case (mn, mx) => holdsKey(mn, mx) } => f
-            }.toSet
-          } else {
-            val strs = values.map(String.valueOf(_))
-            SnapshotLog
-              .prunedFilesString(spark, path, c, strs.min, strs.max, Some(version))
-              ._1.toSet
-          }
+          val strs = values.map(String.valueOf(_))
+          admitted(c, Seq(Seq(ManifestEntry.StringBetween(strs.min, strs.max))))
         }
-      runtimeKept = Some(runtimeKept.fold(admitted)(_.intersect(admitted)))
+      runtimeKept = Some(runtimeKept.fold(admits)(_.intersect(admits)))
     }
     // unrecognized predicates are ignored: runtime filtering only
     // EXCLUDES files a subquery proved unmatched, never correctness
@@ -2289,54 +2297,33 @@ class SnapshotSqlScan(
   /** Manifest names surviving every pushed predicate's stats check —
     * the intersection, since pushed filters are conjunctive. */
   private lazy val keptFiles: Seq[String] = {
-    val all = SnapshotLog.manifest(spark, path, version)
-    var kept = all.toSet
+    var kept = entries.map(_.name).toSet
     pushed.foreach { f =>
-      val admitted: Option[Set[String]] = f match {
-        // equality consults BOTH the min/max stats and the per-file
-        // bloom index (when built): stats win on clustered layouts,
-        // blooms on hash-distributed ones; both only exclude, so the
-        // intersection is safe
-        case EqualTo(c, v: Long)  => Some(longRange(c, v, v).intersect(bloomSet(c, v)))
-        case EqualTo(c, v: Int)   => Some(longRange(c, v.toLong, v.toLong).intersect(bloomSet(c, v)))
-        case EqualTo(c, v: String) =>
-          Some(SnapshotLog.prunedFilesString(spark, path, c, v, v, Some(version))._1.toSet
-            .intersect(bloomSet(c, v)))
-        case GreaterThan(c, v: Long)        => Some(longRange(c, v, Long.MaxValue))
-        case GreaterThan(c, v: Int)         => Some(longRange(c, v.toLong, Long.MaxValue))
-        case GreaterThanOrEqual(c, v: Long) => Some(longRange(c, v, Long.MaxValue))
-        case GreaterThanOrEqual(c, v: Int)  => Some(longRange(c, v.toLong, Long.MaxValue))
-        case LessThan(c, v: Long)           => Some(longRange(c, Long.MinValue, v))
-        case LessThan(c, v: Int)            => Some(longRange(c, Long.MinValue, v.toLong))
-        case LessThanOrEqual(c, v: Long)    => Some(longRange(c, Long.MinValue, v))
-        case LessThanOrEqual(c, v: Int)     => Some(longRange(c, Long.MinValue, v.toLong))
+      val admits: Option[Set[String]] = f match {
+        case EqualTo(c, v)                  => equalTo(v).map(p => admitted(c, Seq(p)))
+        case GreaterThan(c, v: Long)        => between(c, v, Long.MaxValue)
+        case GreaterThan(c, v: Int)         => between(c, v.toLong, Long.MaxValue)
+        case GreaterThanOrEqual(c, v: Long) => between(c, v, Long.MaxValue)
+        case GreaterThanOrEqual(c, v: Int)  => between(c, v.toLong, Long.MaxValue)
+        case LessThan(c, v: Long)           => between(c, Long.MinValue, v)
+        case LessThan(c, v: Int)            => between(c, Long.MinValue, v.toLong)
+        case LessThanOrEqual(c, v: Long)    => between(c, Long.MinValue, v)
+        case LessThanOrEqual(c, v: Int)     => between(c, Long.MinValue, v.toLong)
         case LessThan(c, v: String) =>
-          Some(SnapshotLog.prunedFilesString(spark, path, c, "", v, Some(version))._1.toSet)
+          Some(admitted(c, Seq(Seq(ManifestEntry.StringBetween("", v)))))
         case LessThanOrEqual(c, v: String) =>
-          Some(SnapshotLog.prunedFilesString(spark, path, c, "", v, Some(version))._1.toSet)
+          Some(admitted(c, Seq(Seq(ManifestEntry.StringBetween("", v)))))
         case In(c, vs) if vs.nonEmpty =>
-          // union of per-value equality admissions — a file survives
-          // iff SOME listed value might live in it
-          Some(vs.map {
-            case v: Long   => longRange(c, v, v).intersect(bloomSet(c, v))
-            case v: Int    => longRange(c, v.toLong, v.toLong).intersect(bloomSet(c, v))
-            case v: String =>
-              SnapshotLog.prunedFilesString(spark, path, c, v, v, Some(version))
-                ._1.toSet.intersect(bloomSet(c, v))
-            case _ => all.toSet // defensive: unknown type never prunes
-          }.reduce(_ union _))
+          // a file survives iff SOME listed value might live in it; a
+          // value of another type never prunes
+          val probes = vs.toSeq.map(equalTo)
+          if (probes.exists(_.isEmpty)) None else Some(admitted(c, probes.flatten))
         case _ => None
       }
-      admitted.foreach(a => kept = kept.intersect(a))
+      admits.foreach(a => kept = kept.intersect(a))
     }
-    all.filter(kept) // manifest order
+    entries.map(_.name).filter(kept) // manifest order
   }
-
-  private def longRange(col: String, lo: Long, hi: Long): Set[String] =
-    SnapshotLog.prunedFiles(spark, path, col, lo, hi, Some(version))._1.toSet
-
-  private def bloomSet(col: String, v: Any): Set[String] =
-    SnapshotLog.prunedFilesBloom(spark, path, col, v, Some(version))._1.toSet
 
   override def readSchema(): StructType = {
     val withFile =
@@ -2393,7 +2380,7 @@ class SnapshotSqlScan(
     (topNPush, limitPush) match {
       case _ if bucketing.isDefined => keptFiles
       case (Some((col, asc, n)), _) =>
-        val stats = SnapshotLog.fileLongStats(spark, path, version, col).toMap
+        val stats = SnapshotLog.fileLongRanges(spark, path, version, col).toMap
         if (keptFiles.isEmpty ||
           keptFiles.exists(f =>
             stats.getOrElse(f, None).isEmpty || live.getOrElse(f, None).isEmpty))
@@ -2421,8 +2408,7 @@ class SnapshotSqlScan(
   }
 
   override def description(): String = {
-    val total = SnapshotLog.manifest(spark, path, version).length
-    s"graft-snapshot $path v$version, files=${plannedFiles.length}/$total, " +
+    s"graft-snapshot $path v$version, files=${plannedFiles.length}/${entries.length}, " +
       bucketing.map(b => s"buckets=${b._2}(${b._1}), ").getOrElse("") +
       limitPush.map(n => s"PushedLimit: $n, ").getOrElse("") +
       topNPush.map { case (c, asc, n) =>
@@ -2729,11 +2715,11 @@ class SnapshotRowLevelOperation(
     private[sources] val uniqueKey: Option[String] = None
 ) extends org.apache.spark.sql.connector.write.RowLevelOperation {
 
-  // the groups the scan planned, as entry lines at the scan's version —
+  // the groups the scan planned, as entries at the scan's version —
   // what the write's commit replaces (verified verbatim, so a deletion
   // vector landing on a group mid-rewrite is a loud conflict)
   private[sources] val scannedFiles =
-    new java.util.concurrent.atomic.AtomicReference[Seq[String]](null)
+    new java.util.concurrent.atomic.AtomicReference[Seq[ManifestEntry]](null)
 
   override def command(): org.apache.spark.sql.connector.write.RowLevelOperation.Command = cmd
 
@@ -2896,7 +2882,7 @@ case class SnapshotReplaceBatchWrite(
     def audit(): Unit = op.uniqueKey.foreach(k =>
       SnapshotLog.validateUniqueKeys(
         sp, path, k, names, commitSchema,
-        excludeFiles = removed.map(_.takeWhile(_ != '\t')).toSet))
+        excludeFiles = removed.map(_.name).toSet))
     if (needAudit) audit()
     SnapshotLog.commit(
       sp, path,

@@ -23,7 +23,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   *     pointer — so commit cost stays O(batch) as the table grows;
   *     every [[FoldEvery]]th version (and every overwrite) folds to a
   *     full-list CHECKPOINT, bounding resolution to <FoldEvery parent
-  *     hops. The manifest is claimed by rename-into-place,
+  *     hops. Each live file is one entry line, its name plus footer
+  *     stats and riders; [[ManifestEntry]] owns that grammar and parses
+  *     each line once, when its commit file is first read. The
+  *     manifest is claimed by rename-into-place,
   *     which refuses to replace an existing destination — so version
   *     numbers are an optimistic-concurrency token: two concurrent
   *     appends race on `v N+1`, the loser re-reads the winner's list
@@ -69,7 +72,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType,
   * MV fold, ALTER, restore, clone, publish, bloom, OPTIMIZE and the SQL
   * catalog's DSv2 commits — builds one [[CommitRequest]] value: what
   * lands (a DataFrame to stage, files a writer already landed, or whole
-  * entry lines), the entries it removes or amends as it read them, a
+  * manifest entries), the entries it removes or amends as it read them, a
   * txn id, header tokens, a bucket spec and a `preCommit` hook. The
   * one [[commit]] then runs a fixed order: refuse a filesystem no
   * [[CommitBackend]] covers; validate the txn id and header tokens and
@@ -452,8 +455,10 @@ object SnapshotLog {
     }
   }
 
-  /** One parsed commit file: header, own lines, and (lazily) the
-    * decoded schema and the RESOLVED live entry list at this version.
+  /** One parsed commit file: header, own removals and entries (each
+    * line parsed once, here), and (lazily) the decoded schema and the
+    * RESOLVED live entry list at this version — a delta's list shares
+    * its parent's entry objects.
     * Cached under the commit file's (mtime, length) identity — commit
     * files are write-once (the publish is a conditional put / O_EXCL
     * claim, and nothing ever rewrites one: [[expire]] deletes data
@@ -466,15 +471,16 @@ object SnapshotLog {
       val mtime: Long,
       val len: Long,
       val header: String,
-      val ownLines: Seq[String]) {
+      val removed: Seq[String],
+      val added: Seq[ManifestEntry]) {
     lazy val schemaOpt: Option[StructType] =
       headerToken(header, "schema")
         .map(t => DataType.fromJson(unb64(t)).asInstanceOf[StructType])
-    @volatile var resolvedEntries: Seq[String] = null
+    @volatile var resolvedEntries: Seq[ManifestEntry] = null
   }
 
   /** Bounded LRU of parsed commit files (driver-side metadata only —
-    * headers + file-name lines, never data). 8192 entries bounds a
+    * headers + typed manifest entries, never data). 8192 entries bounds a
     * long bench session; one lifecycle table's whole history is a
     * handful of entries. */
   private val commitCache =
@@ -510,21 +516,12 @@ object SnapshotLog {
         .filter(_.nonEmpty)
         .toList
       finally in.close()
+    val (removals, adds) = lines.drop(1).partition(_.startsWith("-"))
     val cf = new CommitFile(
-      st.getModificationTime, st.getLen,
-      lines.headOption.getOrElse(""), lines.drop(1))
+      st.getModificationTime, st.getLen, lines.headOption.getOrElse(""),
+      removals.map(_.stripPrefix("-")), adds.map(ManifestEntry.parse))
     commitCache.put(key, cf)
     cf
-  }
-
-  /** One commit file's header + own lines, verbatim. */
-  private def readCommitFile(
-      spark: SparkSession,
-      table: String,
-      version: Int
-  ): (String, Seq[String]) = {
-    val cf = commitFile(spark, table, version)
-    (cf.header, cf.ownLines)
   }
 
   /** `key=value` token from a commit header (`append parent=3 txn=b1`). */
@@ -533,12 +530,8 @@ object SnapshotLog {
       case t if t.startsWith(s"$key=") => t.stripPrefix(s"$key=")
     }
 
-  /** Full manifest lines at `version`: `<file>` or
-    * `<file>\t<col>=l:<min>:<max>;<col>=d:<min>:<max>;...` — the
-    * per-file column-stats suffix (INT64/INT32/DOUBLE/short-STRING
-    * min/max lifted from the parquet FOOTER at commit time,
-    * metadata-only) that powers file-level data skipping in
-    * [[readPruned]].
+  /** The live entries at `version` ([[ManifestEntry]] owns the line
+    * grammar: name, footer stats and riders).
     *
     * A DELTA commit (header carries `parent=N`) lists only its OWN
     * lines; the live set is the parent's resolved set, minus any
@@ -552,17 +545,15 @@ object SnapshotLog {
       spark: SparkSession,
       table: String,
       version: Int
-  ): Seq[String] = {
+  ): Seq[ManifestEntry] = {
     val cf = commitFile(spark, table, version)
     val hit = cf.resolvedEntries
     if (hit != null) return hit
-    val (removals, adds) = cf.ownLines.partition(_.startsWith("-"))
     val resolved = headerToken(cf.header, "parent") match {
       case Some(p) =>
-        val removed = removals.map(_.stripPrefix("-")).toSet
-        manifestEntries(spark, table, p.toInt)
-          .filterNot(e => removed(e.split('\t')(0))) ++ adds
-      case None => adds
+        val removed = cf.removed.toSet
+        manifestEntries(spark, table, p.toInt).filterNot(e => removed(e.name)) ++ cf.added
+      case None => cf.added
     }
     cf.resolvedEntries = resolved
     resolved
@@ -579,8 +570,7 @@ object SnapshotLog {
       table: String,
       version: Int
   ): Seq[(String, Option[Long], Option[Long])] =
-    manifestEntries(spark, table, version)
-      .map(e => (entryName(e), entrySize(e), entryRows(e)))
+    manifestEntries(spark, table, version).map(e => (e.name, e.size, e.rows))
 
   /** Per-file LIVE row counts (`_rc` minus the deletion vector's
     * `_dvc`) at `version` — the planning currency of limit/top-N file
@@ -591,31 +581,7 @@ object SnapshotLog {
       table: String,
       version: Int
   ): Seq[(String, Option[Long])] =
-    manifestEntries(spark, table, version).map(e =>
-      entryName(e) -> entryRows(e).map(_ - entryDvCount(e).getOrElse(0L)))
-
-  /** Per-file `[min,max]` of `column` in LONG space (the `l:`/`i:`
-    * stat riders; other types yield None) at `version` — feeds the
-    * catalog's top-N file pruning. The bounds are the FOOTER's, so
-    * under a deletion vector an extremum may be dead: callers may use
-    * them only where a stale bound widens a kept set (superset-safe),
-    * never to answer an extremum exactly ([[metadataRange]] owns that
-    * refusal). */
-  def fileLongStats(
-      spark: SparkSession,
-      table: String,
-      version: Int,
-      column: String
-  ): Seq[(String, Option[(Long, Long)])] = {
-    val pc = physColumn(spark, table, version, column)
-    manifestEntries(spark, table, version).map { e =>
-      entryName(e) -> entryStat(e, pc).flatMap(_.split(':') match {
-        case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-        case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-        case _                  => None
-      })
-    }
-  }
+    manifestEntries(spark, table, version).map(e => e.name -> e.liveRows)
 
   /** Commit-file modification time (epoch ms) — TIMESTAMP AS OF
     * resolution, the rule the table formats use: mtimes are written in
@@ -626,7 +592,7 @@ object SnapshotLog {
 
   /** Live data files (relative names) at `version`. */
   def manifest(spark: SparkSession, table: String, version: Int): Seq[String] =
-    manifestEntries(spark, table, version).map(_.split('\t')(0))
+    manifestEntries(spark, table, version).map(_.name)
 
   private def b64(s: String): String =
     java.util.Base64.getUrlEncoder.withoutPadding
@@ -683,7 +649,7 @@ object SnapshotLog {
     * by the FILE's column names (they are lifted from footers), so every
     * stats-driven API maps its caller's logical column first. Identity
     * for unmapped tables and unknown columns. */
-  private def physColumn(
+  private[sources] def physColumn(
       spark: SparkSession,
       table: String,
       version: Int,
@@ -748,18 +714,18 @@ object SnapshotLog {
       merged ++ added.map(f => StructField(f.name, f.dataType, nullable = true, f.metadata)))
   }
 
-  /** Footer min/max stats suffix for one landed parquet file —
-    * INT64 (`l:`), INT32 (`i:`, covers DATE whose physical type is
-    * days-as-int32), DOUBLE (`d:`) and short UTF8 STRING (`s:`,
-    * base64url-wrapped so separators can't collide, whole values only —
-    * see [[MaxStringStatBytes]]) top-level columns with statistics
+  /** Row count and footer min/max stats of one landed parquet file —
+    * INT64, INT32 (covers DATE whose physical type is days-as-int32),
+    * DOUBLE and short UTF8 STRING (whole values only — see
+    * [[MaxStringStatBytes]]) top-level columns with statistics
     * present in EVERY row group (a column missing stats anywhere is
     * omitted and can never prune). Metadata-only read, no data pages
     * touched. */
-  private def statsSuffix(
+  private def footerStats(
       hconf: org.apache.hadoop.conf.Configuration,
       file: Path
-  ): (Long, String) = {
+  ): (Long, Seq[(String, ManifestEntry.ColumnStat)]) = {
+    import ManifestEntry.{BytesRange, DoubleRange, LongRange, compareBytes}
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -774,10 +740,9 @@ object SnapshotLog {
             (c.getPath.toDotString, c.getPrimitiveType, c.getStatistics)
           }
         }
-      val perColStr = perCol
+      val stats = perCol
         .groupBy(_._1)
         .toSeq
-        .sortBy(_._1)
         .flatMap { case (col, chunks) =>
           val ok = chunks.forall { case (_, _, st) =>
             st != null && !st.isEmpty && st.hasNonNullValue
@@ -788,15 +753,15 @@ object SnapshotLog {
               case PrimitiveTypeName.INT64 =>
                 val mins = chunks.map(_._3.genericGetMin.asInstanceOf[java.lang.Long].longValue)
                 val maxs = chunks.map(_._3.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-                Some(s"$col=l:${mins.min}:${maxs.max}")
+                Some(col -> LongRange(mins.min, maxs.max))
               case PrimitiveTypeName.INT32 =>
                 val mins = chunks.map(_._3.genericGetMin.asInstanceOf[java.lang.Integer].intValue)
                 val maxs = chunks.map(_._3.genericGetMax.asInstanceOf[java.lang.Integer].intValue)
-                Some(s"$col=i:${mins.min}:${maxs.max}")
+                Some(col -> LongRange(mins.min.toLong, maxs.max.toLong, int32 = true))
               case PrimitiveTypeName.DOUBLE =>
                 val mins = chunks.map(_._3.genericGetMin.asInstanceOf[java.lang.Double].doubleValue)
                 val maxs = chunks.map(_._3.genericGetMax.asInstanceOf[java.lang.Double].doubleValue)
-                Some(s"$col=d:${mins.min}:${maxs.max}")
+                Some(col -> DoubleRange(mins.min, maxs.max))
               case PrimitiveTypeName.BINARY
                   if chunks.head._2.getLogicalTypeAnnotation
                     .isInstanceOf[org.apache.parquet.schema.LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
@@ -806,29 +771,12 @@ object SnapshotLog {
                 val mn = mins.reduce((a, b) => if (compareBytes(a, b) <= 0) a else b)
                 val mx = maxs.reduce((a, b) => if (compareBytes(a, b) >= 0) a else b)
                 if (mn.length > MaxStringStatBytes || mx.length > MaxStringStatBytes) None
-                else {
-                  val enc = java.util.Base64.getUrlEncoder.withoutPadding
-                  Some(s"$col=s:${enc.encodeToString(mn)}:${enc.encodeToString(mx)}")
-                }
+                else Some(col -> BytesRange(mn, mx))
               case _ => None
             }
         }
-        .mkString(";")
-      (rowCount, perColStr)
+      (rowCount, stats)
     } finally reader.close()
-  }
-
-  /** Unsigned byte-wise lexicographic compare — parquet's UTF8 binary
-    * sort order (Java String compare disagrees past the BMP). */
-  private def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    a.length - b.length
   }
 
   /** Lands `df` as uniquely-named parquet files in the table directory
@@ -918,10 +866,10 @@ object SnapshotLog {
     final case class Landed(files: Seq[(String, Option[Int])], schema: StructType)
         extends CommitData
 
-    /** Whole manifest entry lines (name plus riders), committed as
+    /** Whole manifest entries (name plus riders), committed as
       * spelled — restore, clone, publish and ALTER carry entries
       * verbatim. */
-    final case class Entries(lines: Seq[String], schema: StructType)
+    final case class Entries(entries: Seq[ManifestEntry], schema: StructType)
         extends CommitData
 
     /** Un-bucketed landed files. */
@@ -934,8 +882,8 @@ object SnapshotLog {
     *
     *   - `overwrite`: the manifest lists exactly this commit's lines
     *     and its schema replaces the table's.
-    *   - `removals`: Some = a REPLACE, listing the manifest entry
-    *     lines (name plus riders) of the files it takes out, as the
+    *   - `removals`: Some = a REPLACE, listing the manifest entries
+    *     (name plus riders) of the files it takes out, as the
     *     writer read them; untouched files carry by reference. Some(Nil)
     *     is a replace that removes nothing (a MoR delta of inserts
     *     only).
@@ -965,8 +913,8 @@ object SnapshotLog {
   final case class CommitRequest(
       data: CommitData,
       overwrite: Boolean = false,
-      removals: Option[Seq[String]] = None,
-      amendments: Seq[(String, String)] = Nil,
+      removals: Option[Seq[ManifestEntry]] = None,
+      amendments: Seq[(ManifestEntry, ManifestEntry)] = Nil,
       txnId: Option[String] = None,
       dataChange: Boolean = true,
       header: Seq[String] = Nil,
@@ -1062,7 +1010,7 @@ object SnapshotLog {
           req.buckets.isDefined || files.forall(_._2.isEmpty),
           "snapshot commit: bucket ids need the request's bucket spec")
         (annotateEntries(spark, table, files), schema)
-      case CommitData.Entries(lines, schema) => (lines, schema)
+      case CommitData.Entries(entries, schema) => (entries, schema)
     }
     val late = req.headerAfterStaging.fold(Seq.empty[String])(_())
     late.foreach(requireHeaderToken)
@@ -1076,7 +1024,7 @@ object SnapshotLog {
       spark: SparkSession,
       table: String,
       req: CommitRequest,
-      added: Seq[String],
+      added: Seq[ManifestEntry],
       batchSchema: StructType,
       tokens: Seq[String]
   ): Int = {
@@ -1084,7 +1032,7 @@ object SnapshotLog {
     f.mkdirs(new Path(s"$table/$LogDir"))
     val replace = req.removals.isDefined || req.amendments.nonEmpty
     val read = req.removals.getOrElse(Nil) ++ req.amendments.map(_._1)
-    val removals = read.map(entryName)
+    val removals = read.map(_.name)
     val landed = req.amendments.map(_._2) ++ added
     val lock = claimLocks.computeIfAbsent(table, _ => new Object)
     var attempts = 0
@@ -1108,13 +1056,13 @@ object SnapshotLog {
                 s"snapshot replace: files already removed by a concurrent " +
                   s"commit: ${gone.mkString(", ")}"
               )
-            val cur = manifestEntries(spark, table, prev.get).toSet
-            val drifted = read.filterNot(cur)
+            val cur = manifestEntries(spark, table, prev.get).map(_.line).toSet
+            val drifted = read.filterNot(e => cur(e.line))
             if (drifted.nonEmpty)
               throw new java.util.ConcurrentModificationException(
                 s"snapshot replace: entry riders changed under a concurrent " +
                   s"commit (re-run the rewrite): " +
-                  drifted.map(entryName).mkString(", ")
+                  drifted.map(_.name).mkString(", ")
               )
           }
           req.preCommit(prev)
@@ -1134,14 +1082,14 @@ object SnapshotLog {
           // Overwrites are naturally full lists.
           val delta = !req.overwrite && prev.isDefined && next % FoldEvery != 0
           val lines =
-            if (req.overwrite) landed
-            else if (delta) removals.map("-" + _) ++ landed
+            if (req.overwrite) landed.map(_.line)
+            else if (delta) removals.map("-" + _) ++ landed.map(_.line)
             else {
               val removed = removals.toSet
-              prev
+              (prev
                 .map(manifestEntries(spark, table, _))
                 .getOrElse(Nil)
-                .filterNot(e => removed(entryName(e))) ++ landed
+                .filterNot(e => removed(e.name)) ++ landed).map(_.line)
             }
           val action =
             (if (req.overwrite) "overwrite" else if (replace) "replace" else "append") +
@@ -1196,7 +1144,7 @@ object SnapshotLog {
   /** Header line (`append` / `overwrite` / `replace`, plus its
     * key=value tokens) of `version`'s manifest. */
   private def header(spark: SparkSession, table: String, version: Int): String =
-    readCommitFile(spark, table, version)._1
+    commitFile(spark, table, version).header
 
   /** txn → version map per table, maintained INCREMENTALLY: on lookup
     * only versions newer than the last scan are read, so a streaming
@@ -1327,18 +1275,17 @@ object SnapshotLog {
     (v, names.size, files.size - names.size)
   }
 
-  /** Entry lines (name + stats suffix) for landed files, each tagged
-    * with its bucket id (`_bk=k:`) when it has one. Footer stats ride
-    * the manifest so reads can skip files without opening them; the
-    * byte size (`_sz=z:`) and row count (`_rc=r:`) ride the same
-    * suffix, so compaction planning and DESCRIBE HISTORY never
+  /** Manifest entries for landed files, each tagged with its bucket
+    * id when it has one. Footer stats ride the manifest so reads can
+    * skip files without opening them; the byte size and row count
+    * ride the same entry, so compaction planning and DESCRIBE HISTORY never
     * stat/open files one by one — at 1e6 files on an object store that
     * is 1e6 metadata round trips. */
   private def annotateEntries(
       spark: SparkSession,
       table: String,
       landed: Seq[(String, Option[Int])]
-  ): Seq[String] = {
+  ): Seq[ManifestEntry] = {
     val f = fs(spark, table)
     // ONE session-derived Hadoop conf for the whole batch: the footer
     // readers must see SQL-level fs/parquet overrides (the reason the
@@ -1346,13 +1293,11 @@ object SnapshotLog {
     // FILE was the old serial path's hidden cost — once per commit is
     // the right granularity.
     val hconf = spark.sessionState.newHadoopConf()
-    def annotate(file: (String, Option[Int])): String = {
+    def annotate(file: (String, Option[Int])): ManifestEntry = {
       val (name, bucket) = file
-      val (rows, stats) = statsSuffix(hconf, new Path(s"$table/$name"))
-      val size =
-        s"_sz=z:${f.getFileStatus(new Path(s"$table/$name")).getLen};_rc=r:$rows"
-      val suffix = if (stats.isEmpty) size else s"$size;$stats"
-      s"$name\t$suffix${bucket.fold("")(b => s";_bk=k:$b")}"
+      val (rows, stats) = footerStats(hconf, new Path(s"$table/$name"))
+      ManifestEntry.fresh(
+        name, f.getFileStatus(new Path(s"$table/$name")).getLen, rows, stats, bucket)
     }
     // footer reads are independent metadata round-trips — run them in
     // parallel (optimization round 19, guide §6): a commit of N files
@@ -1366,8 +1311,8 @@ object SnapshotLog {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
       try {
         val tasks = landed.map { file =>
-          pool.submit(new java.util.concurrent.Callable[String] {
-            override def call(): String = annotate(file)
+          pool.submit(new java.util.concurrent.Callable[ManifestEntry] {
+            override def call(): ManifestEntry = annotate(file)
           })
         }
         tasks.map(t =>
@@ -1436,16 +1381,6 @@ object SnapshotLog {
       spark, table, manifestEntries(spark, table, v), tableSchema(spark, table, v))
   }
 
-  private def entryName(e: String): String = e.split('\t')(0)
-
-  private def entryStat(e: String, column: String): Option[String] = {
-    val parts = e.split('\t')
-    if (parts.length < 2) None
-    else
-      parts(1).split(';').find(_.startsWith(s"$column="))
-        .map(_.stripPrefix(s"$column="))
-  }
-
   /** File names at `version` whose manifest stats admit rows with
     * `column` in `[lo, hi]` — a file is kept when it has no stats for
     * the column (skipping must never lose rows) or its [min,max]
@@ -1458,6 +1393,17 @@ object SnapshotLog {
       lo: Long,
       hi: Long,
       version: Option[Int] = None
+  ): (Seq[String], Int) =
+    prunedBy(spark, table, column, ManifestEntry.LongBetween(lo, hi), version)
+
+  /** (names of the files at `version` that [[ManifestEntry.admits]]
+    * `probe` on `column`, live file count). */
+  private def prunedBy(
+      spark: SparkSession,
+      table: String,
+      column: String,
+      probe: ManifestEntry.Probe,
+      version: Option[Int]
   ): (Seq[String], Int) = {
     val vs = versions(spark, table)
     require(vs.nonEmpty, s"snapshot read: no commits in $table")
@@ -1465,20 +1411,7 @@ object SnapshotLog {
     require(vs.contains(v), s"snapshot read: version $v not in $vs")
     val pc = physColumn(spark, table, v, column)
     val entries = manifestEntries(spark, table, v)
-    val kept = entries.filter { e =>
-      entryStat(e, pc) match {
-        case None => true // no stats / column unstated: must scan
-        case Some(s) =>
-          s.split(':') match {
-            case Array("l", mn, mx) => !(mx.toLong < lo || mn.toLong > hi)
-            case Array("i", mn, mx) => !(mx.toLong < lo || mn.toLong > hi)
-            case Array("d", mn, mx) =>
-              !(mx.toDouble < lo.toDouble || mn.toDouble > hi.toDouble)
-            case _ => true
-          }
-      }
-    }
-    (kept.map(entryName), entries.length)
+    (entries.filter(ManifestEntry.admits(_, pc, probe)).map(_.name), entries.length)
   }
 
   /** String-range twin of [[prunedFiles]]: keeps files whose UTF8
@@ -1493,30 +1426,8 @@ object SnapshotLog {
       lo: String,
       hi: String,
       version: Option[Int] = None
-  ): (Seq[String], Int) = {
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"snapshot read: no commits in $table")
-    val v = version.getOrElse(vs.last)
-    require(vs.contains(v), s"snapshot read: version $v not in $vs")
-    val loB = lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val hiB = hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val dec = java.util.Base64.getUrlDecoder
-    val pc = physColumn(spark, table, v, column)
-    val entries = manifestEntries(spark, table, v)
-    val kept = entries.filter { e =>
-      entryStat(e, pc) match {
-        case None => true
-        case Some(s) =>
-          s.split(':') match {
-            case Array("s", mn, mx) =>
-              !(compareBytes(dec.decode(mx), loB) < 0 ||
-                compareBytes(dec.decode(mn), hiB) > 0)
-            case _ => true
-          }
-      }
-    }
-    (kept.map(entryName), entries.length)
-  }
+  ): (Seq[String], Int) =
+    prunedBy(spark, table, column, ManifestEntry.StringBetween(lo, hi), version)
 
   // --- per-file BLOOM FILTER index ----------------------------------
   //
@@ -1532,30 +1443,6 @@ object SnapshotLog {
   // are built over PHYSICAL rows (a DV'd dead row may contribute a
   // false positive — harmless) and keyed by the column's PHYSICAL name
   // so they survive metadata-only renames like footer stats do.
-
-  private val BloomBits = 4096
-  private val BloomK = 5
-
-  private[sources] def bloomIndexes(value: Array[Byte]): Seq[Int] = {
-    import scala.util.hashing.MurmurHash3
-    val h1 = MurmurHash3.bytesHash(value, 0x9747b28c)
-    val h2 = MurmurHash3.bytesHash(value, 0x85ebca6b) | 1
-    (0 until BloomK).map(i => math.floorMod(h1 + i * h2, BloomBits))
-  }
-
-  private[sources] def bloomValueBytes(v: Any): Array[Byte] = v match {
-    case l: java.lang.Long    => java.nio.ByteBuffer.allocate(8).putLong(l).array()
-    case i: java.lang.Integer => bloomValueBytes(i.longValue(): java.lang.Long)
-    case s: String            => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    case other =>
-      throw new UnsupportedOperationException(
-        s"bloom index: unsupported value type ${other.getClass.getSimpleName} " +
-          "(long/int/string)")
-  }
-
-  private def bloomKey(pc: String): String =
-    java.util.Base64.getUrlEncoder.withoutPadding
-      .encodeToString(pc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Builds (or rebuilds) the per-file bloom index for `column` over
     * every live file and commits it as rider tokens in a
@@ -1582,33 +1469,30 @@ object SnapshotLog {
     val v = vs.last
     val allEntries = manifestEntries(spark, table, v)
     require(allEntries.nonEmpty, s"snapshot bloom: empty table $table")
-    val pcEarly = physColumn(spark, table, v, column)
+    val pc = physColumn(spark, table, v, column)
     val entries =
       if (!onlyMissing) allEntries
-      else allEntries.filterNot(e =>
-        e.split('\t').lift(1).exists(
-          _.split(';').exists(_.startsWith(s"_bm${bloomKey(pcEarly)}="))))
+      else allEntries.filterNot(_.blooms.contains(pc))
     if (entries.isEmpty) return v
-    requireUniqueBases(entries.map(entryName), "snapshot bloom build")
+    requireUniqueBases(entries.map(_.name), "snapshot bloom build")
     val schema = tableSchema(spark, table, v)
-    val pc = physColumn(spark, table, v, column)
     val readCol = schema match {
       case Some(s) if isMapped(s) => pc
       case _                      => column
     }
-    val withFile = readFiles(spark, table, entries.map(entryName), schema,
+    val withFile = readFiles(spark, table, entries.map(_.name), schema,
       aliasLogical = false)
       .select(
         col(readCol),
         element_at(splitCol(col("_metadata.file_path"), "/"), -1).as("__f"))
-    val words = BloomBits / 64
+    val words = ManifestEntry.BloomBits / 64
     val partials: Array[(String, Array[Long])] = withFile.rdd
       .mapPartitions { it =>
         val m = scala.collection.mutable.HashMap.empty[String, Array[Long]]
         it.foreach { r =>
           if (!r.isNullAt(0)) {
             val arr = m.getOrElseUpdate(r.getString(1), new Array[Long](words))
-            bloomIndexes(bloomValueBytes(r.get(0)))
+            ManifestEntry.bloomIndexes(ManifestEntry.bloomValueBytes(r.get(0)))
               .foreach(ix => arr(ix >> 6) |= (1L << (ix & 63)))
           }
         }
@@ -1622,8 +1506,6 @@ object SnapshotLog {
         as.foreach(p => { var i = 0; while (i < words) { acc(i) |= p._2(i); i += 1 } })
         f -> acc
       }
-    val key = bloomKey(pc)
-    val enc = java.util.Base64.getUrlEncoder.withoutPadding
     // only the entries that actually gained a bloom are re-spelled; the
     // rest carry into the new version BY REFERENCE through the replace
     // delta — and the commit is CONFLICT-CHECKED against the tip at
@@ -1643,24 +1525,11 @@ object SnapshotLog {
     // onlyMissing refresh re-reads the file forever and, when no
     // selected file produced bits, committed an EMPTY replace delta,
     // burning a version per call (advisor, round 14)
-    val touched = entries
-    val amendments = touched.map { e =>
-      val bits =
-        merged.getOrElse(baseName(entryName(e)), new Array[Long](words))
-      val bb = java.nio.ByteBuffer.allocate(words * 8)
-      bits.foreach(bb.putLong)
-      val tok = s"_bm$key=b:${enc.encodeToString(bb.array())}"
-      val parts = e.split('\t')
-      val suffix0 =
-        if (parts.length < 2) ""
-        else
-          parts(1).split(';')
-            .filterNot(_.startsWith(s"_bm$key=")).mkString(";")
-      val suffix = (if (suffix0.isEmpty) "" else suffix0 + ";") + tok
-      e -> s"${entryName(e)}\t$suffix"
+    val amendments = entries.map { e =>
+      e -> e.withBloom(pc, merged.getOrElse(baseName(e.name), new Array[Long](words)))
     }
     val commitSchema = schema.getOrElse(
-      readFiles(spark, table, entries.map(entryName), None).schema)
+      readFiles(spark, table, entries.map(_.name), None).schema)
     commit(
       spark, table,
       CommitRequest(
@@ -1684,32 +1553,23 @@ object SnapshotLog {
     require(vs.nonEmpty, s"backfillStats: no commits in $table")
     val v = vs.last
     val entries = manifestEntries(spark, table, v)
-    val missing = entries.filter(e =>
-      entryRows(e).isEmpty || entrySize(e).isEmpty)
+    val missing = entries.filter(e => e.rows.isEmpty || e.size.isEmpty)
     if (missing.isEmpty) return 0
     val f = fs(spark, table)
     val conf = spark.sessionState.newHadoopConf()
     val amendments = missing.map { e =>
-      val name = entryName(e)
       // dataPath, not s"$table/$name": a CLONED table's entries are
       // absolute external references, exactly the pre-rider
       // population this pass exists to heal
-      val p = new Path(dataPath(table, name))
+      val p = new Path(dataPath(table, e.name))
       val len = f.getFileStatus(p).getLen
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       val rows = try reader.getRecordCount finally reader.close()
-      val parts = e.split('\t')
-      val kept =
-        if (parts.length < 2) ""
-        else parts(1).split(';')
-          .filterNot(t => t.startsWith("_sz=") || t.startsWith("_rc="))
-          .mkString(";")
-      val tok = s"_sz=z:$len;_rc=r:$rows"
-      e -> s"$name\t${if (kept.isEmpty) tok else s"$kept;$tok"}"
+      e -> e.withSizeAndRows(len, rows)
     }
     val commitSchema = tableSchema(spark, table, v).getOrElse(
-      readFiles(spark, table, missing.map(entryName), None).schema)
+      readFiles(spark, table, missing.map(_.name), None).schema)
     commit(
       spark, table,
       CommitRequest(
@@ -1719,27 +1579,15 @@ object SnapshotLog {
   }
 
   /** PHYSICAL column names any live file carries a bloom rider for at
-    * `version` (`_bm<urlb64(col)>=b:` tokens) — ONE manifest read, no
+    * `version` ([[ManifestEntry.blooms]]) — ONE manifest read, no
     * header scan, so the scan can advertise runtime-filterable columns
     * at plan time without O(versions) metadata IO. */
   def bloomPhysColumns(
       spark: SparkSession,
       table: String,
       version: Int
-  ): Set[String] = {
-    val dec = java.util.Base64.getUrlDecoder
-    manifestEntries(spark, table, version).flatMap { e =>
-      val parts = e.split('\t')
-      if (parts.length < 2) Seq.empty[String]
-      else
-        parts(1).split(';').toSeq.collect {
-          case t if t.startsWith("_bm") && t.contains("=b:") =>
-            new String(
-              dec.decode(t.substring(3, t.indexOf("=b:"))),
-              java.nio.charset.StandardCharsets.UTF_8)
-        }
-    }.toSet
-  }
+  ): Set[String] =
+    manifestEntries(spark, table, version).flatMap(_.blooms.keys).toSet
 
   /** Files at `version` whose bloom says `column = value` is POSSIBLE —
     * blind files (no bloom for the column) always kept, so the result
@@ -1750,27 +1598,8 @@ object SnapshotLog {
       column: String,
       value: Any,
       version: Option[Int] = None
-  ): (Seq[String], Int) = {
-    val vs = versions(spark, table)
-    require(vs.nonEmpty, s"snapshot read: no commits in $table")
-    val v = version.getOrElse(vs.last)
-    val pc = physColumn(spark, table, v, column)
-    val key = bloomKey(pc)
-    val ixs = bloomIndexes(bloomValueBytes(value))
-    val dec = java.util.Base64.getUrlDecoder
-    val entries = manifestEntries(spark, table, v)
-    val kept = entries.filter { e =>
-      entryToken(e, s"_bm$key=b:") match {
-        case None => true
-        case Some(b) =>
-          val bytes = dec.decode(b)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-          val bits = Array.fill(bytes.length / 8)(bb.getLong())
-          ixs.forall(ix => (bits(ix >> 6) & (1L << (ix & 63))) != 0L)
-      }
-    }
-    (kept.map(entryName), entries.length)
-  }
+  ): (Seq[String], Int) =
+    prunedBy(spark, table, column, ManifestEntry.BloomHolds(value), version)
 
   /** Point lookup through the bloom index: open only the admitted
     * files, row-filter the equality on what remains (deletion vectors
@@ -1864,22 +1693,12 @@ object SnapshotLog {
     val v = version.getOrElse(vs.last)
     val pc = physColumn(spark, table, v, column)
     val entries = manifestEntries(spark, table, v)
-    val dec = java.util.Base64.getUrlDecoder
     val parsed = entries.map { e =>
-      val st = entryStat(e, pc)
-      val rngL = st.flatMap(_.split(':') match {
-        case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-        case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-        case _                  => None
-      })
-      val rngS = st.flatMap(_.split(':') match {
-        case Array("s", mn, mx) =>
-          Some((
-            new String(dec.decode(mn), java.nio.charset.StandardCharsets.UTF_8),
-            new String(dec.decode(mx), java.nio.charset.StandardCharsets.UTF_8)))
-        case _ => None
-      })
-      (entryName(e), rngL, rngS)
+      val rngS = e.stats.get(pc).collect { case ManifestEntry.BytesRange(mn, mx) =>
+        (new String(mn, java.nio.charset.StandardCharsets.UTF_8),
+          new String(mx, java.nio.charset.StandardCharsets.UTF_8))
+      }
+      (e.name, e.longRange(pc), rngS)
     }
     val blind = parsed.collect { case (n, None, None) => n }
     val keyCol = changeKeys.columns.head
@@ -2006,19 +1825,19 @@ object SnapshotLog {
       else {
       val prevE = manifestEntries(spark, table, v - 1)
       val curE = manifestEntries(spark, table, v)
-      val prevByName = prevE.map(e => entryName(e) -> e).toMap
-      val curByName = curE.map(e => entryName(e) -> e).toMap
-      val added = curE.filterNot(e => prevByName.contains(entryName(e)))
+      val prevByName = prevE.map(e => e.name -> e).toMap
+      val curByName = curE.map(e => e.name -> e).toMap
+      val added = curE.filterNot(e => prevByName.contains(e.name))
       val removed = prevE
-        .filterNot(e => curByName.contains(entryName(e)))
-        .sortBy(entryName)
+        .filterNot(e => curByName.contains(e.name))
+        .sortBy(_.name)
       // same file name, changed entry: a deletion-vector amendment —
       // positions ENTERING the DV are row deletes; positions LEAVING it
       // (a [[restore]] rolling back past a MoR delete) are row
       // re-inserts
       val amended = curE
-        .filter(e => prevByName.get(entryName(e)).exists(_ != e))
-        .map(e => (prevByName(entryName(e)), e))
+        .filter(e => prevByName.get(e.name).exists(_.line != e.line))
+        .map(e => (prevByName(e.name), e))
       val ins =
         if (added.isEmpty) None
         else
@@ -2046,8 +1865,8 @@ object SnapshotLog {
       // a DV'd entry with no count rider (foreign writer?) admits the
       // pair on BOTH sides — the task-side filter decides; costs a
       // job, never correctness
-      def dvc(e: String): Option[Long] =
-        if (entryDv(e).isEmpty) Some(0L) else entryDvCount(e)
+      def dvc(e: ManifestEntry): Option[Long] =
+        if (e.dv.isEmpty) Some(0L) else e.dvCount
       val deadPairs = amended.filter { case (p, c) =>
         (dvc(p), dvc(c)) match {
           case (Some(a), Some(b)) => b > a
@@ -2104,15 +1923,15 @@ object SnapshotLog {
   private def rowsAtDvDelta(
       spark: SparkSession,
       table: String,
-      pairs: Seq[(String, String)],
+      pairs: Seq[(ManifestEntry, ManifestEntry)],
       schema: Option[StructType],
       newlyDead: Boolean
   ): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split => splitCol}
     requireUniqueBases(
-      pairs.map(pc => entryName(pc._2)), "snapshot changes (DV shift)")
+      pairs.map(_._2.name), "snapshot changes (DV shift)")
     val base = readFiles(
-      spark, table, pairs.map(pc => entryName(pc._2)).sorted, schema,
+      spark, table, pairs.map(_._2.name).sorted, schema,
       aliasLogical = false)
     val dataCols = base.columns.map(col)
     val tagged = base
@@ -2123,9 +1942,9 @@ object SnapshotLog {
     val fileC = col("__graft_file")
     val posC = col("__graft_pos")
     val aliveOld = dvAliveCol(
-      spark, table, pairs.map(_._1).filter(e => entryDv(e).isDefined), fileC, posC)
+      spark, table, pairs.map(_._1).filter(_.dv.isDefined), fileC, posC)
     val aliveNew = dvAliveCol(
-      spark, table, pairs.map(_._2).filter(e => entryDv(e).isDefined), fileC, posC)
+      spark, table, pairs.map(_._2).filter(_.dv.isDefined), fileC, posC)
     val cond = if (newlyDead) aliveOld && !aliveNew else !aliveOld && aliveNew
     val out = tagged.where(cond).select(dataCols: _*)
     schema match {
@@ -2145,8 +1964,8 @@ object SnapshotLog {
       file: String
   ): Option[String] =
     manifestEntries(spark, table, version)
-      .find(entryName(_) == file)
-      .flatMap(entryDv)
+      .find(_.name == file)
+      .flatMap(_.dv)
       .map(d => dvFilePath(table, d))
 
   /** Per-version admission view for incremental consumers (the
@@ -2167,19 +1986,19 @@ object SnapshotLog {
     val action = head.split(' ').head
     val dataChange = !headerToken(head, "datachange").contains("false")
     val prevE =
-      if (version <= 1) Seq.empty[String]
+      if (version <= 1) Seq.empty[ManifestEntry]
       else manifestEntries(spark, table, version - 1)
     val curE = manifestEntries(spark, table, version)
-    val prevByName = prevE.map(e => entryName(e) -> e).toMap
-    val curNames = curE.map(entryName).toSet
-    val added = curE.map(entryName).filterNot(prevByName.contains)
-    val removed = prevE.map(entryName).filterNot(curNames).sorted
+    val prevByName = prevE.map(e => e.name -> e).toMap
+    val curNames = curE.map(_.name).toSet
+    val added = curE.map(_.name).filterNot(prevByName.contains)
+    val removed = prevE.map(_.name).filterNot(curNames).sorted
     // files whose entry CHANGED in place — a deletion-vector
     // amendment: rows died without any file moving, which insert-only
     // consumers must treat as an in-place change
     val amended = curE
-      .filter(e => prevByName.get(entryName(e)).exists(_ != e))
-      .map(entryName)
+      .filter(e => prevByName.get(e.name).exists(_.line != e.line))
+      .map(_.name)
     (action, dataChange, added, removed, amended)
   }
 
@@ -2202,9 +2021,9 @@ object SnapshotLog {
         added.size,
         removed.size,
         entries.size,
-        entries.flatMap(entrySize).sum,
+        entries.flatMap(_.size).sum,
         // live rows: physical rows minus deletion-vector dead rows
-        entries.flatMap(entryRows).sum - entries.flatMap(entryDvCount).sum
+        entries.flatMap(_.rows).sum - entries.flatMap(_.dvCount).sum
       )
     }
     rows.toDF(
@@ -2228,12 +2047,12 @@ object SnapshotLog {
     val v = version.getOrElse(vs.last)
     val rows = manifestEntries(spark, table, v).map { e =>
       (
-        entryName(e),
-        entrySize(e).getOrElse(-1L),
-        entryRows(e).getOrElse(-1L),
-        entryDvCount(e).getOrElse(0L),
-        entryToken(e, "_bk=k:").map(_.toInt),
-        isExternal(entryName(e))
+        e.name,
+        e.size.getOrElse(-1L),
+        e.rows.getOrElse(-1L),
+        e.dvCount.getOrElse(0L),
+        e.bucket,
+        isExternal(e.name)
       )
     }
     rows.toDF("file", "bytes", "rows", "dv_dead_rows", "bucket", "external")
@@ -2248,7 +2067,7 @@ object SnapshotLog {
       version: Int
   ): Map[String, Long] =
     manifestEntries(spark, table, version)
-      .flatMap(e => entrySize(e).map(entryName(e) -> _))
+      .flatMap(e => e.size.map(e.name -> _))
       .toMap
 
   /** Summed `_sz` rider bytes of `files` at `version` (absent rider →
@@ -2263,8 +2082,8 @@ object SnapshotLog {
     if (files.isEmpty) return 0L
     val wanted = files.toSet
     manifestEntries(spark, table, version)
-      .filter(e => wanted(entryName(e)))
-      .flatMap(entrySize)
+      .filter(e => wanted(e.name))
+      .flatMap(_.size)
       .sum
   }
 
@@ -2351,10 +2170,10 @@ object SnapshotLog {
       // with their history (surviving versions keep theirs — time
       // travel inside the horizon stays exact)
       val liveDv = surviving
-        .flatMap(manifestEntries(spark, table, _).flatMap(entryDv))
+        .flatMap(manifestEntries(spark, table, _).flatMap(_.dv))
         .toSet
       val deadDv = (expired
-        .flatMap(manifestEntries(spark, table, _).flatMap(entryDv))
+        .flatMap(manifestEntries(spark, table, _).flatMap(_.dv))
         .toSet -- liveDv)
         .filterNot(isExternal) // cloned sidecars belong to the source
         .filter(n => f.exists(new Path(s"$table/_dv/$n")))
@@ -2405,16 +2224,16 @@ object SnapshotLog {
     val tgt = manifestEntries(spark, table, toVersion)
     val schemaSame =
       tableSchema(spark, table, tip) == tableSchema(spark, table, toVersion)
-    if (cur.sorted == tgt.sorted && schemaSame) return (tip, Nil, Nil)
+    if (cur.map(_.line).sorted == tgt.map(_.line).sorted && schemaSame) return (tip, Nil, Nil)
     val schema = tableSchema(spark, table, toVersion).getOrElse {
       require(
         tgt.nonEmpty,
         s"snapshot restore: version $toVersion is empty with no recorded " +
           "schema (pre-upgrade log?)")
-      readFiles(spark, table, tgt.map(entryName), None).schema
+      readFiles(spark, table, tgt.map(_.name), None).schema
     }
-    val curNames = cur.map(entryName).toSet
-    val tgtNames = tgt.map(entryName).toSet
+    val curNames = cur.map(_.name).toSet
+    val tgtNames = tgt.map(_.name).toSet
     val v = commit(
       spark, table,
       CommitRequest(
@@ -2422,8 +2241,8 @@ object SnapshotLog {
         header = Seq(s"restore=$toVersion")))
     (
       v,
-      tgt.map(entryName).filterNot(curNames),
-      cur.map(entryName).filterNot(tgtNames)
+      tgt.map(_.name).filterNot(curNames),
+      cur.map(_.name).filterNot(tgtNames)
     )
   }
 
@@ -2459,22 +2278,8 @@ object SnapshotLog {
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"snapshot clone: version $v not in $vs")
     requireUnexpired(spark, src, v)
-    val entries = manifestEntries(spark, src, v).map { e =>
-      val parts = e.split('\t')
-      val extName = dataPath(src, parts(0))
-      val suffix =
-        if (parts.length < 2) ""
-        else
-          parts(1)
-            .split(';')
-            .map { tok =>
-              if (tok.startsWith("_dv=v:"))
-                s"_dv=v:${dvFilePath(src, tok.stripPrefix("_dv=v:"))}"
-              else tok
-            }
-            .mkString(";")
-      if (suffix.isEmpty) extName else s"$extName\t$suffix"
-    }
+    val entries = manifestEntries(spark, src, v)
+      .map(e => e.relocated(dataPath(src, e.name), dvFilePath(src, _)))
     val schema = tableSchema(spark, src, v).getOrElse {
       require(
         entries.nonEmpty,
@@ -2504,12 +2309,10 @@ object SnapshotLog {
     require(vs.nonEmpty, s"snapshot count: no commits in $table")
     val v = version.getOrElse(vs.last)
     val entries = manifestEntries(spark, table, v)
-    val counts = entries.map(entryRows)
     // a DV without its count rider would make the sum a guess — refuse
-    if (counts.exists(_.isEmpty) ||
-        entries.exists(e => entryDv(e).isDefined && entryDvCount(e).isEmpty))
+    if (entries.exists(e => e.rows.isEmpty || (e.dv.isDefined && e.dvCount.isEmpty)))
       None
-    else Some(counts.flatten.sum - entries.flatMap(entryDvCount).sum)
+    else Some(entries.flatMap(_.liveRows).sum)
   }
 
   /** Metadata-only MIN/MAX of an integral column, folded over the
@@ -2531,15 +2334,9 @@ object SnapshotLog {
     // footer stats are still valid BOUNDS but no longer exact; refuse
     // rather than guess (OPTIMIZE materializes the DV and restores
     // exactness)
-    if (entries.exists(e => entryDv(e).isDefined)) return None
+    if (entries.exists(_.dv.isDefined)) return None
     val pc = physColumn(spark, table, v, column)
-    val ranges = entries.map { e =>
-      entryStat(e, pc).flatMap(_.split(':') match {
-        case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-        case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-        case _                  => None
-      })
-    }
+    val ranges = entries.map(_.longRange(pc))
     if (ranges.isEmpty || ranges.exists(_.isEmpty)) None
     else {
       val rs = ranges.flatten
@@ -2581,15 +2378,10 @@ object SnapshotLog {
     val entries = manifestEntries(spark, table, v)
     val pc = physColumn(spark, table, v, column)
     val per: Seq[Option[(Long, Long)]] = entries.map { e =>
-      val range = entryStat(e, pc).flatMap(_.split(':') match {
-        case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-        case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-        case _                  => None
-      })
-      val dvOk = entryDv(e).isEmpty || entryDvCount(e).isDefined
-      (range, entryRows(e)) match {
+      val dvOk = e.dv.isEmpty || e.dvCount.isDefined
+      (e.longRange(pc), e.liveRows) match {
         case (Some((lo, hi)), Some(rows)) if dvOk && map(lo) == map(hi) =>
-          Some((map(lo), rows - entryDvCount(e).getOrElse(0L)))
+          Some((map(lo), rows))
         case _ => None
       }
     }
@@ -2633,17 +2425,11 @@ object SnapshotLog {
         .flatMap(_.fields.find(_.name == column)).forall(_.nullable))
       return None
     val entries = manifestEntries(spark, table, v)
-    if (entries.exists(e => entryDv(e).isDefined)) return None
+    if (entries.exists(_.dv.isDefined)) return None
     val pc = physColumn(spark, table, v, column)
     val pa = physColumn(spark, table, v, aggColumn)
-    def longRange(e: String, c: String): Option[(Long, Long)] =
-      entryStat(e, c).flatMap(_.split(':') match {
-        case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-        case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-        case _                  => None
-      })
     val per: Seq[Option[(Long, Long, Long)]] = entries.map { e =>
-      (longRange(e, pc), longRange(e, pa)) match {
+      (e.longRange(pc), e.longRange(pa)) match {
         case (Some((glo, ghi)), Some((alo, ahi))) if map(glo) == map(ghi) =>
           Some((map(glo), alo, ahi))
         case _ => None
@@ -2668,38 +2454,12 @@ object SnapshotLog {
       )
   }
 
-  /** Manifest-recorded byte size of an entry's file (`_sz=z:` token,
-    * written by every commit since the size rider landed); None for
-    * pre-upgrade entries, whose callers fall back to a filesystem
-    * stat. */
-  private def entrySize(e: String): Option[Long] =
-    e.split('\t') match {
-      case parts if parts.length >= 2 =>
-        parts(1).split(';').collectFirst {
-          case t if t.startsWith("_sz=z:") => t.stripPrefix("_sz=z:").toLong
-        }
-      case _ => None
-    }
-
-  /** Manifest-recorded row count (`_rc=r:` rider); None for
-    * pre-upgrade entries, which DESCRIBE HISTORY counts as 0 rather
-    * than opening footers. `_rc` stays the PHYSICAL row count even
-    * under a deletion vector — live rows = `_rc` − `_dvc`. */
-  private def entryRows(e: String): Option[Long] =
-    e.split('\t') match {
-      case parts if parts.length >= 2 =>
-        parts(1).split(';').collectFirst {
-          case t if t.startsWith("_rc=r:") => t.stripPrefix("_rc=r:").toLong
-        }
-      case _ => None
-    }
-
   // --- merge-on-read DELETION VECTORS -------------------------------
   //
   // A MoR delete never rewrites a data file: it writes a tiny sidecar
   // under `_dv/` listing the DOOMED ROW POSITIONS of one file and
-  // re-commits that file's manifest entry with `_dv=v:<sidecar>` and
-  // `_dvc=c:<dead rows>` riders (a replace-delta: `-name` + the
+  // re-commits that file's manifest entry with `_dv`/`_dvc` riders
+  // ([[ManifestEntry.withDv]]; a replace-delta: `-name` + the
   // amended line — O(touched files) manifest bytes, O(deleted rows)
   // sidecar bytes, ZERO data bytes moved). Readers subtract the DV by
   // position; OPTIMIZE materializes it away (the rewrite reads through
@@ -2709,41 +2469,7 @@ object SnapshotLog {
   // Sidecars are immutable: a second delete UNIONS into a NEW sidecar,
   // so older versions keep their own DV and time travel stays exact.
 
-  private def entryToken(e: String, prefix: String): Option[String] =
-    e.split('\t') match {
-      case parts if parts.length >= 2 =>
-        parts(1).split(';').collectFirst {
-          case t if t.startsWith(prefix) => t.stripPrefix(prefix)
-        }
-      case _ => None
-    }
-
-  /** Deletion-vector sidecar file name riding an entry, if any. */
-  private def entryDv(e: String): Option[String] = entryToken(e, "_dv=v:")
-
-  /** Dead-row count of an entry's deletion vector. */
-  private def entryDvCount(e: String): Option[Long] =
-    entryToken(e, "_dvc=c:").map(_.toLong)
-
   private val DvMagic = 0x47445631 // "GDV1"
-
-  /** A manifest entry re-spelled with a NEW deletion-vector rider
-    * (`_dv`/`_dvc` replace any previous pair; everything else — stats,
-    * size, bucket id — carries unchanged). */
-  private def dvAmendEntry(base: String, dvName: String, cnt: Long): String = {
-    val parts = base.split('\t')
-    val suffix0 =
-      if (parts.length < 2) ""
-      else
-        parts(1)
-          .split(';')
-          .filterNot(t => t.startsWith("_dv=") || t.startsWith("_dvc="))
-          .mkString(";")
-    val suffix =
-      (if (suffix0.isEmpty) "" else suffix0 + ";") +
-        s"_dv=v:$dvName;_dvc=c:$cnt"
-    s"${entryName(base)}\t$suffix"
-  }
 
   /** (entry read, entry written) amendments for deletion-vector specs
     * (base file name, new sidecar, total dead rows) against `entries`,
@@ -2754,20 +2480,20 @@ object SnapshotLog {
     * loud conflict; two specs for one file mean the writers' required
     * clustering by file was not honored. */
   private[sources] def dvAmendments(
-      entries: Seq[String],
+      entries: Seq[ManifestEntry],
       dvSpecs: Seq[(String, String, Long)]
-  ): Seq[(String, String)] = {
+  ): Seq[(ManifestEntry, ManifestEntry)] = {
     require(
       dvSpecs.map(_._1).distinct.size == dvSpecs.size,
       "snapshot mor-delta: two writers amended the same file — the " +
         "required clustered-by-_file distribution was not honored")
-    val entryByBase = entries.map(e => baseName(entryName(e)) -> e).toMap
+    val entryByBase = entries.map(e => baseName(e.name) -> e).toMap
     dvSpecs.map { case (file, dvName, cnt) =>
       val read = entryByBase.getOrElse(
         file,
         throw new java.util.ConcurrentModificationException(
           s"snapshot mor-delta: touched file $file no longer live"))
-      read -> dvAmendEntry(read, dvName, cnt)
+      read -> read.withDv(dvName, cnt)
     }
   }
 
@@ -2811,22 +2537,22 @@ object SnapshotLog {
     } finally in.close()
   }
 
-  /** `names`' manifest entry lines at `version`, in `names` order — the
+  /** `names`' manifest entries at `version`, in `names` order — the
     * read side of a replace's removals. */
   private[sources] def entriesNamed(
       spark: SparkSession,
       table: String,
       version: Int,
       names: Seq[String]
-  ): Seq[String] = {
-    val byName = manifestEntries(spark, table, version).map(e => entryName(e) -> e).toMap
+  ): Seq[ManifestEntry] = {
+    val byName = manifestEntries(spark, table, version).map(e => e.name -> e).toMap
     names.map(byName)
   }
 
-  /** Entries (full lines) for `names`, preserving manifest order. */
-  private def entriesFor(entries: Seq[String], names: Seq[String]): Seq[String] = {
+  /** Entries for `names`, preserving manifest order. */
+  private def entriesFor(entries: Seq[ManifestEntry], names: Seq[String]): Seq[ManifestEntry] = {
     val wanted = names.toSet
-    entries.filter(e => wanted(entryName(e)))
+    entries.filter(e => wanted(e.name))
   }
 
   /** Per-task deletion-vector predicate over `entries`: metadata-only
@@ -2837,13 +2563,13 @@ object SnapshotLog {
   private def dvAliveCol(
       spark: SparkSession,
       table: String,
-      dvd: Seq[String],
+      dvd: Seq[ManifestEntry],
       fileCol: Column,
       posCol: Column
   ): Column = {
     val lookup = new DvSidecarLookup(
       dvd.map(e =>
-        baseName(entryName(e)) -> dvFilePath(table, entryDv(e).get)).toMap,
+        baseName(e.name) -> dvFilePath(table, e.dv.get)).toMap,
       new SerializableHadoopConf(spark.sessionState.newHadoopConf()))
     org.apache.spark.sql.GraftPlanBridge.column(
       DvAlive(
@@ -2865,16 +2591,16 @@ object SnapshotLog {
   private def readEntries(
       spark: SparkSession,
       table: String,
-      entries: Seq[String],
+      entries: Seq[ManifestEntry],
       schema: Option[StructType]
   ): DataFrame = {
-    val (dvd, plain) = entries.partition(e => entryDv(e).isDefined)
-    if (dvd.isEmpty) readFiles(spark, table, entries.map(entryName), schema)
+    val (dvd, plain) = entries.partition(_.dv.isDefined)
+    if (dvd.isEmpty) readFiles(spark, table, entries.map(_.name), schema)
     else {
       import org.apache.spark.sql.functions.{col, element_at, split => splitCol}
-      requireUniqueBases(dvd.map(entryName), "snapshot read (DV subtraction)")
+      requireUniqueBases(dvd.map(_.name), "snapshot read (DV subtraction)")
       // physical names so `_metadata` stays resolvable; re-alias after
-      val base = readFiles(spark, table, dvd.map(entryName), schema, aliasLogical = false)
+      val base = readFiles(spark, table, dvd.map(_.name), schema, aliasLogical = false)
       val dataCols = base.columns.map(col)
       val filtered0 = base
         .withColumn(
@@ -2890,7 +2616,7 @@ object SnapshotLog {
       }
       if (plain.isEmpty) filtered
       else
-        readFiles(spark, table, plain.map(entryName), schema)
+        readFiles(spark, table, plain.map(_.name), schema)
           .unionByName(filtered)
     }
   }
@@ -2962,16 +2688,13 @@ object SnapshotLog {
         prunedFiles(spark, table, c, lo, hi, Some(v))._1.toSet
     }
     val sized = entries.collect {
-      case e if inScope(entryName(e)) =>
-        val name = entryName(e)
-        val sz = entrySize(e).getOrElse(
-          f.getFileStatus(new Path(dataPath(table, name))).getLen)
-        (name, sz)
+      case e if inScope(e.name) =>
+        (e.name, e.size.getOrElse(f.getFileStatus(new Path(dataPath(table, e.name))).getLen))
     }
-    val outOfScope = entries.map(entryName).filterNot(inScope)
+    val outOfScope = entries.map(_.name).filterNot(inScope)
     // files carrying a deletion vector are ALWAYS eligible regardless
     // of size: OPTIMIZE is how a DV gets materialized away
-    val dvNames = entries.filter(e => entryDv(e).isDefined).map(entryName).toSet
+    val dvNames = entries.filter(_.dv.isDefined).map(_.name).toSet
     val (small, large0) = sized.partition { case (n, sz) =>
       sz < smallerThanBytes || dvNames(n)
     }
@@ -2981,8 +2704,8 @@ object SnapshotLog {
     // version on a no-op rewrite
     if (small.size < 2 && sortBy.isEmpty && zorderBy.isEmpty &&
         !small.exists(s => dvNames(s._1)))
-      return (v, Nil, entries.map(entryName))
-    if (small.isEmpty) return (v, Nil, entries.map(entryName))
+      return (v, Nil, entries.map(_.name))
+    if (small.isEmpty) return (v, Nil, entries.map(_.name))
     val picked = small.map(_._1)
     val total = small.map(_._2).sum
     val nOut = filesOut.getOrElse(
@@ -3035,18 +2758,14 @@ object SnapshotLog {
   private def compactionKey(
       spark: SparkSession,
       table: String,
-      picked: Seq[String],
+      picked: Seq[ManifestEntry],
       schema: Option[StructType]
   ): Option[String] =
     tableProps(spark, table).get("sorted_by").orElse {
       val ranked = for {
         s <- schema.toSeq if picked.size >= 2
         f <- s.fields.toSeq if f.dataType == LongType || f.dataType == IntegerType
-        ranges = picked.flatMap(e => entryStat(e, physNameOf(f)).collect {
-          case st if st.startsWith("l:") || st.startsWith("i:") =>
-            val Array(_, mn, mx) = st.split(':')
-            (mn.toLong, mx.toLong)
-        })
+        ranges = picked.flatMap(_.longRange(physNameOf(f)))
         if ranges.size == picked.size
         span = ranges.map(_._2).max.toDouble - ranges.map(_._1).min.toDouble
         spans = ranges.map { case (mn, mx) => mx.toDouble - mn.toDouble }.sum
@@ -3082,30 +2801,25 @@ object SnapshotLog {
     val f = fs(spark, table)
     val pcs = fields.map { case (c, m) => (physColumn(spark, table, v, c), m) }
     // one PURE mapped value per field, or the file is left alone
-    def tupleOf(e: String): Option[Seq[Long]] = {
+    def tupleOf(e: ManifestEntry): Option[Seq[Long]] = {
       val per = pcs.map { case (pc, mapv) =>
-        entryStat(e, pc).flatMap(_.split(':') match {
-          case Array("l" | "i", mn, mx) if mapv(mn.toLong) == mapv(mx.toLong) =>
-            Some(mapv(mn.toLong))
-          case _ => None // blind or impure in this field
-        })
+        e.longRange(pc).collect {
+          case (mn, mx) if mapv(mn) == mapv(mx) => mapv(mn)
+        } // None: blind or impure in this field
       }
       if (per.exists(_.isEmpty)) None else Some(per.flatten)
     }
     // (name, partition tuple) for every PURE small file
-    val small: Seq[(String, Seq[Long])] = entries.flatMap { e =>
-      val name = entryName(e)
-      val sz = entrySize(e).getOrElse(
-        f.getFileStatus(new Path(dataPath(table, name))).getLen)
-      if (sz >= smallerThanBytes && entryDv(e).isEmpty) None
-      else tupleOf(e).map(name -> _)
+    val small: Seq[(ManifestEntry, Seq[Long])] = entries.flatMap { e =>
+      val sz = e.size.getOrElse(
+        f.getFileStatus(new Path(dataPath(table, e.name))).getLen)
+      if (sz >= smallerThanBytes && e.dv.isEmpty) None
+      else tupleOf(e).map(e -> _)
     }
     val groups = small.groupBy(_._2).filter { case (_, fs0) =>
-      fs0.size >= 2 ||
-        fs0.exists(x => entriesFor(entries, Seq(x._1))
-          .exists(e => entryDv(e).isDefined))
+      fs0.size >= 2 || fs0.exists(_._1.dv.isDefined)
     }
-    if (groups.isEmpty) return (v, Nil, entries.map(entryName))
+    if (groups.isEmpty) return (v, Nil, entries.map(_.name))
     require(
       groups.size <= maxGroups,
       s"snapshot compact: ${groups.size} partition groups exceed the " +
@@ -3121,15 +2835,15 @@ object SnapshotLog {
     var batchSchema: StructType = null
     val landed = groups.toSeq.sortBy(_._1.mkString(",")).flatMap {
       case (_, fs0) =>
-        val leg = readEntries(
-          spark, table, entriesFor(entries, fs0.map(_._1)), schema)
+        val leg = readEntries(spark, table, fs0.map(_._1), schema)
         // mapped tables stage under PHYSICAL names, exactly like the
         // normal commit path
         val (stagedLeg, bs) = mapForStage(schema, leg.coalesce(1))
         batchSchema = bs
         stageFiles(spark, table, stagedLeg, None)
     }
-    val picked = groups.values.flatten.map(_._1).toSeq
+    val pickedEntries = groups.values.flatten.map(_._1).toSeq
+    val picked = pickedEntries.map(_.name)
     // same posture as compact: the rewrite reads the table's own rows,
     // so it commits under the table schema and declared NOT NULL
     // survives
@@ -3137,8 +2851,8 @@ object SnapshotLog {
       spark, table,
       CommitRequest(
         CommitData.Landed(landed, schema.getOrElse(batchSchema)),
-        removals = Some(entriesNamed(spark, table, v, picked)), dataChange = false))
-    (version, picked, entries.map(entryName).filterNot(picked.toSet))
+        removals = Some(pickedEntries), dataChange = false))
+    (version, picked, entries.map(_.name).filterNot(picked.toSet))
   }
 
   /** Copy-on-write DELETE of `column ∈ [lo, hi]`: manifest stats
@@ -3207,17 +2921,17 @@ object SnapshotLog {
     val v = vs.last
     val entries = manifestEntries(spark, table, v)
     val (admitNames, _) = prunedFiles(spark, table, column, lo, hi, Some(v))
-    val allNames = entries.map(entryName)
+    val allNames = entries.map(_.name)
     if (admitNames.isEmpty) return (v, Nil, allNames)
     requireUniqueBases(admitNames, "snapshot mor-delete")
-    val entryByBase = entries.map(e => baseName(entryName(e)) -> e).toMap
+    val entryByBase = entries.map(e => baseName(e.name) -> e).toMap
     val schema = tableSchema(spark, table, v)
     // keyed by BASE file name — what `_metadata.file_path` exposes —
     // so external (cloned) entries resolve; sidecar paths resolve
     // external references verbatim, fresh sidecars always land locally
     val oldDv: Map[String, String] =
       admitNames
-        .flatMap(n => entryDv(entryByBase(baseName(n))).map(baseName(n) -> _))
+        .flatMap(n => entryByBase(baseName(n)).dv.map(baseName(n) -> _))
         .toMap
     val sconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val tableLoc = table
@@ -3248,7 +2962,7 @@ object SnapshotLog {
       .collect()
     if (specs.isEmpty) return (v, Nil, allNames) // stats admitted, no row matched
     val amendments = dvAmendments(entries, specs.toSeq)
-    val amendedNames = amendments.map(a => entryName(a._1))
+    val amendedNames = amendments.map(_._1.name)
     val commitSchema = schema.getOrElse(
       readFiles(spark, table, admitNames, None).schema)
     val version = commit(
@@ -3263,7 +2977,7 @@ object SnapshotLog {
 
   // A request with `buckets = Some((col, n))` commits BUCKET-CLUSTERED:
   // a Frame's rows shuffle once by `pmod(key, n)` and land as per-bucket
-  // files (the bucket id rides each entry as `_bk=k:<b>`, and the commit
+  // files (the bucket id rides each entry, [[ManifestEntry.bucket]], and the commit
   // header declares `buckets=<col>:<n>`); Landed files come tagged by
   // the SQL catalog's bucketed writers (CREATE TABLE ... PARTITIONED BY
   // (bucket(n, col)) + INSERT INTO). The catalog's scan then reports
@@ -3291,9 +3005,11 @@ object SnapshotLog {
     }
 
   /** Per-file LONG-space [min,max] of an integral `column` at
-    * `version`; None for a file without stats on it. Powers the SQL
-    * catalog's metadata-only DELETE eligibility check (every file must
-    * be provably fully-inside or fully-disjoint). */
+    * `version` (the INT64/INT32 footer stats); None for a file without
+    * them. The bounds are the FOOTER's, so under a deletion vector an
+    * extremum may be dead: callers may use them only where a stale
+    * bound widens a kept set (superset-safe), never to answer an
+    * extremum exactly ([[metadataRange]] owns that refusal). */
   def fileLongRanges(
       spark: SparkSession,
       table: String,
@@ -3301,16 +3017,7 @@ object SnapshotLog {
       column: String
   ): Seq[(String, Option[(Long, Long)])] = {
     val pc = physColumn(spark, table, version, column)
-    manifestEntries(spark, table, version).map { e =>
-      (
-        entryName(e),
-        entryStat(e, pc).flatMap(_.split(':') match {
-          case Array("l", mn, mx) => Some((mn.toLong, mx.toLong))
-          case Array("i", mn, mx) => Some((mn.toLong, mx.toLong))
-          case _                  => None
-        })
-      )
-    }
+    manifestEntries(spark, table, version).map(e => e.name -> e.longRange(pc))
   }
 
   /** Per-file layout riders at `version`: (name, bucket id, deletion-
@@ -3321,8 +3028,7 @@ object SnapshotLog {
       table: String,
       version: Int
   ): Seq[(String, Option[Int], Option[String])] =
-    manifestEntries(spark, table, version).map(e =>
-      (entryName(e), entryToken(e, "_bk=k:").map(_.toInt), entryDv(e)))
+    manifestEntries(spark, table, version).map(e => (e.name, e.bucket, e.dv))
 
   /** Pre-commit uniqueness audit for a declared `unique_key` column:
     * the landed-but-uncommitted files are scanned ONCE (null keys,
@@ -5747,14 +5453,14 @@ object SnapshotLog {
   private def readEntriesWithPos(
       spark: SparkSession,
       table: String,
-      entries: Seq[String],
+      entries: Seq[ManifestEntry],
       schema: Option[StructType]
   ): DataFrame = {
     import org.apache.spark.sql.functions.{col, element_at, split => splitCol}
-    requireUniqueBases(entries.map(entryName), "snapshot read (positions)")
-    val dvd = entries.filter(e => entryDv(e).isDefined)
+    requireUniqueBases(entries.map(_.name), "snapshot read (positions)")
+    val dvd = entries.filter(_.dv.isDefined)
     val base = readFiles(
-      spark, table, entries.map(entryName), schema, aliasLogical = false)
+      spark, table, entries.map(_.name), schema, aliasLogical = false)
       .withColumn(
         "__graft_file",
         element_at(splitCol(col("_metadata.file_path"), "/"), -1))
@@ -5800,10 +5506,9 @@ object SnapshotLog {
     val v = vs.last
     val entries = manifestEntries(spark, table, v)
     val (admitNames, _) = prunedFiles(spark, table, column, lo, hi, Some(v))
-    val allNames = entries.map(entryName)
     if (admitNames.isEmpty) return (v, Nil, Nil)
     requireUniqueBases(admitNames, "snapshot mor-update")
-    val entryByBase = entries.map(e => baseName(entryName(e)) -> e).toMap
+    val entryByBase = entries.map(e => baseName(e.name) -> e).toMap
     val schema = tableSchema(spark, table, v)
     val matched = readEntriesWithPos(
       spark, table, entriesFor(entries, admitNames), schema)
@@ -5821,7 +5526,7 @@ object SnapshotLog {
     // external (cloned) entries resolve too
     val oldDv: Map[String, String] =
       admitNames
-        .flatMap(n => entryDv(entryByBase(baseName(n))).map(baseName(n) -> _))
+        .flatMap(n => entryByBase(baseName(n)).dv.map(baseName(n) -> _))
         .toMap
     val sconf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val tableLoc = table
@@ -5842,7 +5547,7 @@ object SnapshotLog {
       .collect()
     if (specs.isEmpty) return (v, Nil, Nil) // stats admitted, no row matched
     val amendments = dvAmendments(entries, specs.toSeq)
-    val amendedNames = amendments.map(a => entryName(a._1))
+    val amendedNames = amendments.map(_._1.name)
     val commitSchema =
       schema.getOrElse(readFiles(spark, table, admitNames, None).schema)
     val version = commit(
@@ -6294,8 +5999,8 @@ object SnapshotLog {
       s"snapshot publish: branch '$name' was forked from $forkSrc, not $table")
     val tip = versions(spark, table).last
     require(
-      manifestEntries(spark, table, tip).sorted ==
-        manifestEntries(spark, table, forkV).sorted &&
+      manifestEntries(spark, table, tip).map(_.line).sorted ==
+        manifestEntries(spark, table, forkV).map(_.line).sorted &&
         tableSchema(spark, table, tip) == tableSchema(spark, table, forkV),
       s"snapshot publish: $table advanced since branch '$name' forked at " +
         s"v$forkV (tip v$tip differs) — re-branch from the tip and re-apply")
@@ -6334,21 +6039,8 @@ object SnapshotLog {
           n.stripPrefix(dvPrefix)
         else n
       } else { copyIn(s"_dv/$n"); n }
-    val entries = manifestEntries(spark, branch, bvs.last).map { e =>
-      val parts = e.split('\t')
-      val nm = adoptData(parts(0))
-      val suffix =
-        if (parts.length < 2) ""
-        else
-          parts(1)
-            .split(';')
-            .map { tok =>
-              if (tok.startsWith("_dv=v:")) s"_dv=v:${adoptDv(tok.stripPrefix("_dv=v:"))}"
-              else tok
-            }
-            .mkString(";")
-      if (suffix.isEmpty) nm else s"$nm\t$suffix"
-    }
+    val entries = manifestEntries(spark, branch, bvs.last)
+      .map(e => e.relocated(adoptData(e.name), adoptDv))
     val schema = tableSchema(spark, branch, bvs.last).getOrElse {
       require(
         entries.nonEmpty,
@@ -6420,7 +6112,7 @@ object SnapshotLog {
       // same grace window
       val dvRoot = new Path(s"$table/_dv")
       val dvReferenced = versions(spark, table)
-        .flatMap(manifestEntries(spark, table, _).flatMap(entryDv))
+        .flatMap(manifestEntries(spark, table, _).flatMap(_.dv))
         .toSet
       val dvOrphans =
         if (!f.exists(dvRoot)) Array.empty[Path]

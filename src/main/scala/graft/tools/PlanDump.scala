@@ -11,8 +11,26 @@ import org.apache.spark.sql.SparkSession
   * Note: a lifecycle key's returned DataFrame is its SERVE plan; the
   * lifecycle phases it ran on the way are separate executions whose
   * shapes are captured by ProfileKey/OPTIMIZATION_r19.md instead.
+  *
+  * Run-to-run values print normalized, so two dumps of the same code
+  * compare equal: Spark's exchange `plan_id=`, the random job id in a
+  * data file's `part-<id>` name, and the identity hash an object
+  * without its own `toString` prints (`Lookup@1b2c3d`). Expression
+  * ids (`#123`) stay; `tools/plan_diff.py` masks them when it compares
+  * dump directories.
   */
 object PlanDump {
+  private val PlanId = "plan_id=\\d+".r
+  private val PartJob = "part-[0-9a-f]{8}(?=-)".r
+  private val IdentityHash = "(?<=[A-Za-z0-9_$])@[0-9a-f]{5,8}\\b".r
+
+  /** `plan_id=<n>`, `part-<uuid>` and `@<hash>` in place of the run's
+    * values. */
+  def normalize(plan: String): String =
+    IdentityHash.replaceAllIn(
+      PartJob.replaceAllIn(PlanId.replaceAllIn(plan, "plan_id=<n>"), "part-<uuid>"),
+      "@<hash>")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -34,8 +52,8 @@ object PlanDump {
         case Some(fn) =>
           try {
             val df = fn(spark, sfDir)
-            val plan = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val plan = normalize(df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
             java.nio.file.Files.writeString(
               java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
             println(s"[plandump] wrote $outDir/${name}_$suffix.txt")

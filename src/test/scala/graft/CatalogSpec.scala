@@ -801,7 +801,7 @@ class CatalogSpec extends SparkTestBase {
     val path = pathOf(t)
     val bloomedBefore = SnapshotLog
       .manifestEntries(spark, path, SnapshotLog.versions(spark, path).last)
-      .filter(_.contains("_bm")).toSet
+      .filter(_.blooms.nonEmpty).toSet
     spark.sql(
       s"CALL cattest.system.build_bloom(table => '$short', column => 'id', " +
         "incremental => true)")
@@ -809,7 +809,7 @@ class CatalogSpec extends SparkTestBase {
       .manifestEntries(spark, path, SnapshotLog.versions(spark, path).last)
     assert(bloomedBefore.subsetOf(after.toSet),
       "incremental build must not re-spell already-bloomed entries")
-    assert(after.forall(_.contains("_bm")),
+    assert(after.forall(_.blooms.nonEmpty),
       "every live file must carry a rider after the incremental build")
     val q2 = spark.sql(s"SELECT v FROM $t WHERE id = 555")
     val (k2, t2) = keptOf(q2)

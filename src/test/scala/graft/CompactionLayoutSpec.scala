@@ -36,7 +36,7 @@ class CompactionLayoutSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   /** Per live file `[min, max]` of `column`, in key order. */
   private def ranges(name: String, column: String): Seq[(Long, Long)] =
-    SnapshotLog.fileLongStats(spark, pathOf(name), tip(name), column)
+    SnapshotLog.fileLongRanges(spark, pathOf(name), tip(name), column)
       .map(_._2.get).sortBy(_._1)
 
   private def disjoint(rs: Seq[(Long, Long)]): Boolean =

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.SnapshotLog
+import graft.sources.{ManifestEntry, SnapshotLog}
 
 /** Round-11 merge-on-read deletion vectors (sources/SnapshotLog):
   * position-delete sidecars instead of file rewrites — the storage
@@ -42,6 +42,22 @@ class MorSpec extends SparkTestBase {
     assert(ids(t) == ((0L to 11L) ++ (18L to 29L)).toSet)
     // pre-delete snapshot stays exact (its entries carry no DV)
     assert(ids(t, Some(3)) == (0L to 29L).toSet)
+  }
+
+  test("a column physically named _dv keeps its footer stats through a MoR " +
+    "delete, so a range probe on it still skips files") {
+    import spark.implicits._
+    val t = freshTable()
+    Seq(0L to 9L, 10L to 19L, 20L to 29L).foreach(r =>
+      SnapshotLog.commit(spark, t, r.map(i => (i, i * 10)).toDF("id", "_dv").coalesce(1)))
+    val (v, amended, _) = SnapshotLog.deleteWhereMoR(spark, t, "id", 2, 4)
+    val Seq(entry) = SnapshotLog.manifestEntries(spark, t, v).filter(e => amended.contains(e.name))
+    assert(entry.dv.isDefined && entry.line.contains("_dv=l:0:90"),
+      s"the amended entry lost the _dv column's stats: $entry")
+    val (kept, total) = SnapshotLog.prunedFiles(spark, t, "_dv", 150, 160, Some(v))
+    assert(total == 3 && kept.size == 1, s"the _dv probe must skip 2 of 3 files: $kept")
+    assert(SnapshotLog.readPruned(spark, t, "_dv", 0, 60)
+      .select("id").as[Long].collect().toSet == Set(0L, 1L, 5L, 6L))
   }
 
   test("snapshot reads of DV'd files issue ZERO driver-side sidecar reads") {
@@ -314,7 +330,7 @@ class MorSpec extends SparkTestBase {
     writeDv(s"$t/_dv/dv-stale.bin", Seq(0L))
     val stale = SnapshotLog.CommitRequest(
       SnapshotLog.CommitData.Entries(Nil, SnapshotLog.tableSchema(spark, t, v).get),
-      amendments = Seq(read -> s"$read;_dv=v:dv-stale.bin;_dvc=c:1"))
+      amendments = Seq(read -> ManifestEntry.parse(s"${read.line};_dv=v:dv-stale.bin;_dvc=c:1")))
     val (v1, amended, _) = SnapshotLog.deleteWhereMoR(spark, t, "id", 5, 6)
     assert(v1 == v + 1 && amended.size == 1)
     intercept[java.util.ConcurrentModificationException] {

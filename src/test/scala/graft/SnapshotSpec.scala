@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.SnapshotLog
+import graft.sources.{ManifestEntry, SnapshotLog}
 import graft.sources.SnapshotLog.{CommitData, CommitRequest}
 
 /** Round-10 snapshot/manifest commit protocol (sources/SnapshotLog):
@@ -164,7 +164,7 @@ class SnapshotSpec extends SparkTestBase {
     // every request shape is refused before anything stages
     val schema = new org.apache.spark.sql.types.StructType()
       .add("id", org.apache.spark.sql.types.LongType)
-    val entry = "part-0.parquet\t_sz=z:1;_rc=r:1"
+    val entry = ManifestEntry.parse("part-0.parquet\t_sz=z:1;_rc=r:1")
     val frame = CommitData.Frame(Seq(1L).toDF("id"))
     val shapes: Seq[(String, String => Int)] = Seq(
       "DataFrame" -> (t => SnapshotLog.commit(spark, t, Seq(1L).toDF("id"))),
@@ -181,7 +181,8 @@ class SnapshotSpec extends SparkTestBase {
           spark, t,
           CommitRequest(
             CommitData.Entries(Nil, schema),
-            amendments = Seq(entry -> s"$entry;_dv=v:dv-0.bin;_dvc=c:1")))),
+            amendments = Seq(
+              entry -> ManifestEntry.parse(s"${entry.line};_dv=v:dv-0.bin;_dvc=c:1"))))),
       "watermark" -> (t =>
         SnapshotLog.commit(spark, t, CommitRequest(frame, header = Seq("idxv=1")))))
     shapes.foreach { case (shape, commit) =>
@@ -457,7 +458,7 @@ class SnapshotSpec extends SparkTestBase {
         CommitRequest(
           CommitData.Frame(Seq((1L, 1L)).toDF("id", "v")),
           removals = Some(SnapshotLog.manifestEntries(spark, t, 3)
-            .filter(e => rewritten.contains(e.takeWhile(_ != '\t'))))))
+            .filter(e => rewritten.contains(e.name)))))
     }
   }
 
@@ -1165,8 +1166,8 @@ class SnapshotSpec extends SparkTestBase {
     // the new file's footer stats rider is keyed by the PHYSICAL name
     // (v), which is exactly why pruning maps through the schema
     val entries = SnapshotLog.manifestEntries(spark, t, SnapshotLog.versions(spark, t).last)
-    assert(entries.exists(_.contains("v=l:")), s"physical stats key expected: $entries")
-    assert(!entries.exists(_.contains("score=l:")), "no file may spell the logical name")
+    assert(entries.exists(_.line.contains("v=l:")), s"physical stats key expected: $entries")
+    assert(!entries.exists(_.line.contains("score=l:")), "no file may spell the logical name")
   }
 
   test("dropColumn then re-add: old values can never resurrect under the re-used name") {
@@ -1255,8 +1256,11 @@ class SnapshotSpec extends SparkTestBase {
     // the published DV subtracts on main's read path
     assert(rows(t) == ((1L to 9L) ++ (16L to 50L)).toSet)
     // and the entries reference main-owned files + main-local sidecars
-    assert(SnapshotLog.manifest(spark, t, v).forall(e =>
-      !SnapshotLog.isExternal(e.split('\t')(0)) && !e.contains("_dv=v:/")))
+    val published = SnapshotLog.manifestEntries(spark, t, v)
+    assert(published.exists(_.dv.isDefined), s"the DV must ride the publish: $published")
+    assert(published.forall(e =>
+      !SnapshotLog.isExternal(e.name) && e.dv.forall(!SnapshotLog.isExternal(_))),
+      s"published entries and sidecars must be table-relative: $published")
   }
 
   test("ingest: ledger skips consumed names, idle call burns no version, " +
