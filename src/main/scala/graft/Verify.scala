@@ -9,18 +9,7 @@ object Verify {
     // optional 3rd arg: comma-separated query names — dump (and gate)
     // only that subset for fast single-operator iteration. The driver
     // always passes 2 args and gets the full inventory.
-    val wanted: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      if (args.length > 2) {
-        val names = args(2).split(",").toSet
-        // fail fast on typos: a silently-empty subset would dump nothing
-        // and gate nothing, making a broken iteration look green
-        val unknown = names.diff(SparkEntry.queries.keySet)
-        require(
-          unknown.isEmpty,
-          s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}"
-        )
-        SparkEntry.queries.filter { case (k, _) => names(k) }
-      } else SparkEntry.queries
+    val keys = if (args.length > 2) args(2).split(",").toSeq else SparkEntry.queries.keys.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -31,6 +20,23 @@ object Verify {
         "spark.sql.extensions", classOf[graft.functions.GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    run(spark, sfDir, outDir, keys)
+    spark.stop()
+  }
+
+  /** Dumps each of `keys`' results under `outDir` as parquet, with
+    * `oracle_sql.json` and `manifest.json`, on `spark`, which it leaves
+    * running. A key that throws is reported on stderr and left undumped. */
+  def run(spark: SparkSession, sfDir: String, outDir: String, keys: Seq[String]): Unit = {
+    // fail fast on typos: a silently-empty subset would dump nothing
+    // and gate nothing, making a broken iteration look green
+    val names = keys.toSet
+    val unknown = names.diff(SparkEntry.queries.keySet)
+    require(
+      unknown.isEmpty,
+      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}"
+    )
+    val wanted = SparkEntry.queries.filter { case (k, _) => names(k) }
     new java.io.File(outDir).mkdirs()
     wanted.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -61,6 +67,5 @@ object Verify {
     val manifest = wanted.keys.toSeq.sorted
       .map(q).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/manifest.json"), manifest)
-    spark.stop()
   }
 }

@@ -971,7 +971,7 @@ object Scans {
     * reports EXACT row/byte statistics from the manifest riders to
     * Catalyst. The oracle recomputes the same aggregate from the source
     * table, so the hash proves fidelity THROUGH catalog resolution,
-    * executor-side Group-API parquet reading, and the pruning path. */
+    * the executor-side parquet reader, and the pruning path. */
   val sqlSnapshotSelect: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val cat = sqlCatalog(spark)
@@ -1423,10 +1423,11 @@ object Scans {
     * makes the graded hash a dual gate — a re-delivered compaction
     * file duplicates rows, a skipped append loses them. Micro-batch
     * planning costs O(new files) (tip read + manifest diff), and the
-    * executors read exactly the manifest's parquet files through the
-    * Group API under the session's Hadoop conf — no directory listing,
-    * no full-table scan. Restart exactly-once, loud in-place-change
-    * refusal, and skipChangeCommits are pinned in StreamingSpec. */
+    * executors read exactly the manifest's parquet files through
+    * Spark's vectorized decoder under the session's Hadoop conf — no
+    * directory listing, no full-table scan. Restart exactly-once, loud
+    * in-place-change refusal, and skipChangeCommits are pinned in
+    * StreamingSpec. */
   val streamSnapshotSource: Q = (spark, dir) => {
     import graft.sources.SnapshotLog
     val table = tmp("orders_snapshot_src")
@@ -3086,7 +3087,7 @@ object Scans {
 
   /** VECTOR columns as first-class lakehouse data (round 11 cont.):
     * the catalog now stores numeric ARRAY columns (standard 3-level
-    * parquet LIST encoding through the Group-API writers/readers), so
+    * parquet LIST encoding through the Group-API writers), so
     * an embedding table lives IN the transactional snapshot table —
     * versioned, time-travelable, vacuum-managed — instead of beside
     * it. The graded query runs the exact-cosine top-10 THROUGH the

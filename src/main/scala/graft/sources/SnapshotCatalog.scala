@@ -3734,9 +3734,10 @@ class SnapshotParquetWriter(
 }
 
 /** Spark↔parquet type mapping for the catalog write path. The allowlist
-  * matches what [[GraftSnapshotReader]] decodes and what
-  * `SnapshotLog`'s stats lifter understands; anything else refuses at
-  * planning, before a task runs. */
+  * is what the Group-API writer ([[toMessageType]], [[toGroup]]) lands
+  * and what `SnapshotLog`'s stats lifter understands; anything else
+  * refuses at planning, before a task runs. It limits writes only:
+  * scans read every type Spark's parquet reader does. */
 private[sources] object SnapshotSql {
 
   /** The files a write's tasks landed, each with its bucket id when the
@@ -3954,6 +3955,9 @@ private[sources] object SnapshotSql {
     else None
   }
 
+  /** Refuses a column type the catalog's writer cannot land — at
+    * CREATE, ADD COLUMN and write planning. A table committed through
+    * `SnapshotLog` with other types still reads through the catalog. */
   def requireSupported(schema: StructType): Unit =
     schema.fields.foreach { f =>
       f.dataType match {

@@ -5778,8 +5778,9 @@ object SnapshotLog {
     * append path already merges (int→long, float→double) as a
     * schema-only commit, so the wider type can be declared AHEAD of
     * the data instead of being discovered from it. Old files read
-    * under the wider schema (both the vectorized and the Group-API
-    * readers up-convert INT32/FLOAT); anything else refuses — silent
+    * under the wider schema (Spark's vectorized reader, behind both the
+    * DataFrame reads and the catalog scans, up-converts INT32/FLOAT);
+    * anything else refuses — silent
     * coercion is how a table format corrupts data. Widening to the
     * current type is a no-op that burns no version. */
   def widenColumn(

@@ -6,9 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -44,14 +49,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *     added files tagged `insert`, with `commit_version` riding along
   *     — the streaming twin of [[SnapshotLog.readChanges]], feeding
   *     incremental MV maintenance continuously.
-  *   - **Executors read raw parquet** through parquet-hadoop's Group
-  *     API under the session's Hadoop conf (shipped via
-  *     [[SerializableHadoopConf]]): no SparkSession on the executor
-  *     path, no directory listing — exactly the manifest's files.
-  *     INT96 timestamps (Spark's default parquet timestamp encoding)
-  *     are converted with the public Julian-day layout; int→long and
-  *     float→double file-vs-table widenings mirror the log's schema
-  *     evolution rules, and files predating an added column null-fill.
+  *   - **Executors read raw parquet** through [[GraftSnapshotReader]]
+  *     (Spark's vectorized decoder) under the session's Hadoop conf
+  *     (shipped via [[SerializableHadoopConf]]): no SparkSession on the
+  *     executor path, no directory listing — exactly the manifest's
+  *     files.
   *
   * 100 TB posture: a micro-batch costs O(new files) — tip read, ≤
   * FoldEvery manifest hops per version, and the new files' bytes. No
@@ -372,13 +374,21 @@ case class GraftSnapshotReaderFactory(
   }
 }
 
-/** Executor-side parquet reader over one manifest file via the Group
-  * API, row at a time. It serves every catalog SQL and DML scan
-  * ([[SnapshotSqlReader]]) and the streaming source. Column lookup is
-  * BY NAME so schema-evolved tables work: absent columns null-fill,
-  * int32→long and float→double widen per the log's evolution rules,
-  * INT96 timestamps convert via the public Julian-day layout. Anything
-  * else unsupported fails loudly.
+/** Executor-side reader of one manifest file through Spark's
+  * vectorized parquet decoder — the one `SnapshotLog.read` goes
+  * through — returning rows. It serves every catalog SQL and DML scan
+  * ([[SnapshotSqlReader]]) and the streaming source. Only `schema`'s
+  * columns are decoded, looked up by exact (physical) name, so
+  * schema-evolved tables work as Spark's reader has them: absent
+  * columns serve their existence default or null, INT32 files widen to
+  * BIGINT and FLOAT files to DOUBLE, INT96 timestamps convert without
+  * rebasing.
+  *
+  * Row layout: `schema`'s columns, then the constants (the CDF
+  * `change_type`/`commit_version` riders or the `_file` name), then
+  * `_pos` when `positionTag`. `_pos` and the deletion-vector positions
+  * are Spark's row index, the in-file position counted before any
+  * skip, so they name the position space the sidecars are written in.
   *
   * `filters` (pushed integer comparisons, physical column names) skip
   * data inside the file: row groups whose footer stats and pages whose
@@ -394,217 +404,136 @@ class GraftSnapshotReader(
     cdfTag: Option[(String, Int)] = None,
     onlyPositions: Option[Array[Long]] = None,
     skipPositions: Option[Array[Long]] = None,
-    fileNameTag: Option[String] = None, // appended as a `_file` column
-    positionTag: Boolean = false, // appended (last) as a `_pos` column
+    fileNameTag: Option[String] = None, // a `_file` column after the data
+    positionTag: Boolean = false, // a `_pos` column, last
     filters: Seq[org.apache.spark.sql.sources.Filter] = Nil
 ) extends PartitionReader[InternalRow] {
-  import org.apache.parquet.HadoopReadOptions
-  import org.apache.parquet.filter2.compat.FilterCompat
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import GraftSnapshotReader._
 
-  private val tagVals: Array[Any] =
-    cdfTag
-      .map { case (t, v) => Array[Any](UTF8String.fromString(t), v) }
-      .getOrElse(Array.empty[Any]) ++
-      fileNameTag.map(f => UTF8String.fromString(f): Any).toArray
-  private val fileReader: ParquetFileReader = {
+  // the row index rides as the last requested column whenever `_pos`
+  // or a deletion vector needs it
+  private val indexed =
+    positionTag || onlyPositions.isDefined || skipPositions.isDefined
+  private val consts: Seq[(StructField, Any)] =
+    cdfTag.toSeq.flatMap { case (t, v) =>
+      Seq(StructField("change_type", StringType) -> UTF8String.fromString(t),
+        StructField("commit_version", IntegerType) -> v)
+    } ++ fileNameTag.map(f => StructField("_file", StringType) -> UTF8String.fromString(f))
+
+  // the decoder, and the rows the row-group stats and the column
+  // indexes ruled out: the footer's row count less the decoder's
+  private val (reader, skipped): (CountingReader, Long) = {
     val path = new Path(file)
     val input = HadoopInputFile.fromPath(path, conf)
     val stream = input.newStream()
     try {
       val footer = ParquetFileReader.readFooter(
         input, HadoopReadOptions.builder(conf, path).build(), stream)
-      val predicate = GraftSnapshotReader
-        .filePredicate(filters, footer.getFileMetaData.getSchema)
-        .map(FilterCompat.get)
-        .getOrElse(FilterCompat.NOOP)
-      val options = HadoopReadOptions.builder(conf, path)
-        .withRecordFilter(predicate)
-        .useStatsFilter(true)
-        .useColumnIndexFilter(true)
-        .useRecordFilter(false)
-        // each would read more than the footer per row group
-        .useDictionaryFilter(false)
-        .useBloomFilter(false)
-        .build()
-      ParquetFileReader.open(input, footer, options, stream)
+      val requested =
+        // a column absent from this file is read as null, never refused
+        StructType(schema.fields.map(_.copy(nullable = true)) ++
+          (if (indexed) Seq(StructField(RowIndexColumn, LongType)) else Nil))
+      val fileConf = readerConf(
+        conf, requested, filePredicate(filters, footer.getFileMetaData.getSchema))
+      val r = new CountingReader
+      r.initialize(
+        new FileSplit(path, 0L, input.getLength, Array.empty[String]),
+        new TaskAttemptContextImpl(fileConf, new TaskAttemptID()),
+        Some(input), Some(stream), Some(footer))
+      if (consts.nonEmpty)
+        r.initBatch(StructType(consts.map(_._1)), new GenericInternalRow(consts.map(_._2).toArray))
+      (r, footer.getBlocks.asScala.map(_.getRowCount).sum - r.filteredRows)
     } catch { case e: Throwable => stream.close(); throw e }
   }
-  private val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
-  private val columnIO = new org.apache.parquet.io.ColumnIOFactory(
-    fileReader.getFooter.getFileMetaData.getCreatedBy).getColumnIO(fileSchema)
-  private val totalRows: Long = fileReader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
   /** Rows the row-group stats and the column indexes ruled out. */
-  val rowsSkippedByStats: Long = totalRows - fileReader.getFilteredRecordCount
-  /** Rows assembled so far (deletion-vector dead rows included). */
+  val rowsSkippedByStats: Long = skipped
+  /** Rows read off surviving pages so far (deletion-vector dead rows
+    * included). */
   def rowsDecoded: Long = decoded
   private var decoded = 0L
 
-  // the current row group: its record reader, rows still to assemble,
-  // its first row's in-file index and the in-group indexes of the rows
-  // its surviving pages hold
-  private var records: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeft = 0L
-  private var groupStart = 0L
-  private var groupRows: java.util.PrimitiveIterator.OfLong = _
-  private var current: Group = _
-  // in-file row index of `current` — what `ParquetReader.getCurrentRowIndex`
-  // reports: the row group's offset plus the row's index inside it, so
-  // it stays the file position after skipped pages and row groups
-  private var rowIdx: Long = -1L
-  // existence defaults (ADD COLUMN ... DEFAULT x): a column missing
-  // from THIS file serves its ADD-time default, not null — the same
-  // EXISTS_DEFAULT fill Spark's own parquet readers apply, evaluated
-  // once per reader from the schema's field metadata
-  private val existsDefaults: Array[Any] =
-    if (org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-        .hasExistenceDefaultValues(schema))
-      org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-        .existenceDefaultValues(schema)
-    else null
+  // the decoder's row is the data, the row index when `indexed`, then
+  // the constants: the output moves the row index after the constants,
+  // or drops it without `_pos`
+  private val indexOrdinal = schema.length
+  private val projected: Option[ProjectingInternalRow] =
+    if (!indexed || (consts.isEmpty && positionTag)) None
+    else {
+      val data = schema.indices
+      val tail = consts.indices.map(_ + schema.length + 1)
+      val out = StructType(schema.fields ++ consts.map(_._1) ++
+        (if (positionTag) Seq(StructField("_pos", LongType)) else Nil))
+      Some(ProjectingInternalRow(
+        out, data ++ tail ++ (if (positionTag) Seq(indexOrdinal) else Nil)))
+    }
+  private var current: InternalRow = _
 
   private def admit(i: Long): Boolean =
     onlyPositions.forall(a => java.util.Arrays.binarySearch(a, i) >= 0) &&
       skipPositions.forall(a => java.util.Arrays.binarySearch(a, i) < 0)
 
-  /** Assembles the next surviving row into `current`/`rowIdx`; false at
-    * the end of the file. */
-  private def readRow(): Boolean = {
-    while (rowsLeft == 0) {
-      val pages = fileReader.readNextFilteredRowGroup()
-      if (pages == null) return false
-      rowsLeft = pages.getRowCount
-      groupStart = pages.getRowIndexOffset.orElseThrow(() =>
-        new IllegalStateException(s"graft-snapshot: no row index offset in $file"))
-      groupRows = pages.getRowIndexes.orElseGet(() =>
-        java.util.stream.LongStream.range(0, rowsLeft).iterator())
-      records = columnIO.getRecordReader(
-        pages,
-        new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(fileSchema),
-        FilterCompat.NOOP)
-    }
-    rowsLeft -= 1
-    decoded += 1
-    rowIdx = groupStart + groupRows.nextLong()
-    current = records.read()
-    true
-  }
-
   override def next(): Boolean = {
-    while (readRow()) if (admit(rowIdx)) return true
-    current = null
+    while (reader.nextKeyValue()) {
+      decoded += 1
+      val row = reader.getCurrentValue.asInstanceOf[InternalRow]
+      if (!indexed || admit(row.getLong(indexOrdinal))) {
+        current = projected.fold(row) { p => p.project(row); p }
+        return true
+      }
+    }
     false
   }
 
-  override def get(): InternalRow = {
-    val g = current
-    val gt = g.getType
-    val extra = if (positionTag) 1 else 0
-    val vals = new Array[Any](schema.length + tagVals.length + extra)
-    var i = 0
-    while (i < schema.length) {
-      val f = schema(i)
-      vals(i) =
-        if (!gt.containsField(f.name)) // pre-evolution file: existence
-          // default when declared, null-fill otherwise
-          (if (existsDefaults != null) existsDefaults(i) else null)
-        else {
-          val fi = gt.getFieldIndex(f.name)
-          if (g.getFieldRepetitionCount(fi) == 0) null
-          else readValue(g, gt, fi, f.dataType)
-        }
-      i += 1
-    }
-    var j = 0
-    while (j < tagVals.length) { // CDF riders: change_type, commit_version
-      vals(schema.length + j) = tagVals(j)
-      j += 1
-    }
-    // `_pos`: the in-file row index (counted before the deletion-vector
-    // skip, so it names the same position space the sidecars are
-    // written in, and taken from the file, so skipped pages keep it)
-    if (positionTag) vals(vals.length - 1) = rowIdx
-    new GenericInternalRow(vals)
-  }
+  override def get(): InternalRow = current
 
-  private def readValue(g: Group, gt: org.apache.parquet.schema.GroupType, fi: Int, dt: DataType): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val fieldType = gt.getType(fi)
-    (dt, fieldType.isPrimitive) match {
-      // numeric ARRAY columns (vector embeddings as first-class
-      // lakehouse data): standard 3-level LIST encoding —
-      //   optional group <name> (LIST) { repeated group list {
-      //     optional <prim> element } }
-      case (org.apache.spark.sql.types.ArrayType(et, _), false) =>
-        val lg = g.getGroup(fi, 0)
-        val n = lg.getFieldRepetitionCount(0)
-        val elPrim = fieldType.asGroupType().getType(0).asGroupType()
-          .getType(0).asPrimitiveType().getPrimitiveTypeName
-        val out = new Array[Any](n)
-        var j = 0
-        while (j < n) {
-          val el = lg.getGroup(0, j)
-          // an element group with no value is a NULL element (optional
-          // element, 3-level encoding) — both our writer and Spark's
-          // native parquet writer emit nulls this way
-          out(j) =
-            if (el.getFieldRepetitionCount(0) == 0) null
-            else (et, elPrim) match {
-              case (FloatType, FLOAT)    => el.getFloat(0, 0)
-              case (DoubleType, DOUBLE)  => el.getDouble(0, 0)
-              case (DoubleType, FLOAT)   => el.getFloat(0, 0).toDouble
-              case (LongType, INT64)     => el.getLong(0, 0)
-              case (LongType, INT32)     => el.getInteger(0, 0).toLong
-              case (IntegerType, INT32)  => el.getInteger(0, 0)
-              case other =>
-                throw new UnsupportedOperationException(
-                  s"graft-snapshot: unsupported array element $other in $file")
-            }
-          j += 1
-        }
-        return new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      case _ => ()
-    }
-    val prim = fieldType.asPrimitiveType().getPrimitiveTypeName
-    (dt, prim) match {
-      case (LongType, INT64)      => g.getLong(fi, 0)
-      case (LongType, INT32)      => g.getInteger(fi, 0).toLong // widened table
-      case (IntegerType, INT32)   => g.getInteger(fi, 0)
-      case (DoubleType, DOUBLE)   => g.getDouble(fi, 0)
-      case (DoubleType, FLOAT)    => g.getFloat(fi, 0).toDouble // widened table
-      case (FloatType, FLOAT)     => g.getFloat(fi, 0)
-      case (BooleanType, BOOLEAN) => g.getBoolean(fi, 0)
-      case (StringType, BINARY)   => UTF8String.fromBytes(g.getBinary(fi, 0).getBytes)
-      case (BinaryType, BINARY)   => g.getBinary(fi, 0).getBytes
-      case (DateType, INT32)      => g.getInteger(fi, 0)
-      case (TimestampType, INT64) => g.getLong(fi, 0) // micros
-      case (TimestampNTZType, INT64) => g.getLong(fi, 0) // micros, no zone
-      case (TimestampType, INT96) =>
-        // Spark's default parquet timestamp: 8 LE bytes nanos-of-day +
-        // 4 LE bytes Julian day (epoch day 2440588)
-        val b = g.getInt96(fi, 0).getBytes
-        val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanos = buf.getLong
-        val julian = buf.getInt
-        (julian - 2440588L) * 86400L * 1000000L + nanos / 1000L
-      case _ =>
-        throw new UnsupportedOperationException(
-          s"graft-snapshot stream: unsupported column type $dt over parquet $prim " +
-            s"in $file (supported: long/int/double/float/boolean/string/binary/date/timestamp)"
-        )
-    }
-  }
-
-  override def close(): Unit = fileReader.close()
+  override def close(): Unit = reader.close()
 }
 
 object GraftSnapshotReader {
   import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
   import org.apache.parquet.filter2.predicate.Operators.{IntColumn, LongColumn}
+  import org.apache.parquet.hadoop.ParquetInputFormat
   import org.apache.parquet.schema.{MessageType, Type}
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.internal.SQLConf
   import org.apache.spark.sql.sources._
+
+  /** Spark's temporary row-index column: the decoder fills it with each
+    * row's in-file position, after skipped pages and row groups too. */
+  private val RowIndexColumn = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  /** Spark's vectorized decoder, on heap in batches of Spark's default
+    * 4096 rows, rebasing nothing: dates, timestamps and INT96 read as
+    * stored. It exposes the rows its row-group and page filtering kept. */
+  private final class CountingReader
+      extends VectorizedParquetRecordReader(null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096) {
+    def filteredRows: Long = totalRowCount
+  }
+
+  /** `base` plus what the decoder takes from its Hadoop conf for one
+    * file: the requested columns, looked up by exact name, and the
+    * file's predicate at the skipping levels the reader uses — row-group
+    * stats and page column indexes on; record, dictionary and bloom
+    * filtering off (the last two would read more than the footer per
+    * row group). */
+  private def readerConf(
+      base: Configuration,
+      requested: StructType,
+      predicate: Option[FilterPredicate]
+  ): Configuration = {
+    val c = new Configuration(base)
+    c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, true)
+    c.setBoolean(ParquetInputFormat.STATS_FILTERING_ENABLED, true)
+    c.setBoolean(ParquetInputFormat.COLUMN_INDEX_FILTERING_ENABLED, true)
+    c.setBoolean(ParquetInputFormat.RECORD_FILTERING_ENABLED, false)
+    c.setBoolean(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, false)
+    c.setBoolean(ParquetInputFormat.BLOOM_FILTERING_ENABLED, false)
+    predicate.foreach(ParquetInputFormat.setFilterPredicate(c, _))
+    c
+  }
 
   /** The parquet predicate `filters` make over one file: the
     * comparisons whose column the file holds as a top-level INT64 (for

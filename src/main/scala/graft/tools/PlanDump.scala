@@ -14,22 +14,29 @@ import org.apache.spark.sql.SparkSession
   *
   * Run-to-run values print normalized, so two dumps of the same code
   * compare equal: Spark's exchange `plan_id=`, the random job id in a
-  * data file's `part-<id>` name, and the identity hash an object
-  * without its own `toString` prints (`Lookup@1b2c3d`). Expression
-  * ids (`#123`) stay; `tools/plan_diff.py` masks them when it compares
-  * dump directories.
+  * data file's `part-<id>` name, the identity hash an object without
+  * its own `toString` prints (`Lookup@1b2c3d`), and the `java.io.tmpdir`
+  * prefix of the table paths a scan prints. Expression ids (`#123`)
+  * stay; `tools/plan_diff.py` masks them when it compares dump
+  * directories.
   */
 object PlanDump {
   private val PlanId = "plan_id=\\d+".r
   private val PartJob = "part-[0-9a-f]{8}(?=-)".r
   private val IdentityHash = "(?<=[A-Za-z0-9_$])@[0-9a-f]{5,8}\\b".r
 
-  /** `plan_id=<n>`, `part-<uuid>` and `@<hash>` in place of the run's
-    * values. */
-  def normalize(plan: String): String =
+  /** `plan_id=<n>`, `part-<uuid>`, `@<hash>` and `<tmp>` in place of
+    * the run's values; `tmpDir` prints as `<tmp>` wherever it ends a path
+    * segment. */
+  def normalize(plan: String, tmpDir: String = System.getProperty("java.io.tmpdir")): String = {
+    val tmp = tmpDir.stripSuffix("/")
+    val masked =
+      if (tmp.isEmpty) plan
+      else (java.util.regex.Pattern.quote(tmp) + "(?![\\w.-])").r.replaceAllIn(plan, "<tmp>")
     IdentityHash.replaceAllIn(
-      PartJob.replaceAllIn(PlanId.replaceAllIn(plan, "plan_id=<n>"), "part-<uuid>"),
+      PartJob.replaceAllIn(PlanId.replaceAllIn(masked, "plan_id=<n>"), "part-<uuid>"),
       "@<hash>")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

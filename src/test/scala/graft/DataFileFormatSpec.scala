@@ -101,6 +101,42 @@ class DataFileFormatSpec extends SparkTestBase {
     added.size
   }
 
+  /** Lands `df` as one parquet file Spark's writer writes under
+    * `confs` in table `name`'s directory, and commits it. */
+  private def landCommit(name: String, df: DataFrame, confs: (String, String)*): Unit = {
+    val stage = Files.createTempDirectory("graft_fmt_land").toString + "/o"
+    withConf(spark, confs: _*)(df.coalesce(1).write.parquet(stage))
+    val part = new java.io.File(stage).listFiles().filter(_.getName.endsWith(".parquet")).head
+    val landedName = s"part-landed-${java.util.UUID.randomUUID.toString.take(8)}.parquet"
+    assert(part.renameTo(new java.io.File(s"${pathOf(name)}/$landedName")))
+    val _ = SnapshotLog.commit(
+      spark, pathOf(name),
+      SnapshotLog.CommitRequest(SnapshotLog.CommitData.landed(Seq(landedName), df.schema)))
+  }
+
+  /** `SELECT _file, _pos, *` of table `name` through the catalog, at
+    * `version` or the tip, equals `SnapshotLog.read`'s rows row for
+    * row, each at the file and position Spark's own parquet reader
+    * finds its unique key `k` at. Returns the row count. */
+  private def catalogMatchesLog(name: String, version: Option[Int]): Int = {
+    val p = pathOf(name)
+    val v = version.getOrElse(SnapshotLog.versions(spark, p).last)
+    val pos = SnapshotLog.manifest(spark, p, v).flatMap { f =>
+      spark.read.parquet(s"$p/$f")
+        .select(col("_metadata.file_name"), col("_metadata.row_index"), col("k").cast("long"))
+        .collect().map(r => r.getLong(2) -> ((r.getString(0), r.getLong(1))))
+    }.toMap
+    val at = version.fold("")(x => s" VERSION AS OF $x")
+    val got = sql(s"SELECT _file, _pos, * FROM fmttest.main.$name$at")
+      .collect().map(_.mkString("|")).sorted.toSeq
+    val want = SnapshotLog.read(spark, p, version).collect().map { r =>
+      val (file, row) = pos(r.get(r.fieldIndex("k")).toString.toLong)
+      (Seq(file, row) ++ r.toSeq).mkString("|")
+    }.sorted.toSeq
+    assert(got == want, s"$name$at")
+    got.size
+  }
+
   /** SQL INSERT of `rows(lo, hi)` into `t`. */
   private def insert(t: String, lo: Long, hi: Long): Unit = {
     rows(lo, hi).createOrReplaceTempView("fmt_src")
@@ -269,5 +305,90 @@ class DataFileFormatSpec extends SparkTestBase {
     same(sql(s"SELECT * FROM $mixed"), sql(s"SELECT * FROM $twin"))
     assert(tipCodecs("mixed") == Set(CompressionCodecName.ZSTD))
     assert(tipCodecs("twin") == Set(CompressionCodecName.ZSTD))
+  }
+
+  test("DECIMAL, SMALLINT, TINYINT, STRUCT and MAP columns read through the catalog " +
+    "as SnapshotLog.read has them; an INSERT into the table still refuses at planning") {
+    val name = "wide_types"
+    val _ = warehouse
+    SnapshotLog.commit(spark, pathOf(name), spark.range(0, 60).selectExpr(
+      "id AS k",
+      "CAST(id * 1.25 AS DECIMAL(12, 3)) AS d",
+      "CAST(id * 300 AS SMALLINT) AS sm",
+      "CAST(id - 30 AS TINYINT) AS ti",
+      "IF(id % 7 = 0, NULL, named_struct('a', CAST(id AS INT), 'b', concat('s', id))) AS st",
+      "IF(id % 5 = 0, NULL, map('x', id, 'y', id * 2)) AS m"))
+    assert(catalogMatchesLog(name, None) == 60)
+    val versions = SnapshotLog.versions(spark, pathOf(name))
+    val e = intercept[Exception](
+      sql(s"INSERT INTO fmttest.main.$name SELECT * FROM fmttest.main.$name"))
+    assert(e.getMessage.contains("unsupported column type"), e.getMessage)
+    assert(SnapshotLog.versions(spark, pathOf(name)) == versions)
+  }
+
+  test("catalog scans equal SnapshotLog.read with _file and _pos at every version: " +
+    "widened INT and FLOAT files, an INT96 file, array<float> with null elements, " +
+    "an existence default, a renamed column and merge-on-read deletes") {
+    val _ = warehouse
+    def t(name: String) = s"fmttest.main.$name"
+    def insert(name: String, lo: Long, hi: Long, select: String): Unit = {
+      val _ = sql(s"INSERT INTO ${t(name)} SELECT $select FROM range($lo, $hi)")
+    }
+    val cases: Seq[(String, () => Unit)] = Seq(
+      "widened_int" -> { () =>
+        sql(s"CREATE TABLE ${t("widened_int")} (k INT, v INT)")
+        insert("widened_int", 0, 100, "CAST(id AS INT), CAST(id % 9 AS INT)")
+        sql(s"ALTER TABLE ${t("widened_int")} ALTER COLUMN k TYPE BIGINT")
+        insert("widened_int", 100, 200, "id + 5000000000, CAST(id % 9 AS INT)")
+      },
+      "widened_float" -> { () =>
+        sql(s"CREATE TABLE ${t("widened_float")} (k BIGINT, f FLOAT)")
+        insert("widened_float", 0, 100, "id, CAST(id / 3.0 AS FLOAT)")
+        sql(s"ALTER TABLE ${t("widened_float")} ALTER COLUMN f TYPE DOUBLE")
+        insert("widened_float", 100, 200, "id, id / 3.0")
+      },
+      "int96" -> { () =>
+        sql(s"CREATE TABLE ${t("int96")} (k BIGINT, ts TIMESTAMP)")
+        landCommit("int96",
+          spark.range(0, 100).select(col("id").as("k"),
+            timestamp_seconds(lit(base) + col("id") * 3601).as("ts")),
+          "spark.sql.parquet.outputTimestampType" -> "INT96")
+        insert("int96", 100, 200, s"id, timestamp_seconds($base + id * 3601)")
+      },
+      "float_array" -> { () =>
+        sql(s"CREATE TABLE ${t("float_array")} (k BIGINT, a ARRAY<FLOAT>)")
+        val select = "id, IF(id % 4 = 0, NULL, array(CAST(id AS FLOAT), NULL, CAST(id / 8.0 AS FLOAT)))"
+        insert("float_array", 0, 100, select)
+        insert("float_array", 100, 200, select)
+      },
+      "exists_default" -> { () =>
+        sql(s"CREATE TABLE ${t("exists_default")} (k BIGINT)")
+        insert("exists_default", 0, 100, "id")
+        sql(s"ALTER TABLE ${t("exists_default")} ADD COLUMN d INT DEFAULT 7")
+        insert("exists_default", 100, 200, "id, CAST(id % 3 AS INT)")
+      },
+      "renamed" -> { () =>
+        sql(s"CREATE TABLE ${t("renamed")} (k BIGINT, a BIGINT, s STRING)")
+        insert("renamed", 0, 100, "id, id * 2, concat('s', id)")
+        sql(s"ALTER TABLE ${t("renamed")} RENAME COLUMN a TO c")
+        insert("renamed", 100, 200, "id, id * 2, concat('s', id)")
+      },
+      "mor_deleted" -> { () =>
+        sql(s"CREATE TABLE ${t("mor_deleted")} (k BIGINT, v INT) " +
+          "TBLPROPERTIES ('write_mode' = 'merge-on-read')")
+        insert("mor_deleted", 0, 300, "id, CAST(id % 11 AS INT)")
+        sql(s"DELETE FROM ${t("mor_deleted")} WHERE k % 3 = 0")
+        insert("mor_deleted", 300, 400, "id, CAST(id % 11 AS INT)")
+        sql(s"DELETE FROM ${t("mor_deleted")} WHERE k > 350 OR v = 4")
+      })
+    cases.foreach { case (name, build) =>
+      build()
+      val p = pathOf(name)
+      val versions = SnapshotLog.versions(spark, p)
+        .filter(v => SnapshotLog.manifest(spark, p, v).nonEmpty)
+      assert(versions.size >= 2, name)
+      assert(catalogMatchesLog(name, None) > 0, name)
+      versions.foreach(v => catalogMatchesLog(name, Some(v)))
+    }
   }
 }
