@@ -3087,7 +3087,7 @@ object Scans {
 
   /** VECTOR columns as first-class lakehouse data (round 11 cont.):
     * the catalog now stores numeric ARRAY columns (standard 3-level
-    * parquet LIST encoding through the Group-API writers), so
+    * parquet LIST encoding through Spark's parquet row writer), so
     * an embedding table lives IN the transactional snapshot table —
     * versioned, time-travelable, vacuum-managed — instead of beside
     * it. The graded query runs the exact-cosine top-10 THROUGH the

@@ -2,25 +2,29 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.MessageType
+import org.apache.parquet.io.OutputFile
 import org.apache.spark.sql.{DataFrameReader, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
+import org.apache.spark.sql.types.StructType
 
 /** The snapshot format's data files, defined once. Every data file a
-  * snapshot table references is parquet that one of two writers lands:
-  * the Group-API task writers of the catalog (INSERT, CHECK quarantine,
-  * the merge-on-read delta's inserts, the streaming sink) or a Spark
-  * parquet write staged by [[SnapshotLog]] (every DataFrame commit:
-  * copy-on-write DML, OPTIMIZE, MV create and refresh, bucketed
-  * commits). One decoder reads them all: Spark's vectorized parquet
-  * reader, behind `SnapshotLog`'s DataFrame reads ([[read]]) and the
-  * catalog's scans ([[GraftSnapshotReader]], under [[hadoopConf]]).
-  * Writers and reader take their settings from here:
+  * snapshot table references is parquet that Spark's parquet writer
+  * lands, by one of two paths: the catalog's task writer
+  * ([[SnapshotSqlDataWriter]]: INSERT, CHECK quarantine, the
+  * merge-on-read delta's inserts, the streaming sink), which hands its
+  * `InternalRow`s to Spark's `ParquetWriteSupport` through [[rowWriter]],
+  * or a Spark parquet write staged by [[SnapshotLog]] (every DataFrame
+  * commit: copy-on-write DML, OPTIMIZE, MV create and refresh, bucketed
+  * commits) through [[write]]. One decoder reads them all: Spark's
+  * vectorized parquet reader, behind `SnapshotLog`'s DataFrame reads
+  * ([[read]]) and the catalog's scans ([[GraftSnapshotReader]], under
+  * [[hadoopConf]]). Writers and reader take their settings from here:
   *
   *   - column chunks are ZSTD at parquet's default level (3), which
   *     lands the benchmark's lineitem tables about 24 % smaller than
@@ -29,6 +33,11 @@ import org.apache.spark.sql.internal.SQLConf
   *     default: the manifest's footer-stats lifter reads INT64 only, so
   *     an INT96 file would be stats-blind for every skipping, count_by
   *     and partition-purity claim on a timestamp column;
+  *   - the catalog's files carry no key-value metadata in their
+  *     footer, so nothing in them says a value was calendar-rebased;
+  *     they are written CORRECTED (never rebased, whatever the
+  *     session's `datetimeRebaseModeInWrite`), as the catalog's reader
+  *     reads them;
   *   - zstd-jni's recycling buffer pool is off, on the engine's writes
   *     and on its reads ([[hadoopConf]] behind the catalog's readers,
   *     [[read]] behind `SnapshotLog`'s Spark reads). The pool keeps its
@@ -57,9 +66,26 @@ object DataFiles {
     SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
     SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG)
 
+  /** The Hadoop-conf settings `ParquetWriteSupport` and its schema
+    * converter read, and fail on when one is missing. */
+  private val RowWriterSettings = Seq(
+    SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key -> "false",
+    TimestampTypeKey -> "TIMESTAMP_MICROS",
+    SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key -> "false",
+    SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key -> "false")
+
+  /** `ParquetWriteSupport` takes its rebase mode from the active
+    * `SQLConf` when it is built; this one writes dates and timestamps
+    * as they are. */
+  private lazy val rowWriterSqlConf: SQLConf = {
+    val c = new SQLConf
+    c.setConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE, LegacyBehaviorPolicy.CORRECTED)
+    c
+  }
+
   /** A fresh copy of the session's Hadoop conf for the executor-side
-    * reader ([[GraftSnapshotReader]]) and Group-API writers of data
-    * files. */
+    * reader ([[GraftSnapshotReader]]) and writers ([[rowWriter]]) of
+    * data files. */
   def hadoopConf(spark: SparkSession): Configuration = {
     val c = spark.sessionState.newHadoopConf()
     c.setBoolean(BufferPoolKey, false)
@@ -67,19 +93,36 @@ object DataFiles {
     c
   }
 
-  /** Opens a Group-API writer of one data file at `path`; `conf` is a
+  /** Opens a writer of one data file at `path` that lands `schema`'s
+    * rows through Spark's `ParquetWriteSupport`; `conf` is a
     * [[hadoopConf]] shipped to the task. */
-  def groupWriter(
+  def rowWriter(
       path: String,
-      messageType: MessageType,
+      schema: StructType,
       conf: Configuration
-  ): ParquetWriter[Group] =
-    ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(path), conf))
-      .withType(messageType)
+  ): ParquetWriter[InternalRow] =
+    new RowWriterBuilder(HadoopOutputFile.fromPath(new Path(path), conf), schema)
       .withConf(conf)
       .withCompressionCodec(Codec)
       .build()
+
+  private class RowWriterBuilder(file: OutputFile, schema: StructType)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      SQLConf.withExistingConf(rowWriterSqlConf)(new RowWriteSupport(schema))
+  }
+
+  /** Spark's row write support with the schema and settings above, and
+    * a footer without Spark's key-value metadata. */
+  private class RowWriteSupport(schema: StructType) extends ParquetWriteSupport {
+    override def init(conf: Configuration): WriteSupport.WriteContext = {
+      val c = new Configuration(conf)
+      ParquetWriteSupport.setSchema(schema, c)
+      RowWriterSettings.foreach { case (k, v) => c.set(k, v) }
+      new WriteSupport.WriteContext(super.init(c).getSchema, java.util.Collections.emptyMap())
+    }
+  }
 
   /** Spark reader of data files. */
   def read(spark: SparkSession): DataFrameReader =

@@ -6,13 +6,7 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.Type.Repetition
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, NoSuchViewException, TableAlreadyExistsException, ViewAlreadyExistsException}
@@ -2896,20 +2890,8 @@ case class SnapshotReplaceBatchWrite(
     SnapshotSql.commitQuarantine(sp, path, messages.toSeq, commitSchema, None)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    messages.foreach {
-      case SnapshotSqlCommit(n, q) =>
-        n.foreach(f =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(f =>
-          try fs.delete(new Path(s"${path}_quarantine/$f"), false)
-          catch { case _: java.io.IOException => () })
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SnapshotSql.abort(path, messages.toSeq)
 }
 
 // --- SQL row-level DML (delta-based merge-on-read) ---
@@ -3057,7 +3039,7 @@ class SnapshotMorBatchWrite(
     val sp = SparkSession.active
     val ms = messages.toSeq.collect { case m: SnapshotMorCommit => m }
     val specs = ms.flatMap(_.dvSpecs)
-    val files = ms.flatMap(_.file)
+    val files = SnapshotSql.landedFiles(ms.map(_.inserts)).map(_._1)
     // nothing matched: a true no-op — don't burn a version
     if (specs.nonEmpty || files.nonEmpty) {
       val base = baseVersion.getOrElse(SnapshotLog.versions(sp, path).last)
@@ -3068,28 +3050,17 @@ class SnapshotMorBatchWrite(
           amendments = SnapshotLog.dvAmendments(
             SnapshotLog.manifestEntries(sp, path, base), specs)))
     }
-    SnapshotSql.commitQuarantine(sp, path, ms, commitSchema, None)
+    SnapshotSql.commitQuarantine(sp, path, ms.map(_.inserts), commitSchema, None)
   }
 
+  /** Uncommitted sidecars and insert files are unreferenced by any
+    * manifest: deleted best-effort, stragglers are vacuum's problem. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    messages.foreach {
-      case SnapshotMorCommit(specs, f, q) =>
-        // uncommitted sidecars and insert files are unreferenced by any
-        // manifest — delete best-effort; stragglers are vacuum's problem
-        specs.foreach { case (_, dvName, _) =>
-          try fs.delete(new Path(s"$path/_dv/$dvName"), false)
-          catch { case _: java.io.IOException => () }
-        }
-        f.foreach(n =>
-          try fs.delete(new Path(s"$path/$n"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(n =>
-          try fs.delete(new Path(s"${path}_quarantine/$n"), false)
-          catch { case _: java.io.IOException => () })
-      case _ => ()
-    }
+    val ms = messages.toSeq.collect { case m: SnapshotMorCommit => m }
+    SnapshotSql.deleteQuietly(
+      new Path(path).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      ms.flatMap(_.dvSpecs).map { case (_, dvName, _) => s"$path/_dv/$dvName" })
+    SnapshotSql.abort(path, ms.map(_.inserts))
   }
 }
 
@@ -3134,8 +3105,8 @@ class SnapshotMorDeltaWriter(
     scala.collection.mutable.HashMap
       .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
   private val inserts =
-    new SnapshotParquetWriter(
-      path, physSchema, partitionId, taskId, hadoopConf, check)
+    new SnapshotSqlDataWriter(
+      path, physSchema, partitionId, taskId, hadoopConf, None, None, check)
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit =
     deletes.getOrElseUpdate(
@@ -3166,10 +3137,7 @@ class SnapshotMorDeltaWriter(
         hadoopConf, new Path(s"$path/_dv/$dvName"), merged)
       (file, dvName, merged.length.toLong)
     }
-    inserts.commit() match {
-      case SnapshotSqlCommit(f, q) => SnapshotMorCommit(specs, f, q)
-      case _                       => SnapshotMorCommit(specs, None, None)
-    }
+    SnapshotMorCommit(specs, inserts.commit())
   }
 
   override def abort(): Unit = inserts.abort()
@@ -3181,8 +3149,7 @@ class SnapshotMorDeltaWriter(
   * files — O(touched files) strings per task. */
 case class SnapshotMorCommit(
     dvSpecs: Seq[(String, String, Long)],
-    file: Option[String],
-    q: Option[String]
+    inserts: SnapshotSqlCommit
 ) extends WriterCommitMessage
 
 // --- write path ---
@@ -3297,7 +3264,7 @@ case class SnapshotSqlStreamingWrite(
       info: PhysicalWriteInfo
   ): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     val conf = new SerializableHadoopConf(DataFiles.hadoopConf(SparkSession.active))
-    SnapshotSqlStreamingWriterFactory(
+    SnapshotSqlWriterFactory(
       path, physSchema, conf, bucketSpec, check, partitionBy)
   }
 
@@ -3319,57 +3286,8 @@ case class SnapshotSqlStreamingWrite(
   override def abort(
       epochId: Long,
       messages: Array[WriterCommitMessage]
-  ): Unit = {
-    val fs = new Path(path)
-      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    messages.foreach {
-      case SnapshotSqlCommit(n, q) =>
-        n.foreach(f =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(f =>
-          try fs.delete(new Path(s"${path}_quarantine/$f"), false)
-          catch { case _: java.io.IOException => () })
-      case SnapshotSqlFilesCommit(pfs, q) =>
-        pfs.foreach(f =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(f =>
-          try fs.delete(new Path(s"${path}_quarantine/$f"), false)
-          catch { case _: java.io.IOException => () })
-      case _ => ()
-    }
-  }
-}
-
-case class SnapshotSqlStreamingWriterFactory(
-    path: String,
-    schema: StructType,
-    conf: SerializableHadoopConf,
-    bucketSpec: Option[(String, Int)] = None,
-    check: Option[SnapshotSql.CheckSpec] = None,
-    partitionBy: Option[String] = None
-) extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(
-      partitionId: Int,
-      taskId: Long,
-      epochId: Long
-  ): DataWriter[InternalRow] =
-    (bucketSpec, partitionBy) match {
-      case (Some((c, n)), _) =>
-        new SnapshotBucketedParquetWriter(
-          path, schema, partitionId, taskId, conf.value, c, n, check)
-      case (None, Some(c)) =>
-        // value-routed even without a required distribution: every
-        // landed file is value-pure (a value may span tasks, so an
-        // epoch lands up to tasks-per-value files for it — still
-        // prunable, OPTIMIZE re-packs)
-        new SnapshotPartitionedParquetWriter(
-          path, schema, partitionId, taskId, conf.value, c, check)
-      case _ =>
-        new SnapshotParquetWriter(
-          path, schema, partitionId, taskId, conf.value, check)
-    }
+  ): Unit =
+    SnapshotSql.abort(path, messages.toSeq)
 }
 
 case class SnapshotSqlBatchWrite(
@@ -3431,52 +3349,19 @@ case class SnapshotSqlBatchWrite(
     SnapshotSql.commitQuarantine(sp, path, messages.toSeq, commitSchema, None)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // best-effort: anything missed is an unreferenced orphan for vacuum
-    val fs = new Path(path)
-      .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-    messages.foreach {
-      case SnapshotSqlCommit(n, q) =>
-        n.foreach(f =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(f =>
-          try fs.delete(new Path(s"${path}_quarantine/$f"), false)
-          catch { case _: java.io.IOException => () })
-      case SnapshotSqlBucketedCommit(bfs) =>
-        bfs.foreach { case (f, _) =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () }
-        }
-      case SnapshotSqlFilesCommit(pfs, q) =>
-        pfs.foreach(f =>
-          try fs.delete(new Path(s"$path/$f"), false)
-          catch { case _: java.io.IOException => () })
-        q.foreach(f =>
-          try fs.delete(new Path(s"${path}_quarantine/$f"), false)
-          catch { case _: java.io.IOException => () })
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SnapshotSql.abort(path, messages.toSeq)
 }
 
+/** What one catalog write task landed: every data file, each with its
+  * bucket id when the table is bucketed, and the file of rows its
+  * quarantine-mode CHECK diverted, if any. */
 case class SnapshotSqlCommit(
-    name: Option[String],
-    quarantined: Option[String] = None
+    files: Seq[(String, Option[Int])],
+    quarantined: Option[String]
 ) extends WriterCommitMessage
 
-/** Bucketed write commit: every file a task landed, tagged with its
-  * bucket id. */
-case class SnapshotSqlBucketedCommit(files: Seq[(String, Int)])
-    extends WriterCommitMessage
-
-/** Value-partitioned write commit: one file per partition value seen
-  * by the task (plus the task's quarantine file, if any). */
-case class SnapshotSqlFilesCommit(
-    files: Seq[String],
-    quarantined: Option[String] = None
-) extends WriterCommitMessage
-
+/** The task writers of every catalog write: batch and streaming. */
 case class SnapshotSqlWriterFactory(
     path: String,
     schema: StructType,
@@ -3484,222 +3369,106 @@ case class SnapshotSqlWriterFactory(
     bucketSpec: Option[(String, Int)] = None,
     check: Option[SnapshotSql.CheckSpec] = None,
     partitionBy: Option[String] = None
-) extends DataWriterFactory {
+) extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(
       partitionId: Int,
       taskId: Long
   ): DataWriter[InternalRow] =
-    (bucketSpec, partitionBy) match {
-      case (Some((c, n)), _) =>
-        new SnapshotBucketedParquetWriter(
-          path, schema, partitionId, taskId, conf.value, c, n, check)
-      case (None, Some(c)) =>
-        new SnapshotPartitionedParquetWriter(
-          path, schema, partitionId, taskId, conf.value, c, check)
-      case _ =>
-        new SnapshotParquetWriter(
-          path, schema, partitionId, taskId, conf.value, check)
-    }
+    new SnapshotSqlDataWriter(
+      path, schema, partitionId, taskId, conf.value, bucketSpec, partitionBy, check)
+
+  override def createWriter(
+      partitionId: Int,
+      taskId: Long,
+      epochId: Long
+  ): DataWriter[InternalRow] =
+    createWriter(partitionId, taskId)
 }
 
-/** Identity-partitioned task writer: one open file PER PARTITION VALUE
-  * seen (the required clustered distribution keeps that a small number
-  * per task — typically one), so every landed file carries a tight
-  * single-value footer stat and the manifest-stats skipping prunes
-  * partition predicates exactly. NULL partition values route to their
-  * own file. Quarantine-mode CHECK diverts like the plain writer. */
-class SnapshotPartitionedParquetWriter(
+/** Task writer of the catalog: lands rows as attempt-unique parquet
+  * files in the table root, through Spark's row writer
+  * ([[DataFiles.rowWriter]]). Lazy: an empty partition writes nothing
+  * at all — no zero-row files accreting in the manifest. Each row goes
+  * to the open file of its routing key, opened on first use:
+  *
+  *   - bucketed tables route by bucket id, the SAME pmod the layout
+  *     declares; a null bucket value refuses, and CHECK enforces
+  *     fail-mode only (quarantine is refused at DDL);
+  *   - `partition_by` tables route by the TRANSFORMED value tuple
+  *     ([[PartSpec.routeValue]]), so every landed file is value-pure in
+  *     EVERY declared partition field: tight footer stats on each
+  *     source column, a day-pure file's ts range spans at most one day.
+  *     NULL values route to their own file. The required clustered
+  *     distribution keeps that a small number of files per task; a
+  *     streaming epoch has none, so a value may span tasks and land up
+  *     to tasks-per-value files, still prunable (OPTIMIZE re-packs);
+  *   - any other table writes one file per task.
+  *
+  * Quarantine-mode CHECK diverts violating rows to one file in the
+  * sibling `<table>_quarantine` directory, invisible until the driver
+  * commits it to that table's own log. */
+class SnapshotSqlDataWriter(
     table: String,
     schema: StructType,
     partitionId: Int,
     taskId: Long,
     hadoopConf: org.apache.hadoop.conf.Configuration,
-    partCol: String,
-    check: Option[SnapshotSql.CheckSpec] = None
+    bucketSpec: Option[(String, Int)],
+    partitionBy: Option[String],
+    check: Option[SnapshotSql.CheckSpec]
 ) extends DataWriter[InternalRow] {
 
-  private val messageType: MessageType = SnapshotSql.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(messageType)
-  // `partCol` is the comma-joined spec: one routing key per distinct
-  // TRANSFORMED value tuple, so every landed file is value-pure in
-  // EVERY declared partition field (tight footer stats on each source
-  // column — a day-pure file's ts range spans at most one day)
-  private val fields: Array[PartField] = PartSpec.parse(partCol).toArray
-  private val colIdxs: Array[Int] = fields.map(f => schema.fieldIndex(f.col))
-  private val dts = colIdxs.map(schema(_).dataType)
-  private val writers =
-    scala.collection.mutable.Map.empty[String, (ParquetWriter[Group], String)]
-  private var qWriter: ParquetWriter[Group] = _
-  private var qFileName: String = _
-
-  private def open(dir: String, name: String): ParquetWriter[Group] =
-    DataFiles.groupWriter(s"$dir/$name", messageType, hadoopConf)
-
-  private def keyOf(row: InternalRow): String =
-    fields.indices
-      .map(j => PartSpec.routeValue(fields(j), dts(j), row, colIdxs(j)))
-      .mkString("\u0001") // separated: ("1","23") must not collide with ("12","3")
-
-  override def write(row: InternalRow): Unit =
-    if (check.forall(_.passes(row))) {
-      val k = keyOf(row)
-      writers.getOrElseUpdate(k, {
-        val name =
-          s"part-sql-$partitionId-$taskId-${UUID.randomUUID.toString.take(8)}.parquet"
-        (open(table, name), name)
-      })._1.write(SnapshotSql.toGroup(factory, schema, row))
-    } else {
-      if (qWriter == null) {
-        qFileName =
-          s"part-q-$partitionId-$taskId-${UUID.randomUUID.toString.take(8)}.parquet"
-        qWriter = open(s"${table}_quarantine", qFileName)
+  /** A row's routing key: its bucket id, its partition tuple, or `()`. */
+  private val keyOf: InternalRow => Any = (bucketSpec, partitionBy) match {
+    case (Some((c, n)), _) =>
+      val i = schema.fieldIndex(c)
+      val isLong = schema(i).dataType == LongType
+      row => {
+        require(!row.isNullAt(i),
+          s"bucketed table $table: bucket column '$c' must not be null")
+        val key = if (isLong) row.getLong(i) else row.getInt(i).toLong
+        (((key % n) + n) % n).toInt
       }
-      qWriter.write(SnapshotSql.toGroup(factory, schema, row))
-    }
-
-  override def write(metadata: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._1.close())
-    if (qWriter != null) { qWriter.close(); qWriter = null }
-    val files = writers.values.map(_._2).toSeq
-    writers.clear()
-    SnapshotSqlFilesCommit(files, Option(qFileName))
+    case (None, Some(spec)) =>
+      val fields = PartSpec.parse(spec).toArray
+      val idxs = fields.map(f => schema.fieldIndex(f.col))
+      val dts = idxs.map(schema(_).dataType)
+      row => fields.indices
+        .map(j => PartSpec.routeValue(fields(j), dts(j), row, idxs(j)))
+        .mkString("\u0001") // separated: ("1","23") must not collide with ("12","3")
+    case _ => _ => ()
   }
 
-  override def abort(): Unit = {
-    writers.values.foreach(_._1.close())
-    if (qWriter != null) { qWriter.close(); qWriter = null }
-    val fs = new Path(table).getFileSystem(hadoopConf)
-    writers.values.foreach { case (_, n) =>
-      try fs.delete(new Path(s"$table/$n"), false)
-      catch { case _: java.io.IOException => () }
-    }
-    if (qFileName != null) {
-      try fs.delete(new Path(s"${table}_quarantine/$qFileName"), false)
-      catch { case _: java.io.IOException => () }
-    }
-    writers.clear()
+  /** The open file of each routing key: writer, name, bucket id. */
+  private val files = scala.collection.mutable.HashMap
+    .empty[Any, (ParquetWriter[InternalRow], String, Option[Int])]
+  private var quarantine: (ParquetWriter[InternalRow], String) = _
+
+  private def open(
+      dir: String,
+      prefix: String,
+      bucket: Option[Int]
+  ): (ParquetWriter[InternalRow], String) = {
+    val name = s"$prefix-$partitionId-$taskId-${bucket.fold("")(b => s"b$b-")}" +
+      s"${UUID.randomUUID.toString.take(8)}.parquet"
+    (DataFiles.rowWriter(s"$dir/$name", schema, hadoopConf), name)
   }
-
-  override def close(): Unit = {
-    writers.values.foreach(_._1.close())
-    if (qWriter != null) { qWriter.close(); qWriter = null }
-    writers.clear()
-  }
-}
-
-/** Bucketed task writer: one open file PER BUCKET VALUE seen (the
-  * required clustered distribution keeps that a small number per
-  * task), each row routed by the SAME pmod the layout declares. */
-class SnapshotBucketedParquetWriter(
-    table: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long,
-    hadoopConf: org.apache.hadoop.conf.Configuration,
-    bucketCol: String,
-    nBuckets: Int,
-    check: Option[SnapshotSql.CheckSpec] = None
-) extends DataWriter[InternalRow] {
-
-  private val messageType: MessageType = SnapshotSql.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(messageType)
-  private val colIdx = schema.fieldIndex(bucketCol)
-  private val isLong = schema(colIdx).dataType == LongType
-  private val writers =
-    scala.collection.mutable.Map.empty[Int, (ParquetWriter[Group], String)]
-
-  private def writerFor(b: Int): ParquetWriter[Group] =
-    writers.getOrElseUpdate(b, {
-      val name =
-        s"part-sql-$partitionId-$taskId-b$b-${UUID.randomUUID.toString.take(8)}.parquet"
-      (DataFiles.groupWriter(s"$table/$name", messageType, hadoopConf), name)
-    })._1
-
-  override def write(row: InternalRow): Unit = {
-    // bucketed tables enforce fail-mode only (quarantine refused at DDL)
-    check.foreach(_.passes(row))
-    require(!row.isNullAt(colIdx),
-      s"bucketed table $table: bucket column '$bucketCol' must not be null")
-    val key = if (isLong) row.getLong(colIdx) else row.getInt(colIdx).toLong
-    val b = (((key % nBuckets) + nBuckets) % nBuckets).toInt
-    writerFor(b).write(SnapshotSql.toGroup(factory, schema, row))
-  }
-
-  override def write(metadata: InternalRow, row: InternalRow): Unit =
-    write(row)
-
-  override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_._1.close())
-    val files = writers.toSeq.map { case (b, (_, name)) => (name, b) }
-    writers.clear()
-    SnapshotSqlBucketedCommit(files)
-  }
-
-  override def abort(): Unit = {
-    writers.values.foreach(_._1.close())
-    val fs = new Path(table).getFileSystem(hadoopConf)
-    writers.values.foreach { case (_, n) =>
-      try fs.delete(new Path(s"$table/$n"), false)
-      catch { case _: java.io.IOException => () }
-    }
-    writers.clear()
-  }
-
-  override def close(): Unit = {
-    writers.values.foreach(_._1.close())
-    writers.clear()
-  }
-}
-
-/** Task-side parquet writer (Group API) landing one attempt-unique file
-  * in the table root. Lazy: an empty partition writes nothing at all —
-  * no zero-row files accreting in the manifest. */
-class SnapshotParquetWriter(
-    table: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long,
-    hadoopConf: org.apache.hadoop.conf.Configuration,
-    check: Option[SnapshotSql.CheckSpec] = None
-) extends DataWriter[InternalRow] {
-
-  private val messageType: MessageType = SnapshotSql.toMessageType(schema)
-  private val factory = new SimpleGroupFactory(messageType)
-  private var writer: ParquetWriter[Group] = _
-  private var fileName: String = _
-  // quarantine-mode CHECK: violating rows divert here (dead-letter),
-  // landing in the sibling `<table>_quarantine` directory — invisible
-  // until the driver commits them to that table's own log
-  private var qWriter: ParquetWriter[Group] = _
-  private var qFileName: String = _
-
-  private def open(dir: String, name: String): ParquetWriter[Group] =
-    DataFiles.groupWriter(s"$dir/$name", messageType, hadoopConf)
-
-  private def ensureOpen(): Unit =
-    if (writer == null) {
-      fileName =
-        s"part-sql-$partitionId-$taskId-${UUID.randomUUID.toString.take(8)}.parquet"
-      writer = open(table, fileName)
-    }
-
-  private def ensureQOpen(): Unit =
-    if (qWriter == null) {
-      qFileName =
-        s"part-q-$partitionId-$taskId-${UUID.randomUUID.toString.take(8)}.parquet"
-      qWriter = open(s"${table}_quarantine", qFileName)
-    }
 
   override def write(row: InternalRow): Unit =
     if (check.forall(_.passes(row))) {
-      ensureOpen()
-      writer.write(SnapshotSql.toGroup(factory, schema, row))
+      val key = keyOf(row)
+      files.getOrElseUpdate(key, {
+        val bucket = key match {
+          case b: Int => Some(b)
+          case _      => None
+        }
+        val (w, name) = open(table, "part-sql", bucket)
+        (w, name, bucket)
+      })._1.write(row)
     } else {
-      ensureQOpen()
-      qWriter.write(SnapshotSql.toGroup(factory, schema, row))
+      if (quarantine == null) quarantine = open(s"${table}_quarantine", "part-q", None)
+      quarantine._1.write(row)
     }
 
   /** Metadata-carrying write (the row-level DML path): the `_file`
@@ -3707,48 +3476,57 @@ class SnapshotParquetWriter(
   override def write(metadata: InternalRow, row: InternalRow): Unit =
     write(row)
 
-  override def commit(): WriterCommitMessage = {
-    if (writer != null) { writer.close(); writer = null }
-    if (qWriter != null) { qWriter.close(); qWriter = null }
-    SnapshotSqlCommit(Option(fileName), Option(qFileName))
+  override def commit(): SnapshotSqlCommit = {
+    val landed = files.values.map { case (_, n, b) => n -> b }.toSeq
+    val q = Option(quarantine).map(_._2)
+    close()
+    SnapshotSqlCommit(landed, q)
   }
 
   override def abort(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
-    if (qWriter != null) { qWriter.close(); qWriter = null }
-    val fs = new Path(table).getFileSystem(hadoopConf)
-    if (fileName != null) {
-      try fs.delete(new Path(s"$table/$fileName"), false)
-      catch { case _: java.io.IOException => () }
-    }
-    if (qFileName != null) {
-      try fs.delete(new Path(s"${table}_quarantine/$qFileName"), false)
-      catch { case _: java.io.IOException => () }
-    }
+    val names = files.values.map(f => s"$table/${f._2}").toSeq ++
+      Option(quarantine).map(q => s"${table}_quarantine/${q._2}")
+    close()
+    SnapshotSql.deleteQuietly(new Path(table).getFileSystem(hadoopConf), names)
   }
 
   override def close(): Unit = {
-    if (writer != null) { writer.close(); writer = null }
-    if (qWriter != null) { qWriter.close(); qWriter = null }
+    files.values.foreach(_._1.close())
+    files.clear()
+    if (quarantine != null) { quarantine._1.close(); quarantine = null }
   }
 }
 
-/** Spark↔parquet type mapping for the catalog write path. The allowlist
-  * is what the Group-API writer ([[toMessageType]], [[toGroup]]) lands
-  * and what `SnapshotLog`'s stats lifter understands; anything else
-  * refuses at planning, before a task runs. It limits writes only:
-  * scans read every type Spark's parquet reader does. */
+/** The driver side of the catalog's writes: what the task writers'
+  * [[SnapshotSqlCommit]] messages landed, their quarantine commit and
+  * abort, the CHECK constraint, the write schemas of a column-mapped
+  * table, and the column types a write refuses at planning, before a
+  * task runs (those Spark's parquet writer cannot land). */
 private[sources] object SnapshotSql {
 
   /** The files a write's tasks landed, each with its bucket id when the
     * table is bucketed. */
   def landedFiles(messages: Seq[WriterCommitMessage]): Seq[(String, Option[Int])] =
     messages.flatMap {
-      case SnapshotSqlCommit(Some(n), _)  => Seq(n -> None)
-      case SnapshotSqlFilesCommit(fs, _)  => fs.map(_ -> None)
-      case SnapshotSqlBucketedCommit(fs)  => fs.map { case (n, b) => n -> Some(b) }
-      case _                              => Nil
+      case SnapshotSqlCommit(fs, _) => fs
+      case _                        => Nil
     }
+
+  /** Deletes the files a failed write's tasks landed, best-effort:
+    * anything missed is an unreferenced orphan for vacuum. */
+  def abort(path: String, messages: Seq[WriterCommitMessage]): Unit =
+    deleteQuietly(
+      new Path(path).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration),
+      messages.flatMap {
+        case SnapshotSqlCommit(fs, q) =>
+          fs.map(f => s"$path/${f._1}") ++ q.map(n => s"${path}_quarantine/$n")
+        case _ => Nil
+      })
+
+  def deleteQuietly(fs: org.apache.hadoop.fs.FileSystem, paths: Seq[String]): Unit =
+    paths.foreach(p =>
+      try fs.delete(new Path(p), false)
+      catch { case _: java.io.IOException => () })
 
   /** Commits the rows a write's CHECK diverted (check_mode=quarantine)
     * to the sibling `<table>_quarantine` table; no-op when none were. */
@@ -3759,11 +3537,7 @@ private[sources] object SnapshotSql {
       schema: StructType,
       txnId: Option[String]
   ): Unit = {
-    val qnames = messages.collect {
-      case SnapshotSqlCommit(_, Some(q))      => q
-      case SnapshotSqlFilesCommit(_, Some(q)) => q
-      case SnapshotMorCommit(_, _, Some(q))   => q
-    }
+    val qnames = messages.collect { case SnapshotSqlCommit(_, Some(q)) => q }
     if (qnames.nonEmpty)
       SnapshotLog.commit(
         spark, s"${path}_quarantine",
@@ -3955,137 +3729,16 @@ private[sources] object SnapshotSql {
     else None
   }
 
-  /** Refuses a column type the catalog's writer cannot land — at
-    * CREATE, ADD COLUMN and write planning. A table committed through
-    * `SnapshotLog` with other types still reads through the catalog. */
-  def requireSupported(schema: StructType): Unit =
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case LongType | IntegerType | DoubleType | FloatType | BooleanType |
-            StringType | BinaryType | DateType | TimestampType |
-            TimestampNTZType =>
-        // numeric arrays: vector embeddings as first-class columns
-        case ArrayType(LongType | IntegerType | DoubleType | FloatType, _) =>
-        case dt =>
-          throw new UnsupportedOperationException(
-            s"snapshot catalog: unsupported column type $dt for '${f.name}' " +
-              "(supported: bigint/int/double/float/boolean/string/binary/" +
-              "date/timestamp/timestamp_ntz, and arrays of the numeric types)"
-          )
-      }
+  /** Refuses a column type Spark's parquet writer cannot land (a
+    * calendar interval, say) — at CREATE, ADD COLUMN and write
+    * planning. */
+  def requireSupported(schema: StructType): Unit = {
+    val format = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    schema.fields.filterNot(f => format.supportDataType(f.dataType)).foreach { f =>
+      throw new UnsupportedOperationException(
+        s"snapshot catalog: unsupported column type ${f.dataType} for '${f.name}' " +
+          "(Spark's parquet writer cannot land it)")
     }
-
-  private def elementPrim(et: DataType): PrimitiveTypeName = et match {
-    case LongType    => PrimitiveTypeName.INT64
-    case IntegerType => PrimitiveTypeName.INT32
-    case DoubleType  => PrimitiveTypeName.DOUBLE
-    case FloatType   => PrimitiveTypeName.FLOAT
-    case dt =>
-      throw new UnsupportedOperationException(s"snapshot catalog write: array<$dt>")
-  }
-
-  def toMessageType(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach {
-      // 3-level LIST for numeric arrays (vector embeddings)
-      case f @ StructField(_, ArrayType(et, _), _, _) =>
-        b.addField(
-          Types
-            .optionalList()
-            .optionalElement(elementPrim(et))
-            .named(f.name))
-      case f =>
-      val rep = if (f.nullable) Repetition.OPTIONAL else Repetition.REQUIRED
-      val prim = f.dataType match {
-        case LongType    => Types.primitive(PrimitiveTypeName.INT64, rep)
-        case IntegerType => Types.primitive(PrimitiveTypeName.INT32, rep)
-        case DoubleType  => Types.primitive(PrimitiveTypeName.DOUBLE, rep)
-        case FloatType   => Types.primitive(PrimitiveTypeName.FLOAT, rep)
-        case BooleanType => Types.primitive(PrimitiveTypeName.BOOLEAN, rep)
-        case StringType =>
-          Types
-            .primitive(PrimitiveTypeName.BINARY, rep)
-            .as(LogicalTypeAnnotation.stringType())
-        case BinaryType => Types.primitive(PrimitiveTypeName.BINARY, rep)
-        case DateType =>
-          Types
-            .primitive(PrimitiveTypeName.INT32, rep)
-            .as(LogicalTypeAnnotation.dateType())
-        case TimestampType =>
-          Types
-            .primitive(PrimitiveTypeName.INT64, rep)
-            .as(
-              LogicalTypeAnnotation
-                .timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS)
-            )
-        case TimestampNTZType =>
-          Types
-            .primitive(PrimitiveTypeName.INT64, rep)
-            .as(
-              LogicalTypeAnnotation
-                .timestampType(false, LogicalTypeAnnotation.TimeUnit.MICROS)
-            )
-        case dt =>
-          throw new UnsupportedOperationException(
-            s"snapshot catalog write: $dt" // requireSupported ran earlier
-          )
-      }
-      b.addField(prim.named(f.name))
-    }
-    b.named("graft_snapshot")
-  }
-
-  def toGroup(
-      factory: SimpleGroupFactory,
-      schema: StructType,
-      row: InternalRow
-  ): Group = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) {
-        val n = schema(i).name
-        schema(i).dataType match {
-          case LongType | TimestampType | TimestampNTZType =>
-            g.add(n, row.getLong(i))
-          case IntegerType | DateType => g.add(n, row.getInt(i))
-          case DoubleType             => g.add(n, row.getDouble(i))
-          case FloatType              => g.add(n, row.getFloat(i))
-          case BooleanType            => g.add(n, row.getBoolean(i))
-          case StringType             => g.add(n, row.getUTF8String(i).toString)
-          case BinaryType =>
-            g.add(n, Binary.fromConstantByteArray(row.getBinary(i)))
-          case ArrayType(et, _) =>
-            // 3-level LIST assembly: <name> { repeated list { element } }
-            val arr = row.getArray(i)
-            val lg = g.addGroup(n)
-            var j = 0
-            while (j < arr.numElements()) {
-              val el = lg.addGroup(0)
-              // null element = list group with NO element value (the
-              // optional-element half of the 3-level encoding) — NOT a
-              // zero; ArrayData.getFloat on a null slot reads back 0
-              // silently, so the isNullAt guard is load-bearing.
-              if (!arr.isNullAt(j)) et match {
-                case FloatType   => el.add(0, arr.getFloat(j))
-                case DoubleType  => el.add(0, arr.getDouble(j))
-                case LongType    => el.add(0, arr.getLong(j))
-                case IntegerType => el.add(0, arr.getInt(j))
-                case dt =>
-                  throw new UnsupportedOperationException(
-                    s"snapshot catalog write: array<$dt>")
-              }
-              j += 1
-            }
-          case dt =>
-            throw new UnsupportedOperationException(
-              s"snapshot catalog write: $dt"
-            )
-        }
-      }
-      i += 1
-    }
-    g
   }
 }
 

@@ -946,8 +946,11 @@ object StreamOps {
     * purchase (left-outer null extension). */
   case class JoinOut(p_id: Long, user_id: Long, c_id: Option[Long])
 
-  private case class PendP(id: Long, tsMs: Long, matched: Boolean)
-  private case class BufC(id: Long, tsMs: Long)
+  /** State rows of the TWS join: a pending purchase and a buffered
+    * click. Public like the rows above, so the projections Spark
+    * generates for their encoders can reach their accessors. */
+  case class PendP(id: Long, tsMs: Long, matched: Boolean)
+  case class BufC(id: Long, tsMs: Long)
 
   /** The stream-stream interval LEFT OUTER join rebuilt on
     * `transformWithState` + event-time TIMERS (SURVEY §8 / round-3

@@ -325,28 +325,28 @@ class CommitPipelineSpec extends SparkTestBase {
         |append buckets=aWQ6Mg schema=${schema2}
         |# v2
         |append parent=1 buckets=aWQ6Mg schema=${schema2}
-        |part-sql-0-b0-S1.parquet${T}_sz=z:560;_rc=r:3;id=l:0:4;v=l:0:8;_bk=k:0
-        |part-sql-0-b1-S2.parquet${T}_sz=z:560;_rc=r:3;id=l:1:5;v=l:2:10;_bk=k:1
+        |part-sql-0-b0-S1.parquet${T}_sz=z:527;_rc=r:3;id=l:0:4;v=l:0:8;_bk=k:0
+        |part-sql-0-b1-S2.parquet${T}_sz=z:527;_rc=r:3;id=l:1:5;v=l:2:10;_bk=k:1
         |""".stripMargin,
       "mor" -> s"""|# v1
         |append schema=${schema2}
         |# v2
         |append parent=1 schema=${schema2}
-        |part-sql-0-S1.parquet${T}_sz=z:574;_rc=r:6;id=l:0:5;v=l:0:5
+        |part-sql-0-S1.parquet${T}_sz=z:541;_rc=r:6;id=l:0:5;v=l:0:5
         |# v3
         |replace parent=2 schema=${schema2}
         |-part-sql-0-S1.parquet
-        |part-sql-0-S1.parquet${T}_sz=z:574;_rc=r:6;id=l:0:5;v=l:0:5;_dv=v:dv-D1.bin;_dvc=c:1
-        |part-sql-0-S2.parquet${T}_sz=z:543;_rc=r:1;id=l:2:2;v=l:-1:-1
+        |part-sql-0-S1.parquet${T}_sz=z:541;_rc=r:6;id=l:0:5;v=l:0:5;_dv=v:dv-D1.bin;_dvc=c:1
+        |part-sql-0-S2.parquet${T}_sz=z:510;_rc=r:1;id=l:2:2;v=l:-1:-1
         |""".stripMargin,
       "md" -> s"""|# v1
         |append schema=${schema9}
         |# v2
         |append parent=1 schema=${schema9}
-        |part-sql-0-S1.parquet${T}_sz=z:380;_rc=r:10;id=l:0:9
+        |part-sql-0-S1.parquet${T}_sz=z:347;_rc=r:10;id=l:0:9
         |# v3
         |append parent=2 schema=${schema9}
-        |part-sql-0-S2.parquet${T}_sz=z:380;_rc=r:10;id=l:10:19
+        |part-sql-0-S2.parquet${T}_sz=z:347;_rc=r:10;id=l:10:19
         |# v4
         |replace parent=3 schema=${schema9}
         |-part-sql-0-S1.parquet

@@ -307,23 +307,50 @@ class DataFileFormatSpec extends SparkTestBase {
     assert(tipCodecs("twin") == Set(CompressionCodecName.ZSTD))
   }
 
-  test("DECIMAL, SMALLINT, TINYINT, STRUCT and MAP columns read through the catalog " +
-    "as SnapshotLog.read has them; an INSERT into the table still refuses at planning") {
+  test("DECIMAL, SMALLINT, TINYINT, STRUCT, MAP and ARRAY<STRING> columns INSERT " +
+    "through the catalog and read back as SnapshotLog.read has them; SMALLINT range " +
+    "filters and MIN/MAX/COUNT agree") {
     val name = "wide_types"
     val _ = warehouse
-    SnapshotLog.commit(spark, pathOf(name), spark.range(0, 60).selectExpr(
+    def cols(sm: String, ti: String) = Seq(
       "id AS k",
       "CAST(id * 1.25 AS DECIMAL(12, 3)) AS d",
-      "CAST(id * 300 AS SMALLINT) AS sm",
-      "CAST(id - 30 AS TINYINT) AS ti",
+      s"CAST($sm AS SMALLINT) AS sm",
+      s"CAST($ti AS TINYINT) AS ti",
       "IF(id % 7 = 0, NULL, named_struct('a', CAST(id AS INT), 'b', concat('s', id))) AS st",
-      "IF(id % 5 = 0, NULL, map('x', id, 'y', id * 2)) AS m"))
-    assert(catalogMatchesLog(name, None) == 60)
-    val versions = SnapshotLog.versions(spark, pathOf(name))
-    val e = intercept[Exception](
-      sql(s"INSERT INTO fmttest.main.$name SELECT * FROM fmttest.main.$name"))
-    assert(e.getMessage.contains("unsupported column type"), e.getMessage)
-    assert(SnapshotLog.versions(spark, pathOf(name)) == versions)
+      "IF(id % 5 = 0, NULL, map('x', id, 'y', id * 2)) AS m",
+      "IF(id % 6 = 0, NULL, array(concat('a', id), NULL, 'z')) AS a")
+    SnapshotLog.commit(spark, pathOf(name),
+      spark.range(0, 60).selectExpr(cols("id * 300", "id - 30"): _*))
+    sql(s"INSERT INTO fmttest.main.$name SELECT " +
+      cols("id * 250 - 30000", "id - 90").mkString(", ") + " FROM range(60, 120)")
+    assert(SnapshotLog.versions(spark, pathOf(name)).size == 2)
+    assert(catalogMatchesLog(name, None) == 120)
+    val log = SnapshotLog.read(spark, pathOf(name))
+    log.createOrReplaceTempView("wide_types_log")
+    Seq("", "WHERE sm BETWEEN -12000 AND 9000", "WHERE sm > 300", "WHERE sm < 0").foreach { where =>
+      val q = "SELECT count(*), min(sm), max(sm), count(sm), sum(sm) FROM"
+      val got = sql(s"$q fmttest.main.$name $where").head.toSeq
+      assert(got == sql(s"$q wide_types_log $where").head.toSeq, where)
+      assert(got.head.asInstanceOf[Long] > 0, where)
+    }
+  }
+
+  test("catalog writes are never calendar-rebased: a pre-1582 DATE and TIMESTAMP " +
+    "INSERTed under datetimeRebaseModeInWrite=LEGACY read back as written") {
+    val _ = warehouse
+    val t = "fmttest.main.old_dates"
+    sql(s"CREATE TABLE $t (k BIGINT, d DATE, ts TIMESTAMP)")
+    withConf(spark, "spark.sql.parquet.datetimeRebaseModeInWrite" -> "LEGACY")(
+      sql(s"""INSERT INTO $t VALUES
+             |(1, DATE'1000-01-01', TIMESTAMP'1000-01-01 12:00:00'),
+             |(2, DATE'1582-10-01', TIMESTAMP'1500-06-30 23:59:59')""".stripMargin))
+    val want = Seq("1|1000-01-01|1000-01-01 12:00:00", "2|1582-10-01|1500-06-30 23:59:59")
+    def asText(df: DataFrame): Seq[String] =
+      df.selectExpr("k", "CAST(d AS STRING)", "CAST(ts AS STRING)")
+        .collect().map(_.mkString("|")).sorted.toSeq
+    assert(asText(spark.table(t)) == want)
+    assert(asText(SnapshotLog.read(spark, pathOf("old_dates"))) == want)
   }
 
   test("catalog scans equal SnapshotLog.read with _file and _pos at every version: " +

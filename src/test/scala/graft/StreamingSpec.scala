@@ -698,6 +698,18 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("transformWithState timer join matches the built-in left-outer join (RocksDB)") {
+    twsJoin("tws_join")
+  }
+
+  test("transformWithState timer join compiles its state-row projections (CODEGEN_ONLY)") {
+    // a state row class Spark's generated code cannot reach fails here
+    // instead of falling back to the interpreted projection
+    withConf(spark, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(twsJoin("tws_join_codegen"))
+  }
+
+  /** The left-outer scenario of the built-in stream-stream join, run
+    * through `purchaseClickJoinTws` into memory table `name`. */
+  private def twsJoin(name: String): Unit = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     withStateProvider(rocksProvider) {
@@ -708,13 +720,13 @@ class StreamingSpec extends SparkTestBase {
         .purchaseClickJoinTws(purchases.toDF, clicks.toDF)
         .writeStream
         .format("memory")
-        .queryName("tws_join")
+        .queryName(name)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
         .start()
       try {
         def results() = spark
-          .table("tws_join")
+          .table(name)
           .collect()
           .map { r =>
             val c = r.getAs[AnyRef]("c_id")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-file and per-column layout of parquet data files.
 
-    python3 tools/parquet_layout.py PATH... [--expect-codec ZSTD]
+    python3 tools/parquet_layout.py PATH... [--expect-codec ZSTD] [--kv]
 
 Each PATH is a parquet file or a directory, searched recursively for
 `*.parquet`. A snapshot table's metadata is skipped: anything under a
@@ -9,8 +9,10 @@ Each PATH is a parquet file or a directory, searched recursively for
 
 For each file it prints the row and row-group counts, then per column
 the codecs, the encodings, and the compressed and uncompressed bytes
-summed over the file's row groups. A last table totals the bytes per
-column over all files, with the compression ratio.
+summed over the file's row groups. With --kv it also prints the file's
+`created_by` and the keys of its footer's key-value metadata. A last
+table totals the bytes per column over all files, with the compression
+ratio.
 
 With --expect-codec the tool exits 1 when any column chunk uses another
 codec and lists those chunks; without it, it always exits 0 once every
@@ -38,6 +40,12 @@ def data_files(paths):
                     yield os.path.join(root, name)
 
 
+def footer_kv(path):
+    """(created_by, sorted key-value metadata keys) of the file's footer."""
+    meta = pq.ParquetFile(path).metadata
+    return meta.created_by, sorted(k.decode() for k in (meta.metadata or {}))
+
+
 def layout(path):
     """(rows, row groups, {column: [codecs, encodings, compressed, uncompressed]})."""
     meta = pq.ParquetFile(path).metadata
@@ -59,6 +67,8 @@ def main(argv=None):
     ap.add_argument("paths", nargs="+", metavar="PATH")
     ap.add_argument("--expect-codec", metavar="CODEC",
                     help="exit 1 if any column chunk uses another codec (e.g. ZSTD)")
+    ap.add_argument("--kv", action="store_true",
+                    help="print each file's created_by and footer key-value metadata keys")
     args = ap.parse_args(argv)
     expect = args.expect_codec.upper() if args.expect_codec else None
 
@@ -71,6 +81,10 @@ def main(argv=None):
     for f in files:
         rows, groups, cols = layout(f)
         print(f"{f}  rows={rows} row_groups={groups}")
+        if args.kv:
+            created_by, keys = footer_kv(f)
+            print(f"  created_by={created_by}")
+            print(f"  kv_keys={','.join(keys) or '(none)'}")
         print(f"  {'column':<24} {'codec':<10} {'compressed':>11} {'uncompressed':>13}  encodings")
         for name, (codecs, encodings, comp, uncomp) in cols.items():
             codec = ",".join(sorted(codecs))
