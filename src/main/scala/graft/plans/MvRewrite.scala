@@ -24,6 +24,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Project
 }
 import org.apache.spark.sql.catalyst.rules.Rule
+import graft.sources.MvDecl
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation,
   LogicalRelation
@@ -98,17 +99,11 @@ object MvRewrite {
   private val registry =
     new java.util.concurrent.ConcurrentHashMap[String, MvDef]()
 
-  private def norm(p: String): String =
-    p.stripPrefix("file:").replaceAll("/+$", "")
-
-  private[plans] def samePath(a: String, b: String): Boolean =
-    norm(a) == norm(b)
-
   /** Derived MV key grains the shape gate admits (round 15 extends the
     * round-14 day grain to the partition-transform surface): `to_date
     * (col)` (day), `trunc(to_date(col), 'month'|'year')` (month/year)
     * and `date_trunc('hour', col)` (hour). Each is recorded verbatim
-    * in `mv_key_expr`; the serve rule matches the analyzer's catalyst
+    * in [[graft.sources.MvDecl.keyExpr]]; the serve rule matches the analyzer's catalyst
     * spelling of the SAME text, so the structural match can never
     * admit a different expression. */
   private[graft] val ToDateRe = """to_date\((\w+)\)""".r
@@ -177,23 +172,23 @@ object MvRewrite {
     } finally diagSink.remove()
   }
 
-  def register(mv: MvDef): Unit = registry.put(norm(mv.sourcePath), mv)
+  def register(mv: MvDef): Unit = registry.put(MvDecl.normPath(mv.sourcePath), mv)
 
   def lookup(sourcePath: String): Option[MvDef] =
-    Option(registry.get(norm(sourcePath)))
+    Option(registry.get(MvDecl.normPath(sourcePath)))
 
   /** True iff the plan scans files under `tablePath` — the fired/
     * bailed probe for the MANAGED-MV serve path (the snapshot read
     * plans the MV's manifest files as a parquet relation, so the MV
     * table's directory prefixes every root path). */
   def readsPath(plan: LogicalPlan, tablePath: String): Boolean = {
-    val p = norm(tablePath)
+    val p = MvDecl.normPath(tablePath)
     plan.collectFirst {
       case rel: LogicalRelation
           if rel.relation.isInstanceOf[HadoopFsRelation] &&
             rel.relation.asInstanceOf[HadoopFsRelation]
               .location.rootPaths.exists { rp =>
-                val n = norm(rp.toString)
+                val n = MvDecl.normPath(rp.toString)
                 n == p || n.startsWith(p + "/")
               } =>
         rel
@@ -205,7 +200,7 @@ object MvRewrite {
   def readsMv(plan: LogicalPlan): Boolean = {
     val mvPaths = {
       import scala.jdk.CollectionConverters._
-      registry.values().asScala.map(d => norm(d.mvPath)).toSet
+      registry.values().asScala.map(d => MvDecl.normPath(d.mvPath)).toSet
     }
     plan
       .collectFirst {
@@ -215,7 +210,7 @@ object MvRewrite {
                 .asInstanceOf[HadoopFsRelation]
                 .location
                 .rootPaths
-                .exists(p => mvPaths(norm(p.toString))) =>
+                .exists(p => mvPaths(MvDecl.normPath(p.toString))) =>
           rel
       }
       .isDefined
@@ -414,8 +409,8 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   // version the scanned relation pinned at analysis (tip reads and
   // VERSION AS OF alike) — a stale or ahead MV bails to the source
   // plan, correctness before speed. Discovery is the source table's
-  // `mv_refs` reverse pointer (one props read), each ref re-verified
-  // against the MV's own props before it may serve.
+  // reverse pointer ([[MvDecl.refs]], one props read), each ref
+  // re-verified against the MV's own declaration before it may serve.
   // ------------------------------------------------------------------
 
   import org.apache.spark.sql.execution.datasources.v2.{
@@ -518,8 +513,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def mvRefsOf(srcPath: String): Seq[String] =
     scala.util
       .Try(graft.sources.SnapshotLog.tableProps(spark, srcPath))
-      .toOption.flatMap(_.get("mv_refs")).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty)
+      .toOption.toSeq.flatMap(MvDecl.refs)
 
   /** serveManaged, crash-proofed: an optimizer rule must never break
     * the query, but a Throwable out of the serve path used to vanish
@@ -601,15 +595,13 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // head (the candidate will bail on shape anyway).
       val v = wantDimPins match {
         case Some(byPath) =>
-          val rDims = graft.sources.SnapshotLog.tableProps(spark, mvPath)
-            .get("mv_join_dim")
-            .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-            .getOrElse(Nil)
+          val rDims = MvDecl.parse(graft.sources.SnapshotLog.tableProps(spark, mvPath))
+            .toSeq.flatMap(_.joins.map(_.dim))
           val want: Option[Seq[Int]] =
             if (rDims.isEmpty) None
             else {
               val ws = rDims.map(d => byPath.collectFirst {
-                case (p, w) if MvRewrite.samePath(p, d) => w
+                case (p, w) if MvDecl.samePath(p, d) => w
               })
               if (ws.forall(_.isDefined)) Some(ws.map(_.get)) else None
             }
@@ -700,7 +692,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   // deliberately narrow and every piece verifies against the MV's
   // recorded join: one INNER equi-join on a single column pair, fact
   // and dim both snapshot scans, the dim pinned at EXACTLY the MV's
-  // recorded mv_dim_version and the fact at the MV's fold watermark.
+  // recorded dim pins and the fact at the MV's fold watermark.
   // The inner join implies isnotnull on both join keys, so those
   // optimizer-inferred atoms are discarded; any OTHER fact-side
   // residual bails (measure-level predicates are unanswerable from a
@@ -982,14 +974,13 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       mvPath: String
   ): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.And
-    val props = graft.sources.SnapshotLog.tableProps(spark, mvPath)
-    val rDims = props.getOrElse("mv_join_dim", return None)
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val rFks = props.getOrElse("mv_join_fk", "").split(',').map(_.trim).toSeq
-    val rPks = props.getOrElse("mv_join_pk", "").split(',').map(_.trim).toSeq
+    val joins = MvDecl.parse(graft.sources.SnapshotLog.tableProps(spark, mvPath))
+      .map(_.joins).filter(_.nonEmpty).getOrElse(return None)
+    val rDims = joins.map(_.dim)
+    val rFks = joins.map(_.fk)
+    val rPks = joins.map(_.pk)
     val dimLeavesAll = sm.leaves.filterNot(_ eq factLeaf)
-    if (rDims.size != dimLeavesAll.size || rFks.size != rDims.size ||
-      rPks.size != rDims.size) {
+    if (rDims.size != dimLeavesAll.size) {
       MvRewrite.diag(s"$mvPath: joins ${rDims.size} dim(s), the query " +
         s"${dimLeavesAll.size}; skipped")
       return None
@@ -999,7 +990,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val usedLeaf = scala.collection.mutable.Set[Int]()
     val dimLeaves: Seq[StarLeaf] = rDims.map { dp =>
       val i = dimLeavesAll.indexWhere(
-        l => MvRewrite.samePath(l.path, dp)) match {
+        l => MvDecl.samePath(l.path, dp)) match {
         case idx if idx >= 0 && !usedLeaf(idx) => idx
         case _ =>
           MvRewrite.diag(s"$mvPath: recorded dim $dp is not among the " +
@@ -1016,7 +1007,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // uniform legacy props otherwise — each claimed query edge must
     // carry the RECORDED type for its dim (an inner edge drops rows
     // the left bucket keeps and vice versa)
-    val rTypes = graft.sources.SnapshotLog.edgeTypesOf(props, rDims.size)
+    val rTypes = joins.map(_.edge)
     val usedEdge = scala.collection.mutable.Set[Int]()
     rDims.indices.foreach { i =>
       val dimOut = dimLeaves(i).out
@@ -1088,7 +1079,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       Some(probe))
   }
 
-  /** Resolve a recorded measure-expression TEXT (`mv_agg_expr`)
+  /** Resolve a recorded measure-expression TEXT ([[MvDecl.measureExprs]])
     * against the query's own source plan and return the catalyst
     * expression a query-side aggregate child must semantically equal
     * for the serve to fire. The text is parsed, name-resolved against
@@ -1173,10 +1164,15 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       StringType
     }
     val props = SnapshotLog.tableProps(spark, mvPath)
-    if (!props.get("mv_source").exists(s => MvRewrite.samePath(s, srcPath))) {
+    val declaredSource = MvDecl.sourceOf(props)
+    if (!declaredSource.exists(s => MvDecl.samePath(s, srcPath))) {
       MvRewrite.diag(s"$mvPath: dangling mv_refs pointer — its mv_source " +
-        s"is ${props.getOrElse("mv_source", "<unset>")}, not the scanned " +
+        s"is ${declaredSource.getOrElse("<unset>")}, not the scanned " +
         "table; skipped")
+      return None
+    }
+    val decl = MvDecl.parse(props).getOrElse {
+      MvRewrite.diag(s"$mvPath: carries a malformed MV declaration; skipped")
       return None
     }
     // join MVs serve ONLY through a verified join context, and plain
@@ -1185,20 +1181,16 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // fact rows from mv_n and every measure partial. With it, the
     // query's dim must be the recorded dim AT the recorded pinned
     // version, joined on exactly the recorded fk = pk.
-    (props.get("mv_join_dim"), joinProbe) match {
-      case (None, None) => ()
-      case (Some(dp), Some(jp)) =>
-        // round 16: the recorded join is a LIST (star/snowflake) —
-        // every field is an aligned comma-joined list; the probe's
-        // dims arrive in the SAME recorded order (the star matcher
-        // aligns them; the legacy 2-leaf path is the singleton case)
-        val rDims = dp.split(',').toSeq
-        val rFks = props.getOrElse("mv_join_fk", "").split(',').toSeq
-        val rPks = props.getOrElse("mv_join_pk", "").split(',').toSeq
-        val rVs = props.getOrElse("mv_dim_version", "")
-          .split(',').toSeq.map(s => scala.util.Try(s.trim.toInt).toOption)
-        if (rDims.size != jp.dims.size) {
-          MvRewrite.diag(s"$mvPath: joins ${rDims.size} dim(s), the " +
+    (decl.joins.nonEmpty, joinProbe) match {
+      case (false, None) => ()
+      case (true, Some(jp)) =>
+        // round 16: the recorded join is a LIST (star/snowflake); the
+        // probe's dims arrive in the SAME recorded order (the star
+        // matcher aligns them; the legacy 2-leaf path is the singleton
+        // case)
+        val joins = decl.joins
+        if (joins.size != jp.dims.size) {
+          MvRewrite.diag(s"$mvPath: joins ${joins.size} dim(s), the " +
             s"query ${jp.dims.size}; skipped")
           return None
         }
@@ -1207,8 +1199,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // query needs on that dim, and a left edge's NULL bucket
         // mixes unmatched rows with matched-NULL-attr rows an inner
         // query never sees — any per-edge mismatch is wrong
-        val rTypes =
-          graft.sources.SnapshotLog.edgeTypesOf(props, rDims.size)
+        val rTypes = joins.map(_.edge)
         if (rTypes != jp.joinTypes) {
           MvRewrite.diag(s"$mvPath: records join types " +
             s"(${rTypes.mkString(", ")}); the query joins " +
@@ -1216,19 +1207,15 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             "semantics differ, skipped")
           return None
         }
-        jp.dims.zipWithIndex.foreach { case (dl, i) =>
-          if (rFks.size <= i || rPks.size <= i ||
-            !MvRewrite.samePath(rDims(i), dl.dimPath)) {
+        jp.dims.zip(joins).foreach { case (dl, j) =>
+          if (!MvDecl.samePath(j.dim, dl.dimPath)) {
             MvRewrite.diag(s"$mvPath: joins a different dim " +
-              s"(${rDims.lift(i).getOrElse("?")}, query joins " +
-              s"${dl.dimPath}); skipped")
+              s"(${j.dim}, query joins ${dl.dimPath}); skipped")
             return None
           }
-          if (rFks(i) != dl.fkName || rPks(i) != dl.pkName) {
-            MvRewrite.diag(s"$mvPath: joins on " +
-              s"${rFks.lift(i).getOrElse("?")} = " +
-              s"${rPks.lift(i).getOrElse("?")}, the query on " +
-              s"${dl.fkName} = ${dl.pkName}; skipped")
+          if (j.fk != dl.fkName || j.pk != dl.pkName) {
+            MvRewrite.diag(s"$mvPath: joins on ${j.fk} = ${j.pk}, the " +
+              s"query on ${dl.fkName} = ${dl.pkName}; skipped")
             return None
           }
         }
@@ -1236,12 +1223,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // effective pins vary by MV version once a dim refresh has
         // bumped them (mvdv= riders), so the right pins to compare
         // are the ones at the SERVED MV version
-        if (rVs.size != jp.dims.size || rVs.exists(_.isEmpty)) {
-          MvRewrite.diag(s"$mvPath: carries malformed mv_dim_version " +
-            "props; skipped")
-          return None
-        }
-      case (Some(_), None) =>
+      case (true, None) =>
         // a LEFT-join MV keeps EVERY fact row in exactly one group
         // (left join; pk unique at the pinned dim), so a FACT-ONLY
         // aggregate re-aggregates over all groups — NULL bucket
@@ -1251,13 +1233,13 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // query — its name is guarded out of the fact schema). The
         // INNER kind keeps the hard bail: it dropped unmatched rows
         // from every partial.
-        if (!props.get("mv_join_type").contains("left")) {
+        if (!decl.joins.forall(_.left)) {
           MvRewrite.diag(s"$mvPath: is a JOIN rollup — it cannot serve " +
             "a fact-only aggregate (the inner join dropped unmatched " +
             "fact rows); query the join, or create a plain MV on the fact")
           return None
         }
-      case (None, Some(_)) =>
+      case (false, Some(_)) =>
         MvRewrite.diag(s"$mvPath: is a single-table rollup — it cannot " +
           "serve a join aggregate; create_join_mv covers that shape")
         return None
@@ -1267,22 +1249,17 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // and every attribute is source-side by construction
     def factSide(a: AttributeReference): Boolean =
       joinProbe.forall(_.factOut.contains(a.exprId.id))
-    val key = props.getOrElse("mv_key", return None)
-    // composite plain keys: mv_key is a comma-joined column list; the
-    // full grain serves 1:1, any key SUBSET serves by re-aggregation
-    // (the coarse path below — a subset grouping is a projection of
-    // the stored grain, so groups are unions of whole MV groups)
-    val keys: Seq[String] = key.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    if (keys.isEmpty) return None
-    val measure = props.getOrElse("mv_agg", return None)
-    // multi-measure MVs: mv_agg is a comma-joined list; stored columns
-    // are bare (mv_sum) for one measure, suffixed (mv_sum_<m>) otherwise
-    val measures: Seq[String] =
-      measure.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    if (measures.isEmpty) return None
+    // composite plain keys: the full grain serves 1:1, any key SUBSET
+    // serves by re-aggregation (the coarse path below — a subset
+    // grouping is a projection of the stored grain, so groups are
+    // unions of whole MV groups)
+    val keys: Seq[String] = decl.keys
+    // multi-measure MVs: stored columns are bare (mv_sum) for one
+    // measure, suffixed (mv_sum_<m>) otherwise
+    val measures: Seq[String] = decl.measures
     def mcol(base: String, m: String): String =
       if (measures.size == 1) base else s"${base}_$m"
-    val kind = props.getOrElse("mv_kind", "sum")
+    val kind = decl.kind
     // EXPRESSION measures (round 16, generalized round 17 to a
     // per-measure LIST): an MV measure may be a declared expression
     // over source columns, not a column — resolve each recorded text
@@ -1290,9 +1267,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // by semantic equality of catalyst trees, never by name. Declared
     // at createMv (single-table MVs only).
     val exprMeasures: Seq[(String, Expression)] = {
-      val declared =
-        graft.sources.SnapshotLog.declaredMeasureExprs(props, measures)
-      declared.flatMap { case (m, text) =>
+      decl.measureExprs.flatMap { case (m, text) =>
         resolveMeasureExpr(text, agg.child) match {
           case Some(e) =>
             // join probes (round 19): the declared expression was
@@ -1342,9 +1317,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       .versionAtWatermark(spark, mvPath, "mvv", srcVersion)
       .orElse {
         if (SnapshotLog.committedWatermark(spark, mvPath, "mvv").isEmpty &&
-          props.get("mv_version")
-            .flatMap(s => scala.util.Try(s.toInt).toOption)
-            .contains(srcVersion))
+          decl.version == srcVersion)
           SnapshotLog.versions(spark, mvPath).lastOption
         else None
       }
@@ -1399,19 +1372,17 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // the key-shape grammar: which query-side expression IS the MV
     // key. Round 16 splits it in two: `plainKeys` match as bare
     // attributes (composite members, dim attrs of a mixed-grain join
-    // MV), and the recorded `mv_key_expr` grain matches structurally
+    // MV), and the recorded key-expression grain matches structurally
     // for its ONE member — the whole key of a plain derived MV
-    // (mv_fact_key absent ⇒ keys.head) or the recorded mv_fact_key
+    // (no fact key ⇒ keys.head) or the recorded fact-key
     // member of a mixed-grain join MV.
-    val derivedName: Option[String] =
-      props.get("mv_key_expr").map(_ =>
-        props.getOrElse("mv_fact_key", keys.head))
+    val derivedName: Option[String] = decl.derivedKey
     val plainKeys: Set[String] = derivedName match {
       case Some(d) => keys.filterNot(_ == d).toSet
       case None    => keys.toSet
     }
     val derivedShapedOpt: Option[Expression => Boolean] =
-      props.get("mv_key_expr") match {
+      decl.keyExpr match {
         case None => Some(_ => false)
         // the optimizer spells to_date(c) as Cast(c AS DATE)
         case Some(MvRewrite.ToDateRe(c)) =>
@@ -1447,7 +1418,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }
     val derivedShaped = derivedShapedOpt.getOrElse {
       MvRewrite.diag(s"$mvPath: recorded key grain " +
-        s"'${props.getOrElse("mv_key_expr", "?")}' is not one this build " +
+        s"'${decl.keyExpr.getOrElse("?")}' is not one this build " +
         "recognizes; skipped")
       return None
     }
@@ -1478,7 +1449,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // and must bail. isnotnull(ts) maps to isnotnull(day): the NULL
     // day group aggregates exactly the NULL-ts rows.
     val dayCol: Option[String] =
-      props.get("mv_key_expr").collect { case MvRewrite.ToDateRe(c) => c }
+      decl.keyExpr.collect { case MvRewrite.ToDateRe(c) => c }
     def isDayCol(a: AttributeReference): Boolean = dayCol.contains(a.name)
     def midnightDate(l: Literal): Option[Literal] = l.value match {
       case micros: java.lang.Long =>
@@ -1542,7 +1513,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!global && !identity && coarseGroups.isEmpty) {
       MvRewrite.diag(s"$mvPath: the grouping " +
         agg.groupingExpressions.map(_.sql).mkString("(", ", ", ")") +
-        s" is neither the stored grain ($key) nor a pure function of " +
+        s" is neither the stored grain (${keys.mkString(",")}) nor a pure function of " +
         "it — a FINER grain can never be recovered from a coarser rollup")
       return None
     }
@@ -1759,7 +1730,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // estimate, coarse/global UNION the sketches first (per-day
       // sketches OR into the month: the approximate MAU-from-DAU).
       // The estimator SWAPS (DataSketches HLL at the MV's DECLARED
-      // lgConfigK — mv_hll_lgk, default 12 ≈ 1.6 % RSE — vs the
+      // lgConfigK — MvDecl.hllLgK, default 12 ≈ 1.6 % RSE — vs the
       // query's own HLL++) — both are estimates of the same
       // cardinality and the CREATE declaration carries the swap.
       // Gate on the query's requested precision: a relativeSD tighter
@@ -1776,11 +1747,11 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
               case _ => ""
             }) =>
         if (hpp.relativeSD <
-          SnapshotLog.hllRse(SnapshotLog.hllLgKOf(props))) {
+          decl.hllRse) {
           MvRewrite.diag(s"$mvPath: the query asks relativeSD=" +
             s"${hpp.relativeSD}, tighter than the stored sketch's " +
-            f"~${SnapshotLog.hllRse(SnapshotLog.hllLgKOf(props))}%.4f " +
-            s"RSE (lgConfigK ${SnapshotLog.hllLgKOf(props)}); not " +
+            f"~${decl.hllRse}%.4f " +
+            s"RSE (lgConfigK ${decl.hllLgK}); not " +
             "served — re-materialize with a higher hllLgK")
           None
         } else
@@ -1808,7 +1779,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         mvAttr.get(mcol("mv_sumsq", x.name)).map(s =>
           if (!reagg) s: Expression else Sum(s).toAggregateExpression())
       // avg serves ONLY from a stats MV whose registrant DECLARED the
-      // measure integral-valued (`mv_avg_exact`, the Stage-path
+      // measure integral-valued (MvDecl.avgExact, the Stage-path
       // avgExact precedent): sum(mv_sum)/sum(mv_nn) is then the same
       // double any evaluation order produces below 2^53. mv_nn (the
       // NON-NULL measure count), never mv_n — avg ignores NULLs. The
@@ -1816,7 +1787,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // there, and ANSI division would error instead.
       case Average(x: AttributeReference, _)
           if measures.contains(x.name) && factSide(x) && kind == "stats" &&
-            props.get("mv_avg_exact").contains("true") &&
+            decl.avgExact &&
             mvAttr.contains(mcol("mv_nn", x.name)) &&
             (x.dataType == LongType || x.dataType == IntegerType ||
               x.dataType == DoubleType || x.dataType == FloatType) =>
@@ -1867,11 +1838,11 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             .HyperLogLogPlusPlus
           if kind == "hll" && exprMeasureOf(hpp.child).isDefined =>
         if (hpp.relativeSD <
-          SnapshotLog.hllRse(SnapshotLog.hllLgKOf(props))) {
+          decl.hllRse) {
           MvRewrite.diag(s"$mvPath: the query asks relativeSD=" +
             s"${hpp.relativeSD}, tighter than the stored sketch's " +
-            f"~${SnapshotLog.hllRse(SnapshotLog.hllLgKOf(props))}%.4f " +
-            s"RSE (lgConfigK ${SnapshotLog.hllLgKOf(props)}); not " +
+            f"~${decl.hllRse}%.4f " +
+            s"RSE (lgConfigK ${decl.hllLgK}); not " +
             "served — re-materialize with a higher hllLgK")
           None
         } else
@@ -1886,7 +1857,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           }
       case Average(e, _)
           if exprMeasureOf(e).isDefined && kind == "stats" &&
-            props.get("mv_avg_exact").contains("true") &&
+            decl.avgExact &&
             mvAttr.contains(mcol("mv_nn", exprMeasureOf(e).get)) &&
             (e.dataType == LongType || e.dataType == IntegerType ||
               e.dataType == DoubleType || e.dataType == FloatType) =>

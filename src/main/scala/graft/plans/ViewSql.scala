@@ -394,7 +394,7 @@ object ViewSql {
     case object StarArg extends Arg
     // an EXPRESSION measure (round 16): sum(<arbitrary expr>) in the
     // single-table form — the parse-tree SQL text is recorded verbatim
-    // (mv_agg_expr) so the refresh re-derives and the serve rule
+    // (MvDecl.measureExprs) so the refresh re-derives and the serve rule
     // matches the same expression forever
     case class XArg(text: String) extends Arg
     // `res` resolves an aggregate-argument attribute to its bare
@@ -1248,7 +1248,7 @@ case class GraftDropMvCommand(
     val props =
       graft.sources.SnapshotLog.tableProps(session, catalog.pathOf(ident))
     require(
-      props.contains("mv_source"),
+      graft.sources.MvDecl.sourceOf(props).isDefined,
       s"snapshot catalog: '${ident.name}' is a plain table, not a " +
         "materialized view — use DROP TABLE")
     catalog.dropTable(ident)

@@ -904,8 +904,8 @@ class SnapshotCatalog
       // dropping a managed MV clears its source's reverse pointer
       // (best-effort — the serve rule re-verifies refs anyway)
       val path = tablePath(ident)
-      try SnapshotLog.tableProps(spark, path).get("mv_source")
-        .foreach(src => SnapshotLog.removeMvRef(spark, src, path))
+      try MvDecl.sourceOf(SnapshotLog.tableProps(spark, path))
+        .foreach(src => MvDecl.removeRef(spark, src, path))
       catch { case _: Exception => () }
       wfs.delete(new Path(path), true)
     }
@@ -4318,7 +4318,7 @@ private[sources] object SnapshotProcedures {
         )
       case "list_mvs" =>
         // catalog-wide MV inventory: every table in the warehouse
-        // whose props declare mv_source, with its kind, committed
+        // whose props declare an MV (MvDecl), with its kind, committed
         // fact watermark, the source's current tip, and whether it
         // would serve tip reads (fresh = watermark == tip). One
         // O(tables) metadata walk, no data files opened — the first
@@ -4356,38 +4356,31 @@ private[sources] object SnapshotProcedures {
               ns <- dirs(whRoot)
               t <- dirs(ns)
               row <- scala.util.Try {
-                val props = SnapshotLog.tableProps(spark, t.toString)
-                props.get("mv_source").map { src =>
+                MvDecl.parse(SnapshotLog.tableProps(spark, t.toString)).map { d =>
                   val wm = SnapshotLog
                     .committedWatermark(spark, t.toString, "mvv")
-                    .orElse(props.get("mv_version")
-                      .flatMap(s => scala.util.Try(s.toInt).toOption))
+                    .getOrElse(d.version)
                   val tip = scala.util.Try(
-                    SnapshotLog.versions(spark, src).last).toOption
-                  val dimsFresh = props.get("mv_join_dim") match {
-                    case None => true
-                    case Some(dp) =>
-                      val ds =
-                        dp.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-                      SnapshotLog
-                        .effectiveDimVersions(spark, t.toString, None)
-                        .exists(eff => eff.size == ds.size &&
-                          ds.zip(eff).forall { case (d, p) =>
-                            scala.util.Try(
-                              SnapshotLog.versions(spark, d).last)
-                              .toOption.contains(p)
-                          })
-                  }
+                    SnapshotLog.versions(spark, d.source).last).toOption
+                  val dimsFresh = d.joins.isEmpty ||
+                    SnapshotLog
+                      .effectiveDimVersions(spark, t.toString, None)
+                      .exists(eff => eff.size == d.joins.size &&
+                        d.joins.zip(eff).forall { case (j, p) =>
+                          scala.util.Try(
+                            SnapshotLog.versions(spark, j.dim).last)
+                            .toOption.contains(p)
+                        })
                   new GenericInternalRow(Array[Any](
                     org.apache.spark.unsafe.types.UTF8String
                       .fromString(s"${ns.getName}.${t.getName}"),
                     org.apache.spark.unsafe.types.UTF8String
-                      .fromString(src),
+                      .fromString(d.source),
                     org.apache.spark.unsafe.types.UTF8String
-                      .fromString(props.getOrElse("mv_kind", "sum")),
-                    wm.getOrElse(-1),
+                      .fromString(d.kind),
+                    wm,
                     tip.getOrElse(-1),
-                    wm.isDefined && wm == tip && dimsFresh))
+                    tip.contains(wm) && dimsFresh))
                 }
               }.toOption.flatten.toSeq
             } yield row).sortBy(_.getUTF8String(0).toString)
@@ -4409,49 +4402,47 @@ private[sources] object SnapshotProcedures {
             StructField("value", StringType))),
           in => {
             val mv = resolve(in.getUTF8String(0).toString)
-            val props = SnapshotLog.tableProps(spark, mv)
+            val decl = MvDecl.parse(SnapshotLog.tableProps(spark, mv))
             require(
-              props.contains("mv_source"),
+              decl.isDefined,
               s"describe_mv: $mv is not a materialized view")
+            val d = decl.get
             def row(k: String, v: String) =
               new GenericInternalRow(Array[Any](
                 org.apache.spark.unsafe.types.UTF8String.fromString(k),
                 org.apache.spark.unsafe.types.UTF8String.fromString(v)))
             val watermark = SnapshotLog
               .committedWatermark(spark, mv, "mvv")
-              .orElse(props.get("mv_version").map(_.toInt))
+              .getOrElse(d.version)
+            val edges = d.joins.map(_.edge)
+            // one agg_expr row for the single-expression spelling, one
+            // agg_expr[<measure>] row per declared expression otherwise
+            val exprRows =
+              if (d.singleExpr) d.measureExprs.map { case (_, e) => "agg_expr" -> e }
+              else d.measureExprs.map { case (m, e) => s"agg_expr[$m]" -> e }
             val base = Seq(
-              "source" -> props("mv_source"),
-              "kind" -> props.getOrElse("mv_kind", "sum"),
-              "key" -> props.getOrElse("mv_key", ""),
-              "agg" -> props.getOrElse("mv_agg", ""),
-              "fact_watermark" -> watermark.map(_.toString).getOrElse("?")) ++
-              props.get("mv_key_expr").map("key_expr" -> _) ++
-              props.get("mv_agg_expr").map("agg_expr" -> _) ++
-              props.get("mv_hll_lgk").map("hll_lgk" -> _) ++
-              props.get("mv_join_type").map("join_type" -> _) ++
-              props.get("mv_join_types").map("join_types" -> _) ++
-              (if (props.contains("mv_avg_exact")) Seq("avg_exact" -> "true")
+              "source" -> d.source,
+              "kind" -> d.kind,
+              "key" -> d.keys.mkString(","),
+              "agg" -> d.measures.mkString(","),
+              "fact_watermark" -> watermark.toString) ++
+              d.keyExpr.map("key_expr" -> _) ++
+              exprRows ++
+              (if (d.kind == "hll") Seq("hll_lgk" -> d.hllLgK.toString) else Nil) ++
+              (if (edges.nonEmpty && edges.forall(_ == "left"))
+                 Seq("join_type" -> "left")
                else Nil) ++
-              (if (props.contains("mv_distinct_hash"))
-                 Seq("hash_distinct" -> "true")
-               else Nil)
-            val dims = props.get("mv_join_dim") match {
-              case None => Nil
-              case Some(dp) =>
-                val ds = dp.split(',').toSeq
-                val created =
-                  props.getOrElse("mv_dim_version", "").split(',').toSeq
-                val eff = SnapshotLog
-                  .effectiveDimVersions(spark, mv, None).getOrElse(Nil)
-                ds.indices.flatMap { i =>
-                  Seq(
-                    s"dim[$i]" -> ds(i),
-                    s"dim[$i].created_pin" ->
-                      created.lift(i).getOrElse("?"),
-                    s"dim[$i].effective_pin" ->
-                      eff.lift(i).map(_.toString).getOrElse("?"))
-                }
+              (if (d.mixedJoins) Seq("join_types" -> edges.mkString(",")) else Nil) ++
+              (if (d.avgExact) Seq("avg_exact" -> "true") else Nil) ++
+              (if (d.distinctHash) Seq("hash_distinct" -> "true") else Nil)
+            val eff = SnapshotLog
+              .effectiveDimVersions(spark, mv, None).getOrElse(Nil)
+            val dims = d.joins.zipWithIndex.flatMap { case (j, i) =>
+              Seq(
+                s"dim[$i]" -> j.dim,
+                s"dim[$i].created_pin" -> j.pin.toString,
+                s"dim[$i].effective_pin" ->
+                  eff.lift(i).map(_.toString).getOrElse("?"))
             }
             (base ++ dims).map { case (k, v) => row(k, v) }
           }

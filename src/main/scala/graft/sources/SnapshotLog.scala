@@ -3121,7 +3121,7 @@ object SnapshotLog {
       // number of distinct 64-bit hashes: exact up to hash collisions
       // (~n²/2⁶⁴ — negligible below billions of distinct values, and
       // the declaration carries the caveat, like avgExact).
-      hashed: Boolean = false
+      hashed: Boolean
   ): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, expr, lit}
     // null-preserving hash: xxhash64(NULL) is the SEED (42), not NULL
@@ -3151,12 +3151,12 @@ object SnapshotLog {
     * plus the shared mv_n row count. Shared by createMv, createJoinMv,
     * the refresh fold's insert delta, every delete/dim recompute —
     * one builder so the stored shape can never drift, and one
-    * recorded `mv_hll_lgk` so every fold sketches identically. */
+    * recorded [[MvDecl.hllLgK]] so every fold sketches identically. */
   private def hllRollup(
       df: DataFrame,
       keys: Seq[String],
       measure: String,
-      lgK: Int = 12
+      lgK: Int
   ): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, expr, lit}
     df.groupBy(keys.map(col): _*)
@@ -3164,48 +3164,6 @@ object SnapshotLog {
         expr(s"hll_sketch_agg(`$measure`, $lgK)").as("mv_hll"),
         count(lit(1)).as("mv_n"))
   }
-
-  /** Per-edge join types of a join MV: the round-18 `mv_join_types`
-    * list when present (mixed chains), else the uniform legacy props
-    * (`mv_join_type`=left, or inner when absent). */
-  private[graft] def edgeTypesOf(
-      props: Map[String, String],
-      n: Int): Seq[String] =
-    props.get("mv_join_types")
-      .map(_.split(',').map(_.trim).toSeq)
-      .getOrElse(Seq.fill(n)(
-        if (props.get("mv_join_type").contains("left")) "left" else "inner"))
-
-  /** The declared EXPRESSION measures of an MV, (storedName, exprText)
-    * per declared measure — round 17 generalizes the single
-    * `mv_agg_expr` to per-measure `mv_agg_expr_<name>` props so ONE MV
-    * can maintain several derived measures (`sum(a*b) AS rev,
-    * sum(c+d) AS fee` in one fold). The legacy single-prop spelling
-    * stays readable forever (it binds to the first measure, the only
-    * shape it could ever declare). Plain-column measures simply have
-    * no entry. */
-  private[graft] def declaredMeasureExprs(
-      props: Map[String, String],
-      measures: Seq[String]
-  ): Seq[(String, String)] = {
-    val perMeasure =
-      measures.flatMap(m => props.get(s"mv_agg_expr_$m").map(m -> _))
-    if (perMeasure.nonEmpty) perMeasure
-    else props.get("mv_agg_expr").map(measures.head -> _).toSeq
-  }
-
-  /** The recorded sketch precision of an hll MV (create-time
-    * declaration; pre-round-17 MVs report the 12 they were built
-    * with). */
-  private[graft] def hllLgKOf(props: Map[String, String]): Int =
-    props.get("mv_hll_lgk").flatMap(s => scala.util.Try(s.toInt).toOption)
-      .getOrElse(12)
-
-  /** Relative standard error of a DataSketches HLL at lgConfigK —
-    * the published 1.04 / sqrt(2^lgK) bound the serve gate compares
-    * against a query's requested relativeSD. */
-  private[graft] def hllRse(lgK: Int): Double =
-    1.04 / math.sqrt(math.pow(2.0, lgK.toDouble))
 
   /** The per-kind rollup aggregate columns under the createMv naming
     * — legacy bare names for a single measure (mv_sum, mv_sumsq,
@@ -3237,6 +3195,287 @@ object SnapshotLog {
           min(col(m)).as(mn("mv_min", m)),
           max(col(m)).as(mn("mv_max", m)))) :+
           count(lit(1)).as("mv_n")
+    }
+  }
+
+  /** The rollup of `df` at the declared grain: bitmap partials for
+    * `distinct`, sketches for `hll`, the per-kind aggregate columns
+    * otherwise. Every create, fold and recompute builds its stored rows
+    * here, so they can never drift apart on the stored shape. */
+  private def rollup(d: MvDecl, df: DataFrame): DataFrame = d.kind match {
+    case "distinct" => distinctRollup(df, d.keys, d.measures.head, d.distinctHash)
+    case "hll"      => hllRollup(df, d.keys, d.measures.head, d.hllLgK)
+    case kind =>
+      val aggs = mvAggExprs(d.measures, kind, d.avgExact)
+      df.groupBy(d.keys.map(org.apache.spark.sql.functions.col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** `df` with the declared derived key and expression measures
+    * materialized under their stored names — the same text over the
+    * full table at create and over every refresh delta, forever. */
+  private def derive(df: DataFrame, d: MvDecl): DataFrame = {
+    import org.apache.spark.sql.functions.expr
+    val keyed = d.keyExpr.fold(df)(e => df.withColumn(d.derivedKey.get, expr(e)))
+    d.measureExprs.foldLeft(keyed) { case (cur, (m, e)) => cur.withColumn(m, expr(e)) }
+  }
+
+  /** The declaration checks createMv and createJoinMv share: a known
+    * kind, the hll precision, avgExact and hashDistinct only with their
+    * kind, props-safe expressions, expression measures spelled one way,
+    * each naming a declared measure, and one measure for the bitmap and
+    * sketch kinds. Returns the key list, the measure list and the
+    * declared (measure, expression) pairs in measure order: the single
+    * `aggExpr` binds to the sole measure, `aggExprs` bind by name. */
+  private def declare(
+      ctx: String,
+      keyCol: String,
+      aggCol: String,
+      kind: String,
+      keyExpr: Option[String],
+      aggExpr: Option[String],
+      aggExprs: Map[String, String],
+      avgExact: Boolean,
+      hashDistinct: Boolean,
+      hllLgK: Int
+  ): (Seq[String], Seq[String], Seq[(String, String)]) = {
+    require(
+      MvDecl.Kinds.contains(kind),
+      s"$ctx: kind must be 'sum', 'minmax', 'stats', 'distinct' or 'hll', " +
+        s"got '$kind'")
+    require(
+      hllLgK == 12 || kind == "hll",
+      s"$ctx: hllLgK declares the hll sketch precision — it requires " +
+        s"kind='hll', got '$kind'")
+    require(
+      hllLgK >= 4 && hllLgK <= 21,
+      s"$ctx: hllLgK must be in [4, 21] (DataSketches bounds), got $hllLgK")
+    require(
+      !avgExact || kind == "stats",
+      s"$ctx: avgExact declares avg servable from the stats rollup — it " +
+        s"requires kind='stats', got '$kind'")
+    require(
+      !hashDistinct || kind == "distinct",
+      s"$ctx: hashDistinct declares hashed bit positions for the distinct " +
+        s"rollup — it requires kind='distinct', got '$kind'")
+    keyExpr.foreach(e =>
+      require(
+        !e.contains('\n') && !e.contains('='),
+        s"$ctx: key expression must be props-safe: $e"))
+    (aggExpr.toSeq ++ aggExprs.values).foreach(e =>
+      require(
+        !e.contains('\n') && !e.contains('='),
+        s"$ctx: measure expression must be props-safe: $e"))
+    require(
+      aggExpr.isEmpty || aggExprs.isEmpty,
+      s"$ctx: declare expression measures through aggExpr (one) OR " +
+        "aggExprs (many), not both")
+    // COMPOSITE keys and MULTI-MEASURE rollups: comma-joined lists. One
+    // MV (one refresh fold) maintains every measure; stored columns are
+    // bare (mv_sum) for one measure and suffixed (mv_sum_<m>) otherwise
+    val keys = keyCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    require(keys.nonEmpty, s"$ctx: empty key list '$keyCol'")
+    val measures = aggCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    require(measures.nonEmpty, s"$ctx: empty measure list '$aggCol'")
+    require(
+      aggExpr.isEmpty || measures.size == 1,
+      s"$ctx: an expression measure is declared under ONE stored name — " +
+        "one expression per mv_agg_expr")
+    require(
+      aggExprs.keySet.subsetOf(measures.toSet),
+      s"$ctx: aggExprs names ${aggExprs.keySet.mkString(", ")} must all " +
+        s"appear in the measure list '$aggCol'")
+    // a distinct MV's bitmaps span one measure's bucket space, an hll
+    // MV stores one sketch column
+    require(
+      (kind != "distinct" && kind != "hll") || measures.size == 1,
+      s"$ctx: kind='$kind' maintains ONE measure per MV (one sketch " +
+        "column, one bitmap bucket space) — create one MV per " +
+        "distinct-counted measure")
+    val exprs =
+      if (aggExprs.nonEmpty) measures.flatMap(m => aggExprs.get(m).map(m -> _))
+      else aggExpr.map(measures.head -> _).toSeq
+    (keys, measures, exprs)
+  }
+
+  /** Refuses a derived measure name that is already a column of the
+    * source (`side` names it): the refresh re-derives the measure under
+    * that name forever, so a real column would be silently shadowed. */
+  private def requireFreshMeasureNames(
+      ctx: String,
+      d: MvDecl,
+      schema: Option[StructType],
+      side: String
+  ): Unit =
+    d.measureExprs.foreach { case (m, _) =>
+      require(
+        !schema.exists(_.fieldNames.contains(m)),
+        s"$ctx: derived measure name '$m' collides with a $side column — " +
+          "pick a fresh name (the refresh re-derives it over every delta)")
+    }
+
+  /** [[derive]] at create, with the gates a rollup needs to re-derive
+    * its measures faithfully: each expression is deterministic and
+    * subquery-free, and a distinct measure is integral (bitmap bit
+    * positions are defined over integers) unless hashing is declared —
+    * judged on the materialized column, so an expression measure gates
+    * on its resolved type. `factOnly` (join MVs) turns an expression
+    * that does not resolve against `df` alone into a refusal: a
+    * dim-attribute measure's partials would change under dim churn the
+    * fact fold never sees. */
+  private def materializeMeasures(
+      ctx: String,
+      df: DataFrame,
+      d: MvDecl,
+      factOnly: Boolean
+  ): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, PlanExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.types.{ByteType, ShortType}
+    // the derived key first, then each measure through the gates
+    val out = d.measureExprs.foldLeft(derive(df, d.copy(measureExprs = Nil))) {
+      case (cur, (m, e)) =>
+        val next =
+          try cur.withColumn(m, org.apache.spark.sql.functions.expr(e))
+          catch {
+            case ex: org.apache.spark.sql.AnalysisException if factOnly =>
+              throw new IllegalArgumentException(
+                s"$ctx: measure expression '$e' must resolve against the " +
+                  "FACT schema alone — a dim-attribute reference refuses " +
+                  "(its values change with dim churn the fact fold cannot " +
+                  s"see): ${ex.getMessage}")
+          }
+        val alias = next.queryExecution.analyzed.collect { case p: Project =>
+          p.projectList.collectFirst { case al: Alias if al.name == m => al.child }
+        }.flatten.headOption
+        alias.foreach(x =>
+          require(
+            x.deterministic && !x.exists(_.isInstanceOf[PlanExpression[_]]),
+            s"$ctx: measure expression must be deterministic and " +
+              s"subquery-free: $e"))
+        next
+    }
+    if (d.kind == "distinct") {
+      val m = d.measures.head
+      val mt = out.schema.fields.find(_.name == m).map(_.dataType)
+      require(
+        d.distinctHash || mt.exists(t =>
+          t == LongType || t == IntegerType || t == ShortType || t == ByteType),
+        s"$ctx: kind='distinct' needs an integral measure (bitmap bit " +
+          s"positions are defined over integers); '$m' is " +
+          s"${mt.map(_.simpleString).getOrElse("not in the schema")}. " +
+          "For strings and other non-integral types declare " +
+          "hashDistinct = true (exact up to 64-bit hash collisions)")
+    }
+    out
+  }
+
+  /** Commits `rolled` as the MV's first fold, writes the declaration
+    * into the MV's props and registers the MV on its source. The as-of
+    * version rides the commit's own header (`mvv=`), so data and
+    * high-water mark land in ONE atomic write; the props copy is
+    * discoverability metadata (refreshMv reads the header). `mvfp=` is
+    * the fold fingerprint (see foldRequest). The ref on the source
+    * ([[MvDecl.addRef]]) lets the optimizer's aggregate-navigation rule
+    * discover "which MVs maintain this table?" from the table it is
+    * already scanning. Returns the source version the MV is as-of. */
+  private def materialize(
+      spark: SparkSession,
+      mv: String,
+      d: MvDecl,
+      rolled: DataFrame
+  ): Int = {
+    commit(
+      spark, mv,
+      foldRequest(
+        rolled, overwrite = false,
+        (fpN, fpX) => Seq(s"mvv=${d.version}", s"mvfp=$fpN:$fpX")))
+    setTableProps(spark, mv, d.props)
+    MvDecl.addRef(spark, d.source, mv)
+    d.version
+  }
+
+  /** The declaration of `mv`; `ctx` names the refusal when its props
+    * declare no MV. */
+  private def declOf(spark: SparkSession, mv: String, ctx: String): MvDecl =
+    MvDecl.parse(tableProps(spark, mv)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$ctx: $mv is not a materialized view (its props declare none)"))
+
+  /** What refreshMv and refreshMvDim check before they fold onto `mv`.
+    *
+    * FOLD FINGERPRINT: the state must BE the last fold's output, or a
+    * refresh after a foreign write (INSERT INTO, out-of-band DELETE)
+    * would fold onto polluted state and re-header it as clean. The
+    * distributed verification runs only when the ledger shows a
+    * data-changing commit since the last fold; compaction and
+    * clustering (datachange=false) preserve rows. MVs with no `mvfp`
+    * rider skip it.
+    *
+    * SCHEMA EVOLUTION: the source at version `at` must not have gained
+    * a column named like the derived key or a derived measure
+    * (withColumn would silently shadow it), nor, for a join MV, like a
+    * dim key member or a dim-owned snowflake fk (the enrichment join
+    * would turn ambiguous). Fk ownership is read from the dims at
+    * `pins`, whose schemas are immutable. */
+  private def checkBeforeFold(
+      ctx: String,
+      spark: SparkSession,
+      mv: String,
+      d: MvDecl,
+      at: Int,
+      pins: Seq[Int]
+  ): Unit = {
+    lastFingerprint(spark, mv).foreach { case (n0, x0) =>
+      if (foreignWriteSinceLastFold(spark, mv)) {
+        fpVerifyCount.incrementAndGet()
+        val (n1, x1) = contentFingerprint(read(spark, mv))
+        if (n0 != n1 || x0 != x1)
+          throw new IllegalStateException(
+            s"$ctx: $mv does not match its last fold's fingerprint " +
+              s"(recorded $n0 rows/xor $x0; found $n1/$x1) — the MV was " +
+              "written outside REFRESH (foreign INSERT/DELETE/UPDATE). " +
+              "Refusing to fold onto polluted state; re-materialize the " +
+              "MV (DROP MATERIALIZED VIEW + CREATE).")
+      }
+    }
+    val schema = tableSchema(spark, d.source, at)
+    def has(c: String) = schema.exists(_.fieldNames.contains(c))
+    d.derivedKey.foreach(k =>
+      require(
+        !has(k),
+        s"$ctx: the source schema at v$at now contains a column named " +
+          s"'$k' — the MV's derived key would shadow it. Rename the source " +
+          "column or re-materialize the MV under a fresh key name (createMv " +
+          "refuses this collision at declaration time; schema evolution " +
+          "reintroduced it)."))
+    d.measureExprs.foreach { case (m, _) =>
+      require(
+        !has(m),
+        s"$ctx: the source schema at v$at now contains a column named " +
+          s"'$m' — the MV's derived measure would shadow it. Rename the " +
+          "source column or re-materialize the MV under a fresh measure name.")
+    }
+    if (d.joins.nonEmpty) {
+      val clash = d.dimKeys.filter(has)
+      require(
+        clash.isEmpty,
+        s"$ctx: the fact schema at v$at now contains column(s) " +
+          s"${clash.mkString(", ")} sharing the MV's dim key name(s) — the " +
+          "enrichment join would be ambiguous. Rename the fact column or " +
+          "re-materialize the MV under fresh key names.")
+      val fkClash = d.joins.indices.collect {
+        case j if d.joins.indices.exists(i =>
+              i != j && tableSchema(spark, d.joins(i).dim, pins(i))
+                .exists(_.fieldNames.contains(d.joins(j).fk))) =>
+          d.joins(j).fk
+      }.filter(has)
+      require(
+        fkClash.isEmpty,
+        s"$ctx: the fact schema at v$at now contains column(s) " +
+          s"${fkClash.mkString(", ")} sharing a dim-owned snowflake foreign " +
+          "key name — the enrichment join would be ambiguous. Rename the " +
+          "fact column or re-materialize the MV.")
     }
   }
 
@@ -3363,9 +3602,9 @@ object SnapshotLog {
     new java.util.concurrent.atomic.AtomicReference[String]("")
 
   /** Materialize a per-key rollup of `source` as the snapshot table
-    * `mv`, recording (source, key, agg, kind, high-water version) in
-    * the MV's props so [[refreshMv]] can maintain it from the change
-    * feed. `kind`: `sum` (default — sum/count, refresh is a pure
+    * `mv`, recording its declaration ([[MvDecl]]: source, keys,
+    * measures, kind, high-water version) in the MV's props so
+    * [[refreshMv]] can maintain it from the change feed. `kind`: `sum` (default — sum/count, refresh is a pure
     * invertible fold), `minmax` (min/max/count — inserts fold,
     * delete-touched GROUPS recompute, see refreshMv), `stats`
     * (sum/sum-of-squares/count — like `sum` a pure invertible fold,
@@ -3395,8 +3634,8 @@ object SnapshotLog {
       // partial sums reassociate exactly below 2^53, so `avg(aggCol)`
       // may serve from the MV as sum(mv_sum)/sum(mv_nn). Requires
       // kind='stats'; adds the NON-NULL count mv_nn (count(*) is the
-      // wrong avg denominator under NULLs) and the `mv_avg_exact`
-      // prop the serve rule gates on. The declaration carries the
+      // wrong avg denominator under NULLs) and the declared
+      // [[MvDecl.avgExact]] the serve rule gates on. The declaration carries the
       // responsibility, exactly like the Stage path's MvDef.avgExact.
       avgExact: Boolean = false,
       // optional EXPRESSION measure (round 16): a SQL expression over
@@ -3404,7 +3643,7 @@ object SnapshotLog {
       // shape of every dashboard — materialized as the measure column
       // named `aggCol` at create and re-derived over every refresh
       // delta (the derived-KEY machinery, applied to the measure
-      // side). Recorded in `mv_agg_expr`; the serve rule matches a
+      // side). Recorded in [[MvDecl.measureExprs]]; the serve rule matches a
       // query's `sum(<expr>)` against the CANONICALIZED catalyst form
       // of the same text, so `sum(cents * (100 - disc_pct))` answers
       // from the rollup with no source scan. The expression must be
@@ -3419,291 +3658,57 @@ object SnapshotLog {
       // (probability ~n²/2⁶⁴; negligible below billions of distinct
       // values per group — document the caveat, the declaration
       // carries it, exactly like avgExact). Recorded as
-      // mv_distinct_hash so every refresh hashes identically.
+      // MvDecl.distinctHash so every refresh hashes identically.
       hashDistinct: Boolean = false,
       // kind='hll' sketch precision (round 17): lgConfigK of the
       // stored DataSketches sketches — the DECLARED error bound
       // (RSE ≈ 1.04/√2^lgK; 12 ≈ 1.6 %, 14 ≈ 0.8 %). Recorded as
-      // mv_hll_lgk so every fold sketches identically and the serve
+      // MvDecl.hllLgK so every fold sketches identically and the serve
       // gate can answer any relativeSD the stored precision covers.
       hllLgK: Int = 12,
       // MULTI-EXPRESSION measures (round 17): storedName -> SQL
       // expression, one entry per derived measure — `Map("rev" ->
       // "a * b", "fee" -> "c + d")` maintains BOTH in one MV (one
-      // fold), recorded as per-measure `mv_agg_expr_<name>` props.
+      // fold), recorded per measure in MvDecl.measureExprs.
       // Every key must appear in `aggCol`'s list; names follow the
       // same collision/determinism rules as the single `aggExpr`
       // (which stays the one-measure spelling). Plain-column measures
       // simply have no entry, so derived and real columns mix freely.
       aggExprs: Map[String, String] = Map.empty
   ): Int = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit, max, min, sum}
+    val ctx = "createMv"
+    val (keys, measures, exprs) = declare(
+      ctx, keyCol, aggCol, kind, keyExpr, aggExpr, aggExprs, avgExact,
+      hashDistinct, hllLgK)
+    // a derived key stays single-column: its expression defines the one
+    // stored grain. Composite keys answer the full grain 1:1 and any key
+    // SUBSET by re-aggregation (sum of sums)
     require(
-      kind == "sum" || kind == "minmax" || kind == "stats" ||
-        kind == "distinct" || kind == "hll",
-      s"createMv: kind must be 'sum', 'minmax', 'stats', 'distinct' or " +
-        s"'hll', got '$kind'")
-    require(
-      hllLgK == 12 || kind == "hll",
-      "createMv: hllLgK declares the hll sketch precision — it " +
-        s"requires kind='hll', got '$kind'")
-    require(
-      hllLgK >= 4 && hllLgK <= 21,
-      s"createMv: hllLgK must be in [4, 21] (DataSketches bounds), " +
-        s"got $hllLgK")
-    require(
-      !avgExact || kind == "stats",
-      "createMv: avgExact declares avg servable from the stats rollup — " +
-        s"it requires kind='stats', got '$kind'")
-    require(
-      !hashDistinct || kind == "distinct",
-      "createMv: hashDistinct declares hashed bit positions for the " +
-        s"distinct rollup — it requires kind='distinct', got '$kind'")
-    keyExpr.foreach(e =>
-      require(
-        !e.contains('\n') && !e.contains('='),
-        s"createMv: key expression must be props-safe: $e"))
-    aggExpr.foreach(e =>
-      require(
-        !e.contains('\n') && !e.contains('='),
-        s"createMv: measure expression must be props-safe: $e"))
-    // round 17: kind='distinct' composes with an expression measure —
-    // the expression materializes under the declared name BEFORE the
-    // bitmap rollup (and re-derives over every refresh delta exactly
-    // like the sum kinds), so `count(DISTINCT cents * (100 - d))`
-    // serves. The integral-or-hashDistinct gate below then judges the
-    // EXPRESSION's resolved type. Round 18 lifts the r16/r17 hll
-    // refusal the same way: the sketch is built over the materialized
-    // expression column at the declared lgK, every refresh re-derives
-    // it over the delta (insert fold) and the watermark scope (delete
-    // recompute), and the serve rule matches
-    // `approx_count_distinct(<expr>)` by semantic equality — the
-    // "distinct normalized user ids" shape.
-    require(
-      aggExpr.isEmpty || aggExprs.isEmpty,
-      "createMv: declare expression measures through aggExpr (one) OR " +
-        "aggExprs (many), not both")
-    aggExprs.values.foreach(e =>
-      require(
-        !e.contains('\n') && !e.contains('='),
-        s"createMv: measure expression must be props-safe: $e"))
-    // COMPOSITE keys (round 15): `keyCol` may be a comma-joined list
-    // ("region,status") — the rollup groups by all of them, the props
-    // record the list verbatim, and the serve rule answers the full
-    // grain 1:1 and any key SUBSET by re-aggregation (sum of sums —
-    // the dims-subset algebra the Stage-path rewrite already proves).
-    // A derived key stays single-column: its expression defines the
-    // one stored grain.
-    val keyCols = keyCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    require(keyCols.nonEmpty, s"createMv: empty key list '$keyCol'")
-    require(
-      keyCols.size == 1 || keyExpr.isEmpty,
+      keys.size == 1 || keyExpr.isEmpty,
       "createMv: a derived key expression cannot combine with a " +
         "composite key list — one stored grain per MV")
     val tip = versions(spark, source).last
+    val d = MvDecl(
+      source, keys, measures, kind, tip, keyExpr,
+      measureExprs = exprs, singleExpr = aggExpr.isDefined, hllLgK = hllLgK,
+      avgExact = avgExact, distinctHash = hashDistinct)
+    val schema = tableSchema(spark, source, tip)
     keyExpr.foreach(_ =>
       require(
-        !tableSchema(spark, source, tip)
-          .exists(_.fieldNames.contains(keyCol)),
-        s"createMv: derived key name '$keyCol' collides with a source " +
+        !schema.exists(_.fieldNames.contains(keys.head)),
+        s"createMv: derived key name '${keys.head}' collides with a source " +
           "column — pick a fresh name (the refresh re-derives it over " +
           "every delta)"))
-    val keyOf = keyExpr.map(e => expr(e).as(keyCol)).getOrElse(col(keyCols.head))
-    // MULTI-MEASURE rollups (round 15): `aggCol` may be a comma-joined
-    // list — one MV (one refresh fold) maintains every measure. Column
-    // names stay legacy for a single measure (mv_sum, mv_sumsq, mv_nn,
-    // mv_min, mv_max) and suffix per measure otherwise (mv_sum_<m>, …);
-    // mv_n (count(*)) is shared. The serve rule resolves the same
-    // naming, so `SELECT k, sum(a), sum(b)` answers from ONE rollup.
-    val measures = aggCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    require(measures.nonEmpty, s"createMv: empty measure list '$aggCol'")
-    require(
-      aggExpr.isEmpty || measures.size == 1,
-      "createMv: an expression measure is declared under ONE stored " +
-        "name — one expression per mv_agg_expr")
-    require(
-      aggExprs.keySet.subsetOf(measures.toSet),
-      s"createMv: aggExprs names ${aggExprs.keySet.mkString(", ")} must " +
-        s"all appear in the measure list '$aggCol'")
-    // the unified (storedName, exprText) list: the legacy single
-    // aggExpr binds to the sole measure; aggExprs bind by name, in
-    // measure-list order
-    val exprMap: Seq[(String, String)] =
-      if (aggExprs.nonEmpty) measures.flatMap(m => aggExprs.get(m).map(m -> _))
-      else aggExpr.map(measures.head -> _).toSeq
-    exprMap.foreach { case (m, _) =>
-      require(
-        !tableSchema(spark, source, tip).exists(_.fieldNames.contains(m)),
-        s"createMv: derived measure name '$m' collides " +
-          "with a source column — pick a fresh name (the refresh " +
-          "re-derives it over every delta)")
-    }
-    // the measure columns the rollup aggregates: real source columns,
-    // or declared expressions materialized under their declared names
-    def withMeasure(df: DataFrame): DataFrame =
-      exprMap.foldLeft(df) { case (cur, (m, e)) =>
-        cur.withColumn(m, expr(e))
-      }
-    val base = withMeasure(read(spark, source, Some(tip)))
-    exprMap.foreach { case (m, e) =>
-      // resolve once against the real schema and refuse what a rollup
-      // can never re-derive faithfully: nondeterminism or a subquery
-      val resolved = base.queryExecution.analyzed.output // force analysis
-      val alias = base.queryExecution.analyzed.collect {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.projectList.collectFirst {
-            case al: org.apache.spark.sql.catalyst.expressions.Alias
-                if al.name == m => al.child
-          }
-      }.flatten.headOption
-      require(resolved.nonEmpty, "unreachable")
-      alias.foreach(x =>
-        require(
-          x.deterministic && !x.exists(_.isInstanceOf[
-            org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]),
-          s"createMv: measure expression must be deterministic and " +
-            s"subquery-free: $e"))
-    }
-    val src =
-      if (keyCols.size == 1) base.groupBy(keyOf)
-      else base.groupBy(keyCols.map(col): _*)
-    // kind='distinct' (round 15): exact COUNT(DISTINCT m) partials.
-    // The stored grain is (keys..., mv_bno) — one Spark-native bitmap
-    // (bitmap_construct_agg) per 32768-value bucket of the measure —
-    // so the shape is structurally different from the one-row-per-key
-    // kinds: one measure per MV (a second distinct column has its own
-    // bucket space; create a second MV), integral-valued (bit
-    // positions are defined over integers), no avg declaration.
-    if (kind == "distinct") {
-      require(
-        measures.size == 1,
-        "createMv: kind='distinct' maintains exact COUNT(DISTINCT m) " +
-          "bitmap partials for ONE measure — a second distinct-counted " +
-          "column has its own bucket space; create one MV per column")
-      // the measure's type judged AFTER materialization, so an
-      // expression measure gates on the expression's RESOLVED type
-      // (round 17 — a plain column resolves identically to before)
-      val mt = base.schema.fields.find(_.name == measures.head)
-        .map(_.dataType)
-      require(
-        hashDistinct || mt.exists(t =>
-          t == org.apache.spark.sql.types.LongType ||
-            t == org.apache.spark.sql.types.IntegerType ||
-            t == org.apache.spark.sql.types.ShortType ||
-            t == org.apache.spark.sql.types.ByteType),
-        s"createMv: kind='distinct' needs an integral measure (bitmap " +
-          s"bit positions are defined over integers); '${measures.head}' " +
-          s"is ${mt.map(_.simpleString).getOrElse("not in the schema")}. " +
-          "For strings and other non-integral types declare " +
-          "hashDistinct = true (exact up to 64-bit hash collisions)")
-    }
-    if (kind == "distinct") {
-      val based = keyExpr match {
-        case Some(e) => base.withColumn(keyCol, expr(e))
-        case None    => base
-      }
-      val m = distinctRollup(based, keyCols, measures.head, hashDistinct)
-      commit(
-        spark, mv,
-        foldRequest(
-          m, overwrite = false,
-          (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
-      setTableProps(
-        spark, mv,
-        Map(
-          "mv_source" -> source,
-          "mv_key" -> keyCol,
-          "mv_agg" -> aggCol,
-          "mv_kind" -> kind,
-          "mv_version" -> tip.toString) ++
-          keyExpr.map("mv_key_expr" -> _) ++
-          aggExpr.map("mv_agg_expr" -> _) ++
-          aggExprs.map { case (m, e) => s"mv_agg_expr_$m" -> e } ++
-          (if (hashDistinct) Some("mv_distinct_hash" -> "true") else None))
-      addMvRef(spark, source, mv)
-      return tip
-    }
-    // kind='hll' (round 16): APPROXIMATE COUNT(DISTINCT m) partials —
-    // one DataSketches HLL sketch per group (lgConfigK 12, ~1.6 % RSE)
-    // for very-high-cardinality measures where the exact bitmap
-    // kind's O(distinct values) state is the wrong trade. Sketches
-    // union losslessly (fold, coarse grains, global) and never
-    // subtract (deletes recompute their groups). The serve answers
-    // `approx_count_distinct(m)` ONLY — an approximation serves an
-    // approximation; exact count(DISTINCT) keeps the bitmap kind.
-    if (kind == "hll") {
-      require(
-        measures.size == 1,
-        "createMv: kind='hll' maintains one sketch column per MV — " +
-          "create one MV per distinct-counted measure")
-      // `base` already carries any declared expression measure
-      // materialized under its stored name (withMeasure above) — the
-      // sketch is built over the materialized column, so an hll MV of
-      // `upper(uid)` or `cents % 97` folds and serves like a real one
-      val based = keyExpr match {
-        case Some(e) => base.withColumn(keyCol, expr(e))
-        case None    => base
-      }
-      val m = hllRollup(based, keyCols, measures.head, hllLgK)
-      commit(
-        spark, mv,
-        foldRequest(
-          m, overwrite = false,
-          (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
-      setTableProps(
-        spark, mv,
-        Map(
-          "mv_source" -> source,
-          "mv_key" -> keyCol,
-          "mv_agg" -> aggCol,
-          "mv_kind" -> kind,
-          "mv_hll_lgk" -> hllLgK.toString,
-          "mv_version" -> tip.toString) ++
-          keyExpr.map("mv_key_expr" -> _) ++
-          aggExpr.map("mv_agg_expr" -> _) ++
-          aggExprs.map { case (m, e) => s"mv_agg_expr_$m" -> e })
-      addMvRef(spark, source, mv)
-      return tip
-    }
-    val aggCols = mvAggExprs(measures, kind, avgExact)
-    val m = src.agg(aggCols.head, aggCols.tail: _*)
-    // the as-of version rides the materialize commit's own header
-    // (`mvv=`): data and high-water mark land in ONE atomic write, the
-    // same ledger-rides-the-commit design as ingest. The props copy is
-    // discoverability metadata only — refreshMv reads the header. The
-    // `mvfp=` rider is the fold fingerprint (see foldRequest).
-    commit(
-      spark, mv,
-      foldRequest(
-        m, overwrite = false,
-        (fpN, fpX) => Seq(s"mvv=$tip", s"mvfp=$fpN:$fpX")))
-    setTableProps(
-      spark, mv,
-      Map(
-        "mv_source" -> source,
-        "mv_key" -> keyCol,
-        "mv_agg" -> aggCol,
-        "mv_kind" -> kind,
-        "mv_version" -> tip.toString) ++
-        keyExpr.map("mv_key_expr" -> _) ++
-        aggExpr.map("mv_agg_expr" -> _) ++
-        aggExprs.map { case (m, e) => s"mv_agg_expr_$m" -> e } ++
-        (if (avgExact) Some("mv_avg_exact" -> "true") else None))
-    // reverse pointer on the SOURCE (`mv_refs`, comma-joined MV paths):
-    // the optimizer's aggregate-navigation rule discovers "which MVs
-    // maintain this table?" from the table it is already scanning —
-    // one props read, no catalog walk. Advisory: the rule re-verifies
-    // mv_source and the mvv watermark on the MV itself before serving,
-    // so a dangling ref is skipped, never trusted.
-    addMvRef(spark, source, mv)
-    tip
+    requireFreshMeasureNames(ctx, d, schema, "source")
+    val base = materializeMeasures(ctx, read(spark, source, Some(tip)), d, factOnly = false)
+    materialize(spark, mv, d, rollup(d, base))
   }
 
   /** Materialize a per-key rollup of the INNER JOIN `fact ⋈ dim ON
     * fk = pk`, grouped by DIM attribute(s) — the star-schema
     * dashboard rollup ("revenue by market segment") that otherwise
     * joins the 100 TB fact against the dimension on every query. The
-    * DIM VERSION IS PINNED at materialize time (`mv_dim_version`):
+    * DIM VERSION IS PINNED at materialize time ([[MvDecl.Join]] pin):
     * every refresh folds the fact change feed joined against dim AT
     * THAT VERSION, so the MV is always exactly
     * `aggregate(fact@watermark ⋈ dim@pinned)` — a later dim commit
@@ -3738,8 +3743,8 @@ object SnapshotLog {
       // neither a plain derived-key MV (no dim) nor a dim-only join MV
       // (no fact grain) can serve. The expression re-derives over
       // every refresh delta BEFORE the dim enrichment; props record
-      // both the expression (mv_key_expr) and which member it stores
-      // (mv_fact_key).
+      // both the expression (MvDecl.keyExpr) and which member it stores
+      // (MvDecl.factKey).
       keyExpr: Option[String] = None,
       // LEFT-OUTER join MVs (round 16): joinType='left' keeps every
       // fact row — unmatched rows (no dim match, or a NULL fk) land in
@@ -3771,35 +3776,23 @@ object SnapshotLog {
       // fact schema ALONE (refused loudly otherwise). Re-derived over
       // every refresh delta and recompute scope BEFORE the dim
       // enrichment, exactly like createMv's measure expressions;
-      // recorded as mv_agg_expr / mv_agg_expr_<name> so the serve rule
+      // recorded in MvDecl.measureExprs so the serve rule
       // matches sum(<expr>) by semantic equality of the resolved
       // catalyst trees with every reference verified fact-side.
       aggExpr: Option[String] = None,
       aggExprs: Map[String, String] = Map.empty
   ): Int = {
-    import org.apache.spark.sql.functions.{col, count, expr, lit}
-    require(
-      kind == "sum" || kind == "minmax" || kind == "stats" ||
-        kind == "distinct" || kind == "hll",
-      s"createJoinMv: kind must be 'sum', 'minmax', 'stats', 'distinct' " +
-        s"or 'hll', got '$kind'")
-    require(
-      hllLgK == 12 || kind == "hll",
-      "createJoinMv: hllLgK requires kind='hll'")
-    require(
-      hllLgK >= 4 && hllLgK <= 21,
-      s"createJoinMv: hllLgK must be in [4, 21], got $hllLgK")
-    require(
-      !avgExact || kind == "stats",
-      "createJoinMv: avgExact requires kind='stats'")
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val ctx = "createJoinMv"
+    val (keyCols, measures, exprs) = declare(
+      ctx, keyCol, aggCol, kind, keyExpr, aggExpr, aggExprs, avgExact,
+      hashDistinct, hllLgK)
+    val derivedMeasures: Set[String] = exprs.map(_._1).toSet
     val jtL0 = joinType.split(',').map(_.trim).filter(_.nonEmpty).toSeq
     require(
       jtL0.nonEmpty && jtL0.forall(t => t == "inner" || t == "left"),
       s"createJoinMv: joinType entries must be 'inner' or 'left', got " +
         s"'$joinType'")
-    require(
-      !hashDistinct || kind == "distinct",
-      "createJoinMv: hashDistinct requires kind='distinct'")
     // MULTI-DIM star / snowflake MVs (round 16): `dim`, `fk`, `pk` are
     // aligned comma-joined lists — one (dim_i, fk_i, pk_i) triple per
     // join, applied LEFT TO RIGHT. fk_i resolves against the columns
@@ -3838,34 +3831,6 @@ object SnapshotLog {
     // the per-edge type list; a single value fans out to every edge
     val edgeTypes: Seq[String] =
       if (jtL0.size == 1) Seq.fill(dimsL.size)(jtL0.head) else jtL0
-    val keyCols = keyCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val measures = aggCol.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    require(keyCols.nonEmpty && measures.nonEmpty,
-      s"createJoinMv: empty key or measure list ('$keyCol' / '$aggCol')")
-    require(
-      (kind != "distinct" && kind != "hll") || measures.size == 1,
-      "createJoinMv: kind='distinct'/'hll' maintains ONE measure per MV")
-    // expression-measure declarations — same spelling rules as createMv
-    require(
-      aggExpr.isEmpty || aggExprs.isEmpty,
-      "createJoinMv: declare expression measures through aggExpr (one) " +
-        "OR aggExprs (many), not both")
-    require(
-      aggExpr.isEmpty || measures.size == 1,
-      "createJoinMv: an expression measure is declared under ONE " +
-        "stored name — one expression per mv_agg_expr")
-    require(
-      aggExprs.keySet.subsetOf(measures.toSet),
-      s"createJoinMv: aggExprs names ${aggExprs.keySet.mkString(", ")} " +
-        s"must all appear in the measure list '$aggCol'")
-    (aggExpr.toSeq ++ aggExprs.values).foreach(e =>
-      require(
-        !e.contains('\n') && !e.contains('='),
-        s"createJoinMv: measure expression must be props-safe: $e"))
-    val measureExprMap: Seq[(String, String)] =
-      if (aggExprs.nonEmpty) measures.flatMap(m => aggExprs.get(m).map(m -> _))
-      else aggExpr.map(measures.head -> _).toSeq
-    val derivedMeasures: Set[String] = measureExprMap.map(_._1).toSet
     require(
       !keyCols.exists(k => pksL.contains(k) || fksL.contains(k)),
       "createJoinMv: group by a DIM attribute — grouping by a join " +
@@ -3873,10 +3838,6 @@ object SnapshotLog {
     require(
       !keyCols.exists(measures.contains),
       "createJoinMv: key and measure lists overlap")
-    keyExpr.foreach(e =>
-      require(
-        !e.contains('\n') && !e.contains('='),
-        s"createJoinMv: key expression must be props-safe: $e"))
     // the derived fact key (mixed grain): name = last keyCol member;
     // the expression must be one of the recognized time grains so the
     // serve rule can match it structurally, and its SOURCE column must
@@ -3939,19 +3900,11 @@ object SnapshotLog {
     }
     factSchema.foreach { s =>
       // plain measures and the derived key's source column must BE
-      // fact columns; a derived measure's name must NOT be one (the
-      // refresh re-derives it under that name forever — a real column
-      // would be silently shadowed, the createMv precedent)
+      // fact columns
       (measures.filterNot(derivedMeasures) ++ keyExprCol).foreach(c =>
         require(
           s.fieldNames.contains(c),
           s"createJoinMv: fact column '$c' is not in the fact schema"))
-      derivedMeasures.foreach(m =>
-        require(
-          !s.fieldNames.contains(m),
-          s"createJoinMv: derived measure name '$m' collides with a " +
-            "fact column — pick a fresh name (the refresh re-derives " +
-            "it over every delta)"))
       // a fact column sharing a dim key's name would make the enriched
       // change feed ambiguous — refuse here AND at refresh time (schema
       // evolution can reintroduce it, the derived-key precedent)
@@ -3960,21 +3913,6 @@ object SnapshotLog {
           !s.fieldNames.contains(k),
           s"createJoinMv: key '$k' collides with a fact column — the " +
             "enriched change feed would be ambiguous; rename one side"))
-      // a DERIVED measure's type is judged after materialization (the
-      // expression's resolved type), below
-      if (kind == "distinct" && !derivedMeasures(measures.head)) {
-        val mt = s.fields.find(_.name == measures.head).map(_.dataType)
-        require(
-          hashDistinct || mt.exists(t =>
-            t == org.apache.spark.sql.types.LongType ||
-              t == org.apache.spark.sql.types.IntegerType ||
-              t == org.apache.spark.sql.types.ShortType ||
-              t == org.apache.spark.sql.types.ByteType),
-          s"createJoinMv: kind='distinct' needs an integral measure; " +
-            s"'${measures.head}' is " +
-            mt.map(_.simpleString).getOrElse("not in the schema") +
-            ". For non-integral types declare hashDistinct = true")
-      }
     }
     dimSchemas.zipWithIndex.foreach { case (so, i) =>
       so.foreach { s =>
@@ -3994,7 +3932,7 @@ object SnapshotLog {
         // a DIM column sharing a measure's name would let the serve
         // rule match `sum(d.m)` by name and silently answer it with
         // the FACT partial — wrong results (advisor, round 15). The
-        // dim versions are pinned (mv_dim_version), so this
+        // dim versions are pinned (MvDecl.Join.pin), so this
         // declaration-time check binds for the MV's whole life: the
         // serve rule only ever admits queries reading dim@pinned,
         // whose schema is exactly this one. The serve rule
@@ -4053,58 +3991,18 @@ object SnapshotLog {
           s"not unique in ${dimsL(i)}@v${dimTips(i)} — a duplicate dim " +
           "key would silently multiply fact rows in every group")
     }
-    val f1 = keyExpr match {
-      case Some(e) =>
-        read(spark, fact, Some(factTip)).withColumn(factKey.get, expr(e))
-      case None => read(spark, fact, Some(factTip))
-    }
+    val d = MvDecl(
+      fact, keyCols, measures, kind, factTip, keyExpr, factKey, exprs,
+      singleExpr = aggExpr.isDefined,
+      joins = dimsL.indices.map(i =>
+        MvDecl.Join(dimsL(i), fksL(i), pksL(i), dimTips(i), edgeTypes(i))),
+      hllLgK = hllLgK, avgExact = avgExact, distinctHash = hashDistinct)
+    // a derived measure's name must NOT be a fact column
+    requireFreshMeasureNames(ctx, d, factSchema, "fact")
     // derived measures materialize on the FACT frame alone, BEFORE any
     // dim joins — a reference to anything not fact-side fails analysis
-    // right here, which IS the fact-columns-only refusal: a dim-attr
-    // measure's stored partials would change under dim churn the fact
-    // fold can never see. Same determinism/subquery gate as createMv.
-    val f1m = measureExprMap.foldLeft(f1) { case (cur, (m, e)) =>
-      val next =
-        try {
-          val n = cur.withColumn(m, expr(e))
-          n.queryExecution.analyzed // force resolution against fact cols
-          n
-        } catch {
-          case ex: org.apache.spark.sql.AnalysisException =>
-            throw new IllegalArgumentException(
-              s"createJoinMv: measure expression '$e' must resolve " +
-                "against the FACT schema alone — a dim-attribute " +
-                "reference refuses (its values change with dim churn " +
-                s"the fact fold cannot see): ${ex.getMessage}")
-        }
-      val alias = next.queryExecution.analyzed.collect {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.projectList.collectFirst {
-            case al: org.apache.spark.sql.catalyst.expressions.Alias
-                if al.name == m => al.child
-          }
-      }.flatten.headOption
-      alias.foreach(x =>
-        require(
-          x.deterministic && !x.exists(_.isInstanceOf[
-            org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]),
-          s"createJoinMv: measure expression must be deterministic and " +
-            s"subquery-free: $e"))
-      next
-    }
-    if ((kind == "distinct") && derivedMeasures(measures.head)) {
-      val mt = f1m.schema.fields.find(_.name == measures.head).map(_.dataType)
-      require(
-        hashDistinct || mt.exists(t =>
-          t == org.apache.spark.sql.types.LongType ||
-            t == org.apache.spark.sql.types.IntegerType ||
-            t == org.apache.spark.sql.types.ShortType ||
-            t == org.apache.spark.sql.types.ByteType),
-        s"createJoinMv: kind='distinct' needs an integral measure; the " +
-          s"expression for '${measures.head}' resolves to " +
-          mt.map(_.simpleString).getOrElse("<unresolved>") +
-          ". For non-integral types declare hashDistinct = true")
-    }
+    // right there, which IS the fact-columns-only refusal
+    val f1m = materializeMeasures(ctx, read(spark, fact, Some(factTip)), d, factOnly = true)
     // a snowflake edge THROUGH a left dim must itself be left: if dim
     // j's fk is owned by a left-joined dim, an unmatched row carries a
     // NULL fk there — an INNER edge j would silently drop the whole
@@ -4123,91 +4021,12 @@ object SnapshotLog {
     val factFks =
       fksL.zipWithIndex.collect { case (f, j) if fkOwner(j) == -1 => f }
     val f0 = f1m.select((measures ++ factFks ++ factKey).distinct.map(col): _*)
-    def howOf(i: Int) =
-      if (edgeTypes(i) == "left") "left_outer" else "inner"
     val joined = dimsL.indices.foldLeft(f0) { (cur, i) =>
-      cur.join(dimDfs(i), cur(fksL(i)) === dimDfs(i)(pksL(i)), howOf(i))
+      cur.join(dimDfs(i), cur(fksL(i)) === dimDfs(i)(pksL(i)), d.joins(i).how)
         .drop(dimDfs(i)(pksL(i)))
     }
-    val m =
-      (if (kind == "distinct")
-         distinctRollup(joined, keyCols, measures.head, hashDistinct)
-       else if (kind == "hll")
-         hllRollup(joined, keyCols, measures.head, hllLgK)
-       else {
-         val aggs = mvAggExprs(measures, kind, avgExact)
-         joined.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
-       })
-    commit(
-      spark, mv,
-      foldRequest(
-        m, overwrite = false,
-        (fpN, fpX) => Seq(s"mvv=$factTip", s"mvfp=$fpN:$fpX")))
-    setTableProps(
-      spark, mv,
-      Map(
-        "mv_source" -> fact,
-        "mv_key" -> keyCol,
-        "mv_agg" -> aggCol,
-        "mv_kind" -> kind,
-        "mv_version" -> factTip.toString,
-        "mv_join_dim" -> dimsL.mkString(","),
-        "mv_join_fk" -> fksL.mkString(","),
-        "mv_join_pk" -> pksL.mkString(","),
-        "mv_dim_version" -> dimTips.mkString(",")) ++
-        keyExpr.map("mv_key_expr" -> _) ++
-        factKey.map("mv_fact_key" -> _) ++
-        aggExpr.map("mv_agg_expr" -> _) ++
-        aggExprs.map { case (m, e) => s"mv_agg_expr_$m" -> e } ++
-        (if (edgeTypes.forall(_ == "left"))
-           Some("mv_join_type" -> "left") else None) ++
-        (if (edgeTypes.distinct.size > 1)
-           Some("mv_join_types" -> edgeTypes.mkString(",")) else None) ++
-        (if (hashDistinct) Some("mv_distinct_hash" -> "true") else None) ++
-        (if (kind == "hll") Some("mv_hll_lgk" -> hllLgK.toString)
-         else None) ++
-        (if (avgExact) Some("mv_avg_exact" -> "true") else None))
-    addMvRef(spark, fact, mv)
-    factTip
+    materialize(spark, mv, d, rollup(d, joined))
   }
-
-  /** Append `mv` to `source`'s `mv_refs` prop (idempotent). The
-    * read-modify-write shares setTableProps' whole-file last-wins
-    * posture — a concurrent ALTER on the source can race it, exactly
-    * as any two props writers always could. Safe because mv_refs is
-    * ADVISORY: the serve rule re-verifies every ref against the MV's
-    * own props, so a lost pointer costs a missed optimization, never
-    * a wrong answer (and a stale one is skipped). */
-  private[graft] def addMvRef(
-      spark: SparkSession,
-      source: String,
-      mv: String
-  ): Unit = {
-    val sp = tableProps(spark, source)
-    val refs = sp.get("mv_refs")
-      .map(_.split(',').filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    if (!refs.contains(mv))
-      setTableProps(spark, source, sp + ("mv_refs" -> (refs :+ mv).mkString(",")))
-  }
-
-  /** Remove `mv` from `source`'s `mv_refs` prop; best-effort (the MV's
-    * own props are the authority — a stale ref is re-verified and
-    * skipped by every reader). */
-  private[graft] def removeMvRef(
-      spark: SparkSession,
-      source: String,
-      mv: String
-  ): Unit =
-    try {
-      val sp = tableProps(spark, source)
-      sp.get("mv_refs").foreach { r =>
-        val left = r.split(',').filter(x => x.nonEmpty && x != mv)
-        setTableProps(
-          spark, source,
-          if (left.isEmpty) sp - "mv_refs"
-          else sp + ("mv_refs" -> left.mkString(",")))
-      }
-    } catch { case _: Exception => () }
 
   /** The MV's committed high-water mark: the `mvv=` token of the most
     * recent commit that carries one. Authoritative over the props copy
@@ -4217,20 +4036,20 @@ object SnapshotLog {
     committedWatermark(spark, mv, "mvv")
 
   /** The EFFECTIVE per-dim pins of a join MV at (up to) MV version
-    * `upTo`: the create-time props list overlaid with every
+    * `upTo`: the create-time pins ([[MvDecl.Join]]) overlaid with every
     * `mvdv=<dimIndex>:<newPin>` header rider at or below `upTo`,
     * latest wins per index — the dim refresh's pin-bump ledger
     * ([[refreshMvDim]]), atomic with the recompute it pins. The props
     * copy stays the CREATE pins forever, so a historical reader
     * overlays correctly (the same props-stay-put posture as `mvv=` vs
-    * `mv_version`). None for MVs with no join. */
+    * [[MvDecl.version]]). None for MVs with no join. */
   def effectiveDimVersions(
       spark: SparkSession,
       mv: String,
       upTo: Option[Int] = None
   ): Option[Seq[Int]] =
-    tableProps(spark, mv).get("mv_dim_version").map { dv =>
-      val base = dv.split(',').map(_.trim.toInt)
+    MvDecl.parse(tableProps(spark, mv)).filter(_.joins.nonEmpty).map { d =>
+      val base = d.joins.map(_.pin).toArray
       // BACKWARD scan, latest-wins per index = first-seen per index
       // walking down — with an early exit once every dim index has a
       // rider (round 17, advisor: the forward walk read EVERY commit
@@ -4402,173 +4221,43 @@ object SnapshotLog {
       onWatermarkPinned: () => Unit = () => ()
   ): (Int, Int) = {
     import org.apache.spark.sql.functions.{coalesce, col, count, greatest, least, lit, max, min, sum, when}
-    val props = tableProps(spark, mv)
-    val source = props.getOrElse(
-      "mv_source",
-      throw new IllegalArgumentException(
-        s"refreshMv: $mv is not a materialized view (no mv_source prop)"))
-    val (key, agg) = (props("mv_key"), props("mv_agg"))
+    val decl = declOf(spark, mv, "refreshMv")
+    val source = decl.source
     // composite keys fold/join/recompute over the full column list
-    val keys = key.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    val keys = decl.keys
     val keyCols = keys.map(col)
-    val kind = props.getOrElse("mv_kind", "sum")
+    val kind = decl.kind
     // committed header token first (atomic with the data); props are
     // the pre-header fallback for MVs materialized by older builds
-    val from = mvCommittedVersion(spark, mv)
-      .getOrElse(props("mv_version").toInt)
+    val from = mvCommittedVersion(spark, mv).getOrElse(decl.version)
     val to = versions(spark, source).last
     if (to == from) return (from, to)
     val mvTipAtStart = versions(spark, mv).lastOption
-    // FOLD FINGERPRINT (round 16): before folding a delta onto the
-    // current state, prove the state IS the last fold's output. The
-    // serve path already refuses to serve past a headerless
-    // data-changing commit (span truncation, round 15); this closes
-    // the other half — a REFRESH after a foreign write would fold the
-    // delta onto polluted state and RE-HEADER it as clean. Compaction
-    // and clustering (datachange=false) preserve rows, so the
-    // fingerprint survives them. Pre-fingerprint MVs (no mvfp rider
-    // anywhere) skip the check.
-    // the expensive verification runs ONLY when the ledger shows a
-    // foreign data-changing commit since the last fold (round 17 —
-    // one header walk, shared with the serve path's span logic); a
-    // clean refresh skips the full-MV aggregate
-    lastFingerprint(spark, mv).foreach { case (n0, x0) =>
-      if (foreignWriteSinceLastFold(spark, mv)) {
-        fpVerifyCount.incrementAndGet()
-        val (n1, x1) = contentFingerprint(read(spark, mv))
-        if (n0 != n1 || x0 != x1)
-          throw new IllegalStateException(
-            s"refreshMv: $mv does not match its last fold's fingerprint " +
-              s"(recorded $n0 rows/xor $x0; found $n1/$x1) — the MV was " +
-              "written outside REFRESH (foreign INSERT/DELETE/UPDATE). " +
-              "Refusing to fold onto polluted state; re-materialize the " +
-              "MV (DROP MATERIALIZED VIEW + CREATE).")
-      }
-    }
-    // a derived key (mv_key_expr) re-derives over the delta exactly as
-    // the materialize derived it over the full table — same text, same
-    // props, forever. The createMv-time name-collision guard re-checks
-    // HERE too (advisor, round 14): schema evolution may have ADDED a
-    // source column with the derived key's name since the materialize,
-    // and withColumn would silently shadow it — the fold would keep
-    // working on derived values while readers of the source see
-    // different data. Refuse loudly instead.
-    // the derived-key column name: the whole mv_key for a plain
-    // derived MV, the recorded mv_fact_key member for a mixed-grain
-    // join MV (round 16)
-    val derivedKeyName = props.getOrElse("mv_fact_key", key)
-    props.get("mv_key_expr").foreach { _ =>
-      require(
-        !tableSchema(spark, source, to)
-          .exists(_.fieldNames.contains(derivedKeyName)),
-        s"refreshMv: the source schema at v$to now contains a column " +
-          s"named '$derivedKeyName' — the MV's derived key would shadow it. Rename " +
-          "the source column or re-materialize the MV under a fresh key " +
-          "name (createMv refuses this collision at declaration time; " +
-          "schema evolution reintroduced it).")
-    }
-    // an EXPRESSION measure (mv_agg_expr, round 16) re-derives over
-    // the delta exactly as the materialize derived it — same text,
-    // same props, forever — with the same schema-evolution guard as
-    // the derived key: a source column later ADDED under the declared
-    // measure name would be silently shadowed by withColumn.
-    // declared expression measures (round 17: a per-measure LIST —
-    // mv_agg_expr_<name> props; the legacy single mv_agg_expr binds
-    // to the first measure): each re-derives over the delta exactly
-    // as the materialize derived it, with the same schema-evolution
-    // shadow guard per declared name.
-    val measureExprs: Seq[(String, String)] = declaredMeasureExprs(
-      props, agg.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    measureExprs.foreach { case (m, _) =>
-      require(
-        !tableSchema(spark, source, to)
-          .exists(_.fieldNames.contains(m)),
-        s"refreshMv: the source schema at v$to now contains a column " +
-          s"named '$m' — the MV's derived measure would shadow " +
-          "it. Rename the source column or re-materialize the MV under a " +
-          "fresh measure name.")
-    }
-    def withMeasure(df: DataFrame): DataFrame =
-      measureExprs.foldLeft(df) { case (cur, (m, e)) =>
-        cur.withColumn(m, org.apache.spark.sql.functions.expr(e))
-      }
     // JOIN MVs (round 15): the change feed ENRICHES against the
-    // PINNED dim version — every delta row gains its dim attributes,
+    // PINNED dim versions — every delta row gains its dim attributes,
     // after which every fold/recompute branch below works unchanged
     // (the keys are just columns). Inner-join semantics compose: a
     // delta row with no dim match never entered the rollup and never
     // will; its delete finds no group to touch — consistent by
     // construction. The pin is what keeps the fold exact forever: a
     // later dim commit changes NOTHING here (the serve rule, not the
-    // refresh, is where dim staleness bites).
-    // round 16: every join prop is an aligned comma list — one
-    // (dim, pinnedVersion, fk, pk) per join, applied left to right
-    // (star and snowflake chains share the mechanism; single-dim MVs
-    // are the one-element case and parse identically)
+    // refresh, is where dim staleness bites). One (dim, pin, fk, pk)
+    // per join, applied left to right (star and snowflake chains share
+    // the mechanism). The EFFECTIVE pins overlay the create pins with
+    // the dim refresh's mvdv= header riders — a dim-refreshed MV must
+    // fold every later fact delta against its NEW pins.
+    val pins =
+      if (decl.joins.isEmpty) Nil
+      else effectiveDimVersions(spark, mv, None).getOrElse(decl.joins.map(_.pin))
+    checkBeforeFold("refreshMv", spark, mv, decl, to, pins)
     val joinDims: Seq[(String, Int, String, String)] =
-      props.get("mv_join_dim").map { dp =>
-        val ds = dp.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-        // EFFECTIVE pins: create-time props overlaid with the dim
-        // refresh's mvdv= header riders — a dim-refreshed MV must
-        // fold every later fact delta against its NEW pins
-        val ws = effectiveDimVersions(spark, mv, None).getOrElse(
-          props("mv_dim_version").split(',').map(_.trim.toInt).toSeq)
-        val fs = props("mv_join_fk").split(',').map(_.trim).toSeq
-        val ps = props("mv_join_pk").split(',').map(_.trim).toSeq
-        require(
-          ds.size == ws.size && ds.size == fs.size && ds.size == ps.size,
-          s"refreshMv: $mv carries misaligned join props")
-        ds.indices.map(i => (ds(i), ws(i), fs(i), ps(i)))
-      }.getOrElse(Nil)
-    // the createJoinMv-time key/fact-column collision re-checks here:
-    // schema evolution may have ADDED a fact column with a dim key's
-    // name since the materialize, and the enrichment join would turn
-    // ambiguous (or silently resolve wrong) — refuse loudly instead
-    if (joinDims.nonEmpty) {
-      val factSchAtTo = tableSchema(spark, source, to)
-      val clash = factSchAtTo
-        .map(s => keys.filterNot(k =>
-          props.get("mv_fact_key").contains(k))
-          .filter(s.fieldNames.contains)).getOrElse(Nil)
-      require(
-        clash.isEmpty,
-        s"refreshMv: the fact schema at v$to now contains column(s) " +
-          s"${clash.mkString(", ")} sharing the MV's dim key name(s) — " +
-          "the enrichment join would be ambiguous. Rename the fact " +
-          "column or re-materialize the MV under fresh key names.")
-      // round 17 (advisor): also refuse a fact column added under a
-      // snowflake chain fk OWNED by a dim — enrich()'s cur(fkc) would
-      // turn ambiguous (and scopedSourceAtTo's fact-joined-dim pick,
-      // which tests factSch.contains(fk), would mis-classify the
-      // chain). Create-time ownership reads from the PINNED dim
-      // schemas, which are immutable.
-      val dimOwnedFks = joinDims.zipWithIndex.collect {
-        case ((_, _, f, _), j) if joinDims.zipWithIndex.exists {
-              case ((dp, w, _, _), i) =>
-                i != j &&
-                  tableSchema(spark, dp, w).exists(_.fieldNames.contains(f))
-            } =>
-          f
-      }
-      val fkClash = factSchAtTo
-        .map(s => dimOwnedFks.filter(s.fieldNames.contains))
-        .getOrElse(Nil)
-      require(
-        fkClash.isEmpty,
-        s"refreshMv: the fact schema at v$to now contains column(s) " +
-          s"${fkClash.mkString(", ")} sharing a dim-owned snowflake " +
-          "foreign key name — the enrichment join would be ambiguous. " +
-          "Rename the fact column or re-materialize the MV.")
-    }
+      decl.joins.zip(pins).map { case (j, w) => (j.dim, w, j.fk, j.pk) }
     // a mixed-grain join MV's derived fact key is NOT a dim column —
     // the dim enrichment carries only the dim-side key members
-    val dimKeys: Seq[String] =
-      if (props.contains("mv_fact_key")) keys.filterNot(_ == derivedKeyName)
-      else keys
+    val dimKeys: Seq[String] = decl.dimKeys
     // per-edge join hows (round 18: mixed chains enrich each edge with
     // its OWN type — NULL buckets only on the left edges)
-    val edgeHows: Seq[String] = edgeTypesOf(props, joinDims.size)
-      .map(t => if (t == "left") "left_outer" else "inner")
+    val edgeHows: Seq[String] = decl.joins.map(_.how)
     // per-dim enrichment selection, recomputed from the PINNED dim
     // schemas (immutable per version, so this is the same split
     // createJoinMv made): the dim's own key members + its pk + any
@@ -4593,17 +4282,12 @@ object SnapshotLog {
           val d = read(spark, dp, Some(w)).select(dimSels(i)._2.map(col): _*)
           cur.join(d, cur(fkc) === d(pkc), edgeHows(i)).drop(d(pkc))
       }
-    val changes = enrich(withMeasure(props.get("mv_key_expr") match {
-      case Some(e) =>
-        readChanges(spark, source, from, to)
-          .withColumn(derivedKeyName, org.apache.spark.sql.functions.expr(e))
-      case None => readChanges(spark, source, from, to)
-    }))
+    val changes = enrich(derive(readChanges(spark, source, from, to), decl))
     onWatermarkPinned()
-    // MULTI-MEASURE folds (round 15): mv_agg may be a comma-joined
-    // list; every branch folds each measure under the createMv naming
-    // (legacy bare names for a single measure, mv_*_<m> otherwise).
-    val measures = agg.split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    // MULTI-MEASURE folds (round 15): every branch folds each measure
+    // under the createMv naming (legacy bare names for a single
+    // measure, mv_*_<m> otherwise).
+    val measures = decl.measures
     def mn(base: String, m: String): String =
       if (measures.size == 1) base else s"${base}_$m"
     // the delete-recompute's at-watermark source read, shared by the
@@ -4670,22 +4354,15 @@ object SnapshotLog {
               tableSchema(spark, source, to))
           case None => read(spark, source, Some(to))
         }
-        val f = (props.get("mv_key_expr"), props.get("mv_fact_key")) match {
-          case (Some(e), Some(fkn)) =>
-            f0.withColumn(fkn, org.apache.spark.sql.functions.expr(e))
-          case _ => f0
-        }
-        // round 19: join MVs take expression measures too — re-derive
-        // them over the scoped at-watermark read exactly as the fold
-        // derives them over the change feed (fact columns only, so the
+        // the derived fact key and the expression measures re-derive
+        // over the scoped at-watermark read exactly as the fold derives
+        // them over the change feed (fact columns only, so the
         // derivation commutes with the dim enrichment below)
-        enrich(withMeasure(f))
+        enrich(derive(f0, decl))
       case _ =>
-        withMeasure(props.get("mv_key_expr") match {
-          case Some(e) =>
-            read(spark, source, Some(to))
-              .withColumn(key, org.apache.spark.sql.functions.expr(e))
-          case None =>
+        derive(
+          if (decl.keyExpr.isDefined) read(spark, source, Some(to))
+          else {
             val (admit, _) = touchedFiles(
               spark, source, keys.head,
               delKeys.select(col(keys.head)).distinct(), Some(to))
@@ -4693,7 +4370,8 @@ object SnapshotLog {
               spark, source,
               entriesFor(manifestEntries(spark, source, to), admit),
               tableSchema(spark, source, to))
-        })
+          },
+          decl)
     }
     // ------------------------------------------------------------------
     // NULL-SAFE key joins (round 16). A NULL grouping key is ONE group
@@ -4769,111 +4447,80 @@ object SnapshotLog {
       foldJoin(read(spark, mv), delta)
         .select(foldCols: _*)
         .filter(col("mv_n") > 0)
-    } else if (kind == "hll") {
-      // HLL sketches are MONOTONE under inserts (union the delta's
-      // per-group sketch in) and never invertible under deletes —
-      // delete-touched GROUPS recompute at the watermark, the
-      // minmax/distinct discipline. hll_union is null-guarded by
-      // hand: a group new to either side keeps the other's sketch.
-      import org.apache.spark.sql.functions.{expr, when}
-      val meas = measures.head
-      val lgK = hllLgKOf(props)
-      val delKeys = changes
-        .filter(col("change_type") === "delete")
-        .select(keyCols: _*).distinct().localCheckpoint()
-      val insDelta = hllRollup(
-          changes.filter(col("change_type") === "insert"), keys, meas, lgK)
-        .withColumnRenamed("mv_hll", "d_hll")
-        .withColumnRenamed("mv_n", "d_n")
-      val folded = foldJoin(read(spark, mv), insDelta)
-        .select(
-          keyCols ++ Seq(
-            when(col("mv_hll").isNull, col("d_hll"))
-              .when(col("d_hll").isNull, col("mv_hll"))
-              .otherwise(expr("hll_union(mv_hll, d_hll)")).as("mv_hll"),
-            foldSum("mv_n", "d_n")): _*)
-      val recomputed = hllRollup(
-        keySemi(scopedSourceAtTo(delKeys), delKeys, "left_semi"),
-        keys, meas, lgK)
-      keySemi(folded, delKeys, "left_anti").unionByName(recomputed)
-    } else if (kind == "distinct") {
-      // bitmap partials are MONOTONE under inserts (a new row just ORs
-      // its bit into the bucket) but not invertible under deletes
-      // (another surviving row may carry the same value) — so inserts
-      // fold and delete-touched GROUPS recompute, the minmax
-      // discipline. The insert fold is a grain-preserving regroup:
-      // MV rows ∪ the delta's fresh (keys, bucket) rollup, re-OR'd per
-      // (keys, mv_bno) with bitmap_or_agg — O(MV + delta), exactly the
-      // cost class of the sum fold's full-outer join.
-      import org.apache.spark.sql.functions.expr
-      val meas = measures.head
-      val hashed = props.get("mv_distinct_hash").contains("true")
-      val delKeys = changes
-        .filter(col("change_type") === "delete")
-        .select(keyCols: _*).distinct().localCheckpoint()
-      val insDelta = distinctRollup(
-        changes.filter(col("change_type") === "insert"), keys, meas, hashed)
-      val shape =
-        keyCols ++ Seq(col("mv_bno"), col("mv_bm"), col("mv_n"))
-      val folded = read(spark, mv)
-        .select(shape: _*)
-        .unionByName(insDelta.select(shape: _*))
-        .groupBy(keyCols :+ col("mv_bno"): _*)
-        .agg(
-          expr("bitmap_or_agg(mv_bm)").as("mv_bm"),
-          sum(col("mv_n")).as("mv_n"))
-        .withColumn("mv_dc", expr("bitmap_count(mv_bm)"))
-      val recomputed = distinctRollup(
-        keySemi(scopedSourceAtTo(delKeys), delKeys, "left_semi"),
-        keys, meas, hashed)
-      // a fully-deleted group appears in delKeys but not in the
-      // recompute — it vanishes; a stale BUCKET of a surviving group
-      // vanishes too, because the anti-join removes the group's every
-      // folded row and the recompute regenerates only live buckets
-      keySemi(folded, delKeys, "left_anti").unionByName(recomputed)
     } else {
-      // groups with a delete in the delta: fold is impossible (the
-      // removed row may BE the extremum) — recompute exactly these
+      // minmax, distinct and hll partials are MONOTONE under inserts
+      // but not invertible under deletes: the removed row may BE the
+      // extremum, another surviving row may carry the same value, and
+      // sketches never subtract. So inserts fold and delete-touched
+      // GROUPS recompute, AT THE WATERMARK `to`, never the current tip:
+      // a source commit landing mid-refresh would otherwise leak
+      // post-`to` rows into the recomputed groups, and the next refresh
+      // re-folds that same (to, tip] delta for those keys —
+      // double-counted mv_n / wrong extrema. Scoped by manifest stats
+      // (see [[scopedSourceAtTo]]).
       // checkpointed: delKeys drives the file-admission collect, the
       // semi-join AND the anti-join — without it the change feed would
       // be re-read three times per refresh
+      import org.apache.spark.sql.functions.expr
       val delKeys = changes
         .filter(col("change_type") === "delete")
         .select(keyCols: _*).distinct().localCheckpoint()
-      val insAggs = measures.flatMap(m => Seq(
-          min(col(m)).as(mn("d_min", m)),
-          max(col(m)).as(mn("d_max", m)))) :+
-        count(lit(1)).as("d_n")
-      val insDelta = changes
-        .filter(col("change_type") === "insert")
-        .groupBy(keyCols: _*)
-        .agg(insAggs.head, insAggs.tail: _*)
-      // least/greatest skip nulls, so a one-sided key folds correctly
-      val folded = foldJoin(read(spark, mv), insDelta)
-        .select(
-          keyCols ++
-            measures.flatMap(m => Seq(
-              least(col(mn("mv_min", m)), col(mn("d_min", m)))
-                .as(mn("mv_min", m)),
-              greatest(col(mn("mv_max", m)), col(mn("d_max", m)))
-                .as(mn("mv_max", m)))) ++
-            Seq(foldSum("mv_n", "d_n")): _*)
-      // recompute AT THE WATERMARK `to`, never the current tip: a
-      // source commit landing mid-refresh would otherwise leak
-      // post-`to` rows into the recomputed groups, and the next
-      // refresh re-folds that same (to, tip] delta for those keys —
-      // double-counted mv_n / wrong extrema. Scoped by manifest stats
-      // (see [[scopedSourceAtTo]]).
-      val srcAtTo = scopedSourceAtTo(delKeys)
-      val recompAggs = measures.flatMap(m => Seq(
-          min(col(m)).as(mn("mv_min", m)),
-          max(col(m)).as(mn("mv_max", m)))) :+
-        count(lit(1)).as("mv_n")
-      val recomputed = keySemi(srcAtTo, delKeys, "left_semi")
-        .groupBy(keyCols: _*)
-        .agg(recompAggs.head, recompAggs.tail: _*)
+      val inserts = changes.filter(col("change_type") === "insert")
+      val folded = kind match {
+        case "hll" =>
+          // union the delta's per-group sketch in; hll_union is
+          // null-guarded by hand: a group new to either side keeps the
+          // other's sketch
+          val insDelta = rollup(decl, inserts)
+            .withColumnRenamed("mv_hll", "d_hll")
+            .withColumnRenamed("mv_n", "d_n")
+          foldJoin(read(spark, mv), insDelta)
+            .select(
+              keyCols ++ Seq(
+                when(col("mv_hll").isNull, col("d_hll"))
+                  .when(col("d_hll").isNull, col("mv_hll"))
+                  .otherwise(expr("hll_union(mv_hll, d_hll)")).as("mv_hll"),
+                foldSum("mv_n", "d_n")): _*)
+        case "distinct" =>
+          // a grain-preserving regroup: MV rows ∪ the delta's fresh
+          // (keys, bucket) rollup, re-OR'd per (keys, mv_bno) with
+          // bitmap_or_agg — O(MV + delta), exactly the cost class of
+          // the sum fold's full-outer join
+          val shape =
+            keyCols ++ Seq(col("mv_bno"), col("mv_bm"), col("mv_n"))
+          read(spark, mv)
+            .select(shape: _*)
+            .unionByName(rollup(decl, inserts).select(shape: _*))
+            .groupBy(keyCols :+ col("mv_bno"): _*)
+            .agg(
+              expr("bitmap_or_agg(mv_bm)").as("mv_bm"),
+              sum(col("mv_n")).as("mv_n"))
+            .withColumn("mv_dc", expr("bitmap_count(mv_bm)"))
+        case _ =>
+          val insAggs = measures.flatMap(m => Seq(
+              min(col(m)).as(mn("d_min", m)),
+              max(col(m)).as(mn("d_max", m)))) :+
+            count(lit(1)).as("d_n")
+          val insDelta = inserts
+            .groupBy(keyCols: _*)
+            .agg(insAggs.head, insAggs.tail: _*)
+          // least/greatest skip nulls, so a one-sided key folds correctly
+          foldJoin(read(spark, mv), insDelta)
+            .select(
+              keyCols ++
+                measures.flatMap(m => Seq(
+                  least(col(mn("mv_min", m)), col(mn("d_min", m)))
+                    .as(mn("mv_min", m)),
+                  greatest(col(mn("mv_max", m)), col(mn("d_max", m)))
+                    .as(mn("mv_max", m)))) ++
+                Seq(foldSum("mv_n", "d_n")): _*)
+      }
+      val recomputed =
+        rollup(decl, keySemi(scopedSourceAtTo(delKeys), delKeys, "left_semi"))
       // a fully-deleted group appears in delKeys but not in the
-      // recompute — it vanishes, as it must
+      // recompute — it vanishes; a stale BUCKET of a surviving distinct
+      // group vanishes too, because the anti-join removes the group's
+      // every folded row and the recompute regenerates only live buckets
       keySemi(folded, delKeys, "left_anti").unionByName(recomputed)
     }
     // fold result + new high-water mark + fold fingerprint in ONE
@@ -4899,7 +4546,7 @@ object SnapshotLog {
           s"refreshMv: $mv moved while this refresh computed its fold " +
             "(a concurrent refresh or dim refresh committed) — re-run " +
             "refreshMv; maintenance is single-writer per MV")))
-    setTableProps(spark, mv, props + ("mv_version" -> to.toString))
+    setTableProps(spark, mv, tableProps(spark, mv) ++ decl.copy(version = to).props)
     (from, to)
   }
 
@@ -4948,15 +4595,15 @@ object SnapshotLog {
       mv: String,
       dim: String
   ): (Int, Int) = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val props = tableProps(spark, mv)
-    val source = props.getOrElse("mv_source",
-      throw new IllegalArgumentException(
-        s"refreshMvDim: $mv is not a materialized view (no mv_source prop)"))
-    val dimsL = props.getOrElse("mv_join_dim",
-      throw new IllegalArgumentException(
-        s"refreshMvDim: $mv is not a JOIN MV (no mv_join_dim prop)"))
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
+    import org.apache.spark.sql.functions.col
+    val decl = declOf(spark, mv, "refreshMvDim")
+    require(
+      decl.joins.nonEmpty,
+      s"refreshMvDim: $mv is not a JOIN MV (it declares no dims)")
+    val source = decl.source
+    val dimsL = decl.joins.map(_.dim)
+    val fksL = decl.joins.map(_.fk)
+    val pksL = decl.joins.map(_.pk)
     // LEFT MVs: supported since round 16. Attribute-only dim changes
     // keep the NULL bucket's membership (matched rows stay matched),
     // so the member-scoped keyed path below is sound; a pk
@@ -4964,8 +4611,8 @@ object SnapshotLog {
     // tuple — moves rows in or out of the NULL bucket, whose OTHER
     // rows no pk list can bound: those route to the ±delta
     // (invertible kinds) or the group-scoped recompute instead.
-    val isLeft = props.get("mv_join_type").contains("left")
-    // MIXED chains (mv_join_types): since round 19 EVERY dim churn is
+    val isLeft = decl.joins.forall(_.left)
+    // MIXED chains: since round 19 EVERY dim churn is
     // scoped — filter-dim churn like the uniform forms (r18 verdict
     // #4), and key-owning churn through the same ±delta/group-scoped
     // branches (What's-missing #3): the rows whose enrichment can
@@ -4973,115 +4620,28 @@ object SnapshotLog {
     // pk, whatever the edge types; only the per-key FILE-scoping of
     // the uniform-inner keyed path is given up (bucket membership has
     // no pk bound), never the group scope.
-    val mvEdgeTypes = edgeTypesOf(props, dimsL.size)
-    val mixed = mvEdgeTypes.distinct.size > 1
-    val idx = dimsL.indexWhere(d =>
-      d.stripPrefix("file:").replaceAll("/+$", "") ==
-        dim.stripPrefix("file:").replaceAll("/+$", ""))
+    val mixed = decl.mixedJoins
+    val idx = decl.dimIndex(dim)
     require(
       idx >= 0,
       s"refreshMvDim: $dim is not a dim of $mv (dims: ${dimsL.mkString(", ")})")
-    val fksL = props("mv_join_fk").split(',').map(_.trim).toSeq
-    val pksL = props("mv_join_pk").split(',').map(_.trim).toSeq
     val pins = effectiveDimVersions(spark, mv, None).get
     val oldPin = pins(idx)
     val newPin = versions(spark, dim).last
     if (newPin == oldPin) return (oldPin, oldPin)
     val mvTipAtStart = versions(spark, mv).lastOption
-    // same tamper gate as the fact fold: never recompute around a
-    // foreign-written state and re-header it as clean — and the same
-    // round-17 ledger gate: the verification aggregate runs only when
-    // a foreign data-changing commit actually landed since the fold
-    lastFingerprint(spark, mv).foreach { case (n0, x0) =>
-      if (foreignWriteSinceLastFold(spark, mv)) {
-        fpVerifyCount.incrementAndGet()
-        val (n1, x1) = contentFingerprint(read(spark, mv))
-        if (n0 != n1 || x0 != x1)
-          throw new IllegalStateException(
-            s"refreshMvDim: $mv does not match its last fold's " +
-              s"fingerprint (recorded $n0 rows/xor $x0; found $n1/$x1) — " +
-              "the MV was written outside REFRESH. Re-materialize it.")
-      }
-    }
-    val keys = props("mv_key").split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    val derivedKeyName = props.getOrElse("mv_fact_key", props("mv_key"))
-    val dimKeys: Seq[String] =
-      if (props.contains("mv_fact_key")) keys.filterNot(_ == derivedKeyName)
-      else keys
-    val kind = props.getOrElse("mv_kind", "sum")
-    val measures =
-      props("mv_agg").split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    // round 19: join MVs carry expression measures — re-derive them
-    // over every recompute scope exactly as the fact fold derives them
-    // over the change feed (fact columns only, so the derivation
-    // commutes with the dim enrichment), behind refreshMv's
-    // schema-evolution shadow guard per declared name (below).
-    val measureExprsD = declaredMeasureExprs(props, measures)
-    def withKeyAndMeasures(df: DataFrame): DataFrame = {
-      val k = (props.get("mv_key_expr"), props.get("mv_fact_key")) match {
-        case (Some(e), Some(fkn)) => df.withColumn(fkn, expr(e))
-        case _                    => df
-      }
-      measureExprsD.foldLeft(k) { case (cur, (m, e)) =>
-        cur.withColumn(m, expr(e))
-      }
-    }
-    val watermark = mvCommittedVersion(spark, mv)
-      .getOrElse(props("mv_version").toInt)
+    val keys = decl.keys
+    val dimKeys = decl.dimKeys
+    val kind = decl.kind
+    val measures = decl.measures
+    val watermark = mvCommittedVersion(spark, mv).getOrElse(decl.version)
+    // the same tamper gate and schema-evolution guards as refreshMv,
+    // against the fact at the MV's own watermark
+    checkBeforeFold("refreshMvDim", spark, mv, decl, watermark, pins)
     val oldPins = pins
     val newPins = pins.updated(idx, newPin)
     val factSchema = tableSchema(spark, source, watermark)
-    // the same schema-evolution clash guards as refreshMv: a fact
-    // column ADDED under a dim key's name (or the derived key's) since
-    // the materialize would make the enrichment ambiguous or silently
-    // shadowed — refuse loudly rather than depend on the analyzer's
-    // ambiguity error reading well
-    factSchema.foreach { s =>
-      val clash = dimKeys.filter(s.fieldNames.contains)
-      require(
-        clash.isEmpty,
-        s"refreshMvDim: the fact schema at v$watermark contains " +
-          s"column(s) ${clash.mkString(", ")} sharing the MV's dim key " +
-          "name(s) — re-materialize the MV under fresh key names.")
-      props.get("mv_fact_key").foreach(fkn =>
-        require(
-          !s.fieldNames.contains(fkn),
-          s"refreshMvDim: the fact schema at v$watermark now contains a " +
-            s"column named '$fkn' — the MV's derived key would shadow " +
-            "it; re-materialize under a fresh key name."))
-      measureExprsD.foreach { case (m, _) =>
-        require(
-          !s.fieldNames.contains(m),
-          s"refreshMvDim: the fact schema at v$watermark now contains a " +
-            s"column named '$m' — the MV's derived measure would shadow " +
-            "it; re-materialize under a fresh measure name.")
-      }
-    }
     val dimSchemaAt = (i: Int, ps: Seq[Int]) => tableSchema(spark, dimsL(i), ps(i))
-    // round 17 (advisor): the clash guard above covered dim KEY names
-    // only — a snowflake chain fk OWNED by a dim (e.g. c_nationkey on
-    // customer) that a fact column was later ADDED under flips
-    // fkOwnerOf below to "fact-owned" and makes the enrichment's
-    // cur(fkc) ambiguous — exactly the unreadable analyzer error this
-    // guard family exists to pre-empt. Create-time ownership is
-    // readable from the PINNED dim schemas (immutable), so the
-    // refusal is exact.
-    locally {
-      val dimOwnedFks = fksL.zipWithIndex.collect {
-        case (f, j) if dimsL.indices.exists(i =>
-          i != j && dimSchemaAt(i, pins).exists(_.fieldNames.contains(f))) =>
-          f
-      }
-      val fkClash = factSchema
-        .map(s => dimOwnedFks.filter(s.fieldNames.contains))
-        .getOrElse(Nil)
-      require(
-        fkClash.isEmpty,
-        s"refreshMvDim: the fact schema at v$watermark now contains " +
-          s"column(s) ${fkClash.mkString(", ")} sharing a dim-owned " +
-          "snowflake foreign key name — the enrichment join would be " +
-          "ambiguous. Rename the fact column or re-materialize the MV.")
-    }
     // per-dim own key members and fk ownership (create-time name
     // uniqueness makes schema membership the whole answer; pinned
     // schemas are immutable, so old/new agree except for the changed
@@ -5111,34 +4671,37 @@ object SnapshotLog {
     // refreshMv's enrich); `hows` is one join type per edge — the
     // scoped branches pass all-inner (they only run on uniform inner
     // MVs), the full-recompute branch passes the MV's own edge types
+    // dim i at its pin in `ps`, enrichment columns only: its own key
+    // members, its pk and any later fk it owns (the snowflake chain
+    // column)
+    def dimAt(i: Int, ps: Seq[Int]): DataFrame = {
+      val laterFks = fksL.zipWithIndex.collect {
+        case (f, j) if j > i &&
+          dimSchemaAt(i, ps).exists(_.fieldNames.contains(f)) => f
+      }
+      val sel = (ownKeysOf(i, ps) ++ Seq(pksL(i)) ++ laterFks).distinct
+      read(spark, dimsL(i), Some(ps(i))).select(sel.map(col): _*)
+    }
+    def joinDim(cur: DataFrame, i: Int, ps: Seq[Int], how: String): DataFrame = {
+      val d = dimAt(i, ps)
+      cur.join(d, cur(fksL(i)) === d(pksL(i)), how).drop(d(pksL(i)))
+    }
     def enrichAll(
         df: DataFrame, ps: Seq[Int],
         hows: Seq[String] = Seq.fill(dimsL.size)("inner")): DataFrame =
-      dimsL.indices.foldLeft(df) { (cur, i) =>
-        val laterFks = fksL.zipWithIndex.collect {
-          case (f, j) if j > i &&
-            dimSchemaAt(i, ps).exists(_.fieldNames.contains(f)) => f
-        }
-        val sel = (ownKeysOf(i, ps) ++ Seq(pksL(i)) ++ laterFks).distinct
-        val d = read(spark, dimsL(i), Some(ps(i))).select(sel.map(col): _*)
-        cur.join(d, cur(fksL(i)) === d(pksL(i)), hows(i)).drop(d(pksL(i)))
-      }
+      dimsL.indices.foldLeft(df)((cur, i) => joinDim(cur, i, ps, hows(i)))
+    // `start` (rows of dim idx) joined down the chain of the dims
+    // reachable from idx, at the given pins
+    def downstreamChain(start: DataFrame, ps: Seq[Int]): DataFrame =
+      dimsL.indices.filter(j => j > idx && reachable(j))
+        .foldLeft(start)((cur, j) => joinDim(cur, j, ps, "inner"))
     // the DOWNSTREAM chain from idx at the given pins, seeded by a pk
     // set — yields the affected member tuples those pks reach
     def downstreamMembers(pks: DataFrame, ps: Seq[Int]): DataFrame = {
       val d0 = read(spark, dimsL(idx), Some(ps(idx)))
-      val seed = d0.join(pks, d0(pksL(idx)) === pks("__graft_pk"), "left_semi")
-      val chained = dimsL.indices.filter(j => j > idx && reachable(j))
-        .foldLeft(seed) { (cur, j) =>
-          val selJ = (ownKeysOf(j, ps) ++ Seq(pksL(j)) ++
-            fksL.zipWithIndex.collect {
-              case (f, k) if k > j &&
-                dimSchemaAt(j, ps).exists(_.fieldNames.contains(f)) => f
-            }).distinct
-          val dj = read(spark, dimsL(j), Some(ps(j))).select(selJ.map(col): _*)
-          cur.join(dj, cur(fksL(j)) === dj(pksL(j)), "inner").drop(dj(pksL(j)))
-        }
-      chained.select(affKeys.map(col): _*)
+      downstreamChain(
+        d0.join(pks, d0(pksL(idx)) === pks("__graft_pk"), "left_semi"), ps)
+        .select(affKeys.map(col): _*)
     }
     lastDimRefreshScopedGroups.set(-1L)
     lastDimRefreshBranch.set("")
@@ -5150,8 +4713,8 @@ object SnapshotLog {
     // (only dim idx moved), so ONE walk bounds rows affected under
     // EITHER pin set. Shared by the ±delta branch and the round-18
     // group-scoped non-invertible branch.
-    def factEdgeScope(): (DataFrame, Int) = {
-      var scopePks = changedPks.select(col("__graft_pk").as(pksL(idx)))
+    def factEdgeScope(pks: DataFrame): (DataFrame, Int) = {
+      var scopePks = pks
       var scopeFkIdx = idx
       var owner = fkOwnerOf(scopeFkIdx, newPins)
       while (owner >= 0) {
@@ -5166,19 +4729,26 @@ object SnapshotLog {
       }
       (scopePks, scopeFkIdx)
     }
-    // the fact rows (at the watermark, derived key materialized) whose
-    // fk-chain passes a changed pk — file admission by manifest stats,
-    // then the exact row bound by the semi join
-    def scopedTouchedFact(): (DataFrame, DataFrame, Int) = {
-      val (scopePks0, scopeFkIdx) = factEdgeScope()
-      val scopeC = scopePks0.localCheckpoint()
+    // the fact at the watermark (derived key and measures
+    // materialized), read from the files whose fk range can hold a
+    // value of `scopePks` — file admission by manifest stats
+    def scopedFact(scopePks: DataFrame, scopeFkIdx: Int): DataFrame = {
       val (admit, _) = touchedFiles(
-        spark, source, fksL(scopeFkIdx), scopeC, Some(watermark))
-      val factScoped0 = readEntries(
-        spark, source,
-        entriesFor(manifestEntries(spark, source, watermark), admit),
-        tableSchema(spark, source, watermark))
-      val factScoped = withKeyAndMeasures(factScoped0)
+        spark, source, fksL(scopeFkIdx), scopePks, Some(watermark))
+      derive(
+        readEntries(
+          spark, source,
+          entriesFor(manifestEntries(spark, source, watermark), admit),
+          tableSchema(spark, source, watermark)),
+        decl)
+    }
+    // the fact rows whose fk-chain passes a changed pk: the scoped
+    // files, then the exact row bound by the semi join
+    def scopedTouchedFact(): (DataFrame, DataFrame, Int) = {
+      val (scopePks0, scopeFkIdx) =
+        factEdgeScope(changedPks.select(col("__graft_pk").as(pksL(idx))))
+      val scopeC = scopePks0.localCheckpoint()
+      val factScoped = scopedFact(scopeC, scopeFkIdx)
       val touched = factScoped.join(
         scopeC,
         factScoped(fksL(scopeFkIdx)) === scopeC(pksL(scopeFkIdx)),
@@ -5186,7 +4756,7 @@ object SnapshotLog {
       (touched, scopeC, scopeFkIdx)
     }
     val factAtW0 = read(spark, source, Some(watermark))
-    val factW = withKeyAndMeasures(factAtW0)
+    val factW = derive(factAtW0, decl)
     val mvOld = read(spark, mv)
     // left MVs: does the dim change move rows across the NULL
     // bucket? pk-set changes always can; an attr tuple of a changed
@@ -5206,8 +4776,7 @@ object SnapshotLog {
         }
       }
     }
-    val mvEdgeHows =
-      mvEdgeTypes.map(t => if (t == "left") "left_outer" else "inner")
+    val mvEdgeHows = decl.joins.map(_.how)
     // round 19 (r18 verdict #4): the filter-dim branches below apply to
     // LEFT and MIXED chains too, enriched with the MV's own per-edge
     // join types. Soundness is unchanged by the edge types: the changed
@@ -5335,18 +4904,7 @@ object SnapshotLog {
           touchedKeys,
           keys.map(k => joinedAll(k) <=> touchedKeys(k)).reduce(_ && _),
           "left_semi")
-        val recomputed =
-          if (kind == "distinct")
-            distinctRollup(inTouched, keys, measures.head,
-              props.get("mv_distinct_hash").contains("true"))
-          else if (kind == "hll")
-            hllRollup(inTouched, keys, measures.head, hllLgKOf(props))
-          else {
-            val aggs = mvAggExprs(
-              measures, kind, props.get("mv_avg_exact").contains("true"))
-            inTouched.groupBy(keys.map(col): _*)
-              .agg(aggs.head, aggs.tail: _*)
-          }
+        val recomputed = rollup(decl, inTouched)
         val kept = mvOld.join(
           touchedKeys,
           keys.map(k => mvOld(k) <=> touchedKeys(k)).reduce(_ && _),
@@ -5361,62 +4919,21 @@ object SnapshotLog {
         // fk values — dim_idx pks reaching a touched tuple, then pk
         // sets dim-by-dim up the chain until the fk lives on the fact
         def pksReachingTouched(ps: Seq[Int]): DataFrame = {
-          val d0 = read(spark, dimsL(idx), Some(ps(idx)))
-          val chained = dimsL.indices.filter(j => j > idx && reachable(j))
-            .foldLeft(d0) { (cur, j) =>
-              val selJ = (ownKeysOf(j, ps) ++ Seq(pksL(j)) ++
-                fksL.zipWithIndex.collect {
-                  case (f, k) if k > j &&
-                    dimSchemaAt(j, ps).exists(_.fieldNames.contains(f)) => f
-                }).distinct
-              val dj = read(spark, dimsL(j), Some(ps(j)))
-                .select(selJ.map(col): _*)
-              cur.join(dj, cur(fksL(j)) === dj(pksL(j)), "inner")
-                .drop(dj(pksL(j)))
-            }
+          val chained =
+            downstreamChain(read(spark, dimsL(idx), Some(ps(idx))), ps)
           val cond = affKeys.map(k => chained(k) <=> touched(k))
             .reduce(_ && _)
           chained.join(touched, cond, "left_semi").select(col(pksL(idx)))
         }
-        var scopePks = pksReachingTouched(newPins)
-          .unionByName(pksReachingTouched(oldPins)).distinct()
-        var scopeFkIdx = idx
-        var owner = fkOwnerOf(scopeFkIdx, newPins)
-        while (owner >= 0) {
-          val dOwn = read(spark, dimsL(owner), Some(newPins(owner)))
-          scopePks = dOwn
-            .join(scopePks,
-              dOwn(fksL(scopeFkIdx)) === scopePks(pksL(scopeFkIdx)),
-              "left_semi")
-            .select(col(pksL(owner))).distinct()
-          scopeFkIdx = owner
-          owner = fkOwnerOf(scopeFkIdx, newPins)
-        }
-        val (admit, _) = touchedFiles(
-          spark, source, fksL(scopeFkIdx), scopePks, Some(watermark))
-        val factScoped0 = readEntries(
-          spark, source,
-          entriesFor(manifestEntries(spark, source, watermark), admit),
-          tableSchema(spark, source, watermark))
-        val factScoped = withKeyAndMeasures(factScoped0)
-        val joined = enrichAll(factScoped, newPins)
+        val (scopePks, scopeFkIdx) = factEdgeScope(
+          pksReachingTouched(newPins)
+            .unionByName(pksReachingTouched(oldPins)).distinct())
+        val joined = enrichAll(scopedFact(scopePks, scopeFkIdx), newPins)
         val touchedRows = joined.join(
           touched,
           affKeys.map(k => joined(k) <=> touched(k)).reduce(_ && _),
           "left_semi")
-        val recomputed =
-          if (kind == "distinct")
-            distinctRollup(touchedRows, keys, measures.head,
-              props.get("mv_distinct_hash").contains("true"))
-          else if (kind == "hll")
-            hllRollup(touchedRows, keys, measures.head,
-              hllLgKOf(props))
-          else {
-            val aggs = mvAggExprs(
-              measures, kind, props.get("mv_avg_exact").contains("true"))
-            touchedRows.groupBy(keys.map(col): _*)
-              .agg(aggs.head, aggs.tail: _*)
-          }
+        val recomputed = rollup(decl, touchedRows)
         // untouched groups keep their rows verbatim; touched ones are
         // replaced by the recompute (a group whose rows all left
         // simply vanishes). Null-safe on the members (dim attrs may

@@ -5668,4 +5668,35 @@ class CatalogSpec extends SparkTestBase {
       new java.io.File(s"$warehouse/main/zz_poisoned").delete()
     }
   }
+
+  test("describe_mv lists every declared expression measure: one " +
+    "agg_expr[<measure>] row per mv_sum_<name> expression of a " +
+    "multi-expression MV, and the single agg_expr row of a " +
+    "one-expression MV as before") {
+    val t = freshName()
+    val tn = t.split('.').last
+    spark.sql(s"CREATE TABLE $t (k BIGINT, a BIGINT, b BIGINT, c BIGINT)")
+    spark.sql(s"INSERT INTO $t VALUES (1, 10, 3, 7), (2, 5, 5, 9)")
+    spark.sql(
+      s"""CREATE MATERIALIZED VIEW cattest.main.${tn}_dx AS
+         |SELECT k, sum(a * b) AS mv_sum_rev, sum(c % 5) AS mv_sum_cm,
+         |sum(a) AS mv_sum_a, count(*) AS mv_n
+         |FROM $t GROUP BY k""".stripMargin)
+    def describe(mv: String): Seq[(String, String)] =
+      spark.sql(s"CALL cattest.system.describe_mv(mv => 'main.$mv')")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+    val multi = describe(s"${tn}_dx")
+    val exprRows = multi.filter(_._1.startsWith("agg_expr"))
+    assert(exprRows.map(_._1) == Seq("agg_expr[rev]", "agg_expr[cm]"), multi)
+    assert(exprRows.head._2.replace(" ", "").contains("a*b"), multi)
+    assert(exprRows(1)._2.replace(" ", "").contains("c%5"), multi)
+    assert(multi.toMap.get("agg").contains("rev,cm,a"), multi)
+    spark.sql(
+      s"""CREATE MATERIALIZED VIEW cattest.main.${tn}_d1 AS
+         |SELECT k, sum(a * b) AS mv_sum, count(*) AS mv_n
+         |FROM $t GROUP BY k""".stripMargin)
+    val single = describe(s"${tn}_d1").filter(_._1.startsWith("agg_expr"))
+    assert(single.map(_._1) == Seq("agg_expr"), single)
+    assert(single.head._2.replace(" ", "").contains("a*b"), single)
+  }
 }

@@ -4,8 +4,12 @@
     python3 tools/perfbench_ab.py BASE CHANGE [--pairs 10] [--seeds 301-310]
         [--workloads lakehouse,operator_inventory] [--seconds 5] [--tmp /tmp]
 
-Checks each revision out into its own `git worktree` under --tmp, then
-runs `python3 perfbench/run.py --trace 0` there for N pairs per workload.
+Extracts each revision's committed files (`git archive`) into its own
+directory under --tmp, then runs `python3 perfbench/run.py --trace 0` there
+for N pairs per workload. The two directories are named
+`perfbench_ab-parent-<sha>` and `perfbench_ab-change-<sha>`, paths of equal
+length: an MV's `_props` stores absolute table paths, so checkouts whose
+paths differ in length read different `disk_mb` for identical code.
 Pair i uses seed i of the seed list (cycled) and alternates which side
 runs first, so a machine that speeds up or slows down during the A/B
 hits both sides alike. For each workload and end-to-end metric of
@@ -13,11 +17,12 @@ BENCHMARK.json it prints both medians, both quartile pairs, the share
 of pairs the change won (ties win nothing), and the change of the
 median against the metric's bound. It writes nothing under perfbench/
 and never touches BENCHMARK.json; --json saves the raw runs elsewhere.
-The worktrees are removed at the end unless --keep is given.
+The directories are removed at the end unless --keep is given.
 """
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
@@ -39,15 +44,21 @@ def parse_seeds(spec):
     return seeds
 
 
-def make_worktree(rev, tmp, label):
+def make_tree(rev, tmp, label):
+    """REV's committed files under tmp/perfbench_ab-<label>-<sha10>."""
     sha = git("rev-parse", "--verify", f"{rev}^{{commit}}")
     path = os.path.join(tmp, f"perfbench_ab-{label}-{sha[:10]}")
-    if os.path.exists(path):
-        # a worktree kept by an earlier --keep run keeps its build
-        if git("rev-parse", "HEAD", cwd=path) == sha and not git("status", "--porcelain", cwd=path):
-            return sha, path
-        subprocess.run(["git", "worktree", "remove", "--force", path], cwd=REPO, capture_output=True)
-    git("worktree", "add", "--detach", path, sha)
+    done = os.path.join(path, ".perfbench_ab_extracted")
+    if os.path.exists(done):
+        return sha, path  # kept by an earlier --keep run, with its build
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    archive = subprocess.Popen(["git", "archive", sha], cwd=REPO, stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", path], stdin=archive.stdout, check=True)
+    archive.stdout.close()
+    if archive.wait() != 0:
+        raise RuntimeError(f"git archive {sha} failed")
+    open(done, "w").close()
     return sha, path
 
 
@@ -112,9 +123,9 @@ def main():
     ap.add_argument("--seeds", default="301-310")
     ap.add_argument("--workloads", default="lakehouse,operator_inventory")
     ap.add_argument("--seconds", type=int, default=5)
-    ap.add_argument("--tmp", default="/tmp", help="where the worktrees go")
+    ap.add_argument("--tmp", default="/tmp", help="where the checkouts go")
     ap.add_argument("--json", help="also write every run's result here")
-    ap.add_argument("--keep", action="store_true", help="keep the worktrees")
+    ap.add_argument("--keep", action="store_true", help="keep the checkouts")
     args = ap.parse_args()
 
     seeds = parse_seeds(args.seeds)
@@ -123,8 +134,9 @@ def main():
         metrics = json.load(fh)["end_to_end"]
     trees = []
     try:
-        for rev, label in ((args.base, "base"), (args.change, "change")):
-            trees.append(make_worktree(rev, args.tmp, label))
+        # equal-length labels, so both checkouts' paths have one length
+        for rev, label in ((args.base, "parent"), (args.change, "change")):
+            trees.append(make_tree(rev, args.tmp, label))
         print(f"base   {trees[0][0]}\nchange {trees[1][0]}", flush=True)
         results = {}
         for w in workloads:
@@ -148,8 +160,7 @@ def main():
     finally:
         if not args.keep:
             for _, path in trees:
-                subprocess.run(["git", "worktree", "remove", "--force", path], cwd=REPO, capture_output=True)
-            subprocess.run(["git", "worktree", "prune"], cwd=REPO, capture_output=True)
+                shutil.rmtree(path, ignore_errors=True)
 
 
 if __name__ == "__main__":
