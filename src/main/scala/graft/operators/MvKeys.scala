@@ -389,12 +389,13 @@ object MvKeys {
     * rollup is already at key grain), the key-only predicate
     * transplanted onto the MV read. On a 100 TB fact this replaces a
     * full scan + shuffle with a scan of a table |keys| rows long that
-    * REFRESH already paid for incrementally. Freshness is the gate:
-    * the MV's committed `mvv` watermark must equal the exact snapshot
-    * version the query pinned — the inline pins assert the rewritten
-    * plan reads the MV's files, aggregates nothing, and never touches
-    * the source scan; PlanShapeSpec pins the stale-MV bail (watermark
-    * behind tip ⇒ source plan, correctness before speed). The oracle
+    * REFRESH already paid for incrementally. The MV serves at the
+    * exact snapshot version the query pinned: read as it is when its
+    * committed `mvv` watermark equals that version, folded with the
+    * change feed since the watermark when it is behind (MvStaleServeSpec
+    * pins both, and each stale bail) — the inline pins assert the
+    * rewritten plan reads the MV's files, aggregates nothing, and never
+    * touches the source scan. The oracle
     * recomputes the whole answer from SOURCE rows, so the hash match
     * proves the served rollup exact through the append + CoW UPDATE
     * behind the MV's back. */
@@ -2388,8 +2389,9 @@ object MvKeys {
     * with its remedy — produced by the same diagnostic sink as CALL
     * system.explain_mv_serve, now living where users actually look.
     * The graded contract is the lifecycle truth table: fresh MV →
-    * the section carries SERVED; source moves → the section carries
-    * STALE naming REFRESH MATERIALIZED VIEW; conf off → EXPLAIN is
+    * the section carries SERVED; source rewritten past what the change
+    * feed can cheaply fold → the section carries STALE naming REFRESH
+    * MATERIALIZED VIEW; conf off → EXPLAIN is
     * byte-identical to stock Spark (no section at all — the surface
     * is strictly opt-in and costs nothing when off). */
   val sqlMvExplainPlan: Q = (spark, dir) => {
@@ -2425,6 +2427,10 @@ object MvKeys {
       spark.sql(
         s"""INSERT INTO $cat.main.orders_xpsrc
            |SELECT * FROM graft_xp_src WHERE o_orderkey > $half""".stripMargin)
+      // a rewrite of every row: the change feed since the MV's
+      // watermark reads more rows than the source holds, so the serve
+      // bails to the source and only REFRESH brings the MV back
+      spark.sql(s"UPDATE $cat.main.orders_xpsrc SET cents = cents + 1")
       val stale = step("b_stale")
       spark.conf.set(MvRewrite.ExplainConfKey, "false")
       val off = step("c_conf_off")
@@ -2583,9 +2589,10 @@ object MvKeys {
     * its remedy (REFRESH for staleness, re-materialize for dim drift,
     * the named unservable output for shape misses). The graded
     * contract is the diagnosis LIFECYCLE, projected to a
-    * deterministic shape: fresh MV → served; source moves → not
-    * served AND the advice names REFRESH MATERIALIZED VIEW; after the
-    * refresh → served again. The oracle is the literal truth table —
+    * deterministic shape: fresh MV → served; source rewritten whole
+    * (a change feed no cheaper than the source) → not served AND the
+    * advice names REFRESH MATERIALIZED VIEW; after the refresh →
+    * served again. The oracle is the literal truth table —
     * the diagnostics' behavior, hash-matched. */
   val sqlMvExplain: Q = (spark, dir) => {
     import spark.implicits._
@@ -2620,6 +2627,10 @@ object MvKeys {
     spark.sql(
       s"""INSERT INTO $cat.main.orders_xplsrc
          |SELECT * FROM graft_xpl_src WHERE o_orderkey > $half""".stripMargin)
+    // a rewrite of every row: the change feed since the MV's watermark
+    // reads more rows than the source holds — not servable through the
+    // feed, and REFRESH is the remedy the diagnosis names
+    spark.sql(s"UPDATE $cat.main.orders_xplsrc SET cents = cents + 1")
     val stale = diag("b_stale")
     spark.sql(s"REFRESH MATERIALIZED VIEW $cat.main.orders_xplmv")
     val refreshed = diag("c_refreshed")

@@ -136,6 +136,9 @@ object MvRewrite {
   // ------------------------------------------------------------------
   private val diagSink = new ThreadLocal[StringBuilder]
 
+  /** Most change-feed groups a stale serve inlines into its plan. */
+  private[plans] val MaxInlineGroups = 1 << 16
+
   /** Report a bail reason to the armed sink, if any. `msg` is by-name:
     * during normal optimization (sink unset) it is never evaluated,
     * so bail sites may freely interpolate watermark lookups etc. */
@@ -404,11 +407,17 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   // the rollup exact at a committed watermark, and this match serves
   // `SELECT k, sum(m) FROM src GROUP BY k` from it — a pure O(keys)
   // MV scan with NO aggregate at all (the MV is already at key grain),
-  // instead of a 100 TB source scan + shuffle. Freshness is the gate:
-  // the MV's committed `mvv` watermark must equal the EXACT snapshot
-  // version the scanned relation pinned at analysis (tip reads and
-  // VERSION AS OF alike) — a stale or ahead MV bails to the source
-  // plan, correctness before speed. Discovery is the source table's
+  // instead of a 100 TB source scan + shuffle. The serve reads the MV
+  // version whose committed `mvv` watermark w is the newest one at or
+  // below the snapshot version v the scanned relation pinned at
+  // analysis (tip reads and VERSION AS OF alike). w = v reads that MV
+  // version as it is. w < v (a source commit landed since the last
+  // REFRESH) reads it folded with the change feed (w, v] — the fold
+  // REFRESH itself commits ([[graft.sources.MvFold]]) — for a plain
+  // `sum`/`stats` MV whose feed is cheaper than the source and whose
+  // groups' NULL-ness the fold decides; every other stale case, and an
+  // MV with no watermark at or below v, bails to the source plan,
+  // correctness before speed. Discovery is the source table's
   // reverse pointer ([[MvDecl.refs]], one props read), each ref
   // re-verified against the MV's own declaration before it may serve.
   // ------------------------------------------------------------------
@@ -537,23 +546,23 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         None
     }
 
-  /** Stored LIVE row count of an MV at the version a probe pinned at
-    * `srcVersion` would actually serve — the candidate-ranking
-    * currency (round 17; round 18 makes it HISTORICAL-AWARE, r17
-    * verdict #6): among several ADMISSIBLE MVs the smallest one wins,
-    * so a monthly dashboard with both a daily and a monthly rollup
-    * registered re-aggregates ~months rows, not ~days — at 100 TB
-    * the difference between a 12-row scan and a million-row one. For
-    * a `VERSION AS OF` query the ranked size is the count at the MV
-    * version whose mvv watermark folds that source version (the one
-    * serveManaged will read), falling back to the tip when no ledger
-    * entry matches (the candidate will bail STALE anyway, so its
-    * rank is moot). Manifest `_rc`/`_dvc` riders make this
-    * O(manifest) driver metadata, zero file opens; an MV with any
-    * pre-rider file (unknown size) ranks after every known one but
-    * still serves when it is the only candidate. */
+  /** Rows a serve from an MV reads for a probe pinned at source
+    * `srcVersion` — the candidate-ranking currency (round 17; round 18
+    * makes it HISTORICAL-AWARE, r17 verdict #6): among several
+    * ADMISSIBLE MVs the smallest one wins, so a monthly dashboard with
+    * both a daily and a monthly rollup registered re-aggregates
+    * ~months rows, not ~days — at 100 TB the difference between a
+    * 12-row scan and a million-row one. The count is the MV's LIVE
+    * rows at the version serveManaged will read (the one whose mvv
+    * watermark w is the newest at or below the pinned version), plus,
+    * when w is behind the pin, the file rows of the change feed
+    * (w, srcVersion] the serve folds in. Manifest `_rc`/`_dvc` riders
+    * make this O(manifest) driver metadata, zero file opens; an MV
+    * with any pre-rider file (unknown size) ranks after every known
+    * one but still serves when it is the only candidate. */
   private def storedRows(
       mvPath: String,
+      srcPath: String,
       srcVersion: Int,
       // the probe's pinned dim versions BY PATH (join/star candidates
       // only; None for plain serves) — round 19, closing the r18
@@ -568,25 +577,15 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     scala.util.Try {
       val tip = graft.sources.SnapshotLog.versions(spark, mvPath).last
       // watermarks are MONOTONE (a refresh only folds forward), so the
-      // tip watermark classifies the probe with one or two header
-      // reads: equal → the tip serves; BEHIND the probe (a stale MV —
-      // the normal state between refreshes) → NO version can fold the
-      // probe, skip the ledger walk entirely (the candidate bails
-      // STALE in serveManaged anyway, its rank is moot); AHEAD →
-      // genuine time travel, pay the backward walk for the resolved
-      // version. Without this gate a stale candidate cost
-      // O(MV versions) header reads on EVERY aggregate planned over
-      // the source (round-18 review finding).
-      val tipWm = graft.sources.SnapshotLog
-        .committedWatermark(spark, mvPath, "mvv")
-      val v0 = tipWm match {
-        case Some(w) if w <= srcVersion => tip
-        case Some(_) =>
-          graft.sources.SnapshotLog
-            .versionAtWatermark(spark, mvPath, "mvv", srcVersion)
-            .getOrElse(tip)
-        case None => tip
-      }
+      // backward walk stops at the first header at or below the probe:
+      // one header read for a tip or stale probe, the walk only for
+      // genuine time travel behind the tip watermark
+      val (w, v0) = graft.sources.SnapshotLog
+        .watermarkAtOrBelow(spark, mvPath, "mvv", srcVersion)
+        .getOrElse((srcVersion, tip))
+      val feedRows =
+        if (w == srcVersion) Some(0L)
+        else graft.sources.SnapshotLog.changeFeedRows(spark, srcPath, w, srcVersion)
       // refine within the watermark span by the probe's dim pins —
       // one effectiveDimVersions read in the common case (pins match
       // at the span head); only a genuine stack pays the walk. The
@@ -620,8 +619,8 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case None => v0
       }
       val counts = graft.sources.SnapshotLog.liveRowCounts(spark, mvPath, v)
-      if (counts.exists(_._2.isEmpty)) Long.MaxValue
-      else counts.map(_._2.get).sum
+      if (counts.exists(_._2.isEmpty) || feedRows.isEmpty) Long.MaxValue
+      else counts.map(_._2.get).sum + feedRows.get
     }.getOrElse(Long.MaxValue)
 
   /** Pick the cheapest ADMISSIBLE candidate: rank by stored rows at
@@ -638,15 +637,15 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * source version so time-travel queries rank by the sizes they
     * would actually read. */
   private def pickCheapest(
-      cands: Seq[(String, Int, Option[Map[String, Int]],
+      cands: Seq[(String, String, Int, Option[Map[String, Int]],
         () => Option[LogicalPlan])]
   ): Option[LogicalPlan] = cands match {
-    case Seq()                => None
-    case Seq((_, _, _, only)) => only()
+    case Seq()                   => None
+    case Seq((_, _, _, _, only)) => only()
     case many =>
       val ranked = many
-        .map { case (p, sv, pins, thunk) =>
-          (p, thunk, storedRows(p, sv, pins))
+        .map { case (p, src, sv, pins, thunk) =>
+          (p, thunk, storedRows(p, src, sv, pins))
         }
         .sortBy(t => (t._3, t._1))
       ranked.iterator.zipWithIndex
@@ -655,7 +654,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             val rowsTxt =
               if (rows == Long.MaxValue) "unknown" else rows.toString
             val skipped = ranked.drop(i + 1)
-            MvRewrite.diag(s"chose $p ($rowsTxt stored rows)" +
+            MvRewrite.diag(s"chose $p ($rowsTxt rows to read)" +
               (if (skipped.isEmpty) ""
                else "; larger candidates not evaluated: " +
                  skipped.map { case (q, _, r) =>
@@ -676,7 +675,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val plain = for {
       (condOpt, srcPath, srcVersion) <- managedSourceOf(agg.child)
       plan <- pickCheapest(mvRefsOf(srcPath).map { mvPath =>
-        (mvPath, srcVersion, None, () =>
+        (mvPath, srcPath, srcVersion, None, () =>
           tryServe(agg, condOpt, srcPath, srcVersion, mvPath, None))
       })
     } yield plan
@@ -810,7 +809,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
               case (x, y)             => x.orElse(y)
             }
             mvRefsOf(fp).map { mvPath =>
-              (mvPath, fv, Some(Map(dp -> dv)), () =>
+              (mvPath, fp, fv, Some(Map(dp -> dv)), () =>
                 tryServe(
                   agg, dimCond, fp, fv, mvPath,
                   Some(JoinProbe(
@@ -946,7 +945,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           val dimPins = sm.leaves.filterNot(_ eq factLeaf)
             .map(l => l.path -> l.v).toMap
           mvRefsOf(factLeaf.path).map { mvPath =>
-            (mvPath, factLeaf.v, Some(dimPins), () =>
+            (mvPath, factLeaf.path, factLeaf.v, Some(dimPins), () =>
               try alignStar(agg, sm, factLeaf, mvPath)
               catch {
                 case scala.util.control.NonFatal(t) =>
@@ -1077,6 +1076,107 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       rTypes)
     serveManaged(agg, dimCond, factLeaf.path, factLeaf.v, mvPath,
       Some(probe))
+  }
+
+  /** The change feed `(from, to]` a stale serve folds into MV@mvV, with
+    * its file rows and the source's live rows at `to` (manifest
+    * riders). */
+  private case class StaleFeed(
+      srcPath: String,
+      mvV: Int,
+      from: Int,
+      to: Int,
+      feedRows: Long,
+      baseRows: Long)
+
+  /** The checks a stale MV passes before its grain is matched, all on
+    * metadata: a plain (non-join) MV of an invertible kind, a feed that
+    * crosses no expired version, and a feed that reads fewer file rows
+    * than the source holds live rows — else rescanning the source is
+    * the cheaper plan. Each bail names its reason and the REFRESH
+    * remedy. */
+  private def staleGate(
+      decl: MvDecl,
+      mvPath: String,
+      mvV: Int,
+      srcPath: String,
+      w: Int,
+      v: Int
+  ): Option[StaleFeed] = {
+    import graft.sources.{MvFold, SnapshotLog}
+    def bail(why: String): Option[StaleFeed] = {
+      MvRewrite.diag(s"$mvPath: STALE — MV v$mvV folds source@v$w, the " +
+        s"query reads source@v$v, and $why; run REFRESH MATERIALIZED VIEW " +
+        "(or query the version the MV is fresh at)")
+      None
+    }
+    def liveRows(version: Int): Option[Long] = {
+      val counts = SnapshotLog.liveRowCounts(spark, srcPath, version).map(_._2)
+      if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
+    }
+    if (decl.joins.nonEmpty)
+      bail("a join MV does not fold its feed at serve time (the feed " +
+        "would have to join the dims at their pins)")
+    else if (!MvFold.invertible(decl.kind))
+      bail(s"kind=${decl.kind} partials cannot fold the feed's deletes")
+    else if (w < SnapshotLog.readHorizon(spark, srcPath) ||
+      !SnapshotLog.versions(spark, srcPath).contains(w))
+      bail(s"the change feed (v$w, v$v] crosses versions expired by retention")
+    else
+      (SnapshotLog.changeFeedRows(spark, srcPath, w, v), liveRows(v)) match {
+        case (Some(f), Some(b)) if f < b => Some(StaleFeed(srcPath, mvV, w, v, f, b))
+        case (Some(f), Some(b)) =>
+          bail(s"the change feed (v$w, v$v] reads $f file rows, not fewer " +
+            s"than the source's $b live rows")
+        case _ =>
+          bail(s"the row count of the change feed (v$w, v$v] or of the " +
+            "source is unknown (files without row riders)")
+      }
+  }
+
+  /** MV@mvV folded with its change feed: the plan a stale serve reads
+    * in place of `mvPlan`, under `mvPlan`'s output attributes. The
+    * feed's per-group rollup (O(groups)) is collected once, here at
+    * plan time — the [[AnnIvfRewrite]] probe precedent — and inlined
+    * as a local relation, so the served plan reads the MV plus that
+    * relation and the feed is read once. Bails when some group's
+    * NULL-ness the fold cannot decide ([[graft.sources.MvFold]]), or
+    * when the rollup is too large to inline. */
+  private def foldedMv(
+      decl: MvDecl,
+      mvPath: String,
+      mvPlan: LogicalPlan,
+      f: StaleFeed
+  ): Option[LogicalPlan] = {
+    import graft.sources.{MvFold, SnapshotLog}
+    import org.apache.spark.sql.functions.col
+    def bail(why: String): Option[LogicalPlan] = {
+      MvRewrite.diag(s"$mvPath: STALE — MV v${f.mvV} folds source@v${f.from}, " +
+        s"the query reads source@v${f.to}, and $why; run REFRESH MATERIALIZED VIEW")
+      None
+    }
+    val rollup = MvFold.feed(decl, SnapshotLog.mvFeed(spark, decl, f.from, f.to))
+    val rows = rollup.limit(MvRewrite.MaxInlineGroups + 1).collect()
+    if (rows.length > MvRewrite.MaxInlineGroups)
+      return bail(s"its change feed touches more than ${MvRewrite.MaxInlineGroups} " +
+        "groups, too many to inline into the plan")
+    val mvDf = SnapshotLog.read(spark, mvPath, Some(f.mvV))
+    val folded = MvFold.fold(decl, mvDf,
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), rollup.schema))
+    def negative(c: String): Boolean = {
+      val i = rollup.schema.fieldIndex(c)
+      rows.exists(r => !r.isNullAt(i) && r.getLong(i) < 0)
+    }
+    if (MvFold.mayUndecide(decl, mvDf.columns.toSet, negative) &&
+      !folded.filter(col(MvFold.Undecided)).isEmpty)
+      return bail("the feed removes non-NULL values of a group's measure " +
+        "and folds its sum to exactly 0, so whether that sum is NULL is " +
+        "undecidable from the MV")
+    val plan = folded.drop(MvFold.Undecided).queryExecution.optimizedPlan
+    val byName = plan.output.map(a => a.name -> a).toMap
+    Some(Project(
+      mvPlan.output.map(a => Alias(byName(a.name), a.name)(exprId = a.exprId)),
+      plan))
   }
 
   /** Resolve a recorded measure-expression TEXT ([[MvDecl.measureExprs]])
@@ -1306,30 +1406,36 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     def exprMeasureOf(e: Expression): Option[String] =
       exprMeasures.find(_._2.semanticEquals(e)).map(_._1)
     // Freshness: serve from the MV VERSION whose effective committed
-    // `mvv` watermark equals the query's pinned source version —
-    // MV@v ≡ aggregate(source@v). For a tip read that is the MV tip;
-    // for `VERSION AS OF` at an older source version it is the OLDER
-    // MV version whose mvv matched (historical serve, round 15 — the
-    // ledger is immutable per committed version, so pinning the pair
-    // cannot race a concurrent refresh: a refresh only APPENDS new
-    // versions). The props copy backs pre-header MVs (tip only).
-    val mvV0: Int = SnapshotLog
-      .versionAtWatermark(spark, mvPath, "mvv", srcVersion)
+    // `mvv` watermark w is the newest at or below the query's pinned
+    // source version v. For a tip read that is the MV tip; for
+    // `VERSION AS OF` at an older source version it is an OLDER MV
+    // version (historical serve, round 15 — the ledger is immutable
+    // per committed version, so pinning the pair cannot race a
+    // concurrent refresh: a refresh only APPENDS new versions). w = v:
+    // MV@mvV ≡ aggregate(source@v), read as it is. w < v: the serve
+    // reads MV@mvV ⊕ the change feed (w, v] where [[staleGate]] and,
+    // once the grain matched, [[foldedMv]] prove the fold exact. The
+    // props copy backs pre-header MVs (fresh tip only).
+    val (w, mvV0): (Int, Int) = SnapshotLog
+      .watermarkAtOrBelow(spark, mvPath, "mvv", srcVersion)
       .orElse {
         if (SnapshotLog.committedWatermark(spark, mvPath, "mvv").isEmpty &&
           decl.version == srcVersion)
-          SnapshotLog.versions(spark, mvPath).lastOption
+          SnapshotLog.versions(spark, mvPath).lastOption.map(srcVersion -> _)
         else None
       }
       .getOrElse {
         MvRewrite.diag(s"$mvPath: STALE — no committed MV version folds " +
-          s"exactly source@v$srcVersion" +
+          s"source@v$srcVersion or an earlier version" +
           SnapshotLog.committedWatermark(spark, mvPath, "mvv")
             .map(w => s" (the MV's tip watermark is v$w)").getOrElse("") +
           "; run REFRESH MATERIALIZED VIEW (or query the version the MV " +
           "is fresh at)")
         return None
       }
+    val feed: Option[StaleFeed] =
+      if (w == srcVersion) None
+      else Some(staleGate(decl, mvPath, mvV0, srcPath, w, srcVersion).getOrElse(return None))
     // dim freshness (join probes): the query's pinned dim versions
     // must equal the MV's EFFECTIVE pins AT the served MV version —
     // create-time props overlaid with every dim refresh's mvdv= rider
@@ -1549,8 +1655,15 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           s"stored partials (kind=$kind, measures=${measures.mkString(",")})")
     }
     def diagServed(grain: String): Unit =
-      MvRewrite.diag(s"SERVED from $mvPath (MV v$mvV ≡ source@v$srcVersion" +
-        s", $grain grain, kind=$kind)")
+      MvRewrite.diag(feed match {
+        case None =>
+          s"SERVED from $mvPath (MV v$mvV ≡ source@v$srcVersion" +
+            s", $grain grain, kind=$kind)"
+        case Some(f) =>
+          s"SERVED from $mvPath through its change feed (MV v$mvV at " +
+            s"source@v$w ⊕ feed (v$w, v$srcVersion]: ${f.feedRows} feed rows " +
+            s"against ${f.baseRows} base rows, $grain grain, kind=$kind)"
+      })
     // ---- kind='distinct' owns its whole serve path (round 15) ----
     // The stored grain is (keys..., mv_bno) — one bitmap per
     // 32768-value bucket — NOT one row per key, so the generic 1:1 /
@@ -1897,9 +2010,13 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
     if (outs.exists(_.isEmpty)) { diagOuts(outs); return None }
+    val stored = feed match {
+      case None    => mvPlan
+      case Some(f) => foldedMv(decl, mvPath, mvPlan, f).getOrElse(return None)
+    }
     val base = condMv match {
-      case Some(cond) => Filter(cond, mvPlan)
-      case None       => mvPlan
+      case Some(cond) => Filter(cond, stored)
+      case None       => stored
     }
     diagServed(
       if (global) "global" else if (identity) "identity" else "coarse")

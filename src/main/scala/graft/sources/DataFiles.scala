@@ -38,6 +38,12 @@ import org.apache.spark.sql.types.StructType
   *     they are written CORRECTED (never rebased, whatever the
   *     session's `datetimeRebaseModeInWrite`), as the catalog's reader
   *     reads them;
+  *   - a page holds at most [[PageRows]] rows, against parquet's
+  *     default of 20,000: the page index then lets a point or range
+  *     read skip inside a compacted file of one whole table (OPTIMIZE
+  *     packs a sf0.01 lineitem table into one ~60k-row file, which
+  *     20,000-row pages split only three ways). A smaller limit a
+  *     caller sets in the Hadoop conf or the session still applies;
   *   - zstd-jni's recycling buffer pool is off, on the engine's writes
   *     and on its reads ([[hadoopConf]] behind the catalog's readers,
   *     [[read]] behind `SnapshotLog`'s Spark reads). The pool keeps its
@@ -55,6 +61,15 @@ object DataFiles {
 
   /** Column-chunk codec of every data file the engine lands. */
   private val Codec: CompressionCodecName = CompressionCodecName.ZSTD
+
+  /** Most rows in one data page. */
+  val PageRows: Int = 8192
+
+  /** parquet's `ParquetOutputFormat.PAGE_ROW_COUNT_LIMIT`. */
+  private val PageRowsKey = "parquet.page.row.count.limit"
+
+  /** [[PageRows]], or the smaller limit `conf` sets. */
+  private def pageRows(conf: Configuration): Int = math.min(PageRows, conf.getInt(PageRowsKey, PageRows))
 
   /** parquet's `ZstandardCodec.PARQUET_COMPRESS_ZSTD_BUFFERPOOL_ENABLED`. */
   private val BufferPoolKey = "parquet.compression.codec.zstd.bufferPool.enabled"
@@ -104,6 +119,7 @@ object DataFiles {
     new RowWriterBuilder(HadoopOutputFile.fromPath(new Path(path), conf), schema)
       .withConf(conf)
       .withCompressionCodec(Codec)
+      .withPageRowCountLimit(pageRows(conf))
       .build()
 
   private class RowWriterBuilder(file: OutputFile, schema: StructType)
@@ -136,6 +152,7 @@ object DataFiles {
       writer
         .option("compression", Codec.name.toLowerCase(java.util.Locale.ROOT))
         .option(BufferPoolKey, "false")
+        .option(PageRowsKey, pageRows(spark.sessionState.newHadoopConf()).toString)
         .parquet(dir)
     }
   }

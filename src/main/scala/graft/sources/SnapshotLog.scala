@@ -1813,31 +1813,7 @@ object SnapshotLog {
     requireUnexpired(spark, table, vFrom)
     val schema = tableSchema(spark, table, vTo)
     val pieces = (vFrom + 1 to vTo).flatMap { v =>
-      // data-preserving rewrites (compaction/clustering commit with
-      // dataChange=false) moved rows between files without changing
-      // them — a row-level change feed must emit NOTHING for such a
-      // version, not a spurious delete-all+insert-all of the rewritten
-      // files. Skipping is sound because the manifest diff of the NEXT
-      // data change is computed against this version's (row-identical)
-      // manifest.
-      if (headerToken(header(spark, table, v), "datachange").contains("false"))
-        Seq.empty
-      else {
-      val prevE = manifestEntries(spark, table, v - 1)
-      val curE = manifestEntries(spark, table, v)
-      val prevByName = prevE.map(e => e.name -> e).toMap
-      val curByName = curE.map(e => e.name -> e).toMap
-      val added = curE.filterNot(e => prevByName.contains(e.name))
-      val removed = prevE
-        .filterNot(e => curByName.contains(e.name))
-        .sortBy(_.name)
-      // same file name, changed entry: a deletion-vector amendment —
-      // positions ENTERING the DV are row deletes; positions LEAVING it
-      // (a [[restore]] rolling back past a MoR delete) are row
-      // re-inserts
-      val amended = curE
-        .filter(e => prevByName.get(e.name).exists(_.line != e.line))
-        .map(e => (prevByName(e.name), e))
+      val FeedDiff(added, removed, deadPairs, alivePairs) = feedDiff(spark, table, v)
       val ins =
         if (added.isEmpty) None
         else
@@ -1856,29 +1832,6 @@ object SnapshotLog {
               .withColumn("change_type", lit("delete"))
               .withColumn("commit_version", lit(v))
           )
-      // DV amendments: which SIDE each pair contributes is decided
-      // from the `_dvc` riders alone (sidecar chains of one file are
-      // nested supersets — deletes only union, restore only rewinds —
-      // so count ordering IS set ordering); the position diff itself
-      // evaluates inside the scan tasks via two [[DvAlive]] lookups.
-      // Zero driver sidecar reads, O(pairs) strings of metadata.
-      // a DV'd entry with no count rider (foreign writer?) admits the
-      // pair on BOTH sides — the task-side filter decides; costs a
-      // job, never correctness
-      def dvc(e: ManifestEntry): Option[Long] =
-        if (e.dv.isEmpty) Some(0L) else e.dvCount
-      val deadPairs = amended.filter { case (p, c) =>
-        (dvc(p), dvc(c)) match {
-          case (Some(a), Some(b)) => b > a
-          case _                  => true
-        }
-      }
-      val alivePairs = amended.filter { case (p, c) =>
-        (dvc(p), dvc(c)) match {
-          case (Some(a), Some(b)) => b < a
-          case _                  => true
-        }
-      }
       val dvDel =
         if (deadPairs.isEmpty) None
         else
@@ -1896,7 +1849,6 @@ object SnapshotLog {
               .withColumn("commit_version", lit(v))
           )
       Seq(del, dvDel, dvIns, ins).flatten
-      }
     }
     require(
       pieces.nonEmpty || schema.isDefined,
@@ -1910,6 +1862,89 @@ object SnapshotLog {
         .filter(col("commit_version") > 0)
     } else pieces.reduce(_ unionByName _)
   }
+
+  /** What [[readChanges]] reads for one version: the files it added
+    * (rows inserted), the files it dropped (rows deleted, under the
+    * previous entry's DV), and the deletion-vector amendments as
+    * (previous, current) entry pairs whose positions entered the DV
+    * (`deadPairs`, row deletes) or left it (`alivePairs`, a restore's
+    * re-inserts). */
+  private case class FeedDiff(
+      added: Seq[ManifestEntry],
+      removed: Seq[ManifestEntry],
+      deadPairs: Seq[(ManifestEntry, ManifestEntry)],
+      alivePairs: Seq[(ManifestEntry, ManifestEntry)]) {
+    /** The physical rows the feed's scans read for this version, from
+      * the `_rc` riders; None when a file carries none. */
+    def fileRows: Option[Long] = {
+      val rcs = (added ++ removed ++ deadPairs.map(_._2) ++ alivePairs.map(_._2)).map(_.rows)
+      if (rcs.forall(_.isDefined)) Some(rcs.flatten.sum) else None
+    }
+  }
+
+  private def feedDiff(spark: SparkSession, table: String, v: Int): FeedDiff =
+    // data-preserving rewrites (compaction/clustering commit with
+    // dataChange=false) moved rows between files without changing
+    // them — a row-level change feed must emit NOTHING for such a
+    // version, not a spurious delete-all+insert-all of the rewritten
+    // files. Skipping is sound because the manifest diff of the NEXT
+    // data change is computed against this version's (row-identical)
+    // manifest.
+    if (headerToken(header(spark, table, v), "datachange").contains("false"))
+      FeedDiff(Nil, Nil, Nil, Nil)
+    else {
+      val prevE = manifestEntries(spark, table, v - 1)
+      val curE = manifestEntries(spark, table, v)
+      val prevByName = prevE.map(e => e.name -> e).toMap
+      val curByName = curE.map(e => e.name -> e).toMap
+      val added = curE.filterNot(e => prevByName.contains(e.name))
+      val removed = prevE
+        .filterNot(e => curByName.contains(e.name))
+        .sortBy(_.name)
+      // same file name, changed entry: a deletion-vector amendment —
+      // positions ENTERING the DV are row deletes; positions LEAVING it
+      // (a [[restore]] rolling back past a MoR delete) are row
+      // re-inserts
+      val amended = curE
+        .filter(e => prevByName.get(e.name).exists(_.line != e.line))
+        .map(e => (prevByName(e.name), e))
+      // DV amendments: which SIDE each pair contributes is decided
+      // from the `_dvc` riders alone (sidecar chains of one file are
+      // nested supersets — deletes only union, restore only rewinds —
+      // so count ordering IS set ordering); the position diff itself
+      // evaluates inside the scan tasks via two [[DvAlive]] lookups.
+      // Zero driver sidecar reads, O(pairs) strings of metadata.
+      // a DV'd entry with no count rider (foreign writer?) admits the
+      // pair on BOTH sides — the task-side filter decides; costs a
+      // job, never correctness
+      def dvc(e: ManifestEntry): Option[Long] =
+        if (e.dv.isEmpty) Some(0L) else e.dvCount
+      def side(grows: Boolean) = amended.filter { case (p, c) =>
+        (dvc(p), dvc(c)) match {
+          case (Some(a), Some(b)) => if (grows) b > a else b < a
+          case _                  => true
+        }
+      }
+      FeedDiff(added, removed, side(grows = true), side(grows = false))
+    }
+
+  /** Physical rows [[readChanges]] over `(vFrom, vTo]` reads, summed
+    * from the `_rc` riders of the files its data-changing commits add,
+    * drop or amend — manifest metadata only, no file opened. None when
+    * a version is missing or a file carries no row rider. */
+  def changeFeedRows(spark: SparkSession, table: String, vFrom: Int, vTo: Int): Option[Long] = {
+    val vs = versions(spark, table).toSet
+    if (!(vs(vFrom) && vs(vTo) && vFrom <= vTo)) None
+    else {
+      val per = (vFrom + 1 to vTo).map(v => feedDiff(spark, table, v).fileRows)
+      if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
+    }
+  }
+
+  /** The change feed `(vFrom, vTo]` of `d`'s source with its derived
+    * key and expression measures materialized — what a plain MV folds. */
+  def mvFeed(spark: SparkSession, d: MvDecl, vFrom: Int, vTo: Int): DataFrame =
+    derive(readChanges(spark, d.source, vFrom, vTo), d)
 
   /** Rows of the (prevEntry, curEntry) amendment pairs whose DV
     * membership SHIFTED: `newlyDead=true` yields positions that
@@ -4120,7 +4155,28 @@ object SnapshotLog {
       table: String,
       token: String,
       value: Int
-  ): Option[Int] = {
+  ): Option[Int] = newestSpan(spark, table, token)(_ == value).map(_._2)
+
+  /** The newest effective `<token>=` watermark at or below `value`,
+    * with the top of its span: (watermark, version). A watermark only
+    * moves forward, so that is the fold a reader pinned at source
+    * version `value` can start from — equal to `value` when the derived
+    * table is fresh there ([[versionAtWatermark]]), below it when the
+    * change feed between the two is still unfolded. */
+  def watermarkAtOrBelow(
+      spark: SparkSession,
+      table: String,
+      token: String,
+      value: Int
+  ): Option[(Int, Int)] = newestSpan(spark, table, token)(_ <= value)
+
+  /** (watermark, span top) of the newest span whose effective
+    * `<token>=` watermark `accept`s. */
+  private def newestSpan(
+      spark: SparkSession,
+      table: String,
+      token: String
+  )(accept: Int => Boolean): Option[(Int, Int)] = {
     // BACKWARD scan with early exit: a header at version h is
     // effective for every version in [h, spanTop] — walking down from
     // the tip, the FIRST matching header closes the newest such span,
@@ -4137,13 +4193,13 @@ object SnapshotLog {
     if (vs.isEmpty) return None
     var i = vs.length - 1
     var spanTop: Int = vs.last
-    var ans: Option[Int] = None
+    var ans: Option[(Int, Int)] = None
     while (i >= 0 && ans.isEmpty) {
       val v = vs(i)
       val h = header(spark, table, v)
       headerToken(h, token) match {
         case Some(t) =>
-          if (t.toInt == value) ans = Some(spanTop)
+          if (accept(t.toInt)) ans = Some((t.toInt, spanTop))
           else spanTop = v - 1
         case None =>
           if (!headerToken(h, "datachange").contains("false")) spanTop = v - 1
@@ -4197,8 +4253,12 @@ object SnapshotLog {
   /** Incremental MV refresh: reads ONLY `readChanges(asOf, tip)` of
     * the source — O(changed files), the point of a change feed on a
     * 100 TB table — and commits the folded rollup as one overwrite.
-    * `sum` MVs apply inserts as +, deletes as − (a pure invertible
-    * fold). `minmax` MVs fold INSERTS exactly (least/greatest/count)
+    * `sum` and `stats` MVs apply inserts as +, deletes as −: the
+    * invertible fold of [[MvFold]], the same one the serve rule reads
+    * for a stale MV, which keeps a group's sum NULL while none of its
+    * values is non-NULL; a group whose NULL-ness the fold leaves
+    * undecided recomputes from the source at the watermark, scoped as
+    * below. `minmax` MVs fold INSERTS exactly (least/greatest/count)
     * but min/max cannot invert a delete — so the refresh recomputes
     * ONLY the groups the delta deletes touch, from the source AT THE
     * WATERMARK `to` (group-scoped: a left-semi join on the affected
@@ -4282,7 +4342,7 @@ object SnapshotLog {
           val d = read(spark, dp, Some(w)).select(dimSels(i)._2.map(col): _*)
           cur.join(d, cur(fkc) === d(pkc), edgeHows(i)).drop(d(pkc))
       }
-    val changes = enrich(derive(readChanges(spark, source, from, to), decl))
+    val changes = enrich(mvFeed(spark, decl, from, to))
     onWatermarkPinned()
     // MULTI-MEASURE folds (round 15): every branch folds each measure
     // under the createMv naming (legacy bare names for a single
@@ -4403,50 +4463,21 @@ object SnapshotLog {
     def foldSum(mvName: String, dName: String) =
       (coalesce(col(mvName), lit(0L)) + coalesce(col(dName), lit(0L)))
         .as(mvName)
-    val next = if (kind == "sum") {
-      val sign =
-        when(col("change_type") === "insert", lit(1L)).otherwise(lit(-1L))
-      val deltaAggs =
-        measures.map(m => sum(col(m) * sign).as(mn("d_sum", m))) :+
-          sum(sign).as("d_n")
-      val delta = changes
-        .groupBy(keyCols: _*)
-        .agg(deltaAggs.head, deltaAggs.tail: _*)
-      foldJoin(read(spark, mv), delta)
-        .select(
-          keyCols ++
-            measures.map(m => foldSum(mn("mv_sum", m), mn("d_sum", m))) ++
-            Seq(foldSum("mv_n", "d_n")): _*)
-        .filter(col("mv_n") > 0)
-    } else if (kind == "stats") {
-      // sum-of-squares inverts a delete exactly like sum does (the
-      // deleted row's x and x² both subtract) — the whole refresh
-      // stays a pure fold, no recompute branch at any delete pattern.
-      // An avg-declared MV (createMv avgExact) also carries mv_nn per
-      // measure, the NON-NULL count; it folds with a null-masked sign.
-      val sign =
-        when(col("change_type") === "insert", lit(1L)).otherwise(lit(-1L))
-      val mvCols = read(spark, mv).columns.toSet
-      val withNn = measures.filter(m => mvCols.contains(mn("mv_nn", m)))
-      val deltaAggs = measures.flatMap(m => Seq(
-          sum(col(m) * sign).as(mn("d_sum", m)),
-          sum(col(m) * col(m) * sign).as(mn("d_sumsq", m)))) ++
-        Seq(sum(sign).as("d_n")) ++
-        withNn.map(m =>
-          sum(when(col(m).isNotNull, sign).otherwise(lit(0L)))
-            .as(mn("d_nn", m)))
-      val delta = changes
-        .groupBy(keyCols: _*)
-        .agg(deltaAggs.head, deltaAggs.tail: _*)
-      val foldCols = keyCols ++
-        measures.flatMap(m => Seq(
-          foldSum(mn("mv_sum", m), mn("d_sum", m)),
-          foldSum(mn("mv_sumsq", m), mn("d_sumsq", m)))) ++
-        Seq(foldSum("mv_n", "d_n")) ++
-        withNn.map(m => foldSum(mn("mv_nn", m), mn("d_nn", m)))
-      foldJoin(read(spark, mv), delta)
-        .select(foldCols: _*)
-        .filter(col("mv_n") > 0)
+    val next = if (MvFold.invertible(kind)) {
+      // sum and sum-of-squares invert a delete exactly (the deleted
+      // row's x and x² both subtract), so the refresh is the shared
+      // fold ([[MvFold]]). The feed rollup is checkpointed: it is read
+      // by the undecided-group check and by the commit's write. Groups
+      // whose NULL-ness the fold cannot decide (every non-NULL value
+      // deleted, or a sum that cancels to 0) recompute from the source
+      // at the watermark, scoped like the minmax recompute.
+      val folded = MvFold.fold(decl, read(spark, mv), MvFold.feed(decl, changes).localCheckpoint())
+      val undecided = folded.filter(col(MvFold.Undecided)).select(keyCols: _*).localCheckpoint()
+      val clean = folded.drop(MvFold.Undecided)
+      if (undecided.isEmpty) clean
+      else
+        keySemi(clean, undecided, "left_anti").unionByName(
+          rollup(decl, keySemi(scopedSourceAtTo(undecided), undecided, "left_semi")))
     } else {
       // minmax, distinct and hll partials are MONOTONE under inserts
       // but not invertible under deletes: the removed row may BE the

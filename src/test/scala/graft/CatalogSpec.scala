@@ -1801,12 +1801,20 @@ class CatalogSpec extends SparkTestBase {
       val rows = org.apache.spark.sql.GraftPlanBridge.ofRows(spark, served)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(rows == Set((1L, 30L, 2L), (2L, 5L, 1L)))
-      // the source moves behind the MV's back: STALE must bail —
-      // correctness before speed
+      // the source moves behind the MV's back: the stale MV serves
+      // folded with its one-row change feed, exactly the source answer
       spark.sql(s"INSERT INTO $t VALUES (3, 7)")
       val stale = plan(q)
-      assert(!MvRewrite.readsPath(stale, mvPath), "stale MV must not serve")
-      assert(stale.exists(_.isInstanceOf[Aggregate]))
+      assert(MvRewrite.readsPath(stale, mvPath), "stale MV must serve through its feed")
+      assert(org.apache.spark.sql.GraftPlanBridge.ofRows(spark, stale)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+        Set((1L, 30L, 2L), (2L, 5L, 1L), (3L, 7L, 1L)))
+      // a rewrite of every row: the feed reads more rows than the
+      // source holds, so the stale MV bails to the source plan
+      spark.sql(s"UPDATE $t SET v = v + 0")
+      val rewritten = plan(q)
+      assert(!MvRewrite.readsPath(rewritten, mvPath), "a feed no cheaper than the source must bail")
+      assert(rewritten.exists(_.isInstanceOf[Aggregate]))
       // refresh restores the watermark — serving resumes
       spark.sql(s"REFRESH MATERIALIZED VIEW cattest.main.${tn}_mv")
       assert(MvRewrite.readsPath(plan(q), mvPath), "refresh must restore serving")
@@ -1957,9 +1965,17 @@ class CatalogSpec extends SparkTestBase {
       assert(!MvRewrite.readsPath(
         plan(s"SELECT to_date(ts) AS day, sum(v) AS s FROM $t " +
           "WHERE v > 0 GROUP BY to_date(ts)"), mvPath))
-      // stale → bail; refresh → serve again
+      // stale → serves through the feed; rewritten whole → bail;
+      // refresh → serve again
       spark.sql(s"INSERT INTO $t VALUES (timestamp'2024-06-03 01:00:00', 7)")
-      assert(!MvRewrite.readsPath(plan(q), mvPath), "stale daily MV must bail")
+      val stale = plan(q)
+      assert(MvRewrite.readsPath(stale, mvPath), "stale daily MV must serve through its feed")
+      assert(org.apache.spark.sql.GraftPlanBridge.ofRows(spark, stale).collect()
+        .map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toSet ==
+        Set(("2024-06-01", 40L, 2L), ("2024-06-02", 5L, 1L), ("2024-06-03", 7L, 1L)))
+      spark.sql(s"UPDATE $t SET v = v + 0")
+      assert(!MvRewrite.readsPath(plan(q), mvPath),
+        "a daily MV whose feed reads more rows than the source must bail")
       spark.sql(s"REFRESH MATERIALIZED VIEW cattest.main.${tn}_dmv")
       assert(MvRewrite.readsPath(plan(q), mvPath))
       // the GLOBAL grain over a derived-key MV re-aggregates too
@@ -2136,21 +2152,22 @@ class CatalogSpec extends SparkTestBase {
       assert(
         run(hv).collect().map(r => (r.getDate(0).toString, r.getLong(1)))
           .toSet == Set(("2024-06-01", 60L)))
-      // refresh keeps all three grains serving after the source moves
+      // after the source moves the month query keeps serving: the
+      // cheapest candidate is the stale MONTH MV folded with its
+      // one-row change feed (its rows plus the feed's rank below the
+      // daily's), before and after the daily's REFRESH
       spark.sql(s"INSERT INTO $t VALUES (timestamp'2024-06-20 11:00:00', 7)")
-      assert(!MvRewrite.readsPath(plan(
-        s"SELECT trunc(to_date(ts), 'month') AS mon, sum(v) AS s FROM $t " +
-          s"GROUP BY trunc(to_date(ts), 'month')"), dayPath),
-        "stale daily MV must not serve the month query")
+      val monQ = s"SELECT trunc(to_date(ts), 'month') AS mon, sum(v) AS s FROM $t " +
+        s"GROUP BY trunc(to_date(ts), 'month')"
+      val want = Set(("2024-05-01", 1L), ("2024-06-01", 67L), ("2025-01-01", 5L))
+      val stale = plan(monQ)
+      assert(MvRewrite.readsPath(stale, monPath) && !MvRewrite.readsPath(stale, dayPath),
+        "the stale month MV must serve through its feed")
+      assert(run(stale).collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSet == want)
       spark.sql(s"REFRESH MATERIALIZED VIEW cattest.main.${tn}_dmv")
-      val mon2 = plan(
-        s"SELECT trunc(to_date(ts), 'month') AS mon, sum(v) AS s FROM $t " +
-          s"GROUP BY trunc(to_date(ts), 'month')")
-      assert(MvRewrite.readsPath(mon2, dayPath))
-      assert(
-        run(mon2).collect().map(r => (r.getDate(0).toString, r.getLong(1)))
-          .toSet == Set(("2024-05-01", 1L), ("2024-06-01", 67L),
-            ("2025-01-01", 5L)))
+      val mon2 = plan(monQ)
+      assert(MvRewrite.readsPath(mon2, monPath))
+      assert(run(mon2).collect().map(r => (r.getDate(0).toString, r.getLong(1))).toSet == want)
     } finally spark.conf.unset(MvRewrite.ConfKey)
   }
 
@@ -2395,11 +2412,17 @@ class CatalogSpec extends SparkTestBase {
       // a grouping OUTSIDE the key set bails
       assert(!MvRewrite.readsPath(
         plan(s"SELECT v, count(*) AS n FROM $t GROUP BY v"), mvPath))
-      // refresh keeps the composite fold exact through an append
+      // a stale composite MV serves the subset through its feed;
+      // rewritten whole it bails; refresh keeps the fold exact
       spark.sql(s"INSERT INTO $t VALUES (1, 'a', 100), (3, 'c', 9)")
+      val stale = plan(s"SELECT k, sum(v) AS sv FROM $t GROUP BY k")
+      assert(MvRewrite.readsPath(stale, mvPath), "stale composite MV must serve through its feed")
+      assert(run(stale).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .toSet == Set((1L, 130L), (2L, 8L), (3L, 9L)))
+      spark.sql(s"UPDATE $t SET v = v + 0")
       assert(!MvRewrite.readsPath(
         plan(s"SELECT k, sum(v) AS sv FROM $t GROUP BY k"), mvPath),
-        "stale composite MV must bail")
+        "a composite MV whose feed reads more rows than the source must bail")
       spark.sql(s"REFRESH MATERIALIZED VIEW cattest.main.${tn}_cmv")
       val sub3 = plan(s"SELECT k, sum(v) AS sv FROM $t GROUP BY k")
       assert(MvRewrite.readsPath(sub3, mvPath))
@@ -4576,11 +4599,19 @@ class CatalogSpec extends SparkTestBase {
     val l1 = explain(good)
     assert(l1.exists(l => l.startsWith("SERVED from") &&
       l.contains(s"${tn}_xmv") && l.contains("identity")), l1.toString)
-    // stale: the source moved — remedy is REFRESH
+    // stale: the source moved — served through the change feed, with
+    // its feed and base rows
     spark.sql(s"INSERT INTO $t VALUES (3, 30)")
     val l2 = explain(good)
-    assert(l2.exists(l => l.contains("STALE") &&
-      l.contains("REFRESH MATERIALIZED VIEW")), l2.toString)
+    assert(l2.exists(l => l.startsWith("SERVED from") &&
+      l.contains("through its change feed") && l.contains("1 feed rows against 3 base rows")),
+      l2.toString)
+    // rewritten whole: the feed is no cheaper than the source — STALE,
+    // remedy is REFRESH
+    spark.sql(s"UPDATE $t SET v = v + 0")
+    val l2b = explain(good)
+    assert(l2b.exists(l => l.contains("STALE") && l.contains("not fewer than") &&
+      l.contains("REFRESH MATERIALIZED VIEW")), l2b.toString)
     spark.sql(s"REFRESH MATERIALIZED VIEW cattest.main.${tn}_xmv")
     assert(explain(good).exists(_.startsWith("SERVED from")))
     // an aggregate the sum rollup cannot answer is NAMED

@@ -418,4 +418,33 @@ class DataFileFormatSpec extends SparkTestBase {
       versions.foreach(v => catalogMatchesLog(name, Some(v)))
     }
   }
+
+  test("a 60k-row compacted file holds pages of at most 8,192 rows: a point " +
+    "read on it decodes one page") {
+    val t = createTable("paged", "TBLPROPERTIES ('sorted_by' = 'id')")
+    (0 until 6).foreach(i =>
+      SnapshotLog.commit(spark, pathOf("paged"), rows(i * 10000L, i * 10000L + 10000L).coalesce(1)))
+    sql("CALL fmttest.system.optimize(table => 'main.paged')").collect()
+    val p = pathOf("paged")
+    val files = SnapshotLog.manifest(spark, p, SnapshotLog.versions(spark, p).last)
+    assert(files.size == 1, files.toString)
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(s"$p/${files.head}"), spark.sessionState.newHadoopConf()))
+    try {
+      assert(r.getRecordCount == 60000L)
+      val chunks = r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      chunks.groupBy(_.getPath).foreach { case (c, cs) =>
+        val pages = cs.map(r.readOffsetIndex(_).getPageCount).sum
+        assert(pages >= 60000 / graft.sources.DataFiles.PageRows, s"$c: $pages pages")
+      }
+    } finally r.close()
+    val df = sql(s"SELECT id, v FROM $t WHERE id = 31234")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(31234L))
+    val plans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val decoded = plans.collect(df.queryExecution.executedPlan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.metrics("rowsDecoded").value
+    }.sum
+    assert(decoded > 0 && decoded <= graft.sources.DataFiles.PageRows, s"decoded $decoded rows")
+  }
 }

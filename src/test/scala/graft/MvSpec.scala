@@ -2994,4 +2994,27 @@ class MvSpec extends SparkTestBase {
         assert(new java.io.File(s"$wh/main/$mv").isDirectory, s"$key: no $mv under $wh")
     }
   }
+
+  test("REFRESH keeps an all-NULL group's sum NULL, and the MV serves it " +
+    "as the rewrite-off query answers it") {
+    import graft.plans.MvRewrite
+    val wh = Files.createTempDirectory("graft_mv_null_wh").toString
+    spark.conf.set("spark.sql.catalog.mvnullcat", classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.mvnullcat.warehouse", wh)
+    val t = "mvnullcat.main.src"
+    spark.sql(s"CREATE TABLE $t (k STRING, v DOUBLE)")
+    spark.sql(s"INSERT INTO $t VALUES ('a', 1.0), ('b', NULL)")
+    spark.sql(
+      s"""CREATE MATERIALIZED VIEW mvnullcat.main.src_mv AS
+         |SELECT k, sum(v) AS mv_sum, count(*) AS mv_n FROM $t GROUP BY k""".stripMargin)
+    spark.sql(s"INSERT INTO $t VALUES ('a', 2.0)")
+    spark.sql("REFRESH MATERIALIZED VIEW mvnullcat.main.src_mv")
+    val q = s"SELECT k, sum(v) AS s, count(*) AS n FROM $t GROUP BY k"
+    def answer(rewrite: Boolean): Seq[String] =
+      graft.withConf(spark, MvRewrite.ConfKey -> rewrite.toString)(
+        spark.sql(q).collect().map(_.toSeq.mkString("|")).toSeq.sorted)
+    assert(MvRewrite.explainServe(spark, spark.sql(q)).exists(_.startsWith("SERVED from")))
+    assert(answer(rewrite = false) == Seq("a|3.0|2", "b|null|1"))
+    assert(answer(rewrite = true) == answer(rewrite = false))
+  }
 }
