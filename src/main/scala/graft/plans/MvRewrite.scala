@@ -1082,7 +1082,6 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * its file rows and the source's live rows at `to` (manifest
     * riders). */
   private case class StaleFeed(
-      srcPath: String,
       mvV: Int,
       from: Int,
       to: Int,
@@ -1124,7 +1123,7 @@ case class MvRollupRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       bail(s"the change feed (v$w, v$v] crosses versions expired by retention")
     else
       (SnapshotLog.changeFeedRows(spark, srcPath, w, v), liveRows(v)) match {
-        case (Some(f), Some(b)) if f < b => Some(StaleFeed(srcPath, mvV, w, v, f, b))
+        case (Some(f), Some(b)) if f < b => Some(StaleFeed(mvV, w, v, f, b))
         case (Some(f), Some(b)) =>
           bail(s"the change feed (v$w, v$v] reads $f file rows, not fewer " +
             s"than the source's $b live rows")

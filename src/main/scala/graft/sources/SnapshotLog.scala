@@ -3430,6 +3430,20 @@ object SnapshotLog {
     d.version
   }
 
+  /** `folded` ([[MvFold.fold]]) without its flag column, each group it
+    * leaves undecided replaced by that group's rollup over `rowsFor(keys)`
+    * (rows holding at least every row of those groups). */
+  private def settleFold(d: MvDecl, folded: DataFrame)(rowsFor: DataFrame => DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val undecided = folded.filter(col(MvFold.Undecided))
+      .select(d.keys.map(col): _*).localCheckpoint()
+    def byKey(l: DataFrame, how: String): DataFrame =
+      l.join(undecided, d.keys.map(k => l(k) <=> undecided(k)).reduce(_ && _), how)
+    val clean = folded.drop(MvFold.Undecided)
+    if (undecided.isEmpty) clean
+    else byKey(clean, "left_anti").unionByName(rollup(d, byKey(rowsFor(undecided), "left_semi")))
+  }
+
   /** The declaration of `mv`; `ctx` names the refusal when its props
     * declare no MV. */
   private def declOf(spark: SparkSession, mv: String, ctx: String): MvDecl =
@@ -4468,16 +4482,10 @@ object SnapshotLog {
       // row's x and x² both subtract), so the refresh is the shared
       // fold ([[MvFold]]). The feed rollup is checkpointed: it is read
       // by the undecided-group check and by the commit's write. Groups
-      // whose NULL-ness the fold cannot decide (every non-NULL value
-      // deleted, or a sum that cancels to 0) recompute from the source
-      // at the watermark, scoped like the minmax recompute.
-      val folded = MvFold.fold(decl, read(spark, mv), MvFold.feed(decl, changes).localCheckpoint())
-      val undecided = folded.filter(col(MvFold.Undecided)).select(keyCols: _*).localCheckpoint()
-      val clean = folded.drop(MvFold.Undecided)
-      if (undecided.isEmpty) clean
-      else
-        keySemi(clean, undecided, "left_anti").unionByName(
-          rollup(decl, keySemi(scopedSourceAtTo(undecided), undecided, "left_semi")))
+      // whose NULL-ness the fold cannot decide recompute from the
+      // source at the watermark, scoped like the minmax recompute.
+      settleFold(decl, MvFold.fold(decl, read(spark, mv), MvFold.feed(decl, changes).localCheckpoint()))(
+        scopedSourceAtTo)
     } else {
       // minmax, distinct and hll partials are MONOTONE under inserts
       // but not invertible under deletes: the removed row may BE the
@@ -4824,7 +4832,7 @@ object SnapshotLog {
     // longer rewrites the warehouse (the r18 full-recompute
     // fall-through); it folds or re-sketches the touched slice.
     val next: DataFrame =
-      if ((kind == "sum" || kind == "stats") &&
+      if (MvFold.invertible(kind) &&
           (affKeys.isEmpty || mixed || (isLeft && dimsL.size > 1) ||
             nullBucketTouched)) {
         // INVERTIBLE kind, ±DELTA (round 17, closing the round-16
@@ -4855,46 +4863,22 @@ object SnapshotLog {
         // (minmax/distinct/hll) take the group-scoped recompute
         // below — a leaving row may BE the extremum/last value, and
         // the group's remaining rows are unbounded by any pk list.
-        import org.apache.spark.sql.functions.{coalesce, lit, sum, when}
+        import org.apache.spark.sql.functions.lit
         lastDimRefreshBranch.set("delta")
         val (touched, _, _) = scopedTouchedFact()
-        // matched rows under each pin set; identical rows cancel
-        val sgn = col("__graft_sign")
-        val signed = enrichAll(touched, newPins, mvEdgeHows)
-          .withColumn("__graft_sign", lit(1L))
+        // matched rows under each pin set, as a change feed: rows under
+        // the new pins enter, rows under the old pins leave, identical
+        // rows cancel. The invertible fold REFRESH uses ([[MvFold]])
+        // lands it: brand-new groups insert, emptied groups (mv_n
+        // reaches 0) vanish, and a group whose NULL-ness the fold
+        // leaves undecided recomputes from the fact at the watermark
+        // through the new pins.
+        val changes = enrichAll(touched, newPins, mvEdgeHows)
+          .withColumn("change_type", lit("insert"))
           .unionByName(enrichAll(touched, oldPins, mvEdgeHows)
-            .withColumn("__graft_sign", lit(-1L)))
-        val storedCols = mvOld.columns.filterNot(keys.contains).toSeq
-        def measureOf(c: String, prefix: String): String =
-          if (c == prefix) measures.head else c.stripPrefix(prefix + "_")
-        def deltaFor(c: String): org.apache.spark.sql.Column =
-          if (c == "mv_n") sum(sgn).as("d_" + c)
-          else if (c == "mv_sumsq" || c.startsWith("mv_sumsq_")) {
-            val m = measureOf(c, "mv_sumsq")
-            sum(col(m) * col(m) * sgn).as("d_" + c)
-          } else if (c == "mv_sum" || c.startsWith("mv_sum_")) {
-            val m = measureOf(c, "mv_sum")
-            sum(col(m) * sgn).as("d_" + c)
-          } else if (c == "mv_nn" || c.startsWith("mv_nn_")) {
-            val m = measureOf(c, "mv_nn")
-            sum(when(col(m).isNotNull, sgn).otherwise(lit(0L))).as("d_" + c)
-          } else
-            throw new IllegalStateException(
-              s"refreshMvDim: unexpected stored column '$c' for kind=$kind")
-        val deltaAggs = storedCols.map(deltaFor)
-        val delta = signed
-          .groupBy(keys.map(col): _*)
-          .agg(deltaAggs.head, deltaAggs.tail: _*)
-        // null-safe fold of the delta onto the live state — brand-new
-        // groups insert, emptied groups (mv_n reaches 0) vanish
-        val joined = mvOld.join(
-          delta, keys.map(k => mvOld(k) <=> delta(k)).reduce(_ && _),
-          "full_outer")
-        val keyed = keys.map(k => coalesce(mvOld(k), delta(k)).as(k))
-        val folded = storedCols.map(c =>
-          (coalesce(mvOld(c), lit(0L)) + coalesce(delta("d_" + c), lit(0L)))
-            .as(c))
-        joined.select(keyed ++ folded: _*).filter(col("mv_n") > 0)
+            .withColumn("change_type", lit("delete")))
+        settleFold(decl, MvFold.fold(decl, mvOld, MvFold.feed(decl, changes).localCheckpoint()))(
+          _ => enrichAll(factW, newPins, mvEdgeHows))
       } else if (affKeys.isEmpty || mixed || (isLeft && dimsL.size > 1) ||
           nullBucketTouched) {
         // NON-invertible kind, GROUP-SCOPED recompute (round 18,

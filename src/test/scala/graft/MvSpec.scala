@@ -3017,4 +3017,34 @@ class MvSpec extends SparkTestBase {
     assert(answer(rewrite = false) == Seq("a|3.0|2", "b|null|1"))
     assert(answer(rewrite = true) == answer(rewrite = false))
   }
+
+  test("a dim refresh's ±delta keeps a group whose measure is all NULL at " +
+    "a NULL sum") {
+    import spark.implicits._
+    val fact = fresh("nfact")
+    val dA = fresh("ndima")
+    val dB = fresh("ndimb")
+    SnapshotLog.commit(spark, dA, Seq(1L -> "x", 2L -> "y").toDF("apk", "aat"))
+    SnapshotLog.commit(spark, dB, Seq((10L, 1L), (11L, 1L)).toDF("bpk", "bflag"))
+    // every fact row of pk 1 has a NULL measure
+    SnapshotLog.commit(spark, fact,
+      Seq[(Long, Long, Option[Long])]((1L, 10L, None), (1L, 11L, None), (2L, 10L, Some(5L)),
+        (2L, 11L, Some(7L))).toDF("afk", "bfk", "v"))
+    val mv = fresh("nmv")
+    SnapshotLog.createJoinMv(spark, fact, s"$dA,$dB", "afk,bfk", "apk,bpk", mv, "aat", "v",
+      joinType = "left,inner")
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toSeq.mkString("|")).toSet
+    def recompute: Set[String] = rows(SnapshotLog.read(spark, fact)
+      .join(SnapshotLog.read(spark, dA), col("afk") === col("apk"), "left")
+      .join(SnapshotLog.read(spark, dB), col("bfk") === col("bpk"), "inner")
+      .groupBy(col("aat")).agg(sum(col("v")), count(lit(1))))
+    assert(rows(SnapshotLog.read(spark, mv)) == recompute)
+    // pk 1 renamed x → x2: its all-NULL rows move to a new group
+    SnapshotLog.deleteWhere(spark, dA, "apk", 1L, 1L)
+    SnapshotLog.commit(spark, dA, Seq(1L -> "x2").toDF("apk", "aat"))
+    SnapshotLog.refreshMvDim(spark, mv, dA)
+    assert(SnapshotLog.lastDimRefreshBranch.get() == "delta")
+    assert(recompute == Set("x2|null|2", "y|12|2"))
+    assert(rows(SnapshotLog.read(spark, mv)) == recompute)
+  }
 }
