@@ -184,7 +184,6 @@ class CommitPipelineSpec extends SparkTestBase {
   private val schema5 = b64("""{"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{"graftPhys":"id"}},{"name":"n","type":"integer","nullable":false,"metadata":{"graftPhys":"n"}}]}""")
   private val schema6 = b64("""{"type":"struct","fields":[{"name":"id","type":"long","nullable":false,"metadata":{"graftPhys":"id"}},{"name":"n","type":"long","nullable":false,"metadata":{"graftPhys":"n"}}]}""")
   private val schema7 = b64("""{"type":"struct","fields":[{"name":"k","type":"long","nullable":true,"metadata":{}},{"name":"mv_sum","type":"long","nullable":true,"metadata":{}},{"name":"mv_n","type":"long","nullable":false,"metadata":{}}]}""")
-  private val schema8 = b64("""{"type":"struct","fields":[{"name":"k","type":"long","nullable":true,"metadata":{}},{"name":"mv_sum","type":"long","nullable":false,"metadata":{}},{"name":"mv_n","type":"long","nullable":false,"metadata":{}}]}""")
   private val schema9 = b64("""{"type":"struct","fields":[{"name":"id","type":"long","nullable":true,"metadata":{}}]}""")
 
   private lazy val golden: Map[String, String] = {
@@ -318,8 +317,8 @@ class CommitPipelineSpec extends SparkTestBase {
         |append mvv=1 mvfp=2:7568958322190333200 schema=${schema7}
         |part-J1-0.parquet${T}_sz=z:1033;_rc=r:2;k=l:1:2;mv_n=l:1:2;mv_sum=l:15:20
         |# v2
-        |overwrite mvv=2 mvfp=3:-3086988087082559907 schema=${schema8}
-        |part-J2-0.parquet${T}_sz=z:1082;_rc=r:3;k=l:1:3;mv_n=l:1:2;mv_sum=l:3:21
+        |overwrite mvv=2 mvfp=3:-3086988087082559907 schema=${schema7}
+        |part-J2-0.parquet${T}_sz=z:1088;_rc=r:3;k=l:1:3;mv_n=l:1:2;mv_sum=l:3:21
         |""".stripMargin,
       "bk" -> s"""|# v1
         |append buckets=aWQ6Mg schema=${schema2}
